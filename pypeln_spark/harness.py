@@ -3,11 +3,13 @@
 Everything the reference's Worker/Supervisor machinery did
 (pypeln/process/worker.py:52-174, pypeln/process/supervisor.py:13-56) that
 Spark does NOT give us for free is emulated here, inside ``mapInPandas``
-iterator UDFs:
+iterator functions. ``make_apply`` builds one such function per operator
+application (``Iterator[pdf] -> Iterator[pdf]``), and everything below is
+per operator and per partition:
 
-- ``on_start`` / ``on_done`` per-partition lifecycle (reference runs them once
-  per worker: pypeln/process/worker.py:78-118) — init before the first Arrow
-  batch, teardown in a ``finally`` after the last.
+- ``on_start`` / ``on_done`` lifecycle (reference runs them once per
+  worker: pypeln/process/worker.py:78-118) — init before the first Arrow
+  batch, teardown in a ``finally`` once the operator's input is exhausted.
 - dependency injection by parameter name: ``worker_info`` (→ partition id),
   ``element_index``, ``stage_status``, plus any keys returned by ``on_start``
   (reference: pypeln/process/worker.py:71-118).
@@ -20,6 +22,17 @@ iterator UDFs:
   ``workers`` threads per partition for blocking-IO fns; ``task`` → a real
   asyncio event loop per partition with an ``asyncio.Semaphore(workers)``,
   mirroring the reference's TaskPool (pypeln/task/worker.py:217-244).
+
+**Fusion.** A run of consecutive general-path operators is ONE
+``mapInPandas``: ``fuse`` chains their functions so every element makes
+one Python pass per partition, instead of one Python worker and one
+JVM↔Python Arrow round trip per operator. Between two fused functions an
+in-process *Arrow hop* hands the next function exactly what a real
+``mapInPandas`` boundary would: the batch is converted to Arrow with the
+upstream operator's declared schema and back to pandas, through the same
+PySpark serializer code the Python worker uses (so a ``returns="long"``
+function that returns floats or ``None`` is coerced identically, and
+``_index`` arrives as numpy arrays either way).
 
 Elements cross the JVM↔Python boundary as Arrow batches (vectorized), not
 pickled one-at-a-time queue puts — the single biggest perf win over the
@@ -158,10 +171,6 @@ def make_apply(
                 ilist = list(idx) if idx is not None else None
                 if kind == "map":
                     out.append((ilist, encode(res)))
-                elif kind == "filter":
-                    if res:
-                        # filter re-emits the ORIGINAL (still-encoded) value
-                        pass
                 elif kind == "flat_map":
                     for j, y in enumerate(res):
                         child = (ilist + [j]) if ilist is not None else None
@@ -233,10 +242,13 @@ def make_apply(
             idxs = pdf[INDEX_COL].tolist() if has_index else [None] * len(pdf)
             vals = pdf[VALUE_COL].tolist()
 
-            async def pred(raw):
+            async def pred(idx, raw):
+                kw = dict(f_kwargs)
+                if wants_index:
+                    kw["element_index"] = tuple(idx) if idx is not None else None
                 async with sem:
                     try:
-                        res = f(decode(raw), **f_kwargs)
+                        res = f(decode(raw), **kw)
                         if inspect.isawaitable(res):
                             if timeout:
                                 res = await asyncio.wait_for(res, timeout)
@@ -248,7 +260,7 @@ def make_apply(
                         # watchdog's _DROPPED semantics
                         return False
 
-            mask = await asyncio.gather(*[pred(v) for v in vals])
+            mask = await asyncio.gather(*[pred(i, v) for i, v in zip(idxs, vals)])
             return pdf[pd.Series(list(mask), index=pdf.index)]
 
         loop = asyncio.new_event_loop() if (is_coro or is_async_gen) else None
@@ -290,26 +302,48 @@ def make_apply(
     return apply
 
 
-def decode_pickled(stage):
-    """Pickled Stage → typed Stage (sample-infer the element type)."""
-    from .stage import Stage
+def _arrow_hop(schema: T.StructType, timezone: str, safecheck: bool, int_to_decimal: bool):
+    """The in-process stand-in for a ``mapInPandas`` boundary: convert each
+    batch to Arrow with ``schema`` (the upstream operator's declared output)
+    and back, with the serializer the Python worker itself uses."""
+    from pyspark.sql.pandas.serializers import ArrowStreamPandasUDFSerializer
+    from pyspark.sql.pandas.types import to_arrow_type
 
-    rows = stage.df.select(VALUE_COL).take(20)
-    samples = [infer.loads(r[VALUE_COL]) for r in rows]
-    out_type = infer.infer_common_type(samples)
-    if out_type is None:
-        return stage  # nothing better available
-
-    schema = output_schema(out_type, stage.has_index)
-
-    def conv(batches):
+    def hop(batches: tp.Iterator[pd.DataFrame]) -> tp.Iterator[pd.DataFrame]:
+        ser = ArrowStreamPandasUDFSerializer(
+            timezone,
+            safecheck,
+            True,  # assign output columns by name
+            df_for_struct=True,
+            arrow_cast=True,
+            int_to_decimal_coercion_enabled=int_to_decimal,
+        )
+        arrow_type = to_arrow_type(schema)
         for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            pdf = pdf.copy()
-            pdf[VALUE_COL] = pdf[VALUE_COL].map(infer.loads)
-            yield pdf
+            arr = ser._create_struct_array(pdf, arrow_type, spark_type=schema)
+            yield ser.arrow_to_pandas(arr, 0)
 
-    cols = ([INDEX_COL] if stage.has_index else []) + [VALUE_COL]
-    df = stage.df.select(*cols).mapInPandas(conv, schema=schema)
-    return Stage(df, scalar=True, pickled=False)
+    return hop
+
+
+def fuse(steps: tp.Sequence[tp.Tuple[tp.Callable, T.StructType]], spark):
+    """One ``mapInPandas`` function for a run of ``(apply, output schema)``
+    steps: each step's output reaches the next through an Arrow hop set up
+    from the session's Arrow settings, as the Python worker reads them."""
+    if len(steps) == 1:
+        return steps[0][0]
+    get = spark.conf.get
+    conf = (
+        get("spark.sql.session.timeZone"),
+        get("spark.sql.execution.pandas.convertToArrowArraySafely", "false") == "true",
+        get("spark.sql.execution.pythonUDF.pandas.intToDecimalCoercionEnabled", "false")
+        == "true",
+    )
+    hops = [_arrow_hop(schema, *conf) for _, schema in steps[:-1]]
+
+    def fused(batches: tp.Iterator[pd.DataFrame]) -> tp.Iterator[pd.DataFrame]:
+        for (fn, _), hop in zip(steps, hops):
+            batches = hop(fn(batches))
+        return steps[-1][0](batches)
+
+    return fused

@@ -1,14 +1,17 @@
-"""Shared driver-side helpers for the element-wise operators."""
+"""Shared driver-side helpers for the element-wise operators, including the
+one place general-path operators are lowered: ``harness_stage`` builds the
+operator's harness function and ``fuse`` appends it to the input stage's
+run of harness functions, so a chain of them stays one ``mapInPandas``."""
 
 from __future__ import annotations
 
 import typing as tp
 
-from pyspark.sql import Column, types as T
+from pyspark.sql import Column, DataFrame, types as T
 
-from .. import infer
+from .. import harness, infer
 from ..stage import Stage
-from ..utils import VALUE_COL, WorkerInfo, filter_kwargs
+from ..utils import INDEX_COL, VALUE_COL, WorkerInfo, filter_kwargs
 
 
 def parse_returns(returns: tp.Union[None, str, T.DataType]) -> tp.Optional[T.DataType]:
@@ -55,3 +58,82 @@ def infer_out_type(
 
 def is_column(f: tp.Any) -> bool:
     return isinstance(f, Column)
+
+
+def successor(
+    stage: Stage,
+    df: DataFrame,
+    pickled: bool,
+    scalar: bool = True,
+    tail: tp.Optional[tuple] = None,
+) -> Stage:
+    """The Stage a partition-preserving element-wise operator makes from
+    ``stage``: it keeps the partition-range property; ``tail`` is set only
+    by ``fuse``, so any other lowering ends the fusable run."""
+    out = Stage(df, scalar=scalar, pickled=pickled)
+    out.range_partitioned = stage.range_partitioned
+    out.fusable_tail = tail
+    return out
+
+
+def fuse(stage: Stage, fn: tp.Callable, out_type: tp.Optional[T.DataType]) -> Stage:
+    """Append the mapInPandas function ``fn`` (declared output value type
+    ``out_type``; None = pickled) to ``stage``: one ``mapInPandas`` over the
+    DataFrame below the stage's run of harness functions, or over the
+    stage itself when it has no such run."""
+    schema = harness.output_schema(out_type, stage.has_index)
+    if stage.fusable_tail is not None:
+        base, steps = stage.fusable_tail
+    else:
+        cols = ([INDEX_COL] if stage.has_index else []) + [VALUE_COL]
+        base, steps = stage.df.select(*cols), ()
+    steps = steps + ((fn, schema),)
+    df = base.mapInPandas(harness.fuse(steps, base.sparkSession), schema=schema)
+    return successor(stage, df, pickled=out_type is None, tail=(base, steps))
+
+
+def harness_stage(
+    f: tp.Callable,
+    stage: Stage,
+    kind: str,
+    out_type: tp.Optional[T.DataType],
+    *,
+    mode: str,
+    workers: int,
+    timeout: float,
+    on_start: tp.Optional[tp.Callable],
+    on_done: tp.Optional[tp.Callable],
+) -> Stage:
+    """Lower a general-path map/filter/flat_map/each application."""
+    fn = harness.make_apply(
+        f,
+        kind=kind,
+        mode=mode,
+        workers=workers,
+        timeout=timeout,
+        on_start=on_start,
+        on_done=on_done,
+        in_pickled=stage.pickled,
+        out_pickled=out_type is None,
+        has_index=stage.has_index,
+    )
+    return fuse(stage, fn, out_type)
+
+
+def decode_pickled(stage):
+    """Pickled Stage → typed Stage (sample-infer the element type)."""
+    rows = stage.df.select(VALUE_COL).take(20)
+    samples = [infer.loads(r[VALUE_COL]) for r in rows]
+    out_type = infer.infer_common_type(samples)
+    if out_type is None:
+        return stage  # nothing better available
+
+    def conv(batches):
+        for pdf in batches:
+            if len(pdf) == 0:
+                continue
+            pdf = pdf.copy()
+            pdf[VALUE_COL] = pdf[VALUE_COL].map(infer.loads)
+            yield pdf
+
+    return fuse(stage, conv, out_type)

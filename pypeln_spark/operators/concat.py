@@ -14,8 +14,10 @@ from __future__ import annotations
 import functools
 import typing as tp
 
+from .. import infer
 from ..stage import Stage, to_stage
 from ..utils import INDEX_COL, VALUE_COL
+from . import _common
 
 
 def concat(stages: tp.List[tp.Any], maxsize: int = 0) -> Stage:  # noqa: ARG001
@@ -45,11 +47,10 @@ def concat(stages: tp.List[tp.Any], maxsize: int = 0) -> Stage:  # noqa: ARG001
 
 
 def _pickle_stage(stage: Stage) -> Stage:
-    """Typed scalar stage → pickled representation (for heterogeneous concat)."""
+    """Typed scalar stage → pickled representation (for heterogeneous
+    concat); fused onto the stage's run of harness functions."""
     if stage.pickled:
         return stage
-
-    from .. import harness, infer
 
     def conv(batches):
         for pdf in batches:
@@ -59,7 +60,4 @@ def _pickle_stage(stage: Stage) -> Stage:
             pdf[VALUE_COL] = pdf[VALUE_COL].map(infer.dumps)
             yield pdf
 
-    schema = harness.output_schema(None, stage.has_index)
-    cols = ([INDEX_COL] if stage.has_index else []) + [VALUE_COL]
-    df = stage.df.select(*cols).mapInPandas(conv, schema=schema)
-    return Stage(df, scalar=True, pickled=True)
+    return _common.fuse(stage, conv, None)

@@ -1,8 +1,9 @@
 """each — side-effect sink, emits nothing
 (reference: pypeln/process/api/each.py:18-141).
 
-Lowering: the harness with ``kind="each"`` (f runs, zero rows out) so that
-on_start/on_done, DI and timeout all behave exactly like map's; with
+Lowering: the harness with ``kind="each"`` (f runs, zero rows out), fused
+like map's, so that on_start/on_done, DI and timeout all behave exactly
+like map's; with
 ``run=True`` the empty result is drained immediately through Spark's noop
 sink — the analogue of the reference's eager self-iteration
 (each.py:137-141). The open/process/close contract of Spark's ForeachWriter
@@ -13,9 +14,9 @@ from __future__ import annotations
 
 import typing as tp
 
-from .. import harness
 from ..stage import Stage, to_stage
-from ..utils import INDEX_COL, UNDEFINED, VALUE_COL, curry_stage
+from ..utils import UNDEFINED, curry_stage
+from . import _common
 
 
 @curry_stage
@@ -32,22 +33,10 @@ def each(
 ) -> tp.Optional[Stage]:
     stage = to_stage(stage)
 
-    fn = harness.make_apply(
-        f,
-        kind="each",
-        mode=mode,
-        workers=workers,
-        timeout=timeout,
-        on_start=on_start,
-        on_done=on_done,
-        in_pickled=stage.pickled,
-        out_pickled=False,
-        has_index=stage.has_index,
+    out = _common.harness_stage(
+        f, stage, "each", None, mode=mode, workers=workers, timeout=timeout,
+        on_start=on_start, on_done=on_done,
     )
-    schema = harness.output_schema(None, stage.has_index)
-    cols = ([INDEX_COL] if stage.has_index else []) + [VALUE_COL]
-    df = stage.df.select(*cols).mapInPandas(fn, schema=schema)
-    out = Stage(df, scalar=True, pickled=True)
     if run:
         from .run import run as _run
 

@@ -3,17 +3,17 @@
 through untouched.
 
 Column fast path → Catalyst ``Filter`` (pushes down to the scan when the
-stage is a file source). General path → boolean-mask inside ``mapInPandas``
-so the original (possibly pickled) values are re-emitted unchanged.
+stage is a file source). General path → boolean-mask inside the fused
+``mapInPandas`` (``_common.fuse``) so the original (possibly pickled)
+values are re-emitted unchanged.
 """
 
 from __future__ import annotations
 
 import typing as tp
 
-from .. import harness
 from ..stage import Stage, to_stage
-from ..utils import INDEX_COL, UNDEFINED, VALUE_COL, curry_stage
+from ..utils import UNDEFINED, VALUE_COL, curry_stage
 from . import _common
 
 
@@ -31,21 +31,13 @@ def filter(  # noqa: A001
     stage = to_stage(stage)
 
     if _common.is_column(f):
-        return Stage(stage.df.filter(f), scalar=stage.scalar, pickled=stage.pickled)
+        return _common.successor(
+            stage, stage.df.filter(f), pickled=stage.pickled, scalar=stage.scalar
+        )
 
-    fn = harness.make_apply(
-        f,
-        kind="filter",
-        mode=mode,
-        workers=workers,
-        timeout=timeout,
-        on_start=on_start,
-        on_done=on_done,
-        in_pickled=stage.pickled,
-        out_pickled=stage.pickled,
-        has_index=stage.has_index,
+    # the output is the input rows, so it keeps the input's value type
+    out_type = None if stage.pickled else stage.df.schema[VALUE_COL].dataType
+    return _common.harness_stage(
+        f, stage, "filter", out_type, mode=mode, workers=workers, timeout=timeout,
+        on_start=on_start, on_done=on_done,
     )
-    cols = ([INDEX_COL] if stage.has_index else []) + [VALUE_COL]
-    df_in = stage.df.select(*cols)
-    df = df_in.mapInPandas(fn, schema=df_in.schema)
-    return Stage(df, scalar=True, pickled=stage.pickled)

@@ -10,7 +10,8 @@ Lowerings:
   emitted ``pos`` IS the appended index component.
 - **General path**: Python callable returning an iterable (task mode also
   accepts async generators, reference task/api/flat_map.py:24-46) →
-  ``mapInPandas`` yielding multiple rows per input.
+  the fused ``mapInPandas`` (``_common.fuse``) yielding multiple rows per
+  input.
 
 flat_map subsumes map+filter (reference notes this at flat_map.py:93-100):
 return [y] to map, [] to drop.
@@ -22,7 +23,6 @@ import typing as tp
 
 from pyspark.sql import functions as F
 
-from .. import harness
 from ..stage import Stage, to_stage
 from ..utils import INDEX_COL, UNDEFINED, VALUE_COL, curry_stage
 from . import _common
@@ -52,26 +52,12 @@ def flat_map(
             )
         else:
             df = stage.df.select(F.posexplode(f).alias("_pos", VALUE_COL)).drop("_pos")
-        return Stage(df, scalar=True, pickled=False)
+        return _common.successor(stage, df, pickled=False)
 
     out_type = _common.parse_returns(returns)
     if out_type is None:
         out_type = _common.infer_out_type(f, stage, "flat_map")
-    out_pickled = out_type is None
-
-    fn = harness.make_apply(
-        f,
-        kind="flat_map",
-        mode=mode,
-        workers=workers,
-        timeout=timeout,
-        on_start=on_start,
-        on_done=on_done,
-        in_pickled=stage.pickled,
-        out_pickled=out_pickled,
-        has_index=stage.has_index,
+    return _common.harness_stage(
+        f, stage, "flat_map", out_type, mode=mode, workers=workers, timeout=timeout,
+        on_start=on_start, on_done=on_done,
     )
-    schema = harness.output_schema(out_type, stage.has_index)
-    cols = ([INDEX_COL] if stage.has_index else []) + [VALUE_COL]
-    df = stage.df.select(*cols).mapInPandas(fn, schema=schema)
-    return Stage(df, scalar=True, pickled=out_pickled)

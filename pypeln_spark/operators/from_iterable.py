@@ -59,7 +59,7 @@ class PumpSink:
     output row in driver memory for the life of the query, so a genuinely
     long-running unbounded stream grows without bound here. Long-running
     consumers should drain through ``streaming.run_foreach_batch`` (bounded
-    per-batch driver exposure, exactly-once per epoch) or a file sink —
+    per-batch driver exposure, at-least-once per epoch) or a file sink —
     the pump's bounded-driver-memory story covers the SOURCE side only."""
 
     def __init__(self, df: DataFrame, output_mode: str = "append"):
@@ -333,5 +333,7 @@ def from_iterable(
         ([i], infer.dumps(v) if pickled else v)
         for i, v in enumerate(values)
     ]
-    df = spark.createDataFrame(rows, schema=schema)
-    return Stage(df, scalar=True, pickled=pickled)
+    stage = Stage(spark.createDataFrame(rows, schema=schema), scalar=True, pickled=pickled)
+    # createDataFrame slices the list contiguously across partitions
+    stage.range_partitioned = True
+    return stage

@@ -8,16 +8,17 @@ Two lowerings:
 - **Column fast path**: ``pl.map(F.col("value") * 2, data)`` → a pure
   Catalyst projection (whole-stage codegen, zero Python).
 - **General path**: arbitrary Python callable → Arrow-batched ``mapInPandas``
-  through the lifecycle/DI/timeout harness (harness.py). Output type comes
-  from ``returns=`` or a one-element driver-side sample call; untypable
-  results fall back to pickled BinaryType.
+  through the lifecycle/DI/timeout harness (harness.py), fused with the
+  general-path operators directly before it into one ``mapInPandas``
+  (``_common.fuse``). Output type comes from ``returns=`` or a driver-side
+  sample call on up to 10 elements; untypable results fall back to pickled
+  BinaryType.
 """
 
 from __future__ import annotations
 
 import typing as tp
 
-from .. import harness
 from ..stage import Stage, to_stage
 from ..utils import INDEX_COL, UNDEFINED, VALUE_COL, curry_stage
 from . import _common
@@ -39,26 +40,12 @@ def map(  # noqa: A001
 
     if _common.is_column(f):
         cols = ([INDEX_COL] if stage.has_index else []) + [f.alias(VALUE_COL)]
-        return Stage(stage.df.select(*cols), scalar=True, pickled=False)
+        return _common.successor(stage, stage.df.select(*cols), pickled=False)
 
     out_type = _common.parse_returns(returns)
     if out_type is None:
         out_type = _common.infer_out_type(f, stage, "map")
-    out_pickled = out_type is None
-
-    fn = harness.make_apply(
-        f,
-        kind="map",
-        mode=mode,
-        workers=workers,
-        timeout=timeout,
-        on_start=on_start,
-        on_done=on_done,
-        in_pickled=stage.pickled,
-        out_pickled=out_pickled,
-        has_index=stage.has_index,
+    return _common.harness_stage(
+        f, stage, "map", out_type, mode=mode, workers=workers, timeout=timeout,
+        on_start=on_start, on_done=on_done,
     )
-    schema = harness.output_schema(out_type, stage.has_index)
-    cols = ([INDEX_COL] if stage.has_index else []) + [VALUE_COL]
-    df = stage.df.select(*cols).mapInPandas(fn, schema=schema)
-    return Stage(df, scalar=True, pickled=out_pickled)

@@ -6,8 +6,9 @@ RECOMMENDED USAGE — pass ``maxsize>0`` for anything that might be large::
     for row in pl.to_iterable(stage, maxsize=1):   # partition-at-a-time
         ...
 
-``toLocalIterator`` then pulls one partition at a time to the driver — the
-same bounded-memory intent as the reference's ``maxsize`` on the main
+A local iterator (Spark's ``toLocalIterator`` protocol) then pulls one
+partition at a time to the driver, and its socket is closed as soon as the
+rows run out or the consumer stops — the same bounded-memory intent as the reference's ``maxsize`` on the main
 queue. The default ``maxsize=0`` matches the reference's "unbounded main
 queue" semantics: ONE collect() job, i.e. the whole result materializes in
 driver memory at once — fine for aggregates and samples, wrong for a
@@ -17,6 +18,7 @@ full-table sink (a warning fires past COLLECT_WARN_ROWS rows).
 
 from __future__ import annotations
 
+import contextlib
 import typing as tp
 import warnings
 
@@ -28,6 +30,48 @@ from ..utils import INDEX_COL, UNDEFINED, VALUE_COL, curry_stage
 # check is post-collect (len() of the already-built list) so the hot path
 # never pays an extra Spark job for the advice.
 COLLECT_WARN_ROWS = 100_000
+
+
+def _local_rows(df) -> tp.Iterator[tp.Any]:
+    """``df.toLocalIterator(prefetchPartitions=True)`` that owns its socket.
+
+    PySpark's own local iterator drops the socket object and leaves its
+    closing to garbage collection (an unclosed-socket ``ResourceWarning``).
+    This speaks the same per-partition protocol — ask with 1, the JVM
+    answers 1 plus one partition's rows, 0 when done, -1 on error — and
+    closes the socket in ``finally``, so it is released when the rows run
+    out and also when the consumer stops early (``close()``)."""
+    from pyspark.serializers import BatchedSerializer, CPickleSerializer, read_int, write_int
+    from pyspark.util import local_connect_and_auth
+
+    port, secret, server = df._jdf.toPythonIterator(True)
+    sockfile, sock = local_connect_and_auth(port, secret)
+    sock.settimeout(None)  # partition collection time is unbounded
+    status = 1
+    rows: tp.Iterator[tp.Any] = iter(())
+    try:
+        while status == 1:
+            write_int(1, sockfile)
+            sockfile.flush()
+            status = read_int(sockfile)
+            if status == 1:
+                rows = BatchedSerializer(CPickleSerializer()).load_stream(sockfile)
+                yield from rows
+            elif status == -1:
+                server.getResult()  # re-raises the JVM-side error
+    finally:
+        if status == 1:
+            # stopped mid-stream: finish this partition, then tell the
+            # JVM to stop serving
+            try:
+                for _ in rows:
+                    pass
+                write_int(0, sockfile)
+                sockfile.flush()
+            except (OSError, EOFError):
+                pass  # the JVM side already closed; nothing left to tell it
+        sockfile.close()
+        sock.close()
 
 
 class Element(tp.NamedTuple):
@@ -46,10 +90,11 @@ def to_iterable(
 
     def rows_of(d):
         # maxsize=0 means "unbounded buffer" in the reference — one collect()
-        # job. maxsize>0 asks for bounded memory → toLocalIterator pulls one
+        # job. maxsize>0 asks for bounded memory → a local iterator pulls one
         # partition at a time (one job per partition, slower but bounded).
         if maxsize and maxsize > 0:
-            return d.toLocalIterator(prefetchPartitions=True)
+            yield from _local_rows(d)
+            return
         rows = d.collect()
         if len(rows) > COLLECT_WARN_ROWS:
             warnings.warn(
@@ -57,26 +102,28 @@ def to_iterable(
                 "driver memory in one job; pass maxsize>0 to pull one "
                 "partition at a time with bounded memory",
                 ResourceWarning,
-                stacklevel=3,
+                stacklevel=4,
             )
-        return iter(rows)
+        yield from rows
 
     if not stage.scalar:
         # table stage: yield Rows (or dicts) — closest to the reference's
         # "values are whatever you put in"
-        for row in rows_of(df):
-            yield row.asDict()
+        with contextlib.closing(rows_of(df)) as rows:
+            for row in rows:
+                yield row.asDict()
         return
 
     cols = ([INDEX_COL] if (return_index and stage.has_index) else []) + [VALUE_COL]
-    for row in rows_of(df.select(*cols)):
-        v = row[VALUE_COL]
-        if stage.pickled and v is not None:
-            v = infer.loads(v)
-        if return_index and stage.has_index:
-            yield Element(tuple(row[INDEX_COL]), v)
-        else:
-            yield v
+    with contextlib.closing(rows_of(df.select(*cols))) as rows:
+        for row in rows:
+            v = row[VALUE_COL]
+            if stage.pickled and v is not None:
+                v = infer.loads(v)
+            if return_index and stage.has_index:
+                yield Element(tuple(row[INDEX_COL]), v)
+            else:
+                yield v
 
 
 async def to_async_iterable(

@@ -51,24 +51,18 @@ except ImportError:  # pragma: no cover
 # everything else follows in original module order. Unknown names are
 # ignored so a renamed query can't break import.
 #
-# Round-13 rotation — EXACTLY 50 names (driver samples 50; invariants
-# pinned by tests/test_correctness_gate.py::test_driver_window_rotation_
-# invariants: window size, no duplicates, front-of-registry equality,
-# never-driver-checked entries inside the window, and the two-phase
-# 5-round-cycle freshness rule). The front 50 is (a) VERDICT r12 #1:
-# ALL 18 r8-stale entries, in registry order — they hit the 5-round
-# hard-fail threshold if they miss this window; (b) the TWO r13 debuts
-# (never driver-checked, must debut inside the window):
-# search_mmr_over_ann_front — the MMR rerank composed over the
-# IVF-kmeans candidate front with the literal-quantizer BNLJ-free plan
-# (VERDICT r12 #5) — and streaming_bm25_topk_serving_live — live
-# lexical retrieval, BM25 top-k served during ingest under per-epoch
-# IDF/avgdl snapshots (VERDICT r12 #4); then (c) the first 30
-# non-retired r9-cohort entries in registry order (the 16 remaining r9
-# entries — variant_nested_event_doc onward in cohort order — lead the
-# r14 window head). ALL registry entries PLUS the r13-retired four
-# stay covered every session by the local DuckDB gate
-# (tests/test_correctness_gate.py replays every oracle in
+# Rotation for the round after r14 — EXACTLY 50 names (driver samples 50;
+# invariants pinned by tests/test_correctness_gate.py::test_driver_window_
+# rotation_invariants: window size, no duplicates, front-of-registry
+# equality, never-driver-checked entries inside the window, and the
+# two-phase 5-round-cycle freshness rule). The list is the output of
+# ``python tools/rotate_registry.py``, pasted unchanged: every entry has
+# a driver row, so it orders by staleness. (a) The 16 entries last
+# checked in r9 lead the window — r14 re-checked the r13 names instead,
+# so these are one round from the 5-round hard-fail threshold. (b) The
+# next 34 are the stalest r10 greens in registry order. ALL registry
+# entries PLUS the retired ones stay covered every session by the local
+# DuckDB gate (tests/test_correctness_gate.py replays every oracle in
 # REGISTRY ∪ RETIRED).
 #
 # RETIREMENT POLICY (VERDICT r11 #6 — written before the 250-entry
@@ -94,60 +88,58 @@ except ImportError:  # pragma: no cover
 # dedup_minhash_lsh, curation_e2e_pretrain_pack): 214 live entries +
 # ~2 debuts/round vs 50x5=250 — headroom through ~r19.
 _PRIORITY = [
-    # -- (a) the 18 r8-stale entries (5-round cycle deadline this round) --
-    "group_agg_udaf_midrange",
-    "fuzzy_join_supplier_names",
-    "events_gapfill_hourly",
-    "events_scd2_status_intervals",
-    "window_distribution_gauntlet",
-    "q2_min_cost_supplier",
-    "q7_nation_volume_shipping",
-    "q8_market_share",
-    "q9_product_type_profit",
-    "q11_important_part_values",
-    "q12_late_shipment_priority",
-    "q15_top_supplier",
-    "q16_supplier_part_counts",
-    "q20_excess_volume_suppliers",
-    "streaming_cms_daily_heavy_hitters",
-    "streaming_hll_daily_distinct",
-    "streaming_asof_static_enrich",
-    "streaming_merge_upsert_orders",
-    # -- (b) the r13 debuts --
-    "search_mmr_over_ann_front",
-    "streaming_bm25_topk_serving_live",
-    # -- (c) first 30 non-retired r9-cohort entries, registry order (the
-    # 16 remaining r9 entries lead the r14 window head) --
-    "pipeline_map_revenue",
-    "pipeline_map_python_udf",
-    "pipeline_map_rows_python",
-    "pipeline_filter_shipdate",
-    "pipeline_flat_map_tokens",
-    "pipeline_flat_map_python",
-    "pipeline_concat_parties",
-    "pipeline_ordered_lineitem",
-    "pipeline_unbounded_pump",
-    "multimodal_real_decode_pnm",
-    "multimodal_real_decode_wav",
-    "multimodal_video_frame_sample",
-    "multimodal_asset_feature_stats",
-    "curation_token_budget",
-    "curation_temperature_weights",
-    "dedup_containment_pairs",
-    "dedup_incremental_vs_corpus",
-    "ann_ivf_topk",
-    "embedding_near_dup_lsh",
-    "embedding_near_dup_recall_eval",
-    "embedding_quantize_int8",
-    "search_hybrid_rrf",
-    "ann_recall_eval_lsh",
-    "ann_recall_eval_nprobe",
-    "subquery_orders_above_avg",
-    "correlated_max_quantity_items",
-    "grouping_sets_orders",
-    "q21_waiting_suppliers",
-    "merge_upsert_orders",
-    "recursive_cte_ancestry",
+    # -- (a) the 16 r9-stale entries --
+    "variant_nested_event_doc",
+    "variant_props_rollup",
+    "streaming_variant_props_rollup",
+    "quality_expectations_lineitem",
+    "quality_profile_orders",
+    "ivm_orders_priority_merge",
+    "quality_table_diff_orders",
+    "events_value_anomalies",
+    "events_rolling_24h_stats",
+    "histogram_equi_depth_by_type",
+    "bloom_pruned_join_revenue",
+    "zorder_layout_events",
+    "graph_triangles_part_cooccurrence",
+    "streaming_funnel_stages",
+    "asof_join_with_tolerance",
+    "streaming_interval_left_join",
+    # -- (b) the stalest r10 greens, registry order --
+    "pipeline_each_audit_count",
+    "pipeline_to_iterable_roundtrip",
+    "q1_pricing_summary",
+    "q6_revenue_delta",
+    "agg_nation_customer_stats",
+    "groupby_having_hot_parts",
+    "count_distinct_parts_by_brand",
+    "q3_shipping_priority",
+    "q5_local_supplier_volume",
+    "semi_join_auto_orders",
+    "anti_join_idle_customers",
+    "window_top3_orders_per_customer",
+    "window_running_customer_spend",
+    "window_lag_order_gap_days",
+    "top_k_expensive_parts",
+    "set_intersect_nations",
+    "set_except_nations",
+    "dedup_lsh_hot_bucket_star",
+    "dedup_simhash_near_pairs60",
+    "array_function_gauntlet",
+    "unpivot_order_status_counts",
+    "manual_median_price_by_priority",
+    "cheapest_item_supplier_per_part",
+    "nation_pair_trade_volume",
+    "not_in_parts_never_shipped",
+    "window_navigation_gauntlet",
+    "listagg_region_nations",
+    "stats_moments_by_event_type",
+    "skew_salted_event_totals",
+    "sketch_quantile_global_histogram",
+    "bucketed_join_priority_revenue",
+    "events_transition_matrix",
+    "sketch_kmv_overlap_users",
+    "q13_customer_order_distribution",
 ]
 
 

@@ -1,12 +1,29 @@
 """Stage — the engine's one pipeline abstraction.
 
-A Stage wraps a (lazy) Spark DataFrame plus two bits of payload metadata:
+A Stage wraps a (lazy) Spark DataFrame plus payload metadata:
 
 - ``scalar``: the payload is a single ``value`` column (the reference's
   element-wise pipelines); multi-column stages are "table" pipelines that the
   relational layer operates on.
 - ``pickled``: the ``value`` column holds pickled Python objects (opaque
   fallback; see infer.py).
+- ``fusable_tail``: set on a Stage built by the general (Python) path of
+  map / filter / flat_map / each: ``(base, steps)``, the DataFrame below
+  the run of harness operators and the list of ``(mapInPandas function,
+  declared output schema)`` pairs. The next general-path operator builds
+  ONE ``mapInPandas`` over ``base`` with all functions composed
+  (operators/_common.py ``fuse``), so an element-wise chain is one Python
+  pass per partition. ``df`` is still the complete DataFrame of the run so
+  far, so sampling, ``to_df`` and the relational passthrough see it
+  unchanged. Column fast paths, ``concat``, ``ordered`` and relational ops
+  end a run (their Stage has no tail).
+- ``range_partitioned``: the partitions hold increasing, disjoint ``_index``
+  ranges. Bounded ``from_iterable`` sets it (``createDataFrame`` of a list
+  slices it contiguously); partition-preserving element-wise operators and
+  ``ordered`` keep it; every other Stage — ``concat``, ``with_index``,
+  DataFrame lifting, the ``__getattr__`` passthrough, streaming sources,
+  ``sync.to_stage`` — leaves it off. ``ordered`` uses it to sort within
+  partitions instead of globally (see operators/ordered.py).
 
 The DataFrame's logical plan IS the pipeline DAG — where the reference wires
 ``IterableQueue``s between Stage dataclasses (pypeln/process/stage.py:29-67),
@@ -29,6 +46,9 @@ from .utils import INDEX_COL, VALUE_COL, Partial
 
 
 class Stage:
+    fusable_tail: tp.Optional[tp.Tuple[DataFrame, tuple]] = None
+    range_partitioned: bool = False
+
     def __init__(self, df: DataFrame, scalar: bool | None = None, pickled: bool = False):
         self.df = df
         cols = df.columns
@@ -89,7 +109,7 @@ class Stage:
         via a pandas UDF; use when downstream wants columnar ops)."""
         if not self.pickled:
             return self
-        from .harness import decode_pickled
+        from .operators._common import decode_pickled
 
         return decode_pickled(self)
 

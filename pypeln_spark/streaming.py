@@ -304,8 +304,11 @@ def run_foreach_batch(
     fn: tp.Callable[[DataFrame, int], None],
     state_partitions: tp.Optional[int] = None,
 ) -> None:
-    """foreachBatch sink, driven to completion (exactly-once per epoch —
-    the Spark-native home for reference-style ``each`` side effects)."""
+    """foreachBatch sink, driven to completion — the Spark-native home for
+    reference-style ``each`` side effects. Delivery is AT-LEAST-once per
+    epoch: after a restart Spark replays the last uncommitted ``batchId``,
+    so ``fn`` must be idempotent on its ``epoch_id`` argument (for example
+    an overwrite keyed by epoch) for the effect to be exactly-once."""
     ckpt = stream_sink_dir("pypeln_spark_ckpt_")
     with _stream_partitions(stream_df.sparkSession, state_partitions):
         q = (

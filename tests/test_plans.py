@@ -550,3 +550,63 @@ def test_plan_lint_whole_registry(spark):
         if v:
             violations[name] = v
     assert not violations, violations
+
+
+def _executed(stage) -> str:
+    return stage.df._jdf.queryExecution().executedPlan().toString()
+
+
+def test_general_chain_is_one_map_in_pandas(spark):
+    """Four general-path operators in a row fuse into ONE mapInPandas: one
+    Python pass per partition, no JVM round trip between operators."""
+    from pyspark.sql import functions as F
+
+    import pypeln_spark as pl
+
+    async def halve(x):
+        return x // 2
+
+    stage = (
+        pl.from_iterable(range(100))
+        | pl.process.map(lambda x: x + 1, returns="long")
+        | pl.process.filter(lambda x: x % 3 != 0)
+        | pl.task.map(halve, workers=4, returns="long")
+        | pl.process.flat_map(lambda x: [x, -x], returns="long")
+    )
+    p = _executed(stage)
+    assert p.count("MapInPandas") == 1, p
+    import tools.plan_lint as L
+
+    assert L.stacked_map_in_pandas(p) == 0
+    # a Column projection ends the run; the lint flags the stacked pair
+    split = stage | pl.map(F.col("value")) | pl.map(lambda x: x * 2, returns="long")
+    assert L.stacked_map_in_pandas(_executed(split)) == 1
+
+
+def test_ordered_over_from_iterable_sorts_locally(spark):
+    """from_iterable's partitions hold increasing, disjoint index ranges and
+    element-wise operators keep them there, so ordered() is a
+    sortWithinPartitions: no Exchange and no range-sampling job that would
+    re-run the Python chain."""
+    import pypeln_spark as pl
+
+    stage = (
+        pl.from_iterable(range(100))
+        | pl.map(lambda x: x * 2, returns="long")
+        | pl.flat_map(lambda x: [x, x + 1], returns="long")
+        | pl.ordered()
+    )
+    p = _executed(stage)
+    assert "Exchange" not in p and "rangepartitioning" not in p, p
+    assert "Sort [" in p, p
+
+
+def test_concat_and_with_index_keep_range_partitioned_sort(spark):
+    """Stages without the partition-range property keep the global sort."""
+    import pypeln_spark as pl
+    from pypeln_spark.stage import Stage
+
+    both = pl.concat([pl.from_iterable(range(5)), pl.from_iterable(range(3))])
+    assert "rangepartitioning" in _executed(both | pl.ordered())
+    keyed = Stage(spark.range(10).selectExpr("id AS value")).with_index("value")
+    assert "rangepartitioning" in _executed(keyed | pl.ordered())

@@ -17,6 +17,12 @@ Checks per query (physical plan string at sf0.01):
   FlatMapGroupsInPandas / MapInArrow / PythonUDTF): allowed only in
   queries that EXIST to exercise the Python harness; a pure-relational or
   ext query growing a Python node means a built-in got replaced by a UDF.
+- Unfused element-wise runs: a MapInPandas whose child, looking through
+  Project nodes, is another MapInPandas. Consecutive general-path
+  map/filter/flat_map/each applications fuse into ONE mapInPandas
+  (operators/_common.py ``fuse``), and so do concat's pickling and
+  ``Stage.decode``; a stacked pair means some lowering bypassed the fusion
+  and pays an extra JVM↔Python round trip per row. No query is exempt.
 - InMemoryTableScan of a non-persisted plan / missing scan: not checked —
   persist decisions are measured case by case (SCALING.md).
 
@@ -122,6 +128,33 @@ PY_NODES = re.compile(
 )
 
 
+def _node(line: str) -> tuple[int, str]:
+    """(depth, operator name) of one line of a physical-plan tree string."""
+    body = line.lstrip(" :|+-")
+    body = re.sub(r"^\*\(\d+\)\s*", "", body)  # whole-stage-codegen marker
+    return len(line) - len(line.lstrip(" :|+-")), body.split(" ", 1)[0]
+
+
+def stacked_map_in_pandas(plan: str) -> int:
+    """Count MapInPandas nodes whose child, through Project, is another
+    MapInPandas. Both operators are unary, so a node's child is the next
+    line when that line sits exactly one tree level (3 columns) deeper."""
+    nodes = [_node(line) for line in plan.splitlines() if line.strip()]
+    hits = 0
+    for i, (depth, op) in enumerate(nodes):
+        if op != "MapInPandas":
+            continue
+        j = i + 1
+        while j < len(nodes) and nodes[j][0] == depth + 3:
+            depth, op = nodes[j]
+            if op == "MapInPandas":
+                hits += 1
+            if op != "Project":
+                break
+            j += 1
+    return hits
+
+
 def lint(plan: str, name: str) -> list[str]:
     v = []
     if "CartesianProduct" in plan and name not in ALLOW_CARTESIAN:
@@ -134,6 +167,8 @@ def lint(plan: str, name: str) -> list[str]:
         and name not in ALLOW_PYTHON
     ):
         v.append(f"python-eval:{PY_NODES.search(plan).group(0)}")
+    if stacked_map_in_pandas(plan):
+        v.append("stacked-MapInPandas")
     return v
 
 
