@@ -1,7 +1,8 @@
 """Benchmark harness — runs the headline queries at $SPARK_GRAFT_SF_DIR
 (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE
 JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
-"queries": {name: sec}, "runs": N, "agg": "min", "sf": ...}.
+"runs": N, "agg": "min", "sf": ..., "host", "cpus", "commit", ...,
+"queries": {name: sec}}.
 
 Timing protocol: one tiny warm-up action (session + codegen spin-up) plus a
 sf0.001 warm-up pass of every headline shape, then each query runs
@@ -302,6 +303,28 @@ def _load_ref() -> dict:
         return {}
 
 
+def _stamp() -> dict:
+    """Who produced the record: the host, the CPU count the session ran with
+    ($SPARK_GRAFT_CPUS, defaulted as ``get_spark`` defaults it) and the
+    checkout's commit (None outside a git checkout)."""
+    import socket
+    import subprocess
+
+    here = os.path.dirname(os.path.abspath(__file__))
+    try:
+        commit = subprocess.run(
+            ["git", "-C", here, "rev-parse", "HEAD"],
+            capture_output=True, text=True, timeout=30,
+        ).stdout.strip() or None
+    except (OSError, subprocess.SubprocessError):
+        commit = None
+    return {
+        "host": socket.gethostname(),
+        "cpus": int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4)),
+        "commit": commit,
+    }
+
+
 def main() -> None:
     from pypeln_spark.session import get_spark
     from pypeln_spark.queries import REGISTRY, RETIRED
@@ -506,6 +529,7 @@ def main() -> None:
         "pool_mb_max": round(max(pool_at.values()) / 2**20, 1),
         "pool_capacity_mb": round(pool_cap / 2**20, 1),
         "pool_pressured": pressured,
+        **_stamp(),
     }
     if cold_s:
         record["cold_s"] = cold_s

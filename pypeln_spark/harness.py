@@ -302,22 +302,40 @@ def make_apply(
     return apply
 
 
-def _arrow_hop(schema: T.StructType, timezone: str, safecheck: bool, int_to_decimal: bool):
+def arrow_conf(spark) -> tp.Tuple[str, bool, bool]:
+    """The session's Arrow settings, as the Python worker reads them: time
+    zone, safe casting, int→decimal coercion."""
+    get = spark.conf.get
+    return (
+        get("spark.sql.session.timeZone"),
+        get("spark.sql.execution.pandas.convertToArrowArraySafely", "false") == "true",
+        get("spark.sql.execution.pythonUDF.pandas.intToDecimalCoercionEnabled", "false")
+        == "true",
+    )
+
+
+def arrow_serializer(timezone: str, safecheck: bool, int_to_decimal: bool):
+    """The serializer a ``mapInPandas`` worker converts its batches with."""
+    from pyspark.sql.pandas.serializers import ArrowStreamPandasUDFSerializer
+
+    return ArrowStreamPandasUDFSerializer(
+        timezone,
+        safecheck,
+        True,  # assign output columns by name
+        df_for_struct=True,
+        arrow_cast=True,
+        int_to_decimal_coercion_enabled=int_to_decimal,
+    )
+
+
+def _arrow_hop(schema: T.StructType, conf: tp.Tuple[str, bool, bool]):
     """The in-process stand-in for a ``mapInPandas`` boundary: convert each
     batch to Arrow with ``schema`` (the upstream operator's declared output)
     and back, with the serializer the Python worker itself uses."""
-    from pyspark.sql.pandas.serializers import ArrowStreamPandasUDFSerializer
     from pyspark.sql.pandas.types import to_arrow_type
 
     def hop(batches: tp.Iterator[pd.DataFrame]) -> tp.Iterator[pd.DataFrame]:
-        ser = ArrowStreamPandasUDFSerializer(
-            timezone,
-            safecheck,
-            True,  # assign output columns by name
-            df_for_struct=True,
-            arrow_cast=True,
-            int_to_decimal_coercion_enabled=int_to_decimal,
-        )
+        ser = arrow_serializer(*conf)
         arrow_type = to_arrow_type(schema)
         for pdf in batches:
             arr = ser._create_struct_array(pdf, arrow_type, spark_type=schema)
@@ -329,17 +347,11 @@ def _arrow_hop(schema: T.StructType, timezone: str, safecheck: bool, int_to_deci
 def fuse(steps: tp.Sequence[tp.Tuple[tp.Callable, T.StructType]], spark):
     """One ``mapInPandas`` function for a run of ``(apply, output schema)``
     steps: each step's output reaches the next through an Arrow hop set up
-    from the session's Arrow settings, as the Python worker reads them."""
+    from the session's Arrow settings."""
     if len(steps) == 1:
         return steps[0][0]
-    get = spark.conf.get
-    conf = (
-        get("spark.sql.session.timeZone"),
-        get("spark.sql.execution.pandas.convertToArrowArraySafely", "false") == "true",
-        get("spark.sql.execution.pythonUDF.pandas.intToDecimalCoercionEnabled", "false")
-        == "true",
-    )
-    hops = [_arrow_hop(schema, *conf) for _, schema in steps[:-1]]
+    conf = arrow_conf(spark)
+    hops = [_arrow_hop(schema, conf) for _, schema in steps[:-1]]
 
     def fused(batches: tp.Iterator[pd.DataFrame]) -> tp.Iterator[pd.DataFrame]:
         for (fn, _), hop in zip(steps, hops):

@@ -7,11 +7,14 @@ from __future__ import annotations
 
 import typing as tp
 
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame, types as T
+from pyspark.sql.pandas.types import to_arrow_type
 
 from .. import harness, infer
 from ..stage import Stage
 from ..utils import INDEX_COL, VALUE_COL, WorkerInfo, filter_kwargs
+from .to_iterable import collect_rows
 
 
 def parse_returns(returns: tp.Union[None, str, T.DataType]) -> tp.Optional[T.DataType]:
@@ -22,9 +25,53 @@ def parse_returns(returns: tp.Union[None, str, T.DataType]) -> tp.Optional[T.Dat
     return T._parse_datatype_string(returns)
 
 
+def _tail_sample(stage: Stage, n: int) -> tp.Optional[tp.List[tp.Any]]:
+    """The first ``n`` values of a Stage with a ``fusable_tail``, computed
+    on the driver: a prefix of ``base`` (``limit(k).collect()``, no Spark
+    job on a local source) becomes the pandas batch a worker would get,
+    and the run's fused function (``harness.fuse``, per-operator
+    ``on_start``/``on_done`` included) maps it in process. ``k`` grows
+    geometrically up to one Arrow batch; None when that prefix still
+    yields fewer than ``n`` outputs and ``base`` has more rows."""
+    base, steps = stage.fusable_tail
+    spark = base.sparkSession
+    fn = harness.fuse(steps, spark)
+    ser = harness.arrow_serializer(*harness.arrow_conf(spark))
+    in_type, out_schema = to_arrow_type(base.schema), steps[-1][1]
+    out_type = to_arrow_type(out_schema)
+    value_type = out_schema[VALUE_COL].dataType
+    batch_max = int(spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch"))
+    k = n
+    while True:
+        rows = collect_rows(base.limit(k))
+        columns = [infer.to_arrow([r[i] for r in rows], f.dataType)
+                   for i, f in enumerate(base.schema.fields)]
+        batch = ser.arrow_to_pandas(pa.StructArray.from_arrays(columns, fields=list(in_type)), 0)
+        values = []
+        for pdf in fn(iter([batch])):
+            out = ser._create_struct_array(pdf, out_type, spark_type=out_schema)
+            values += infer.from_arrow(out.field(VALUE_COL), value_type)
+        if len(values) >= n or len(rows) < k:
+            return values[:n]
+        if k >= batch_max:
+            return None
+        k = min(4 * k, batch_max)
+
+
 def sample_values(stage: Stage, n: int = 1) -> tp.List[tp.Any]:
-    rows = stage.df.select(VALUE_COL).take(n)
-    vals = [r[VALUE_COL] for r in rows]
+    """The first ``n`` element values of ``stage`` (unpickled), as
+    ``take(n)`` returns them. A Stage that ends a run of harness functions
+    gets them from a driver-side run of that run over a prefix of its base;
+    ``take(n)`` is the fallback when that prefix is not enough or a function
+    fails on the driver."""
+    vals = None
+    if stage.fusable_tail is not None:
+        try:
+            vals = _tail_sample(stage, n)
+        except Exception:
+            vals = None  # e.g. a function that works only inside a task
+    if vals is None:
+        vals = [r[VALUE_COL] for r in collect_rows(stage.df.select(VALUE_COL).limit(n))]
     if stage.pickled:
         vals = [infer.loads(v) for v in vals]
     return vals
@@ -33,10 +80,16 @@ def sample_values(stage: Stage, n: int = 1) -> tp.List[tp.Any]:
 def infer_out_type(
     f: tp.Callable, stage: Stage, kind: str
 ) -> tp.Optional[T.DataType]:
-    """Apply ``f`` to one sampled element driver-side and infer the Spark type
-    of the result. Any failure (f needs on_start resources, raises, yields an
-    un-typable object) → None, which selects the pickled fallback — always
-    correct, never fast. Pass ``returns=`` to skip the sample call entirely.
+    """Infer the Spark type of ``f``'s results from its outputs on the
+    stage's first 10 elements, called driver-side (``sample_values``). When
+    the input ends a run of harness functions, those elements come from
+    running the run itself on the driver, so the upstream operators'
+    ``on_start``/``on_done`` run on the driver during inference, besides
+    the executor tasks that later run the chain. ``f`` itself is called
+    without its ``on_start`` resources. Any failure (f needs those
+    resources, raises, yields an un-typable object) → None, which selects
+    the pickled fallback — always correct, never fast. Pass ``returns=`` to
+    skip inference entirely.
     """
     try:
         samples = sample_values(stage, 10)
@@ -122,9 +175,7 @@ def harness_stage(
 
 def decode_pickled(stage):
     """Pickled Stage → typed Stage (sample-infer the element type)."""
-    rows = stage.df.select(VALUE_COL).take(20)
-    samples = [infer.loads(r[VALUE_COL]) for r in rows]
-    out_type = infer.infer_common_type(samples)
+    out_type = infer.infer_common_type(sample_values(stage, 20))
     if out_type is None:
         return stage  # nothing better available
 

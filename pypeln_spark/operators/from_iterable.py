@@ -5,11 +5,21 @@ variant pypeln/task/api/from_iterable.py:14-83. Elements get the flat
 creation-order index ``(i,)`` exactly like the reference
 (from_iterable.py:22-28).
 
-Lowering: a BOUNDED iterable is drained driver-side into an Arrow-backed
-``createDataFrame`` (typed column when every element maps onto one Spark
-type, pickled BinaryType otherwise — see infer.py). The reference's
-``use_thread``/``maxsize`` knobs control queue plumbing that Spark doesn't
-have; they are accepted and ignored for API parity on the bounded path.
+Lowering: a BOUNDED iterable is drained driver-side into a ``pyarrow.Table``
+(``_index`` as ``list<int64>``; ``value`` in the declared or inferred type
+when every element maps onto one Spark type, pickled ``binary`` otherwise —
+see infer.py) and handed to ``createDataFrame``. Spark plans it as a
+``LocalTableScan``: no Python worker reads it, ``limit(k).collect()`` of it
+runs no job, and its partitions are contiguous slices, so the Stage is
+``range_partitioned``. Values are stored as a list-backed
+``createDataFrame`` stores them (``infer.to_arrow``: naive datetimes are
+process-local instants, decimals round to the type's scale), except that
+Arrow also takes ints for a double and numpy scalars. One type keeps the
+list-backed ``createDataFrame``: a map with nested or timestamp keys or
+values, whose null maps PySpark's Arrow path turns into empty ones before
+pyarrow 17. The reference's ``use_thread``/``maxsize`` knobs control queue
+plumbing that Spark doesn't have; they are accepted and ignored for API
+parity on the bounded path.
 
 ``unbounded=True`` is the parity path for the reference's INFINITE
 iterables (task/api/from_iterable.py:14-83 consumes endless async
@@ -26,13 +36,15 @@ Spark-native reading of the reference's ``maxsize``), and trigger sizing
 from __future__ import annotations
 
 import asyncio
-import inspect
 import os
 import tempfile
 import typing as tp
 import uuid
 
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, types as T
+from pyspark.sql.pandas.types import to_arrow_type
 
 from .. import infer
 from ..stage import Stage
@@ -45,9 +57,18 @@ def _drain(iterable: tp.Any) -> tp.List[tp.Any]:
             return [x async for x in iterable]
 
         return asyncio.new_event_loop().run_until_complete(collect())
-    if inspect.isgenerator(iterable) or not isinstance(iterable, (list, tuple)):
-        return list(iterable)
     return list(iterable)
+
+
+def _arrow_exact(at) -> bool:
+    """Whether ``createDataFrame`` of an Arrow column of type ``at`` keeps
+    every null: before pyarrow 17, PySpark rebuilds a map column with
+    nested or timestamp keys or values without its validity mask."""
+    if pa.types.is_map(at) and int(pa.__version__.split(".")[0]) < 17:
+        if any(pa.types.is_nested(x) or pa.types.is_timestamp(x)
+               for x in (at.key_type, at.item_type)):
+            return False
+    return all(_arrow_exact(at.field(i).type) for i in range(at.num_fields))
 
 
 class PumpSink:
@@ -146,9 +167,6 @@ class IterablePump:
     def _write_chunk(self, values: list) -> int:
         if not values:
             return 0
-        from pyspark.sql.pandas.types import to_arrow_type
-
-        import pyarrow as pa
         import pyarrow.parquet as pq
 
         idx = pa.array([[i] for i in range(self._i, self._i + len(values))],
@@ -323,17 +341,24 @@ def from_iterable(
         out_type = full if returns is None else out_type
     pickled = out_type is None
 
+    value_type = T.BinaryType() if pickled else out_type
     schema = T.StructType(
         [
             T.StructField(INDEX_COL, T.ArrayType(T.LongType()), False),
-            T.StructField(VALUE_COL, out_type if not pickled else T.BinaryType(), True),
+            T.StructField(VALUE_COL, value_type, True),
         ]
     )
-    rows = [
-        ([i], infer.dumps(v) if pickled else v)
-        for i, v in enumerate(values)
-    ]
-    stage = Stage(spark.createDataFrame(rows, schema=schema), scalar=True, pickled=pickled)
-    # createDataFrame slices the list contiguously across partitions
+    if pickled:
+        values = [infer.dumps(v) for v in values]
+    if _arrow_exact(to_arrow_type(value_type)):
+        n = len(values)
+        index = pa.ListArray.from_arrays(
+            pa.array(np.arange(n + 1, dtype=np.int32)), pa.array(np.arange(n, dtype=np.int64))
+        )
+        data = pa.table({INDEX_COL: index, VALUE_COL: infer.to_arrow(values, value_type)})
+    else:
+        data = [([i], v) for i, v in enumerate(values)]
+    stage = Stage(spark.createDataFrame(data, schema=schema), scalar=True, pickled=pickled)
+    # both sources slice their rows contiguously across partitions
     stage.range_partitioned = True
     return stage

@@ -32,6 +32,24 @@ from ..utils import INDEX_COL, UNDEFINED, VALUE_COL, curry_stage
 COLLECT_WARN_ROWS = 100_000
 
 
+def collect_rows(df) -> tp.List[tp.Any]:
+    """``df.collect()`` over a socket it closes: PySpark's own collect leaves
+    that to garbage collection (an unclosed-socket ``ResourceWarning``)."""
+    from pyspark.serializers import BatchedSerializer, CPickleSerializer
+    from pyspark.traceback_utils import SCCallSiteSync
+    from pyspark.util import local_connect_and_auth
+
+    with SCCallSiteSync(df.sparkSession.sparkContext):
+        port, secret = tuple(df._jdf.collectToPython())[:2]
+    sockfile, sock = local_connect_and_auth(port, secret)
+    sock.settimeout(None)  # job time is unbounded
+    try:
+        return list(BatchedSerializer(CPickleSerializer()).load_stream(sockfile))
+    finally:
+        sockfile.close()
+        sock.close()
+
+
 def _local_rows(df) -> tp.Iterator[tp.Any]:
     """``df.toLocalIterator(prefetchPartitions=True)`` that owns its socket.
 
@@ -95,7 +113,7 @@ def to_iterable(
         if maxsize and maxsize > 0:
             yield from _local_rows(d)
             return
-        rows = d.collect()
+        rows = collect_rows(d)
         if len(rows) > COLLECT_WARN_ROWS:
             warnings.warn(
                 f"to_iterable(maxsize=0) collected {len(rows):,} rows into "

@@ -13,13 +13,15 @@ A Stage wraps a (lazy) Spark DataFrame plus payload metadata:
   declared output schema)`` pairs. The next general-path operator builds
   ONE ``mapInPandas`` over ``base`` with all functions composed
   (operators/_common.py ``fuse``), so an element-wise chain is one Python
-  pass per partition. ``df`` is still the complete DataFrame of the run so
-  far, so sampling, ``to_df`` and the relational passthrough see it
+  pass per partition. The type sample of an operator without ``returns=``
+  runs the same functions on the driver over a prefix of ``base``
+  (``_common.sample_values``). ``df`` is still the complete DataFrame of
+  the run so far, so ``to_df`` and the relational passthrough see it
   unchanged. Column fast paths, ``concat``, ``ordered`` and relational ops
   end a run (their Stage has no tail).
 - ``range_partitioned``: the partitions hold increasing, disjoint ``_index``
-  ranges. Bounded ``from_iterable`` sets it (``createDataFrame`` of a list
-  slices it contiguously); partition-preserving element-wise operators and
+  ranges. Bounded ``from_iterable`` sets it (Spark slices its local table
+  contiguously); partition-preserving element-wise operators and
   ``ordered`` keep it; every other Stage — ``concat``, ``with_index``,
   DataFrame lifting, the ``__getattr__`` passthrough, streaming sources,
   ``sync.to_stage`` — leaves it off. ``ordered`` uses it to sort within

@@ -118,6 +118,7 @@ def test_to_iterable_return_index(spark):
     assert elems == [((0,), "a"), ((1,), "b"), ((2,), "c")]
 
 
+@pytest.mark.filterwarnings("error::pytest.PytestUnraisableExceptionWarning")
 def test_to_iterable_collect_warning(spark, monkeypatch):
     """VERDICT r5 #7: the default maxsize=0 sink is a full collect();
     past COLLECT_WARN_ROWS it must warn the user toward maxsize>0. The

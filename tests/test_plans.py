@@ -610,3 +610,14 @@ def test_concat_and_with_index_keep_range_partitioned_sort(spark):
     assert "rangepartitioning" in _executed(both | pl.ordered())
     keyed = Stage(spark.range(10).selectExpr("id AS value")).with_index("value")
     assert "rangepartitioning" in _executed(keyed | pl.ordered())
+
+
+def test_bounded_from_iterable_is_a_local_table_scan(spark):
+    """A bounded from_iterable is an Arrow-backed local relation: no RDD
+    scan, and no Python runs to read it."""
+    import pypeln_spark as pl
+
+    for values in (range(10), ["a", None], [1, "a", (1, 2)]):
+        p = _executed(pl.from_iterable(values))
+        assert "LocalTableScan" in p, p
+        assert "Scan ExistingRDD" not in p and "Python" not in p, p
