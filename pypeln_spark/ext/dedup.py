@@ -759,177 +759,140 @@ def dedup_against_corpus(
 
 
 class IncrementalLshIndex:
-    """APPEND-ONLY LSH index state for a continuously-absorbing dedup gate
-    (the streaming ingest gate, queries/streaming.py), with periodic
-    DELTA-CHAIN COMPACTION (VERDICT r7 #4).
+    """LSH index state for a continuously-absorbing dedup gate (the
+    streaming ingest gates, queries/streaming.py).
 
-    The index is a pair of frames — shingle arrays (`sh`) and band rows
-    (`bands`) — maintained as a lazy union: the BASE frames (typically
-    session-cached, shared with the batch absorb path — this class never
-    unpersists them) plus one persisted DELTA per absorbed epoch. The lazy
-    union is what makes absorption O(|delta|) instead of O(corpus) per
-    epoch, but on an UNBOUNDED stream the union deepens linearly: every
-    epoch adds a plan leaf, so analysis/optimization cost, task-side plan
-    size, and the scheduler's per-leaf bookkeeping all grow without bound.
+    The index is a pair of frames — shingle or vector rows (``sh``) and
+    band rows (``bands``) — plus, optionally, a combined view (``comb``)
+    holding both sides' columns in one row, the inverted-list layout a
+    one-join verify reads. Every ``absorb`` / ``absorb_combined`` merges
+    the epoch's novel rows into the index at once through ``compact()``:
+    the new rows are never left as a separate plan leaf, so the analyzed
+    plan of every view stays at a fixed leaf count however long the
+    stream runs, and rows reach the index only through a lineage cut (an
+    uncut delta derives from the decisions join against the previous
+    index, so a chain of them nests every earlier epoch's plan — about
+    2^epochs plan size, which exhausted the driver heap on plan strings
+    in the 12-epoch knee run, SCALING.md "Compaction knee at depth").
+    Decisions do not depend on the layout: compaction moves rows and
+    never changes them.
 
-    ``compact_every=K`` bounds it: once K deltas accumulate, the current
-    union MATERIALIZES (localCheckpoint — a true lineage cut, so the
-    analyzed plan collapses to one leaf, not just the optimized plan) into
-    one frame pair which becomes the new base, and the retired delta
-    persists are released. Decisions are unaffected — compaction changes
-    WHERE the rows live, never which rows exist (pinned by
-    tests/test_streaming.py side-by-side replay) — and the index plan's
-    leaf count stays ≤ base_leaves + K forever. Cost: one full pass over
-    the index per K epochs (the classic LSM write-amplification trade —
-    a production deployment does the same merge on the index TABLE; on a
-    cluster the materialization target is a compacted table write, the
-    in-session localCheckpoint is the block-manager stand-in). Retired
-    COMPACTED bases are checkpointed RDD blocks, not persisted plans —
-    dropping the reference hands them to Spark's ContextCleaner (freed at
-    the next driver GC), while delta frames unpersist explicitly.
-    ``compact_every=0`` (the CLASS default) keeps the pure append-only
-    behavior; the registry gates pass 1 by default since r9 (the measured
-    winner below — PYPELN_SPARK_INGEST_COMPACT_EPOCHS overrides);
-    ``compact_every="auto"`` (r10) re-derives K on every absorb from the
-    live index/batch row ratio using the measured 50×/100× knee
-    boundaries below — the setting an unbounded deployment should run,
-    since any fixed K is only right for one region of the curve.
+    What the merge materializes is chosen by the constructor arguments:
 
-    RECOMMENDED K, measured at depth (12-epoch knee runs at sf0.1 AND
-    the synthetic sf1, tools/compaction_knee.py, SCALING.md "Compaction
-    knee"): K=1 won outright at BOTH scales — 26.2 s vs 38.5 s
-    append-only (K=4/8: 28.2/28.7) at sf0.1, and 55.4 s vs 80.1 s
-    (K=4/8: 71.5/69.0) at sf1 — at index ≲ 100× batch the full rewrite
-    costs less than what a deepening union adds to EVERY epoch's
-    planning and per-leaf scheduling, so unbounded deployments should
-    compact every epoch and only grow K once the index dwarfs the batch
-    (knee moves as index_rewrite ∝ index overtakes epoch compute ∝
-    batch; size K ≈ acceptable write-amplification × batch/index). The
-    onset was then probed directly: at 48 sf1 epochs (index/batch
-    rising ~48× → ~95×) the arms CONVERGE — K=8 169.6 s vs K=1 174.4 s,
-    within single-run noise — so "compact every epoch while index ≲
-    100× batch, then grow K" is a measured boundary, not extrapolation.
-    Decisions are K-invariant (asserted across all arms of every knee
-    run, and test-pinned).
+    - **Leveled merge** (no ``bucket_cap``, no ``checkpoint_dir``): the
+      caller's BASE frames stay immutable, and each absorb materializes
+      (localCheckpoint) the previous LEVEL leaf plus the new rows into
+      one new level leaf per side — one leaf in total under
+      ``absorb_combined``. Views are base ∪ level: two leaves per side.
+      A merge costs ∝ rows absorbed so far, never ∝ the corpus.
+    - **Full-union rewrite** (``bucket_cap`` set): capping is iterated —
+      the rank filter runs over base and new rows together, so rows an
+      earlier merge evicted never come back and every bucket holds ≤ cap
+      rows after each absorb. The whole index is rewritten per absorb.
+    - **Durable generation chain** (``checkpoint_dir``, uncapped): the
+      same leveled merge, materialized as parquet under the directory
+      instead of block-manager blocks (which are lost with their
+      executor). Each side's base is copied once (``<side>_base``), each
+      absorb replaces the side's one numbered level file, and
+      ``MANIFEST.json`` is published atomically before superseded files
+      are removed — a crash leaks a file, never loses data.
+      ``recover()`` rebuilds the index from the manifest alone. With
+      ``bucket_cap`` the durable files are full rewrites.
 
-    ``checkpoint_dir`` chooses the MATERIALIZATION TARGET for deltas and
-    compactions alike: None (default) keeps localCheckpoint —
-    block-manager storage, right for local[*] and for bounded replays,
-    but NOT fault-tolerant (a lost executor's checkpoint blocks are
-    non-recomputable, which mid-stream is query-fatal). A cluster
-    deployment running an unbounded gate passes a shared-FS path (or
-    sets PYPELN_SPARK_INGEST_COMPACT_DIR, which both registry gates wire
-    through): every delta append and every compaction then writes
-    parquet under ``<dir>/<side>_<seq>`` and reads it back — which IS
-    the "index as a maintained table" deployment story (absorb = table
-    append, compact = table rewrite), durable across executor loss at
-    the cost of a filesystem round trip. Superseded files (deltas +
-    prior generation) are removed only AFTER a new compaction generation
-    fully materializes (a crash between write and delete leaks a
-    directory, never loses data)."""
+    The schedule is fixed at one merge per absorb. A deferred merge
+    (every K absorbs) still needs a lineage cut per epoch, so it pays one
+    materialization job per epoch anyway and only adds plan leaves; the
+    K>1 and ratio-driven schedules were tuned against a corpus-sized
+    rewrite per merge, which the leveled merge replaced (SCALING.md
+    "Compaction knee at depth" and "Schedule fixed at one merge per
+    absorb"). ``compact_every`` is accepted only as 1.
+
+    Two absorb modes exist and one index uses one of them: ``absorb``
+    (separate sh and band frames) and ``absorb_combined`` (one frame
+    carrying both, materialized once). Capped and durable indexes run
+    ``absorb_combined`` through the two-frame path.
+
+    The index never releases a frame the caller passed in; ``close()``
+    releases the blocks of every leaf the index cut itself."""
 
     def __init__(
         self,
         sh: DataFrame,
         bands: DataFrame,
-        compact_every: tp.Union[int, str] = 0,
+        compact_every: int = 1,
         checkpoint_dir: tp.Optional[str] = None,
         bucket_cap: tp.Optional[int] = None,
         comb: tp.Optional[DataFrame] = None,
     ):
-        # ``bucket_cap`` (r10): bound the width of every band bucket the
-        # gate PROBES — the streaming twin of lsh_candidate_pairs'
-        # hot-bucket star cap. A sub-threshold template family (pages
-        # similar enough to share band signatures but below the dup
-        # threshold, so every one is kept and absorbed) grows its buckets
-        # ∝ family size, and every later epoch's candidate join pays that
-        # width. With a cap, the band view keeps only the bucket_cap
-        # LOWEST-id rows per (band-key) bucket — applied lazily to the
-        # initial base here and re-applied to the whole union at every
-        # compact(), so width stays ≤ cap + K·|batch| forever. Keeping
-        # the LOWEST ids makes the cap decision-invariant for exact-dup
-        # traffic: the min-id member (the survivor pick's target) always
-        # survives capping, so dup_of/jaccard match the uncapped gate
-        # bit-for-bit on any doc that matches a surviving member. The
-        # trade is recall on near-dups whose ONLY matching members were
-        # evicted (test-pinned); the embedding gate manages occupancy by
-        # widening planes instead and does not use this knob. Convention:
-        # the band frame's FIRST column is the id; all other columns form
-        # the bucket key ((sigh, sig) for MinHash band tables).
+        if compact_every != 1:
+            raise ValueError(
+                "IncrementalLshIndex merges on every absorb; compact_every "
+                f"accepts only 1 (got {compact_every!r})"
+            )
+        # ``bucket_cap``: bound the width of every band bucket the gate
+        # PROBES — the streaming twin of lsh_candidate_pairs' hot-bucket
+        # star cap. A sub-threshold template family (pages similar enough
+        # to share band signatures but below the dup threshold, so every
+        # one is kept and absorbed) grows its buckets ∝ family size, and
+        # every later epoch's candidate join pays that width. With a cap,
+        # the band view keeps only the bucket_cap LOWEST-id rows per
+        # (band-key) bucket — applied lazily to the initial base here and
+        # re-applied to the whole union at every absorb, so width stays
+        # ≤ cap forever. Keeping the LOWEST ids makes the cap
+        # decision-invariant for exact-dup traffic: the min-id member (the
+        # survivor pick's target) always survives capping, so
+        # dup_of/jaccard match the uncapped gate bit-for-bit on any doc
+        # that matches a surviving member. The trade is recall on
+        # near-dups whose ONLY matching members were evicted
+        # (test-pinned); the embedding gate manages occupancy by widening
+        # planes instead and does not use this knob. Convention: the band
+        # frame's FIRST column is the id; all other columns form the
+        # bucket key ((sigh, sig) for MinHash band tables).
         self.bucket_cap = bucket_cap
         self.sh = sh
         self.bands = self._cap_bands(bands)
-        # "auto" (VERDICT r9 #3) promotes the measured knee rule to gate
-        # behavior: each absorb recomputes K from the LIVE index/batch
-        # ratio — K=1 below 50× (full rewrite beats a deepening union at
-        # every scale tried), K=4 in the measured 50-100× convergence
-        # zone, K=8 past 100× (write-amplification bound: rewrite cost ∝
-        # index has overtaken epoch compute ∝ batch). The LSM analogy is
-        # deliberate: small index = one-level full compaction, large
-        # index = leveled, amortized. Decisions are K-invariant, so auto
-        # only moves WALL time; test-pinned against fixed-K across the
-        # boundary (tests/test_dedup_incremental.py).
-        self._auto = compact_every == "auto"
-        self.compact_every = 1 if self._auto else int(compact_every)
         self.checkpoint_dir = checkpoint_dir
-        self.n_deltas = 0  # deltas since last compaction (or construction)
-        self._own_sh: list = []  # sh delta frames THIS index materialized
-        self._own_bands: list = []  # band delta frames THIS index materialized
-        self._n_rows: tp.Optional[int] = None  # lazy; tracked once known
-        self._seq = 0  # durable-checkpoint file sequence
-        self._ckpt_sh: list = []  # live durable dirs, sh side
-        self._ckpt_bands: list = []  # live durable dirs, bands side
-        # durable GENERATION-CHAIN state (r14, VERDICT r13 #6): one
-        # corpus-sized BASE copy per side written once, then delta-sized
-        # level writes forever — recovery is the MANIFEST's file union,
-        # not a single self-contained file. Capped indexes keep the full
-        # rewrite (iterated capping is a whole-index semantic).
-        self._base_ckpt: dict = {}  # side -> durable base-copy path
-        # LEVELED compaction state (r13 optimization round, uncapped
-        # indexes only — see compact()): the immutable BASE frames, one
-        # merged LEVEL leaf per side holding every absorbed row so far,
-        # and the PENDING delta frames (cut or not) since the last merge.
-        # self.sh / self.bands stay the consumer-facing lazy unions.
+        self._n_rows: tp.Optional[int] = None  # lazy; reset by every absorb
+        self._cut: list = []  # in-session leaves this index cut (close())
+        # durable state: file sequence, each side's live numbered file(s)
+        # and its one-time base copy
+        self._seq = 0
+        self._ckpt_sh: list = []
+        self._ckpt_bands: list = []
+        self._base_ckpt: dict = {}
+        # leveled state: the immutable BASE frames and one LEVEL leaf per
+        # side holding every absorbed row; self.sh / self.bands are the
+        # consumer-facing unions
         self._base_sh = self.sh
         self._base_bands = self.bands
         self._lvl_sh: tp.Optional[DataFrame] = None
         self._lvl_bands: tp.Optional[DataFrame] = None
-        self._pend_sh: list = []
-        self._pend_bands: list = []
-        # COMBINED-absorb state (r14 optimization round, absorb_combined):
-        # one frame per epoch carrying BOTH sides' columns, so each absorb
-        # (and each leveled merge) is ONE materialization job instead of
-        # two. _comb_seq tags every combined row with its absorb ordinal;
-        # _band_wm is the rebuild watermark — rows with _abseq <= _band_wm
-        # are already covered by a rebuilt band-side base and must not
-        # contribute band rows again.
+        # combined-absorb state: the level leaf carries both sides'
+        # columns; _comb_seq tags every combined row with its absorb
+        # ordinal and _band_wm is the rebuild watermark — rows with
+        # _abseq <= _band_wm are already covered by a rebuilt band base
+        # and must not contribute band rows again
         self._lvl_comb: tp.Optional[DataFrame] = None
-        self._pend_comb: list = []
-        self._own_comb: list = []
         self._comb_seq = 0
         self._band_wm = 0
         self._sh_project = None
         self._band_project = None
-        # consumer-facing COMBINED view (r14): when the caller's base index
-        # frame already carries sh AND band columns together (the gates'
-        # build_index output — the real inverted-list layout) and every
-        # absorb goes through absorb_combined, ``self.comb`` stays a live
-        # (base ∪ level ∪ pending) union of full rows. A gate verify can
-        # then run as ONE probe-vs-index join instead of the band-scan +
-        # candidate shuffle + two vector joins. None under bucket_cap /
-        # checkpoint_dir (those absorbs fall back to classic two-frame
-        # semantics and would leave the view stale), and invalidated by a
-        # classic rebuild_bands (rebuild_combined keeps it live).
+        # consumer-facing COMBINED view: when the caller's base frame
+        # already carries sh AND band columns together (the gates'
+        # build_index output) and every absorb goes through
+        # absorb_combined, ``self.comb`` stays a live base ∪ level union
+        # of full rows, so a gate verify can run as ONE probe-vs-index
+        # join. None under bucket_cap / checkpoint_dir (those absorbs take
+        # the two-frame path and would leave the view stale), and dropped
+        # by a two-frame rebuild_bands (rebuild_combined keeps it live).
         self.comb = (
             None if (bucket_cap is not None or checkpoint_dir) else comb
         )
         self._base_comb = self.comb
 
     def size(self) -> int:
-        """Row count of the index. First call counts ``sh`` (base +
-        materialized deltas — cheap); afterwards the count is maintained
-        arithmetically by absorb(), so the occupancy checks the embedding
-        gate runs per epoch cost one tiny cached-count job at most."""
+        """Row count of the index: counts ``sh`` (base + level) once after
+        each absorb and serves the cached count until the next one."""
         if self._n_rows is None:
             self._n_rows = self.sh.count()
         return self._n_rows
@@ -983,186 +946,69 @@ class IncrementalLshIndex:
         )
 
     def absorb(self, nov_sh: DataFrame, nov_bands: DataFrame) -> None:
-        """Append one epoch's novel rows. The delta frames materialize NOW
-        with a LINEAGE CUT (localCheckpoint, or a durable parquet append
-        under checkpoint_dir). The cut is CORRECTNESS-AT-DEPTH, not an
-        optimization: a gate's novel delta derives from the decisions
-        join against the CURRENT index, so a persist-only delta's logical
-        plan NESTS the plans of every earlier delta — plan size grows
-        ~2^epochs, and the 12-epoch knee run (tools/compaction_knee.py,
-        r9) OOM'd the DRIVER heap merely BUILDING THE PLAN STRING for the
-        SQL-listener event (java.lang.OutOfMemoryError inside
-        QueryExecution.explainString) long before compute mattered; the
-        3-epoch registry replay survived only because 2^3 is small. With
-        the cut, every delta is one plan LEAF, the lazy union grows
-        linearly, and compaction bounds it at base+K. (This supersedes
-        r8's persist+two-counts A/B — the counts are gone because
-        eager checkpoint/write is itself the materialization job.)"""
-        # Skip the per-delta cut when THIS absorb compacts (r13
-        # optimization round): with a fixed compact_every=K the K-th
-        # absorb's delta materialization is immediately superseded by the
-        # union materialization inside compact() — the delta rows were
-        # cut/written twice, and under a durable checkpoint_dir the
-        # parquet round trip was paid twice (half the K=1 gates' write
-        # amplification, streaming_incremental_dedup_durable's whole
-        # delta). The uncut delta's plan nests only THIS epoch's decision
-        # lineage (depth 1 — compact() cuts it in the same call), so the
-        # 2^epochs plan blowup the cut prevents cannot start. The auto
-        # mode keeps the cut: its ratio count must not re-run the novel
-        # lineage.
-        if self._pend_comb or self._lvl_comb is not None:
+        """Merge one epoch's novel rows — a shingle/vector frame and its
+        band frame — into the index through ``compact()``."""
+        if self._lvl_comb is not None:
             raise RuntimeError(
                 "IncrementalLshIndex: classic absorb() after "
                 "absorb_combined() — one index must use one absorb mode"
             )
-        will_compact = (
-            not self._auto
-            and bool(self.compact_every)
-            and self.n_deltas + 1 >= self.compact_every
-        )
-        if self.checkpoint_dir and self.bucket_cap is None:
-            # generation chain (r14): the base copy must exist before any
-            # delta lands, so the manifest is recoverable from the start
-            self._ensure_durable_base("sh", self._base_sh)
-            self._ensure_durable_base("bands", self._base_bands)
-        if not will_compact:
-            nov_sh = self._materialize(nov_sh, "sh")
-            nov_bands = self._materialize(nov_bands, "bands")
-        if self._auto:
-            pre_rows = self.size()  # pre-absorb index rows (lazy count once)
-        if will_compact:
-            # the compacted base is about to re-count lazily; an eager
-            # count here would re-execute the uncut novel lineage
-            self._n_rows = None
-            batch_rows = None
-        else:
-            batch_rows = (
-                nov_sh.count()  # tiny: counts the cut frame
-                if (self._auto or self._n_rows is not None)
-                else None
-            )
-            if self._n_rows is not None:
-                self._n_rows += batch_rows
-        if self._auto:
-            ratio = pre_rows / max(batch_rows, 1)
-            self.compact_every = 1 if ratio < 50 else (4 if ratio < 100 else 8)
-        if not will_compact:
-            self._own_sh.append(nov_sh)
-            self._own_bands.append(nov_bands)
-            if self.checkpoint_dir:
-                # a durable delta append is part of the recoverable state
-                # the moment it lands — publish it
-                self._write_manifest()
-        self._pend_sh.append(nov_sh)
-        self._pend_bands.append(nov_bands)
-        self.sh = self.sh.unionByName(nov_sh)
-        self.bands = self.bands.unionByName(nov_bands)
-        self.n_deltas += 1
-        if self.compact_every and self.n_deltas >= self.compact_every:
-            self.compact()
+        self._n_rows = None
+        self.compact(nov_sh, nov_bands)
 
     def absorb_combined(self, comb: DataFrame, sh_project, band_project) -> None:
-        """Append one epoch's novel rows from ONE combined frame carrying
-        both sides' columns (r14 optimization round, guide §1.2/§5): the
-        sh delta and the band delta of an ingest-gate epoch always derive
-        from the same novel frame, and the classic two-frame absorb paid
-        TWO lineage-cut materialization jobs per epoch (and the leveled
-        compaction two more merge jobs) over that one lineage. Here the
-        combined frame materializes ONCE and both consumer views are
-        narrow projections of the cut leaf — which is also the real
-        index layout (an IVF inverted list stores the vector WITH its
-        cell; a MinHash index stores the doc's bands next to its shingle
-        set).
+        """Merge one epoch's novel rows from ONE combined frame carrying
+        both sides' columns: the sh and band rows of an ingest-gate epoch
+        derive from the same novel frame, so the combined frame
+        materializes once and both views are narrow projections of the
+        level leaf — the real index layout (an IVF inverted list stores
+        the vector WITH its cell).
 
         ``sh_project(comb)`` must produce exactly the base sh frame's
         columns; ``band_project(comb)`` the base band frame's. Rows are
-        identical to ``absorb(sh_project(comb), band_project(comb))`` by
-        construction — only the leaf layout differs (the invariant the
-        side-by-side replay tests pin). Falls back to exactly that
-        classic call when the index needs whole-union semantics
-        (bucket_cap: capping is iterated over flat band rows; durable
-        checkpoint_dir: the newest-file-recovers-everything contract is
-        per side)."""
+        identical to ``absorb(sh_project(comb), band_project(comb))`` —
+        only the leaf layout differs — and that classic call is what runs
+        under bucket_cap (capping iterates over flat band rows) or
+        checkpoint_dir (the durable files are per side)."""
         if self.bucket_cap is not None or self.checkpoint_dir:
             self.absorb(sh_project(comb), band_project(comb))
             return
-        if self._pend_sh or self._lvl_sh is not None or (
-            self._own_sh or self._own_bands
-        ):
+        if self._lvl_sh is not None:
             raise RuntimeError(
                 "IncrementalLshIndex: absorb_combined() after classic "
                 "absorb() — one index must use one absorb mode"
             )
         self._sh_project, self._band_project = sh_project, band_project
         self._comb_seq += 1
-        comb = comb.withColumn("_abseq", F.lit(self._comb_seq).cast("int"))
-        will_compact = (
-            not self._auto
-            and bool(self.compact_every)
-            and self.n_deltas + 1 >= self.compact_every
+        self._n_rows = None
+        self.compact(
+            new_comb=comb.withColumn("_abseq", F.lit(self._comb_seq).cast("int"))
         )
-        if not will_compact:
-            comb = self._materialize(comb, "comb")
-        if self._auto:
-            pre_rows = self.size()
-        if will_compact:
-            self._n_rows = None
-            batch_rows = None
-        else:
-            batch_rows = (
-                comb.count()
-                if (self._auto or self._n_rows is not None)
-                else None
-            )
-            if self._n_rows is not None:
-                self._n_rows += batch_rows
-        if self._auto:
-            ratio = pre_rows / max(batch_rows, 1)
-            self.compact_every = 1 if ratio < 50 else (4 if ratio < 100 else 8)
-        if not will_compact:
-            self._own_comb.append(comb)
-        self._pend_comb.append(comb)
-        self.sh = self.sh.unionByName(sh_project(comb.drop("_abseq")))
-        self.bands = self.bands.unionByName(band_project(comb.drop("_abseq")))
-        if self.comb is not None:
-            self.comb = self.comb.unionByName(comb.drop("_abseq"))
-        self.n_deltas += 1
-        if self.compact_every and self.n_deltas >= self.compact_every:
-            self.compact()
 
     def _materialize(self, df: DataFrame, side: str) -> DataFrame:
-        """One lineage-cut materialization: localCheckpoint (default) or,
-        with checkpoint_dir set, a durable parquet write+read under
-        ``<dir>/<side>_<seq>`` (ADVICE r8: block-manager-only checkpoints
-        are non-recomputable after executor loss, so an unbounded cluster
-        gate needs a durable target)."""
+        """One lineage-cut materialization: localCheckpoint (default; the
+        leaf is kept for close()) or, with checkpoint_dir set, a durable
+        parquet write+read under ``<dir>/<side>_<seq>``."""
         if not self.checkpoint_dir:
-            return df.localCheckpoint(eager=True)
+            cut = df.localCheckpoint(eager=True)
+            self._cut.append(cut)
+            return cut
         self._seq += 1
         path = self.checkpoint_dir.rstrip("/") + f"/{side}_{self._seq:05d}"
         df.write.mode("overwrite").parquet(path)
         getattr(self, f"_ckpt_{side}").append(path)
         return df.sparkSession.read.parquet(path)
 
-    def _drop_ckpt(self, spark, side: str, keep_last: int) -> None:
-        """Remove this side's durable dirs except the newest keep_last —
-        called only after a superseding file fully materialized. The
-        base copies in _base_ckpt are managed separately and never
-        trimmed here."""
-        from pypeln_spark.streaming import remove_sink_dir
-
-        paths = getattr(self, f"_ckpt_{side}")
-        cut = len(paths) - keep_last
-        for p in paths[:cut]:
-            remove_sink_dir(spark, p)
-        setattr(self, f"_ckpt_{side}", paths[cut:])
+    def _level(self, level: tp.Optional[DataFrame], new: DataFrame, side: str):
+        """The side's new level leaf: the previous level plus ``new``."""
+        return self._materialize(
+            new if level is None else level.unionByName(new), side
+        )
 
     def _ensure_durable_base(self, side: str, df: DataFrame) -> None:
-        """Write this side's BASE copy once (r14 generation chain): the
-        corpus-sized write every generation used to repeat is paid a
-        single time, and every later durable compaction writes only
-        absorbed rows. Serving keeps reading the (faster) in-session
-        base frames; the disk copy exists purely for recovery."""
+        """Write this side's BASE copy once: later absorbs write only the
+        level file. Serving keeps reading the in-session base frames; the
+        disk copy exists for recovery."""
         if side in self._base_ckpt:
             return
         path = self.checkpoint_dir.rstrip("/") + f"/{side}_base"
@@ -1170,10 +1016,10 @@ class IncrementalLshIndex:
         self._base_ckpt[side] = path
 
     def _write_manifest(self) -> None:
-        """Atomically publish the live durable file set (r14): recovery =
-        the union of each side's listed files, in any order. Written
-        after every durable mutation, BEFORE superseded files are
-        removed — a crash between the two leaks files, never loses data.
+        """Atomically publish the live durable file set: recovery = the
+        union of each side's listed files, in any order. Written after
+        every durable mutation, BEFORE superseded files are removed — a
+        crash between the two leaks files, never loses data.
         Local/shared-POSIX paths only; under a URI root the deployment's
         table format carries the manifest role instead."""
         if not self.checkpoint_dir or "://" in self.checkpoint_dir:
@@ -1196,10 +1042,10 @@ class IncrementalLshIndex:
 
     @staticmethod
     def recover(spark, checkpoint_dir: str):
-        """Rebuild (sh, bands) from the durable dir ALONE — the executor-
-        loss recovery story under the generation chain: read the
-        manifest, union each side's live files (base copy + newest level
-        + any deltas since). No session state is consulted."""
+        """Rebuild (sh, bands) from the durable dir ALONE — the
+        executor-loss recovery path: read the manifest and union each
+        side's live files (base copy + level file). No session state is
+        consulted."""
         import json as _json
         import os as _os
 
@@ -1214,113 +1060,59 @@ class IncrementalLshIndex:
             out.append(df)
         return tuple(out)
 
-    def compact(self) -> None:
-        """Collapse the delta chain, release every delta this index owns,
-        and drop superseded durable files. Two strategies (r13
-        optimization round):
+    def compact(
+        self,
+        new_sh: tp.Optional[DataFrame] = None,
+        new_bands: tp.Optional[DataFrame] = None,
+        new_comb: tp.Optional[DataFrame] = None,
+    ) -> None:
+        """Merge absorbed rows into the index and drop superseded durable
+        files. ``absorb`` passes its two frames, ``absorb_combined`` its
+        combined frame; called without rows, an uncapped index is already
+        merged and keeps its layout, a capped one re-applies the cap.
 
-        **Leveled merge (bucket_cap=None and no checkpoint_dir — the
-        default in-session gates).** The BASE frames are immutable;
-        compaction materializes the accumulated LEVEL leaf (absorbed
-        rows so far) merged with the pending deltas into ONE new leaf
-        per side, and the consumer-facing union becomes base ∪ level.
-        Cost per compaction is ∝ rows ABSORBED, never ∝ index — the r12
-        form re-materialized the full corpus-sized union every cycle
-        (at K=1: a whole-index rewrite per epoch, the dominant gate cost
-        once the verify join was cached) — while the plan-leaf bound the
-        compaction exists for still holds (≤ base_leaves + 1 + K
-        forever). Decisions are untouched: the union holds exactly the
-        same rows, only their leaf layout changes (the same invariant
-        the side-by-side replay pins).
-
-        **Full-union rewrite (bucket_cap set).** Capping is ITERATED —
-        the rank filter must run over base and deltas together so rows
-        evicted by an earlier compaction never come back and bucket
-        width returns to ≤ cap every cycle; that is a whole-index
-        semantic. The shared initial base frames are read, never
-        unpersisted — they belong to the session cache.
-
-        **Durable generation chain (checkpoint_dir, uncapped — r14,
-        VERDICT r13 #6).** The r13 durable contract was newest-file-
-        self-containment, which forced a full corpus rewrite per
-        compaction — not deployable at 100 TB. Now the BASE is copied to
-        disk ONCE, every compaction writes only the merged LEVEL
-        (∝ absorbed rows), and MANIFEST.json atomically names the live
-        file set; recovery (the static recover()) is the manifest's
-        union — same recovered CONTENTS, delta-sized writes. The
-        _durable registry row still prices real durability (base copy +
-        per-epoch level rewrites), just no longer a corpus rewrite per
-        epoch."""
-        spark = (self._pend_sh[-1] if self._pend_sh else self.sh).sparkSession
-        if self._pend_comb or self._lvl_comb is not None:
-            # combined leveled merge (absorb_combined): ONE materialization
-            # refreshes BOTH sides — the level leaf carries every absorbed
-            # row's sh and band columns together. The band view filters to
-            # rows absorbed after the last rebuild_bands (the rebuilt base
-            # already covers older rows).
-            lvl = (
-                [self._lvl_comb] if self._lvl_comb is not None else []
-            ) + self._pend_comb
-            merged = lvl[0]
-            for d in lvl[1:]:
-                merged = merged.unionByName(d)
-            self._lvl_comb = self._materialize(merged, "comb")
-            self.sh = self._base_sh.unionByName(
-                self._sh_project(self._lvl_comb.drop("_abseq"))
-            )
+        Leveled (uncapped): the side's level leaf becomes
+        materialize(level ∪ new) and the view becomes base ∪ level; a
+        durable index first writes its base copy once. Capped: the view
+        becomes materialize(cap(view ∪ new)) and is the new base. Under
+        checkpoint_dir the manifest naming the new files is published
+        before the files they replace are removed."""
+        if new_comb is not None or self._lvl_comb is not None:
+            if new_comb is None:
+                return
+            # ONE materialization refreshes both sides; the band view
+            # keeps only rows absorbed after the last rebuild_bands (the
+            # rebuilt base already covers older rows)
+            self._lvl_comb = self._level(self._lvl_comb, new_comb, "comb")
+            lvl = self._lvl_comb.drop("_abseq")
             live = self._lvl_comb.filter(F.col("_abseq") > self._band_wm)
+            self.sh = self._base_sh.unionByName(self._sh_project(lvl))
             self.bands = self._base_bands.unionByName(
                 self._band_project(live.drop("_abseq"))
             )
             if self._base_comb is not None:
-                self.comb = self._base_comb.unionByName(
-                    self._lvl_comb.drop("_abseq")
-                )
-            retired = self._own_comb
-            self._own_comb, self._pend_comb = [], []
-            for df in retired:
-                df.unpersist(blocking=False)
-            self.n_deltas = 0
+                self.comb = self._base_comb.unionByName(lvl)
             return
         if self.bucket_cap is None:
             if self.checkpoint_dir:
-                # generation chain: the corpus-sized base copy is paid
-                # once, before the first delta-sized level write
                 self._ensure_durable_base("sh", self._base_sh)
                 self._ensure_durable_base("bands", self._base_bands)
-            lvl = ([self._lvl_sh] if self._lvl_sh is not None else []) + self._pend_sh
-            if lvl:
-                merged = lvl[0]
-                for d in lvl[1:]:
-                    merged = merged.unionByName(d)
-                self._lvl_sh = self._materialize(merged, "sh")
+            if new_sh is not None:
+                self._lvl_sh = self._level(self._lvl_sh, new_sh, "sh")
                 self.sh = self._base_sh.unionByName(self._lvl_sh)
-            lvl = (
-                [self._lvl_bands] if self._lvl_bands is not None else []
-            ) + self._pend_bands
-            if lvl:
-                merged = lvl[0]
-                for d in lvl[1:]:
-                    merged = merged.unionByName(d)
-                self._lvl_bands = self._materialize(merged, "bands")
+            if new_bands is not None:
+                self._lvl_bands = self._level(self._lvl_bands, new_bands, "bands")
                 self.bands = self._base_bands.unionByName(self._lvl_bands)
         else:
-            new_sh = self._materialize(self.sh, "sh")
-            new_bands = self._materialize(self._cap_bands(self.bands), "bands")
-            # dropping self.sh/self.bands below also drops the last
-            # reference to any PREVIOUS compacted base's checkpoint
-            # blocks (ContextCleaner)
-            self.sh, self.bands = new_sh, new_bands
-            self._base_sh, self._base_bands = new_sh, new_bands
-            self._lvl_sh = self._lvl_bands = None
-        retired = self._own_sh + self._own_bands
-        self._own_sh, self._own_bands = [], []
-        self._pend_sh, self._pend_bands = [], []
-        for df in retired:
-            df.unpersist(blocking=False)
-        # publish the new generation (manifest names only the files that
-        # survive the trim), THEN remove superseded files — a crash
-        # between the two leaks a file, never loses data
+            sh = self.sh if new_sh is None else self.sh.unionByName(new_sh)
+            bands = (
+                self.bands if new_bands is None
+                else self.bands.unionByName(new_bands)
+            )
+            self.sh = self._base_sh = self._materialize(sh, "sh")
+            self.bands = self._base_bands = self._materialize(
+                self._cap_bands(bands), "bands"
+            )
         dropped = []
         for side in ("sh", "bands"):
             paths = getattr(self, f"_ckpt_{side}")
@@ -1331,8 +1123,7 @@ class IncrementalLshIndex:
             from pypeln_spark.streaming import remove_sink_dir
 
             for p in dropped:
-                remove_sink_dir(spark, p)
-        self.n_deltas = 0
+                remove_sink_dir(self.sh.sparkSession, p)
 
     def rebuild_bands(self, bands: DataFrame) -> None:
         """Replace the ENTIRE band side with a freshly derived table — the
@@ -1341,14 +1132,9 @@ class IncrementalLshIndex:
         wider n_planes) yields the band table a from-scratch wider index
         would hold (prefix-stable planes; equivalence pinned by
         tests/test_streaming.py::test_embedding_index_rebucket_widens_mid_stream).
-        The new table materializes (lineage cut — it must not re-derive
-        from the band deltas being retired), band-side deltas are
-        released, and the sh side stays untouched. ``n_deltas`` is
-        deliberately NOT reset (ADVICE r9 #2): it gates compaction of the
-        union CHAIN, and the sh-side chain — one leaf per absorb — is
-        still live after a re-bucket; only the band side collapsed. The
-        next compact() therefore fires on the sh-side schedule, which is
-        the side whose plan depth re-bucketing does not shorten.
+        The new table materializes (a lineage cut — it must not re-derive
+        from the band level it replaces) and becomes the band-side base;
+        the band level resets and the sh side stays untouched.
 
         With bucket_cap set the rebuilt table is re-capped under the NEW
         bucket geometry before materializing: a rebuild derives from the
@@ -1358,29 +1144,20 @@ class IncrementalLshIndex:
         cannot split it; the occupancy trigger's one blind spot), and
         only the cap keeps its probed width bounded."""
         new_bands = self._materialize(self._cap_bands(bands), "bands")
-        retired, self._own_bands = self._own_bands, []
-        self.bands = new_bands
-        # the rebuilt table IS the whole band side now: it becomes the
-        # band-side BASE and the leveled state resets (the sh side's
-        # level/pending chain is untouched — its compaction schedule is
-        # what n_deltas keeps gating)
-        self._base_bands = new_bands
+        self.bands = self._base_bands = new_bands
         self._lvl_bands = None
-        self._pend_bands = []
-        # combined mode: every row absorbed so far (level AND pending) is
-        # band-covered by the rebuilt table — advance the watermark so a
-        # later merge derives band rows only from newer absorbs
+        # combined mode: every row absorbed so far is band-covered by the
+        # rebuilt table — advance the watermark so a later merge derives
+        # band rows only from newer absorbs
         self._band_wm = self._comb_seq
-        # a classic band rebuild leaves any combined view's bucket column
-        # STALE — drop the view; consumers fall back to the two-frame
-        # joins (rebuild_combined is the view-preserving rebuild)
+        # the rebuild leaves any combined view's bucket column STALE —
+        # drop the view; consumers fall back to the two-frame joins
+        # (rebuild_combined is the view-preserving rebuild)
         self.comb = None
         self._base_comb = None
-        for df in retired:
-            df.unpersist(blocking=False)
         if self.checkpoint_dir:
-            # the rebuilt table supersedes the band-side base copy AND
-            # every band file: it becomes the new band-side base in the
+            # the rebuilt table supersedes the band-side base copy AND the
+            # band level file: it becomes the new band-side base in the
             # manifest; superseded files go only after the manifest lands
             from pypeln_spark.streaming import remove_sink_dir
 
@@ -1393,46 +1170,41 @@ class IncrementalLshIndex:
                 remove_sink_dir(new_bands.sparkSession, p)
 
     def rebuild_combined(self, comb: DataFrame, sh_project, band_project) -> None:
-        """The view-preserving whole-index rebuild (r14): replace the
-        entire index with one freshly derived COMBINED frame — the cells
-        gate's retrain re-assignment (ivf_assign keep=1 over index.sh
-        already returns id, _v, _norm, cid) and the hyperplane gate's
-        occupancy widen (lsh_bucket over index.sh keeps the vector
-        columns) both produce exactly this shape, so materializing the
-        combined frame is the SAME single pass the classic band rebuild
-        ran, writing the vectors alongside (the standard IVF rebuild:
-        re-add rewrites the lists, and the lists store vectors). The
-        index collapses to one leaf; sh and band views become narrow
-        projections of it."""
+        """The view-preserving whole-index rebuild: replace the entire
+        index with one freshly derived COMBINED frame — the cells gate's
+        retrain re-assignment (ivf_assign keep=1 over index.sh already
+        returns id, _v, _norm, cid) and the hyperplane gate's occupancy
+        widen (lsh_bucket over index.sh keeps the vector columns) both
+        produce exactly this shape, so materializing it is the same single
+        pass a band rebuild runs, writing the vectors alongside (the
+        standard IVF rebuild: re-add rewrites the lists, and the lists
+        store vectors). The index collapses to one leaf, which becomes
+        the base of both views."""
         if self.bucket_cap is not None or self.checkpoint_dir:
             raise RuntimeError(
                 "rebuild_combined requires the in-session uncapped index "
                 "(bucket_cap / checkpoint_dir keep classic per-side state)"
             )
         new_comb = self._materialize(comb, "comb")
-        retired = self._own_sh + self._own_bands + self._own_comb
-        self._own_sh, self._own_bands, self._own_comb = [], [], []
-        self._pend_sh, self._pend_bands, self._pend_comb = [], [], []
         self._lvl_sh = self._lvl_bands = self._lvl_comb = None
         self._sh_project, self._band_project = sh_project, band_project
         self.comb = self._base_comb = new_comb
         self.sh = self._base_sh = sh_project(new_comb)
         self.bands = self._base_bands = band_project(new_comb)
         self._band_wm = self._comb_seq
-        # unlike rebuild_bands, the SH side collapsed too — no pending
-        # leaves remain, so the compaction clock restarts
-        self.n_deltas = 0
-        for df in retired:
-            df.unpersist(blocking=False)
 
     def close(self) -> None:
-        """Release every delta this index owns (never the shared base;
-        checkpointed frames free via ContextCleaner once the caller drops
-        the index — durable dirs under checkpoint_dir are the
-        DEPLOYMENT's index state and are left in place)."""
-        for df in self._own_sh + self._own_bands + self._own_comb:
-            df.unpersist(blocking=False)
-        self._own_sh, self._own_bands, self._own_comb = [], [], []
+        """Release the blocks of every leaf this index cut in session —
+        level leaves, rebuilt bases, capped compacted bases — including
+        leaves a later merge superseded. Frames the caller passed in are
+        never touched, and durable files under checkpoint_dir are the
+        deployment's index state and stay in place. A checkpointed
+        frame's ``unpersist()`` is a no-op, so the release goes to the
+        checkpointed RDD under the leaf's plan. The index's views are
+        unusable afterwards."""
+        for df in self._cut:
+            df._jdf.queryExecution().analyzed().rdd().unpersist(False)
+        self._cut = []
 
 
 class TextIngestGate:
@@ -1441,16 +1213,16 @@ class TextIngestGate:
     minhash-band the arriving batch, band-join against the growing corpus
     LSH index, exact-Jaccard verify, emit one keep/drop decision per doc,
     absorb novel docs), factored into an engine operator symmetric with
-    similarity.EmbeddingIngestGate so depth experiments (the compaction
-    knee, tools/compaction_knee.py) drive the IDENTICAL per-epoch code at
+    similarity.EmbeddingIngestGate so depth experiments (SCALING.md
+    "Compaction knee at depth") drive the IDENTICAL per-epoch code at
     arbitrary epoch counts instead of re-implementing the gate.
 
     No occupancy trigger here, deliberately: MinHash band keys are
     (band, signature-value) pairs whose cardinality GROWS with the data —
     unlike the embedding gate's fixed 2^n_planes bucket space — so the
-    text index has no saturation knob to self-manage. Its unbounded-stream
-    knob is the index's delta-chain compaction (compact_every; measured
-    knee in SCALING.md).
+    text index has no saturation knob to self-manage. On an unbounded
+    stream the index keeps its plan bounded by merging every absorb into
+    one level leaf (IncrementalLshIndex docstring).
 
     ``epoch_col`` (no-arg callable returning a Column) labels each
     decision's epoch; default is the gate's own epoch counter. Decisions
@@ -1505,11 +1277,12 @@ class TextIngestGate:
         # The flag SHAPES THE SINK SCHEMA (adds 'absorbed'), so it is
         # fixed per sink_root — validate_sink_schema enforces it on the
         # first write (ADVICE r11).
-        # DEPLOYMENT RULE (r12, measured — tools/absorb_clean_ab.py,
-        # SCALING.md r12): ON for web/crawl ingest, where mirror bursts
-        # are the norm. The text-side clean-stream cost is real but
-        # modest — the dedup window shuffles the novel set's SHINGLE
-        # ARRAYS once per epoch: sf0.1 +4.2%, sf1 +5.3% (quiet re-run;
+        # DEPLOYMENT RULE (r12, measured — SCALING.md "absorb_dedup
+        # priced on a CLEAN stream + the deployment rule"): ON for
+        # web/crawl ingest, where mirror bursts are the norm. The
+        # text-side clean-stream cost is real but modest — the dedup
+        # window shuffles the novel set's SHINGLE ARRAYS once per epoch:
+        # sf0.1 +4.2%, sf1 +5.3% (quiet re-run;
         # a first contended pair read +17%, adjudicated episode),
         # decisions identical at both scales — and a
         # flood epoch buys it back 3x over (SCALING.md r11). Leave it
@@ -1658,20 +1431,13 @@ class TextIngestGate:
             else F.lit(int(epoch_id)).cast("int")
         )
         # absorb set: novel docs join the index before the next epoch.
-        # APPEND-ONLY by default: only the epoch's novel DELTA
-        # materializes (inside absorb(), WITH a lineage cut — the delta
-        # derives from this epoch's decisions against the current index,
-        # so an uncut plan nests all earlier epochs' plans, ~2^epochs:
-        # the 12-epoch knee run OOM'd the driver on plan STRINGS before
-        # the cut, absorb docstring); the index stays a LAZY union over
-        # the cached initial frames + one leaf per delta, so no epoch
-        # ever re-copies the whole corpus (the first cut persisted the
-        # full union per epoch — an O(corpus) copy every epoch, ~2× the
-        # sf0.1 wall and the dominant super-linear term at 10×). On
-        # unbounded streams the index's compact_every knob periodically
-        # collapses the delta chain (IncrementalLshIndex docstring);
-        # three epochs don't need it. Computed BEFORE the decision write
-        # so absorb_dedup can surface its verdict in the output.
+        # absorb() merges them into the index's level leaf WITH a lineage
+        # cut — the set derives from this epoch's decisions against the
+        # current index, so an uncut plan would nest every earlier
+        # epoch's plan (IncrementalLshIndex docstring). The cached
+        # initial frames are never re-copied: the merge rewrites only the
+        # absorbed rows. Computed BEFORE the decision write so
+        # absorb_dedup can surface its verdict in the output.
         dropped = pick.select(F.col("new_id").alias(self.id_col))
         novel_sh = new_sh.join(dropped, self.id_col, "left_anti")
         if self.absorb_dedup:

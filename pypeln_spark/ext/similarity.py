@@ -1844,9 +1844,9 @@ def live_topk_serve(
     (1) probes broadcast against the SKINNY band view → candidates;
     (2) the COUNTED candidate frame broadcasts against the vector side
     → verify. Past the threshold either stage degrades to the bounded
-    shuffle_hash build. Both index views are base + one lineage-cut
-    leaf per earlier absorb epoch (bounded by compact_every) — a
-    bounded-leaf read, never a re-derivation. Returns (query_id,
+    shuffle_hash build. Both index views are base + the one lineage-cut
+    level leaf every absorb merges into — a two-leaf read, never a
+    re-derivation. Returns (query_id,
     neighbor_id, cos, rank ≤ k) or None on an empty batch; the caller
     labels the epoch and writes."""
     serve_np = serving_nprobe(n_cells, recall_target=recall_target)
@@ -1947,8 +1947,7 @@ class EmbeddingIngestGate:
     ``target_occupancy`` < ``occupancy_trigger`` gives hysteresis: after a
     widen, occupancy sits near the target, and the trigger can't re-fire
     until the index grows by trigger/target. The FAISS analogue is
-    re-train/re-add on index growth — the same pattern the compaction
-    knob follows for the delta chain.
+    re-train/re-add on index growth.
 
     ``occupancy_trigger=0`` (default) disables the trigger — the registry
     query's oracle-pinned shape (n_planes fixed at its test value, the
@@ -2013,11 +2012,12 @@ class EmbeddingIngestGate:
         # so an identical-vector flood (the planted-cluster protocol, a
         # scraped mirror burst) absorbs in FULL at its arrival epoch and
         # every later epoch pays that width — the failure the index
-        # bucket_cap bounds. Measured (tools/embedding_cap_ab.py --cells,
-        # r11): in COARSE-cell geometry the min-id cap is the WRONG
-        # primary guard — unrelated lower-id rows absorbed into the
-        # cluster's catch-all cell evict the cluster's representative
-        # (50/150 later-copy dups missed at cap=8/256 cells), and
+        # bucket_cap bounds. Measured (SCALING.md "Hot cells: the cap's
+        # eviction trade measured, and the real guard", r11): in
+        # COARSE-cell geometry the min-id cap is the WRONG primary guard
+        # — unrelated lower-id rows absorbed into the cluster's catch-all
+        # cell evict the cluster's representative (50/150 later-copy dups
+        # missed at cap=8/256 cells), and
         # retraining makes it worse, not better: k-means over an index
         # that is 75% one repeated vector COLLAPSES the centroid set
         # (256 → 62 trained on the flooded index — seeds dedup by
@@ -2030,11 +2030,12 @@ class EmbeddingIngestGate:
         # (grouping key = the full vector, no hash truncation): distinct
         # near-dup vectors in one batch still both absorb. Default TRUE
         # since r13 (VERDICT r12 #7) — the code default now matches the
-        # measured DEPLOYMENT RULE (r12, tools/absorb_clean_ab.py,
-        # SCALING.md r12): on a CLEAN (duplicate-free) stream the
-        # embedding-side cost is below the noise floor (sf0.1 0.91x,
-        # sf1 1.006x, decisions identical — the window keys on the
-        # narrow vector column and runs over the novel set only), while
+        # measured DEPLOYMENT RULE (r12, SCALING.md "absorb_dedup priced
+        # on a CLEAN stream + the deployment rule"): on a CLEAN
+        # (duplicate-free) stream the embedding-side cost is below the
+        # noise floor (sf0.1 0.91x, sf1 1.006x, decisions identical — the
+        # window keys on the narrow vector column and runs over the novel
+        # set only), while
         # leaving it off risks the measured flood failure class (index
         # bloat, centroid collapse on retrain). Callers that need the
         # store-everything shape — the registry entries, whose oracles
@@ -2060,7 +2061,7 @@ class EmbeddingIngestGate:
             math.ceil(math.log2(max(size / self.target_occupancy, 2.0))),
         )
         # ONE narrow pass over the stored vectors; the rebuild cuts
-        # lineage and retires the delta persists. With a live combined
+        # lineage and resets the band level. With a live combined
         # view the rebuilt frame keeps the vectors alongside the new
         # buckets (same pass, the inverted-list layout — rebuild_combined)
         new_comb = lsh_bucket(self.index.sh, "_v", new_planes, self.dim).select(
@@ -2443,7 +2444,7 @@ class CellEmbeddingIngestGate(EmbeddingIngestGate):
         (r10): re-train centroids on the CURRENT index vectors (the
         corpus + everything absorbed — index.sh IS a with_norms frame)
         and re-assign the whole index in one narrow pass
-        (index.rebuild_bands — lineage-cut, band deltas retired, sh side
+        (index.rebuild_bands — lineage-cut, band level reset, sh side
         untouched). This is the standard periodic IVF rebuild: training
         is one broadcast-join assignment pass per iteration over the
         hash-sampled index (centroid-count-sized shuffle keys), and the

@@ -16,17 +16,6 @@ from pypeln_spark.functions import dsum, dsum_expr
 from .base import load_table, register, tables
 
 
-def _compact_epochs():
-    """Compaction cadence for the ingest gates from
-    PYPELN_SPARK_INGEST_COMPACT_EPOCHS: an int K, or "auto" (r10) to let
-    IncrementalLshIndex re-derive K per absorb from the live index/batch
-    ratio at the measured 50x/100x knee. Default stays the measured K=1."""
-    import os
-
-    v = os.environ.get("PYPELN_SPARK_INGEST_COMPACT_EPOCHS", "1")
-    return "auto" if v.strip().lower() == "auto" else int(v)
-
-
 @register(
     "streaming_tumbling_hourly",
     oracle=f"""
@@ -1034,8 +1023,8 @@ def _incr_stream_oracle(bucket_cap=None) -> str:
     per (band, sig) bucket — b0 = rank-filter of the initial corpus
     bands; after each epoch's absorb, b{e+1} = rank-filter(b{e} ∪ the
     novel docs' band rows), ITERATED capping exactly as
-    IncrementalLshIndex(compact_every=1) applies it (rows evicted by an
-    earlier compaction never come back)."""
+    IncrementalLshIndex applies it on every absorb (rows evicted by an
+    earlier merge never come back)."""
     from .dedup import JACCARD_THRESHOLD, _MH_CTE, _SH_CTE
 
     ctes = [
@@ -1146,11 +1135,11 @@ def _text_ingest_gate(spark, sf_dir, checkpoint_dir=None, bucket_cap=None):
     Scale shape: per epoch, only batch-side shingling/signatures are
     computed (∝ |batch|); candidates come from the band equi-join
     (new × index, never index × index); the growing index is the
-    append-only band/shingle table a deployment maintains — here a LAZY
-    union over the session-cached initial frames plus per-epoch persisted
-    novel DELTAS, so no epoch re-copies the corpus (at 100 TB the delta
-    append is an append to the index TABLE, and the decisions parquet IS
-    the output dataset). Within-batch (new × new)
+    band/shingle table a deployment maintains — here the session-cached
+    initial frames plus one level leaf holding every absorbed doc, merged
+    on each absorb, so no epoch re-copies the corpus (at 100 TB the level
+    is a table the absorb rewrites, and the decisions parquet IS the
+    output dataset). Within-batch (new × new)
     duplicates are deliberately out of scope — that is the batch
     minhash_lsh_dedup's job upstream. The oracle unrolls the three
     epochs and replays banding, verification, survivor pick AND the
@@ -1158,16 +1147,9 @@ def _text_ingest_gate(spark, sf_dir, checkpoint_dir=None, bucket_cap=None):
     sink is seeded with a typed empty parquet file; its root comes from
     ST.stream_sink_dir (shared-FS via PYPELN_SPARK_STREAM_SINK_ROOT on a
     cluster, driver-local tempfile on local[*] — same as the asof harness
-    above). Index maintenance lives in ext/dedup.IncrementalLshIndex;
-    PYPELN_SPARK_INGEST_COMPACT_EPOCHS=K sets the delta-chain compaction
-    cadence (default 1 since r9 — the MEASURED best at every scale tried:
-    the 12-epoch knee runs read K=1 26.2 s vs append-only 38.5 s at
-    sf0.1 and 55.4 s vs 80.1 s at sf1, and r8's 3-epoch A/B read 12.6 s
-    vs 15.9 s; 0 = pure append-only remains available. Decisions are
-    compaction-invariant, pinned side-by-side in
-    tests/test_streaming.py)."""
-    import os
-
+    above). Index maintenance lives in ext/dedup.IncrementalLshIndex,
+    which merges the novel docs into its level leaf on every absorb (its
+    docstring says why the schedule is fixed)."""
     from pyspark.sql import types as T
 
     from pypeln_spark.ext import dedup as D
@@ -1208,19 +1190,13 @@ def _text_ingest_gate(spark, sf_dir, checkpoint_dir=None, bucket_cap=None):
     index = D.IncrementalLshIndex(
         cor_sh,
         cor_bands,
-        # the capped gate PINS compact_every=1: with a bucket_cap,
-        # decisions are no longer K-invariant (the cap re-applies at each
-        # compaction, and the oracle replays exactly the every-epoch
-        # schedule), so the env knob must not move it
-        compact_every=1 if bucket_cap is not None else _compact_epochs(),
         checkpoint_dir=checkpoint_dir,
         bucket_cap=bucket_cap,
     )
 
-    # per-epoch body lives in ext/dedup.TextIngestGate (r9 — factored out
-    # symmetric with the embedding gate so tools/compaction_knee.py can
-    # drive the IDENTICAL gate code at 12+ epoch depths; plan and
-    # decisions unchanged, pinned by the oracle replay)
+    # per-epoch body lives in ext/dedup.TextIngestGate, symmetric with
+    # the embedding gate, so depth experiments (SCALING.md "Compaction
+    # knee at depth") drive the IDENTICAL gate code at 12+ epoch depths
     gate = D.TextIngestGate(
         index, root, N_HASHES, BANDS, 5, JACCARD_THRESHOLD,
         epoch_col=lambda: F.expr("CAST(((doc_id % 6) - 1) DIV 2 AS INT)"),
@@ -1290,7 +1266,7 @@ def streaming_incremental_dedup_capped(spark, sf_dir):
     """The text ingest gate with the HOT-BUCKET WIDTH CAP (the streaming
     twin of dedup_lsh_hot_bucket_star): the index's band view keeps only
     the 2 lowest-id rows per (band, sig) bucket — rank-filtered at init
-    and re-applied at every compaction (compact_every pinned to 1), so
+    and re-applied at every absorb's merge, so
     the width every epoch probes is bounded FOREVER even as a
     sub-threshold template family grows its buckets without bound. cap=2
     binds on 10 initial sf0.01 corpus buckets plus whatever the absorbs
@@ -1488,9 +1464,7 @@ def streaming_incremental_dedup_flood(spark, sf_dir):
     )
     ST.seed_sink_schema(spark, out_schema, root)
 
-    index = D.IncrementalLshIndex(
-        cor_sh, cor_bands, compact_every=_compact_epochs(),
-    )
+    index = D.IncrementalLshIndex(cor_sh, cor_bands)
     # default epoch labels (the harness epoch_id): the replica ids break
     # the %6-derived formula the sibling entries use, and staged feeds
     # are ordered, so the label IS the feed ordinal
@@ -1689,9 +1663,7 @@ def streaming_curated_ingest(spark, sf_dir):
     )
     ST.seed_sink_schema(spark, gate_schema, root)
 
-    index = D.IncrementalLshIndex(
-        cor_sh, cor_bands, compact_every=_compact_epochs()
-    )
+    index = D.IncrementalLshIndex(cor_sh, cor_bands)
     epoch_expr = "CAST(((doc_id % 6) - 1) DIV 2 AS INT)"
     gate = D.TextIngestGate(
         index, root, N_HASHES, BANDS, 5, JACCARD_THRESHOLD,
@@ -1816,9 +1788,9 @@ def streaming_embedding_ingest(spark, sf_dir):
     Scale shape: per epoch only the batch side is bucketed (∝ |batch|);
     candidates come from the bucket equi-join (new × index, the probe
     explode multiplies only the skinny new side); the vector/bucket
-    index is IncrementalLshIndex state — append-only novel deltas, lazy
-    union, optional every-K-epochs compaction via
-    PYPELN_SPARK_INGEST_COMPACT_EPOCHS — and both verify sides carry
+    index is IncrementalLshIndex state — the cached base plus one level
+    leaf that every absorb merges the novel vectors into — and both
+    verify sides carry
     shuffle_hash hints (64-double arrays under-estimate like shingle
     arrays; same OOM class as the text gate's r7 sweep catch).
 
@@ -1863,7 +1835,6 @@ def streaming_embedding_ingest(spark, sf_dir):
     index = D.IncrementalLshIndex(
         cor.select("vec_id", "_v", "_norm"),
         cor.select("vec_id", "bucket"),
-        compact_every=_compact_epochs(),
         checkpoint_dir=os.environ.get("PYPELN_SPARK_INGEST_COMPACT_DIR") or None,
         # the base index frame already carries sh AND band columns —
         # hand it over so the gate verify/serve can run the one-join
@@ -2037,7 +2008,6 @@ def streaming_embedding_ingest_cells(spark, sf_dir):
     index = D.IncrementalLshIndex(
         cor.select("vec_id", "_v", "_norm"),
         cor.select("vec_id", "bucket"),
-        compact_every=_compact_epochs(),
         checkpoint_dir=os.environ.get("PYPELN_SPARK_INGEST_COMPACT_DIR") or None,
         # the base index frame already carries sh AND band columns —
         # hand it over so the gate verify/serve can run the one-join
@@ -2489,7 +2459,6 @@ def streaming_ann_topk_serving_live(spark, sf_dir):
     index = D.IncrementalLshIndex(
         cor.select("vec_id", "_v", "_norm"),
         cor.select("vec_id", "bucket"),
-        compact_every=_compact_epochs(),
         checkpoint_dir=os.environ.get("PYPELN_SPARK_INGEST_COMPACT_DIR") or None,
         # the base index frame already carries sh AND band columns —
         # hand it over so the gate verify/serve can run the one-join
@@ -2523,14 +2492,12 @@ def streaming_ann_topk_serving_live(spark, sf_dir):
 
     def serve(batch_df, qepoch):
         # the shared LIVE serve body (ext/similarity.live_topk_serve —
-        # also driven verbatim by tools/live_serving_cells_dial.py, so
-        # the dial A/B measures exactly this pipeline): nprobe from the
-        # CURRENT geometry via the recall-target rule, then TWO guarded
-        # broadcast stages — probes vs the SKINNY band view, counted
-        # candidates vs the vector side — so neither corpus view moves
-        # while the estimates fit; bounded shuffle_hash past the bound;
-        # bounded-leaf index reads (base + one lineage-cut leaf per
-        # earlier absorb epoch)
+        # the pipeline SCALING.md "r12 scale-sweep evidence" measures):
+        # nprobe from the CURRENT geometry via the recall-target rule,
+        # then TWO guarded broadcast stages — probes vs the SKINNY band
+        # view, counted candidates vs the vector side — so neither corpus
+        # view moves while the estimates fit; bounded shuffle_hash past
+        # the bound; two-leaf index reads (base + the merged level leaf)
         topk = S.live_topk_serve(
             index, gate.centroids, gate.n_cells, batch_df, k=K, dim=DIM,
             recall_target=0.12, cents_lits=gate.centroid_lits(),
@@ -2800,7 +2767,7 @@ def streaming_bm25_topk_serving_live(spark, sf_dir):
     ST.seed_sink_schema(spark, out_schema, serve_root)
 
     index = D.IncrementalLshIndex(
-        cor_sh, cor_bands, compact_every=_compact_epochs(),
+        cor_sh, cor_bands,
         checkpoint_dir=os.environ.get("PYPELN_SPARK_INGEST_COMPACT_DIR") or None,
     )
     gate = D.TextIngestGate(

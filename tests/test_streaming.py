@@ -948,19 +948,13 @@ def test_stream_sink_root_override_honored(spark, tmp_path, monkeypatch):
 
 
 def test_incremental_lsh_index_compaction_bounds_plan(spark):
-    """Delta-chain compaction (VERDICT r7 #4): absorbing E epochs into an
-    IncrementalLshIndex deepens the lazy union by one leaf per epoch;
-    with compact_every=K the analyzed plan's union width stays BOUNDED
-    forever while the CONTENTS stay identical to the append-only twin —
-    compaction moves rows, never changes them. Since the r13 leveled
-    merge (uncapped indexes keep the base immutable and fold only the
-    delta chain into one LEVEL leaf — compaction cost ∝ absorbed rows,
-    not ∝ index) the bound is base(1) + level(1) + pending(≤ K−1) = 3
-    leaves for K=2, where the full-rewrite form held 2. 5 epochs, K=2 →
-    two compactions exercised (≥ 2K epochs per the done-criterion).
-    Spark flattens chained unionByName into ONE multi-child Union at
-    analysis, so the measurable 'depth' is the LEAF count (each base/
-    delta/checkpointed frame is a LogicalRDD leaf in these plans)."""
+    """Every absorb merges into the index: the immutable base plus ONE
+    level leaf holding every absorbed row, so the analyzed plan of each
+    view stays at ≤ 2 leaves however many epochs arrive, while the
+    CONTENTS equal the naive union of base and deltas — compaction moves
+    rows, never changes them. Spark flattens chained unionByName into ONE
+    multi-child Union at analysis, so the measurable 'depth' is the LEAF
+    count (each base/checkpointed frame is a LogicalRDD leaf here)."""
     from pypeln_spark.ext import dedup as D
 
     def mk_docs(ids, tag):
@@ -973,33 +967,83 @@ def test_incremental_lsh_index_compaction_bounds_plan(spark):
         return df._jdf.queryExecution().analyzed().toString().count("LogicalRDD")
 
     base_sh, base_bands, _ = D.build_corpus_index(mk_docs(range(0, 6, 2), "base"))
-    plain = D.IncrementalLshIndex(base_sh, base_bands, compact_every=0)
-    comp = D.IncrementalLshIndex(base_sh, base_bands, compact_every=2)
+    idx = D.IncrementalLshIndex(base_sh, base_bands)
+    naive_sh, naive_bands = base_sh, base_bands
     for e in range(1, 6):
-        delta = mk_docs(range(100 * e, 100 * e + 3), f"epoch{e}")
-        for idx in (plain, comp):
-            d_sh, d_bands, _ = D.build_corpus_index(delta)
-            idx.absorb(d_sh, d_bands)
-        assert leaves(plain.sh) == 1 + e  # append-only: one leaf per epoch
-        # leveled bound: base + level + (K-1) pending deltas
-        assert leaves(comp.sh) <= 3 and leaves(comp.bands) <= 3
+        d_sh, d_bands, _ = D.build_corpus_index(
+            mk_docs(range(100 * e, 100 * e + 3), f"epoch{e}")
+        )
+        idx.absorb(d_sh, d_bands)
+        naive_sh = naive_sh.unionByName(d_sh)
+        naive_bands = naive_bands.unionByName(d_bands)
+        assert leaves(idx.sh) <= 2 and leaves(idx.bands) <= 2
     key = lambda r: (r["doc_id"], str(sorted(r.asDict().items())))  # noqa: E731
-    for attr in ("sh", "bands"):
-        got = sorted(getattr(comp, attr).collect(), key=key)
-        want = sorted(getattr(plain, attr).collect(), key=key)
-        assert got == want, f"compaction changed {attr} contents"
-    plain.close()
-    comp.close()
+    for got_df, want_df in ((idx.sh, naive_sh), (idx.bands, naive_bands)):
+        got = sorted(got_df.collect(), key=key)
+        assert got == sorted(want_df.collect(), key=key)
+    idx.close()
+
+
+def test_incremental_index_rejects_other_schedules(spark):
+    """The index merges on every absorb; the ``compact_every`` keyword
+    accepts only 1, so no caller can select another schedule."""
+    from pypeln_spark.ext import dedup as D
+
+    df = spark.createDataFrame([(0, "a")], "doc_id long, payload string")
+    D.IncrementalLshIndex(df, df, compact_every=1)
+    for k in (2, "auto"):
+        with pytest.raises(ValueError, match="compact_every"):
+            D.IncrementalLshIndex(df, df, compact_every=k)
+
+
+def test_incremental_index_close_releases_its_leaves(spark):
+    """close() releases the blocks of every leaf the index cut — level
+    leaves, superseded ones included — for both absorb modes, and never
+    the caller's persisted base."""
+    from pyspark.sql import functions as F
+
+    from pypeln_spark.ext import dedup as D
+
+    jsc = spark.sparkContext._jsc.sc()
+
+    def stored():
+        return {r.id() for r in jsc.getRDDStorageInfo()}
+
+    def frames(ids):
+        sh = spark.createDataFrame(
+            [(i, [i]) for i in ids], "vec_id long, sh_arr array<long>"
+        )
+        return sh, sh.select("vec_id", (F.col("vec_id") % 4).alias("bucket"))
+
+    before = stored()
+    base = frames(range(6))[0].withColumn("bucket", F.col("vec_id") % 4).persist()
+    base.count()
+    base_ids = stored() - before
+    assert base_ids
+    before_index = stored()
+    sh_p = lambda c: c.select("vec_id", "sh_arr")  # noqa: E731
+    bd_p = lambda c: c.select("vec_id", "bucket")  # noqa: E731
+    classic = D.IncrementalLshIndex(sh_p(base), bd_p(base))
+    comb = D.IncrementalLshIndex(sh_p(base), bd_p(base), comb=base)
+    for e in (1, 2):
+        d_sh, d_bands = frames(range(10 * e, 10 * e + 3))
+        classic.absorb(d_sh, d_bands)
+        comb.absorb_combined(d_sh.withColumn("bucket", F.col("vec_id") % 4), sh_p, bd_p)
+    assert stored() - before_index  # the merges cut leaves of their own
+    classic.close()
+    comb.close()
+    assert stored() <= before_index
+    assert base_ids <= stored() and base.count() == 6
+    base.unpersist()
 
 
 def test_incremental_lsh_index_combined_absorb_matches_classic(spark):
-    """absorb_combined (r14 optimization round): one combined frame per
-    epoch materializes BOTH sides' delta in a single job — contents must
-    equal the classic two-frame absorb exactly, across compactions AND
-    across a mid-stream rebuild_bands (the watermark: rows absorbed
-    before a rebuild are band-covered by the rebuilt table and must not
-    contribute band rows again after the next merge). Leaf bound holds
-    (base + level + pending)."""
+    """absorb_combined: one combined frame per epoch materializes BOTH
+    sides' rows in a single job — contents must equal the classic
+    two-frame absorb exactly, across merges AND across a mid-stream
+    rebuild_bands (the watermark: rows absorbed before a rebuild are
+    band-covered by the rebuilt table and must not contribute band rows
+    again after the next merge). Leaf bound holds (base + level)."""
     from pyspark.sql import functions as F
 
     from pypeln_spark.ext import dedup as D
@@ -1018,8 +1062,8 @@ def test_incremental_lsh_index_combined_absorb_matches_classic(spark):
     base_sh, base_bands = frames(range(0, 6, 2), "base")
     base_sh = base_sh.localCheckpoint(eager=True)
     base_bands = base_bands.localCheckpoint(eager=True)
-    classic = D.IncrementalLshIndex(base_sh, base_bands, compact_every=2)
-    comb = D.IncrementalLshIndex(base_sh, base_bands, compact_every=2)
+    classic = D.IncrementalLshIndex(base_sh, base_bands)
+    comb = D.IncrementalLshIndex(base_sh, base_bands)
     sh_p = lambda c: c.select("vec_id", "sh_arr")  # noqa: E731
     bd_p = lambda c: c.select("vec_id", "bucket")  # noqa: E731
     for e in range(1, 6):
@@ -1028,7 +1072,7 @@ def test_incremental_lsh_index_combined_absorb_matches_classic(spark):
         comb.absorb_combined(
             d_sh.withColumn("bucket", F.col("vec_id") % 4), sh_p, bd_p
         )
-        assert leaves(comb.sh) <= 3 and leaves(comb.bands) <= 3
+        assert leaves(comb.sh) <= 2 and leaves(comb.bands) <= 2
         if e == 3:
             # mid-stream band rebuild under a NEW geometry (mod 5): both
             # indexes re-derive the whole band side from their sh view
@@ -1103,8 +1147,8 @@ def test_embedding_index_rebucket_widens_mid_stream(spark):
 
 def test_incremental_index_random_schedules_property(spark):
     """Property form of the compaction contract: for ANY absorb schedule
-    and ANY compact_every (including mid-stream manual compact() calls),
-    the index contents equal the naive base∪deltas union. Hypothesis
+    (including mid-stream manual compact() calls), the index contents
+    equal the naive base∪deltas union. Hypothesis
     drives the schedule; frames are tiny key/value pairs so each example
     is a handful of local jobs."""
     from hypothesis import given, settings, strategies as st
@@ -1119,12 +1163,11 @@ def test_incremental_index_random_schedules_property(spark):
     @settings(max_examples=8, deadline=None)
     @given(
         sizes=st.lists(st.integers(min_value=0, max_value=3), min_size=1, max_size=5),
-        k=st.integers(min_value=0, max_value=3),
         manual=st.booleans(),
     )
-    def prop(sizes, k, manual):
+    def prop(sizes, manual):
         base = mk(range(10), "base")
-        idx = D.IncrementalLshIndex(base, base, compact_every=k)
+        idx = D.IncrementalLshIndex(base, base)
         expect = {(i, f"base{i}") for i in range(10)}
         nxt = 100
         for step, sz in enumerate(sizes):
@@ -1142,42 +1185,12 @@ def test_incremental_index_random_schedules_property(spark):
     prop()
 
 
-def test_incremental_lsh_index_auto_compaction_tracks_ratio(spark):
-    """compact_every="auto" (VERDICT r9 #3): K is re-derived on every
-    absorb from the LIVE index/batch row ratio at the MEASURED knee
-    boundaries (K=1 below 50x — full rewrite beats a deepening union;
-    K=4 across the measured 50-100x convergence zone; K=8 past 100x),
-    and index contents stay identical to the naive union — auto moves
-    only WALL time, never rows. The synthetic stream drives the ratio
-    across both boundaries in three absorbs."""
-    from pypeln_spark.ext import dedup as D
-
-    def mk(ids, tag):
-        return spark.createDataFrame(
-            [(i, f"{tag}{i}") for i in ids], "doc_id long, payload string"
-        )
-
-    base = mk(range(600), "base")
-    idx = D.IncrementalLshIndex(base, base, compact_every="auto")
-    expect = {(i, f"base{i}") for i in range(600)}
-    # (batch size, expected K): 600/100=6x -> 1; 700/12=58x -> 4;
-    # 712/6=119x -> 8  (pre-absorb index rows / batch rows)
-    for start, n, want_k in ((1000, 100, 1), (2000, 12, 4), (3000, 6, 8)):
-        ids = range(start, start + n)
-        idx.absorb(mk(ids, "d"), mk(ids, "d"))
-        assert idx.compact_every == want_k, (n, idx.compact_every)
-        expect |= {(i, f"d{i}") for i in ids}
-    got = {(r.doc_id, r.payload) for r in idx.sh.collect()}
-    idx.close()
-    assert got == expect
-
-
 def test_ingest_gate_compaction_invariant_decisions(spark, tmp_path, monkeypatch):
-    """End-to-end half of the compaction contract: the registry ingest
-    gate emits IDENTICAL keep/drop decisions with compaction forced every
-    epoch (K=1, the most aggressive setting) as with the append-only
-    default — including the cross-epoch absorption matches, which read
-    the compacted index."""
+    """End-to-end half of the compaction contract: the registry text
+    gate emits IDENTICAL keep/drop decisions whether its index merges
+    into block-manager leaves or into the durable generation chain —
+    including the cross-epoch absorption matches, which read the merged
+    index — and the durable index recovers from its files alone."""
     from pypeln_spark.ext import similarity as S
     from pypeln_spark.queries import REGISTRY
 
@@ -1204,29 +1217,15 @@ def test_ingest_gate_compaction_invariant_decisions(spark, tmp_path, monkeypatch
         S.drop_index()
         return sorted(map(tuple, REGISTRY[name].fn(spark, sf).collect()))
 
-    # pin BOTH arms explicitly: append-only (0) vs every-epoch compaction
-    # (1, the measured r9 default) — the gates' env default is now 1, so
-    # relying on the default here would compare 1 against 1
-    monkeypatch.setenv("PYPELN_SPARK_INGEST_COMPACT_EPOCHS", "0")
     base_txt = run("streaming_incremental_dedup")
     base_emb = run("streaming_embedding_ingest")
-    monkeypatch.setenv("PYPELN_SPARK_INGEST_COMPACT_EPOCHS", "1")
-    assert run("streaming_incremental_dedup") == base_txt
-    assert run("streaming_embedding_ingest") == base_emb
-    # r10 (VERDICT r9 #3): "auto" — K re-derived per absorb from the live
-    # index/batch ratio — must emit the same decisions as any fixed K
-    monkeypatch.setenv("PYPELN_SPARK_INGEST_COMPACT_EPOCHS", "auto")
-    assert run("streaming_incremental_dedup") == base_txt
-    assert run("streaming_embedding_ingest") == base_emb
-    monkeypatch.setenv("PYPELN_SPARK_INGEST_COMPACT_EPOCHS", "1")
     # the planted absorb matches must actually be present in both gates
     assert any(r[0] == 3 and r[2] == 7 for r in base_txt)
     assert any(r[0] == 3 and r[2] == 7 for r in base_emb)
-    # end-to-end durable arm (ADVICE r8, r14 generation chain): same
-    # registry gate, materializing to a shared-FS dir instead of
-    # localCheckpoint — decisions identical, and the final index is
-    # recoverable from the durable files alone via the manifest (base
-    # copy + level; the corpus is written once, never rewritten)
+    # durable arm: same registry gate, materializing to a shared-FS dir
+    # instead of localCheckpoint — decisions identical, and the final
+    # index is recoverable from the durable files alone via the manifest
+    # (base copy + level; the corpus is written once, never rewritten)
     from pypeln_spark.ext import dedup as D
 
     ckpt = str(tmp_path / "gate_ckpt")
@@ -1257,10 +1256,11 @@ def test_shuffle_width_guarded(spark, monkeypatch):
 def test_incremental_index_durable_checkpoint(spark, tmp_path):
     """ADVICE r8 + VERDICT r13 #6: localCheckpoint blocks are
     non-recomputable after executor loss, so unbounded cluster gates need
-    a DURABLE target. Under the r14 GENERATION CHAIN, checkpoint_dir
-    holds a one-time BASE copy per side, delta/level files (compaction
-    writes only absorbed rows — never the corpus again), and
-    MANIFEST.json naming the live set; recovery = the manifest's union
+    a DURABLE target. Under the GENERATION CHAIN, checkpoint_dir holds
+    a one-time BASE copy per side, one level file per side that every
+    absorb replaces (it holds only absorbed rows — never the corpus
+    again), and MANIFEST.json naming the live set; recovery = the
+    manifest's union
     (IncrementalLshIndex.recover), no session state consulted. Superseded
     files are removed only after the manifest publishing the successor
     lands — a crash leaks a file, never loses data."""
@@ -1283,24 +1283,28 @@ def test_incremental_index_durable_checkpoint(spark, tmp_path):
             [n for n in names if n.startswith("bands_")],
         )
 
+    def stamp(name):
+        return os.stat(os.path.join(ckpt, name, "_SUCCESS")).st_mtime_ns
+
     idx = D.IncrementalLshIndex(
-        mk(range(5), "b"), mk(range(5), "b"),
-        compact_every=2, checkpoint_dir=ckpt,
+        mk(range(5), "b"), mk(range(5), "b"), checkpoint_dir=ckpt
     )
     idx.absorb(mk(range(10, 13), "d"), mk(range(10, 13), "d"))
-    # first absorb: base copy written ONCE + the durable delta append,
+    # first absorb: base copy written once + one level file per side,
     # manifest names both
     sh_d, bd_d = sides()
     assert sh_d == ["sh_00001", "sh_base"] and bd_d == ["bands_00002", "bands_base"]
     m = json.load(open(os.path.join(ckpt, "MANIFEST.json")))
     assert [os.path.basename(p) for p in m["sh"]] == ["sh_base", "sh_00001"]
+    base_stamps = (stamp("sh_base"), stamp("bands_base"))
     idx.absorb(mk(range(20, 22), "e"), mk(range(20, 22), "e"))
-    # second absorb hit compact_every=2: the LEVEL (absorbed rows only)
-    # replaced the delta files; the base copy is untouched — the corpus
-    # is never rewritten (the generation-chain point)
+    # second absorb: a new level file REPLACED each side's previous one
+    # (no delta file beside it); the base copies were not rewritten
     sh_d, bd_d = sides()
-    assert len(sh_d) == 2 and len(bd_d) == 2, (sh_d, bd_d)
-    assert "sh_base" in sh_d and "bands_base" in bd_d
+    assert sh_d == ["sh_00003", "sh_base"] and bd_d == ["bands_00004", "bands_base"]
+    assert (stamp("sh_base"), stamp("bands_base")) == base_stamps
+    m = json.load(open(os.path.join(ckpt, "MANIFEST.json")))
+    assert [os.path.basename(p) for p in m["bands"]] == ["bands_base", "bands_00004"]
     want = (
         {(i, f"b{i}") for i in range(5)}
         | {(i, f"d{i}") for i in range(10, 13)}
@@ -1710,7 +1714,7 @@ def test_incremental_index_bucket_cap_bounds_width(spark):
         )
 
     base = bands([(3, 10, [1, 2]), (4, 10, [1, 2]), (7, 10, [1, 2]), (9, 20, [9])])
-    idx = D.IncrementalLshIndex(sh([3, 4, 7, 9]), base, compact_every=1, bucket_cap=2)
+    idx = D.IncrementalLshIndex(sh([3, 4, 7, 9]), base, bucket_cap=2)
     # init: bucket 10 keeps lowest ids {3,4}; 7 evicted; singleton untouched
     assert {(r.doc_id, r.sigh) for r in idx.bands.collect()} == {
         (3, 10), (4, 10), (9, 20)
@@ -1752,7 +1756,7 @@ def test_text_gate_bucket_cap_exact_dup_decisions_identical(spark, tmp_path):
             "doc_id", BANDS, N_HASHES // BANDS,
         )
         idx = D.IncrementalLshIndex(
-            cor_sh, cor_bands, compact_every=1, bucket_cap=cap
+            cor_sh, cor_bands, bucket_cap=cap
         )
         gate = D.TextIngestGate(idx, root, N_HASHES, BANDS, 5, 0.5)
         for e, rows in enumerate(epochs):
@@ -1813,7 +1817,7 @@ def test_text_gate_decisions_broadcast_threshold_invariant(spark, tmp_path):
                 D.minhash_signatures_wide(cor_sh, "doc_id", N_HASHES),
                 "doc_id", BANDS, N_HASHES // BANDS,
             )
-            idx = D.IncrementalLshIndex(cor_sh, cor_bands, compact_every=1)
+            idx = D.IncrementalLshIndex(cor_sh, cor_bands)
             gate = D.TextIngestGate(idx, root, N_HASHES, BANDS, 5, 0.5)
             for e, rows in enumerate(epochs):
                 gate(spark.createDataFrame(rows, "doc_id long, text string"), e)
@@ -1869,7 +1873,7 @@ def test_text_gate_absorb_dedup_thins_index_and_keeps_decisions(spark, tmp_path)
             D.minhash_signatures_wide(cor_sh, "doc_id", N_HASHES),
             "doc_id", BANDS, N_HASHES // BANDS,
         )
-        idx = D.IncrementalLshIndex(cor_sh, cor_bands, compact_every=1)
+        idx = D.IncrementalLshIndex(cor_sh, cor_bands)
         gate = D.TextIngestGate(
             idx, root, N_HASHES, BANDS, 5, 0.5, absorb_dedup=absorb_dedup
         )
@@ -1933,7 +1937,7 @@ def test_gate_sink_schema_guard_refuses_mixed_schema_append(spark, tmp_path):
             D.minhash_signatures_wide(cor_sh, "doc_id", N_HASHES),
             "doc_id", BANDS, N_HASHES // BANDS,
         )
-        idx = D.IncrementalLshIndex(cor_sh, cor_bands, compact_every=1)
+        idx = D.IncrementalLshIndex(cor_sh, cor_bands)
         return D.TextIngestGate(
             idx, root, N_HASHES, BANDS, 5, 0.5, absorb_dedup=absorb_dedup
         )
@@ -2096,7 +2100,7 @@ def test_text_gate_reports_within_batch_duplicate_mass(spark, tmp_path):
         D.minhash_signatures_wide(cor_sh, "doc_id", N_HASHES),
         "doc_id", BANDS, N_HASHES // BANDS,
     )
-    idx = D.IncrementalLshIndex(cor_sh, cor_bands, compact_every=1)
+    idx = D.IncrementalLshIndex(cor_sh, cor_bands)
     gate = D.TextIngestGate(
         idx, str(tmp_path / "sink"), N_HASHES, BANDS, 5, 0.5,
         collect_stats=True,
@@ -2153,7 +2157,6 @@ def test_embedding_gate_identical_vector_cluster_cap_vs_widen(spark, tmp_path):
         idx = D.IncrementalLshIndex(
             cor.select("vec_id", "_v", "_norm"),
             cor.select("vec_id", "bucket"),
-            compact_every=1,
             bucket_cap=cap,
         )
         gate = S.EmbeddingIngestGate(
@@ -2252,7 +2255,6 @@ def test_cells_gate_inherits_index_bucket_cap_through_retrain(spark, tmp_path):
         idx = D.IncrementalLshIndex(
             cor.select("vec_id", "_v", "_norm"),
             cor.select("vec_id", "bucket"),
-            compact_every=1,
             bucket_cap=cap,
         )
         gate = S.CellEmbeddingIngestGate(
@@ -2346,7 +2348,6 @@ def test_gate_absorb_dedup_thins_index_and_keeps_decisions(spark, tmp_path):
         )
         idx = D.IncrementalLshIndex(
             cor.select("vec_id", "_v", "_norm"), cor.select("vec_id", "bucket"),
-            compact_every=1,
         )
         gate = S.CellEmbeddingIngestGate(
             idx, str(tmp_path / tag), DIM, centroids=cents, n_cells=8,
@@ -2412,7 +2413,6 @@ def test_cells_gate_auto_nprobe_resolves_measured_rule(spark, tmp_path):
         )
         idx = D.IncrementalLshIndex(
             cor.select("vec_id", "_v", "_norm"), cor.select("vec_id", "bucket"),
-            compact_every=1,
         )
         g = S.CellEmbeddingIngestGate(
             idx, str(tmp_path / tag), DIM, centroids=cents, n_cells=8,
@@ -2472,7 +2472,7 @@ def test_cells_gate_one_join_verify_matches_two_frame_path(spark, tmp_path):
         ).localCheckpoint(eager=True)
         idx = D.IncrementalLshIndex(
             cor.select("vec_id", "_v", "_norm"), cor.select("vec_id", "bucket"),
-            compact_every=1, comb=cor if with_comb else None,
+            comb=cor if with_comb else None,
         )
         g = S.CellEmbeddingIngestGate(
             idx, str(tmp_path / tag), DIM, centroids=cents, n_cells=8,
@@ -2547,9 +2547,8 @@ def test_incremental_index_bucket_cap_history_independent_property(spark):
             max_size=4,
         ),
         cap=st.integers(min_value=1, max_value=3),
-        k=st.integers(min_value=1, max_value=3),
     )
-    def prop(epochs, cap, k):
+    def prop(epochs, cap):
         base_rows = [(0, 0), (1, 0), (2, 1), (3, 1), (4, 2)]
         # unique doc ids across base + all epochs
         seen_ids = {i for i, _ in base_rows}
@@ -2561,7 +2560,7 @@ def test_incremental_index_bucket_cap_history_independent_property(spark):
             clean_epochs.append(dedup_rows)
 
         idx = D.IncrementalLshIndex(
-            sh(base_rows), bands(base_rows), compact_every=k, bucket_cap=cap
+            sh(base_rows), bands(base_rows), bucket_cap=cap
         )
         everything = list(base_rows)
         for rows in clean_epochs:

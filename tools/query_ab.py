@@ -1,6 +1,6 @@
 """Time ONE registry query under the CURRENT environment — the arm
 runner for env-knob A/Bs (PYPELN_SPARK_STREAM_PARTITIONS=4|16|auto,
-PYPELN_SPARK_INGEST_COMPACT_EPOCHS=K|auto, durable-vs-local entries...).
+PYPELN_SPARK_INGEST_COMPACT_DIR, durable-vs-local entries...).
 Each arm runs in its own process because several knobs parse at import;
 the calling shell sets the env and sweeps the arms SEQUENTIALLY (the
 measurement discipline: never two Spark sessions on the box).
