@@ -854,11 +854,12 @@ class IncrementalLshIndex:
         self.checkpoint_dir = checkpoint_dir
         self._n_rows: tp.Optional[int] = None  # lazy; reset by every absorb
         self._cut: list = []  # in-session leaves this index cut (close())
-        # durable state: file sequence, each side's live numbered file(s)
-        # and its one-time base copy
+        # durable state: file sequence, each side's live numbered file
+        # (None until the side's first durable write) and its one-time
+        # base copy
         self._seq = 0
-        self._ckpt_sh: list = []
-        self._ckpt_bands: list = []
+        self._ckpt_sh: tp.Optional[str] = None
+        self._ckpt_bands: tp.Optional[str] = None
         self._base_ckpt: dict = {}
         # leveled state: the immutable BASE frames and one LEVEL leaf per
         # side holding every absorbed row; self.sh / self.bands are the
@@ -996,7 +997,7 @@ class IncrementalLshIndex:
         self._seq += 1
         path = self.checkpoint_dir.rstrip("/") + f"/{side}_{self._seq:05d}"
         df.write.mode("overwrite").parquet(path)
-        getattr(self, f"_ckpt_{side}").append(path)
+        setattr(self, f"_ckpt_{side}", path)
         return df.sparkSession.read.parquet(path)
 
     def _level(self, level: tp.Optional[DataFrame], new: DataFrame, side: str):
@@ -1028,10 +1029,11 @@ class IncrementalLshIndex:
         import os as _os
 
         m = {
-            side: (
-                ([self._base_ckpt[side]] if side in self._base_ckpt else [])
-                + list(getattr(self, f"_ckpt_{side}"))
-            )
+            side: [
+                p
+                for p in (self._base_ckpt.get(side), getattr(self, f"_ckpt_{side}"))
+                if p is not None
+            ]
             for side in ("sh", "bands")
         }
         path = _os.path.join(self.checkpoint_dir, "MANIFEST.json")
@@ -1093,6 +1095,7 @@ class IncrementalLshIndex:
             if self._base_comb is not None:
                 self.comb = self._base_comb.unionByName(lvl)
             return
+        old = (self._ckpt_sh, self._ckpt_bands)
         if self.bucket_cap is None:
             if self.checkpoint_dir:
                 self._ensure_durable_base("sh", self._base_sh)
@@ -1113,11 +1116,10 @@ class IncrementalLshIndex:
             self.bands = self._base_bands = self._materialize(
                 self._cap_bands(bands), "bands"
             )
-        dropped = []
-        for side in ("sh", "bands"):
-            paths = getattr(self, f"_ckpt_{side}")
-            dropped += paths[:-1]
-            setattr(self, f"_ckpt_{side}", paths[-1:])
+        dropped = [
+            o for o, n in zip(old, (self._ckpt_sh, self._ckpt_bands))
+            if o is not None and o != n
+        ]
         self._write_manifest()
         if dropped:
             from pypeln_spark.streaming import remove_sink_dir
@@ -1143,6 +1145,7 @@ class IncrementalLshIndex:
         IDENTICAL vectors shares every bucket at any width (widening
         cannot split it; the occupancy trigger's one blind spot), and
         only the cap keeps its probed width bounded."""
+        old_lvl = self._ckpt_bands
         new_bands = self._materialize(self._cap_bands(bands), "bands")
         self.bands = self._base_bands = new_bands
         self._lvl_bands = None
@@ -1162,12 +1165,12 @@ class IncrementalLshIndex:
             from pypeln_spark.streaming import remove_sink_dir
 
             old_base = self._base_ckpt.pop("bands", None)
-            dropped = self._ckpt_bands[:-1]
-            self._base_ckpt["bands"] = self._ckpt_bands[-1]
-            self._ckpt_bands = []
+            self._base_ckpt["bands"] = self._ckpt_bands
+            self._ckpt_bands = None
             self._write_manifest()
-            for p in dropped + ([old_base] if old_base else []):
-                remove_sink_dir(new_bands.sparkSession, p)
+            for p in (old_lvl, old_base):
+                if p is not None:
+                    remove_sink_dir(new_bands.sparkSession, p)
 
     def rebuild_combined(self, comb: DataFrame, sh_project, band_project) -> None:
         """The view-preserving whole-index rebuild: replace the entire

@@ -92,6 +92,11 @@ def enforce(obs: Observation, rules: tp.Mapping[str, tp.Tuple[Column, str]]) -> 
     return dict(got)
 
 
+# min/max over these types keeps an immutable aggregation buffer, which
+# rules out a hash aggregate for the whole aggregate it sits in
+_IMMUTABLE_BUFFER = (T.StringType, T.BinaryType, T.ArrayType, T.MapType, T.StructType)
+
+
 def profile(df: DataFrame, columns: tp.Optional[tp.List[str]] = None) -> DataFrame:
     """One-pass column profile → rows (column, n_rows, n_nulls, n_distinct,
     min_value, max_value, numeric mean/stddev or NULLs).
@@ -103,17 +108,20 @@ def profile(df: DataFrame, columns: tp.Optional[tp.List[str]] = None) -> DataFra
     out of the oracle surface (its float reduction is order-dependent)
     and lives in the engine only.
 
-    Aggregate SPLIT (r14 optimization round, guide §1.2): Spark rewrites
-    multiple count_distinct's as Expand + an aggregate KEYED by every
-    distinct column, and a string-typed min/max anywhere in that
-    aggregate forces the whole keyed phase to SortAggregate — two global
-    sorts of the expanded (n_distinct_cols+1)×rows set (measured: the
-    dominant cost of profiling at every scale; plan in plans/r14/).
-    Min/max of NON-numeric columns therefore compute in a SEPARATE
-    keyless pass (keyless sort-aggregation performs no sort), leaving
-    the expanded dedup aggregate all-mutable — a pure HashAggregate. The
-    one-row frames cross-join back together; every expression, and so
-    every output bit, is unchanged."""
+    Aggregate SPLIT: Spark rewrites multiple count_distinct's as Expand +
+    an aggregate KEYED by every distinct column, and a min/max whose
+    aggregation buffer is immutable (string, binary, array, map, struct)
+    anywhere in that aggregate forces the whole keyed phase to
+    SortAggregate — two global sorts of the expanded
+    (n_distinct_cols+1)×rows set (measured: the dominant cost of
+    profiling at every scale; plan in plans/r14/). Min/max of those
+    columns therefore compute in a SEPARATE keyless pass (keyless
+    sort-aggregation performs no sort), leaving the expanded dedup
+    aggregate all-mutable — a pure HashAggregate. Numeric, boolean, date
+    and timestamp min/max have mutable buffers and stay in it. The
+    one-row frames cross-join back together only when an immutable
+    min/max exists; every expression, and so every output bit, is
+    unchanged."""
     from ..functions import davg
 
     cols = columns or df.columns
@@ -129,11 +137,10 @@ def profile(df: DataFrame, columns: tp.Optional[tp.List[str]] = None) -> DataFra
             )
         )
         aggs.append(F.count_distinct(F.col(c)).alias(f"{c}__distinct"))
-        is_numeric = isinstance(dt, (T.NumericType,))
-        mm = aggs if is_numeric else str_aggs
+        mm = str_aggs if isinstance(dt, _IMMUTABLE_BUFFER) else aggs
         mm.append(F.min(F.col(c)).cast("string").alias(f"{c}__min"))
         mm.append(F.max(F.col(c)).cast("string").alias(f"{c}__max"))
-        if is_numeric:
+        if isinstance(dt, T.NumericType):
             numeric.add(c)
             aggs.append(davg(c, 6).alias(f"{c}__mean"))
     row = df.agg(*aggs)

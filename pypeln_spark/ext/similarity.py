@@ -19,6 +19,8 @@ bits). All Spark-side math casts elements to double first.
 
 from __future__ import annotations
 
+import json
+
 from pyspark.sql import DataFrame, Window, functions as F
 
 from .dedup import (
@@ -525,69 +527,55 @@ def ann_lsh_topk(
     )
 
 
-_LIT_STORE: tp.Dict[tuple, str] = {}
+_LIT_STORE: dict = {}  # memo_key -> the centroids' JSON text
+_CELLS_TYPE = "array<struct<cid:bigint,cv:array<double>,cn:double>>"
 
 
 def centroid_literals(
     centroids: DataFrame, id_col: str = "vec_id", memo_key: tuple | None = None
 ):
-    """Collect a (tiny, materialized) centroid frame and spell it as an
-    inline literal array of (cid, cv, cn) structs — the join-free
-    quantizer ivf_assign(as_literals=...) explodes. One driver collect of
-    n_cells rows; callers running several assignment passes over the same
-    centroids build this ONCE and pass the Column to each.
+    """Collect a (tiny, materialized) centroid frame into one Column of
+    (cid, cv, cn) structs — the inline quantizer ivf_assign(as_literals=...)
+    scores against. One driver collect of n_cells rows; callers running
+    several assignment passes over the same centroids build this ONCE and
+    pass the Column to each.
 
-    The tree is spelled as ONE SQL expression string parsed JVM-side
-    (r13 opt round): the original per-element F.lit/F.struct construction
-    was ~n_cells x dim py4j round-trips — measured 1.5-2 s of pure DRIVER
-    time per tree at 16 cells x 64 dims, dominating the construction cost
-    of every literal-quantizer query. Values are bit-identical: repr() of
-    a Python float is the shortest exact round-trip decimal and Spark's
-    parser (Java Double.parseDouble) is correctly rounded, so each double
-    lands on the same IEEE bits F.lit would have shipped.
+    The Column is ``from_json`` over a string literal: the JSON text is
+    built on the driver and the array type is parsed once, here. A plan
+    that uses the Column carries it as an ordinary literal, which
+    constant folding turns into one array literal, so no plan re-parses
+    the centroids as SQL text (an ``F.expr`` string of the same values is
+    parsed again each time a plan uses it — about 0.27 s per use for 32
+    cells × 64 dims). Values are bit-identical to the frame: ``json``
+    spells each double as its shortest round-trip decimal, Spark's JSON
+    reader parses it correctly rounded, and NaN/±Infinity go through the
+    reader's non-numeric spellings (-0.0 and subnormals included;
+    test-pinned).
 
     ``memo_key`` (same discipline as trained_artifact's key — it must
     capture everything that affects the centroid VALUES): memoize the
-    SQL string process-wide, so repeat invocations skip the collect job
-    too. The string is session-independent (pure text), so no session
-    liveness bookkeeping applies."""
-    s = _LIT_STORE.get(memo_key) if memo_key is not None else None
-    if s is None:
+    JSON text process-wide, so repeat calls skip the collect job too. The
+    text is session-independent, so no session liveness bookkeeping
+    applies."""
+    js = _LIT_STORE.get(memo_key) if memo_key is not None else None
+    if js is None:
         rows = centroids.select(
             F.col(id_col).alias("cid"), F.col("_v"), F.col("_norm")
         ).collect()
-
-        def d(x):
-            # non-finite guard (ADVICE r13): repr() spells inf/nan as
-            # 'inf'/'nan', which Spark's SQL parser rejects ('infD' is not
-            # a literal) — a build-time AnalysisException the old F.lit
-            # tree never raised. Spell them as the CASTs the parser does
-            # accept; Double.parseDouble('Infinity'/'NaN') yields the same
-            # IEEE bits F.lit ships.
-            x = float(x)
-            if x != x:
-                return "CAST('NaN' AS DOUBLE)"
-            if x == float("inf"):
-                return "CAST('Infinity' AS DOUBLE)"
-            if x == float("-inf"):
-                return "CAST('-Infinity' AS DOUBLE)"
-            return repr(x) + "D"
-
-        structs = ", ".join(
-            "named_struct('cid', CAST(%d AS BIGINT), 'cv', array(%s), 'cn', %s)"
-            % (int(r.cid), ", ".join(d(x) for x in r._v), d(r._norm))
-            for r in rows
+        js = json.dumps(
+            [
+                {"cid": int(r.cid), "cv": [float(x) for x in r._v],
+                 "cn": float(r._norm)}
+                for r in rows
+            ]
         )
-        s = "array(" + structs + ")"
         if memo_key is not None:
-            # bound the process-wide memo (ADVICE r13): a long-lived
-            # driver cycling through many centroid artifacts must not
-            # accumulate megabyte literal strings forever. FIFO eviction;
-            # 64 distinct centroid trees is far beyond any one session.
+            # bounded FIFO: a long-lived driver cycling through many
+            # centroid artifacts must not keep their texts forever
             while len(_LIT_STORE) >= 64:
                 _LIT_STORE.pop(next(iter(_LIT_STORE)))
-            _LIT_STORE[memo_key] = s
-    return F.expr(s)
+            _LIT_STORE[memo_key] = js
+    return F.from_json(F.lit(js), _CELLS_TYPE)
 
 
 def ivf_assign(
@@ -601,64 +589,69 @@ def ivf_assign(
 ) -> DataFrame:
     """Assign each vector to its ``keep`` nearest centroid cells by cosine
     (deterministic tiebreak: centroid id). ``vecs``/``centroids`` are
-    with_norms frames. The centroid side is broadcast — assignment is one
-    narrow pass over the corpus, the IVF build shape at any scale.
+    with_norms frames. Returns (id, _v, _norm, cid), plus the probe rank
+    ``crank`` (1..keep) with ``with_rank`` — keep>1 only — so a
+    multi-nprobe eval can assign ONCE at the largest nprobe and carve each
+    arm with a filter (ann_recall_eval_nprobe) instead of re-assigning per
+    arm.
 
-    keep=1 (the corpus-assignment hot path) lowers to an argmax aggregate —
-    max over (ccos, -cid, payload) structs — identical to the rank-1 row of
-    the window formulation (largest ccos, then SMALLEST cid on ties, and
-    (ccos, -cid) is unique per centroid so payload fields never tiebreak)
-    but partial-aggregated: the n_cells-wide crossjoin collapses map-side
-    to one row per vector BEFORE any exchange, where the window would
-    shuffle+sort all n_cells×|corpus| scored rows. keep>1 (query probing —
-    the small side) keeps the window. ``with_rank`` (keep>1 only) retains
-    the probe rank column ``crank`` so a multi-nprobe eval can assign ONCE
-    at the largest nprobe and carve each arm with a filter
-    (ann_recall_eval_nprobe) instead of re-assigning per arm.
+    Default path: the centroid frame is broadcast against the vectors, one
+    narrow pass over the corpus. keep=1 (the corpus-assignment hot path)
+    is an argmax aggregate — max over (ccos, -cid, payload) structs, the
+    largest ccos and then the SMALLEST cid, partial-aggregated so the
+    n_cells-wide cross join collapses map-side to one row per vector
+    before any exchange. keep>1 (query probing, the small side) ranks the
+    scored rows with a window.
 
-    ``as_literals`` (r13): embed the centroids as an inline literal array
-    of (cid, cv, cn) structs and EXPLODE it against the vector side — a
-    pure whole-stage-codegen projection with NO join node at all, where
-    the default path is a BroadcastNestedLoopJoin against the broadcast
-    centroid frame (bounded — n_cells rows — but still a join the lint
-    must exempt). Only valid when the centroid frame is a materialized
-    driver-side artifact (trained_artifact's collect-and-replay frames):
-    the collect here is n_cells tiny rows, the same rows the artifact
-    already holds locally. Values are bit-identical to the join path —
-    F.lit over the collected doubles round-trips exactly. Pass True to
-    collect-and-build here, or a prebuilt centroid_literals() Column to
-    share one collect across several assignment passes."""
+    ``as_literals``: score against an inline centroid_literals() Column
+    instead — one narrow projection per vector with no join, window,
+    aggregate or exchange. Each vector ``transform``s the centroid array
+    into (ccos, -cid, cid) structs; keep=1 takes ``array_max(...).cid``
+    and keep>1 ``posexplode``s the first ``keep`` of the descending
+    ``sort_array`` (crank = pos + 1). Struct order is the default path's
+    order, so the cells, ties and ranks are identical (test-pinned). Only
+    valid when the centroid frame is a materialized driver-side artifact
+    (trained_artifact's collect-and-replay frames, the cells gate's
+    centroids). Pass True to collect here, or a prebuilt
+    centroid_literals() Column to share one collect across several
+    assignment passes."""
     if with_rank and keep == 1:
-        # the argmax fast path below never builds crank — fail loudly
-        # instead of silently returning a rank-less frame (ADVICE r9 #1)
+        # neither keep=1 path builds crank — fail loudly instead of
+        # silently returning a rank-less frame
         raise ValueError("with_rank=True requires keep > 1 (the argmax "
                          "keep=1 path carries no rank column)")
     if as_literals is not False and as_literals is not None:
-        # True -> collect-and-build here; a Column -> a caller-hoisted
-        # centroid_literals() result (ivf_topk builds it ONCE and passes
-        # it to both assignment passes — one collect, one literal tree)
         lits = (
             centroid_literals(centroids, id_col)
             if as_literals is True
             else as_literals
         )
-        scored = (
-            vecs.withColumn("_c", F.explode(lits))
-            .select(
-                "*",
-                F.col("_c.cid").alias("cid"),
-                F.col("_c.cv").alias("cv"),
-                F.col("_c.cn").alias("cn"),
+        scored = F.transform(
+            lits,
+            lambda c: F.struct(
+                (
+                    dot_ieee(F.col("_v"), c["cv"]) / (F.col("_norm") * c["cn"])
+                ).alias("ccos"),
+                (-c["cid"]).alias("nc"),
+                c["cid"].alias("cid"),
+            ),
+        )
+        if keep == 1:
+            return vecs.select(
+                id_col, "_v", "_norm", F.array_max(scored)["cid"].alias("cid")
             )
-            .drop("_c")
-        )
-    else:
-        c = centroids.select(
-            F.col(id_col).alias("cid"), F.col("_v").alias("cv"),
-            F.col("_norm").alias("cn"),
-        )
-        scored = vecs.join(F.broadcast(c), F.lit(True))
-    scored = scored.withColumn(
+        best = F.slice(F.sort_array(scored, asc=False), 1, keep)
+        cols = [id_col, "_v", "_norm", F.col("_c.cid").alias("cid")]
+        if with_rank:
+            cols.append((F.col("_pos") + 1).alias("crank"))
+        return vecs.select(
+            id_col, "_v", "_norm", F.posexplode(best).alias("_pos", "_c")
+        ).select(*cols)
+    c = centroids.select(
+        F.col(id_col).alias("cid"), F.col("_v").alias("cv"),
+        F.col("_norm").alias("cn"),
+    )
+    scored = vecs.join(F.broadcast(c), F.lit(True)).withColumn(
         "ccos", dot_ieee(F.col("_v"), F.col("cv")) / (F.col("_norm") * F.col("cn"))
     )
     if keep == 1:
@@ -890,14 +883,14 @@ def ivf_topk(
     probing, and unpersisted each consumer replays training end to end
     (n_cells rows: the cheapest persist in the engine, ~1.7× end-to-end).
 
-    ``quantizer_literals`` (r13, requires ``centroids``): run BOTH
+    ``quantizer_literals`` (requires ``centroids``): run BOTH
     assignment passes through ivf_assign's inline-literal path — the
     composed plan then has no BroadcastNestedLoopJoin anywhere (the probe
-    join stays a broadcast HASH join on cid). True builds the literal
-    tree here (one collect); a prebuilt centroid_literals() Column is
-    used as-is (memoized callers skip the per-invocation collect).
+    join stays a broadcast HASH join on cid). True collects the centroids
+    here (one job); a prebuilt centroid_literals() Column is used as-is
+    (memoized callers skip the per-invocation collect).
 
-    ``cells`` (r13): a precomputed corpus assignment (ivf_assign keep=1
+    ``cells``: a precomputed corpus assignment (ivf_assign keep=1
     output: id, _v, _norm, cid — typically a cached_index frame) — the
     production train/add split taken one step further: the inverted
     LISTS are built once per (corpus, quantizer) and reused across
@@ -935,7 +928,7 @@ def ivf_topk(
     else:
         corpus = with_norms(spread(emb), vec_col)
         cents = with_norms(emb.filter(F.col(id_col) < n_cells), vec_col)
-    # one collect + one literal tree, shared by both assignment passes;
+    # one collect + one centroid Column, shared by both assignment passes;
     # True builds it here, a caller-provided Column (e.g. a memoized
     # centroid_literals result) is passed through as-is
     if quantizer_literals is True:
@@ -1134,7 +1127,7 @@ def semantic_near_dup(
     so leaving the cosine compute on it caps parallelism at n_cells however
     big the cluster is.
 
-    ``cells`` (r13): a precomputed corpus assignment (ivf_assign keep=1
+    ``cells``: a precomputed corpus assignment (ivf_assign keep=1
     output: id, _v, _norm, cid — typically a cached_index frame, see
     ivf_topk's twin param): training and assignment are skipped entirely
     and the provided inverted lists feed the pair scan. Bit-identical to
@@ -1832,33 +1825,38 @@ def live_topk_serve(
     cents_lits=None,
 ) -> tp.Optional[DataFrame]:
     """One query micro-batch served top-k against a LIVE cells index
-    (an IncrementalLshIndex whose sh side stores (id, _v, _norm) and
-    whose bands side stores (id, cell)) — the serve body shared by the
-    registry entry `streaming_ann_topk_serving_live` and the cells-dial
-    tool, so the A/B measures the exact pipeline the entry runs.
+    (an IncrementalLshIndex whose sh side stores (id, _v, _norm), whose
+    bands side stores (id, cell) and whose optional combined view stores
+    (id, _v, _norm, cell)) — the serve body shared by the registry entry
+    `streaming_ann_topk_serving_live` and perfbench's `ann_live_serve`.
 
     nprobe resolves from the CURRENT geometry via serving_nprobe (a
     retrain that grows n_cells keeps the scan fraction — and the recall
-    target — instead of silently shrinking it). The join runs in TWO
-    guarded stages so the corpus never moves while the estimates fit:
-    (1) probes broadcast against the SKINNY band view → candidates;
-    (2) the COUNTED candidate frame broadcasts against the vector side
-    → verify. Past the threshold either stage degrades to the bounded
-    shuffle_hash build. Both index views are base + the one lineage-cut
-    level leaf every absorb merges into — a two-leaf read, never a
-    re-derivation. Returns (query_id,
-    neighbor_id, cos, rank ≤ k) or None on an empty batch; the caller
-    labels the epoch and writes."""
+    target — instead of silently shrinking it). The queries are assigned
+    to their nprobe nearest cells; with ``cents_lits`` (a caller-held
+    centroid_literals() Column, e.g. the cells gate's centroid_lits(),
+    built once per geometry) that assignment is one narrow projection
+    against the folded centroid literal, with no join and no shuffle, and
+    a request neither collects nor re-parses the centroids. ``None``
+    broadcasts the centroid frame instead, for centroids that are not
+    materialized artifacts. Values are identical either way.
+
+    With a combined view, the guarded probe broadcast (probe_side_join)
+    lands on it directly and cos is computed in the same pass: one join.
+    Without one the join runs in TWO guarded stages so the corpus never
+    moves while the estimates fit: (1) probes against the SKINNY band
+    view → candidates; (2) the COUNTED candidate frame against the vector
+    side → verify. Past the threshold either stage degrades to the
+    bounded shuffle_hash build. Index views are base + the one
+    lineage-cut level leaf every absorb merges into — a two-leaf read,
+    never a re-derivation. Returns (query_id, neighbor_id, cos, rank ≤ k)
+    or None on an empty batch; the caller labels the epoch and writes."""
     serve_np = serving_nprobe(n_cells, recall_target=recall_target)
     n_batch = batch_df.count()  # one tiny job; feeds stage 1's guard
     if n_batch == 0:
         return None
     retire_pipeline_caches()
     q = with_norms(spread(batch_df))
-    # cents_lits (r14): a caller-held centroid-literal Column (the cells
-    # gate's centroid_lits()) makes the query-probe assignment join-free;
-    # None keeps the broadcast-join path for centroids that are not
-    # materialized artifacts. Values are identical either way.
     probes = ivf_assign(
         q, centroids, n_cells, keep=serve_np, id_col=id_col,
         as_literals=cents_lits,
@@ -1867,7 +1865,7 @@ def live_topk_serve(
         F.col("_norm").alias("qn"), F.col("cid"),
     )
     if index.comb is not None:
-        # ONE-JOIN SERVE (r14): the live combined view (id, _v, _norm,
+        # ONE-JOIN SERVE: the live combined view (id, _v, _norm,
         # bucket) is the inverted-list layout, so the guarded probe
         # broadcast lands on it directly and cos is computed in the same
         # pass — the band-probe stage, the candidate persist and its
@@ -2422,19 +2420,18 @@ class CellEmbeddingIngestGate(EmbeddingIngestGate):
         self.nprobe = int(nprobe)
         self.retrain_iters = retrain_iters
         self.retrain_train_mod = retrain_train_mod
-        self._lits = None  # lazy centroid-literal column (r14)
+        self._lits = None  # centroid_lits(), built on first use
 
     def centroid_lits(self):
-        """The current geometry's centroid-literal Column (r14, guide
-        §1.2/§5): the gate's centroids are always a materialized
-        collect-and-replay artifact (trained_artifact frames at
-        construction, retrain's own collect) — exactly the precondition
-        ivf_assign(as_literals=...) documents — so every per-epoch
-        assignment pass (probe keep=nprobe, absorb keep=1, and the live
-        serve's query probing) runs as a join-free whole-stage-codegen
-        explode instead of re-broadcasting the centroid frame each call.
-        Values are bit-identical to the join path (test-pinned). Built
-        once per geometry; retrain invalidates."""
+        """The current geometry's centroid_literals() Column, built once
+        per geometry (one collect of the materialized centroids: the
+        trained artifact at construction, retrain's own collect after) and
+        reset by retrain. Every assignment pass of the gate — probe
+        (keep=nprobe), absorb (keep=1), retrain's re-assignment — and the
+        live serve's query probing share it, so each runs as one narrow
+        projection with no join or shuffle, and no plan re-collects or
+        re-parses the centroids. Values are bit-identical to the join path
+        (test-pinned)."""
         if self._lits is None:
             self._lits = centroid_literals(self.centroids, self.id_col)
         return self._lits
@@ -2464,7 +2461,7 @@ class CellEmbeddingIngestGate(EmbeddingIngestGate):
         cents = spark.createDataFrame(cents.collect(), cents.schema)
         self.centroids = cents
         self.n_cells = n_cells
-        self._lits = None  # new geometry -> new literal tree
+        self._lits = None  # new geometry -> new centroid Column
         asg = ivf_assign(
             self.index.sh, cents, n_cells, keep=1,
             id_col=self.id_col, as_literals=self.centroid_lits(),
@@ -2539,7 +2536,7 @@ class CellEmbeddingIngestGate(EmbeddingIngestGate):
 
     def _absorb_novel(self, novel: DataFrame) -> None:
         """Cells: ivf_assign(keep=1) already returns (id, _v, _norm, cid)
-        — vector values pass through the argmax struct untouched, so the
+        — vector values pass through untouched, so the
         combined frame is that output directly (the IVF layout: each
         stored vector WITH its cell)."""
         comb = ivf_assign(

@@ -455,10 +455,10 @@ def _kmeans_cells(spark, sf_dir, seeding: str = "hash"):
     Built through ivf_assign's inline-literal path, so the BUILD plan is
     BNLJ-free; assignment is deterministic, so the cached frame is
     bit-identical to recomputing it inside each entry (the argument the
-    MMR entry established, oracle-replayed). The literal tree is likewise
-    memoized (centroid_literals memo_key — the values are the artifact's
-    own collected doubles), so repeat invocations skip both the literal
-    collect job and the tree build. Returns (cents, cells, lits)."""
+    MMR entry established, oracle-replayed). The centroids' JSON text is
+    likewise memoized (centroid_literals memo_key — the values are the
+    artifact's own collected doubles), so repeat invocations skip the
+    literal collect job. Returns (cents, cells, lits)."""
     cents = _kmeans_artifact(spark, sf_dir, seeding=seeding)
     key = ("ivf_kmeans_cells", sf_dir, N_CELLS, KMEANS_ITERS, KMEANS_TRAIN_MOD)
     if seeding != "hash":

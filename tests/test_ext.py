@@ -379,6 +379,61 @@ def test_ivf_assign_literal_path_matches_join_path(spark):
     )
     assert "Join" not in plan, plan[:2000]
 
+    # keep=3 with ranks, against a centroid frame holding two IDENTICAL
+    # centroids (cid 1 and cid 7): the cid tiebreak decides their order
+    twin = cents.unionByName(
+        cents.filter(F.col("vec_id") == 1).withColumn("vec_id", F.lit(7).cast("long"))
+    )
+    for keep, rank in ((1, False), (3, True)):
+        cols = ["vec_id", "cid"] + (["crank"] if rank else [])
+        a = S.ivf_assign(vecs, twin, 5, keep=keep, with_rank=rank)
+        b = S.ivf_assign(
+            vecs, twin, 5, keep=keep, with_rank=rank, as_literals=True
+        )
+        assert b.columns == a.columns == ["vec_id", "_v", "_norm"] + cols[1:]
+        got = sorted(map(tuple, b.select(cols).collect()))
+        assert sorted(map(tuple, a.select(cols).collect())) == got
+    ranks = {(v, c): r for v, c, r in got}
+    tied = [v for (v, c) in ranks if c == 7]
+    assert tied and all(ranks[(v, 1)] == ranks[(v, 7)] - 1 for v in tied)
+
+
+def test_centroid_literals_round_trip_non_finite_bits(spark):
+    """centroid_literals carries every double of the centroid frame bit
+    for bit — NaN, ±Infinity, -0.0 and subnormals included — and the
+    literal path assigns such centroids exactly as the join path does."""
+    import struct
+
+    from pypeln_spark.ext import similarity as S
+
+    special = [float("nan"), float("inf"), float("-inf"), -0.0, 5e-324,
+               2.2250738585072014e-308 / 3, 0.1, -1e308]
+    cents = spark.createDataFrame(
+        [(3, special, 2.0), (5, [1.0] * 8, float("inf")),
+         (9, [0.5, -0.25] * 4, 1.0), (11, [0.0] * 8, -0.0)],
+        "vec_id long, _v array<double>, _norm double",
+    )
+    got = spark.range(1).select(
+        S.centroid_literals(cents).alias("c")
+    ).collect()[0].c
+    bits = lambda x: struct.pack(">d", x)
+    want = [(r.vec_id, r._v, r._norm) for r in cents.collect()]
+    assert [(r.cid, [bits(x) for x in r.cv], bits(r.cn)) for r in got] == [
+        (c, [bits(x) for x in v], bits(n)) for c, v, n in want
+    ]
+    vecs = S.with_norms(S.spread(spark.createDataFrame(
+        [(i, [float(i % 3 - 1), 1.0, -0.5, 0.0, 2.0, 0.0, 1.0, float(i)])
+         for i in range(12)],
+        "vec_id long, embedding array<float>",
+    )))
+    # a zero norm is a division by zero under ANSI mode on either path
+    cents = cents.filter(F.col("_norm") != 0)
+    for keep in (1, 2):
+        cols = ["vec_id", "cid"]
+        a = S.ivf_assign(vecs, cents, 3, keep=keep).select(cols)
+        b = S.ivf_assign(vecs, cents, 3, keep=keep, as_literals=True).select(cols)
+        assert sorted(map(tuple, a.collect())) == sorted(map(tuple, b.collect()))
+
 
 def test_connected_components_chain_and_islands(spark):
     from pypeln_spark.ext import dedup as D
@@ -1773,6 +1828,31 @@ def test_profile_single_pass_stats(spark):
     assert prof["k"].mean_value == 2.25
     assert prof["s"].n_nulls == 1 and prof["s"].n_distinct == 2
     assert prof["s"].mean_value is None
+
+
+def test_profile_keeps_mutable_min_max_in_one_aggregate(spark):
+    """Date, long and boolean min/max have mutable aggregation buffers, so
+    profile() keeps them in the one hash aggregate: no cross join of a
+    second one-row aggregate, and the same rows as the split plan."""
+    import datetime
+
+    from pypeln_spark.ext import quality as Q
+
+    df = spark.createDataFrame(
+        [(datetime.date(2024, 3, 1), 5, True),
+         (datetime.date(2023, 12, 31), None, False),
+         (None, 7, True),
+         (datetime.date(2024, 3, 1), 5, None)],
+        "d date, n long, b boolean",
+    )
+    prof = Q.profile(df)
+    plan = prof._jdf.queryExecution().executedPlan().toString()
+    assert "NestedLoopJoin" not in plan and "CartesianProduct" not in plan, plan
+    assert [tuple(r) for r in prof.collect()] == [
+        ("d", 4, 1, 2, "2023-12-31", "2024-03-01", None),
+        ("n", 4, 1, 2, "5", "7", 5.666666666666667),
+        ("b", 4, 1, 2, "false", "true", None),
+    ]
 
 
 @given(

@@ -130,6 +130,32 @@ def test_ivf_centroid_assignment_broadcasts(spark):
     assert "BroadcastNestedLoopJoin" in p or "BroadcastExchange" in p, p
 
 
+def test_literal_cell_assignment_is_one_narrow_projection(spark):
+    """ivf_assign against a centroid_literals() Column scores every vector
+    against the inline centroid array in one projection: no Exchange,
+    Window or Join at keep=1 (array_max) or keep=3 (posexplode of the
+    sorted slice). The centroids reach the plan as one folded array
+    literal — the optimized plan holds no from_json left to evaluate."""
+    from pyspark.sql import functions as F
+
+    from pypeln_spark.ext import similarity as S
+
+    emb = spark.read.parquet(f"{SF}/embeddings.parquet").select(
+        "vec_id", "embedding"
+    )
+    cents = S.with_norms(emb.filter(F.col("vec_id") < 8))
+    lits = S.centroid_literals(cents)
+    vecs = S.with_norms(emb)  # no spread(): its repartition is an Exchange
+    for keep in (1, 3):
+        qe = S.ivf_assign(
+            vecs, cents, 8, keep=keep, as_literals=lits
+        )._jdf.queryExecution()
+        plan = qe.executedPlan().toString()
+        for node in ("Exchange", "Window", "Join"):
+            assert node not in plan, (keep, node, plan[:2000])
+        assert "from_json" not in qe.optimizedPlan().toString(), keep
+
+
 def test_sketch_builds_are_partial_aggregates(spark):
     # Sketch state must build map-side (partial HashAggregate/ObjectHashAggregate
     # before the exchange), so the shuffle carries bounded sketch state, never

@@ -2662,3 +2662,81 @@ def test_seed_sink_schema_matches_spark_writer(spark, tmp_path):
         [], arr_schema
     ).schema
     assert spark.read.parquet(arr_root).count() == 0
+
+
+def test_live_serve_epoch_job_count(spark, tmp_path):
+    """One live query epoch — live_topk_serve against a cells-gate index
+    after one ingest epoch, written by parquet append — runs exactly 6
+    Spark jobs. The query probes' cell assignment against the gate's
+    centroid_lits() is a narrow projection, so it adds no shuffle job of
+    its own (the window formulation it replaced ran 7). Jobs are counted
+    through a job group set around the request, the way the benchmark's
+    tracer counts them."""
+    import random
+
+    from pyspark.sql import types as T
+
+    from pypeln_spark.ext import dedup as D
+    from pypeln_spark.ext import similarity as S
+
+    DIM, CELLS = 16, 8
+    rng = random.Random(5)
+    vec = lambda: [rng.uniform(-1, 1) for _ in range(DIM)]
+    schema = "vec_id long, embedding array<float>"
+    base = spark.createDataFrame([(i, vec()) for i in range(200)], schema)
+    feeds = [
+        spark.createDataFrame([(1000 + i, vec()) for i in range(30)], schema),
+        spark.createDataFrame([(2000 + i, vec()) for i in range(40)], schema),
+    ]
+    cents = S.kmeans_centroids(base, CELLS, 2, train_mod=1)
+    cents = spark.createDataFrame(cents.collect(), cents.schema)
+    cor = S.ivf_assign(S.with_norms(S.spread(base)), cents, CELLS, keep=1).select(
+        "vec_id", "_v", "_norm", F.col("cid").alias("bucket")
+    ).persist()
+    cor.count()
+    index = D.IncrementalLshIndex(
+        cor.select("vec_id", "_v", "_norm"), cor.select("vec_id", "bucket"),
+        comb=cor,
+    )
+    gate = S.CellEmbeddingIngestGate(
+        index, str(tmp_path / "ingest"), DIM, cents, CELLS, 0.35,
+        nprobe="auto", absorb_dedup=False,
+    )
+    serve_root = str(tmp_path / "serve")
+    ST.seed_sink_schema(spark, T.StructType([
+        T.StructField("query_id", T.LongType()),
+        T.StructField("epoch", T.IntegerType()),
+        T.StructField("neighbor_id", T.LongType()),
+        T.StructField("cos", T.DoubleType()),
+        T.StructField("rank", T.IntegerType()),
+    ]), serve_root)
+    sc = spark.sparkContext
+    group = "live-serve-epoch-job-count"
+
+    def body(batch_df, epoch_id):
+        if epoch_id == 0:
+            gate(batch_df, epoch_id)
+            return
+        prev = sc.getLocalProperty("spark.jobGroup.id")
+        sc.setLocalProperty("spark.jobGroup.id", group)
+        try:
+            topk = S.live_topk_serve(
+                index, gate.centroids, gate.n_cells, batch_df, k=5, dim=DIM,
+                cents_lits=gate.centroid_lits(),
+            )
+            topk.select(
+                "query_id", F.lit(int(epoch_id)).cast("int").alias("epoch"),
+                "neighbor_id", "cos", "rank",
+            ).write.mode("append").parquet(serve_root)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", prev)
+
+    ST.staged_foreach_batch(spark, feeds, body)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    served = spark.read.parquet(serve_root)
+    assert served.select("query_id").distinct().count() == 40
+    D.retire_pipeline_caches()
+    index.close()
+    cor.unpersist()
+    assert len(jobs) == 6, sorted(jobs)
