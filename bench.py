@@ -305,8 +305,10 @@ def _load_ref() -> dict:
 
 def _stamp() -> dict:
     """Who produced the record: the host, the CPU count the session ran with
-    ($SPARK_GRAFT_CPUS, defaulted as ``get_spark`` defaults it) and the
-    checkout's commit (None outside a git checkout)."""
+    ($SPARK_GRAFT_CPUS, defaulted as ``get_spark`` defaults it), the
+    checkout's commit (None outside a git checkout) and the Python version
+    (a Python task's fixed cost depends on the interpreter's ``zipimport``)."""
+    import platform
     import socket
     import subprocess
 
@@ -322,6 +324,7 @@ def _stamp() -> dict:
         "host": socket.gethostname(),
         "cpus": int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4)),
         "commit": commit,
+        "python": platform.python_version(),
     }
 
 

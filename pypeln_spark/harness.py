@@ -10,6 +10,8 @@ per operator and per partition:
 - ``on_start`` / ``on_done`` lifecycle (reference runs them once per
   worker: pypeln/process/worker.py:78-118) — init before the first Arrow
   batch, teardown in a ``finally`` once the operator's input is exhausted.
+  Either may be async: its result is awaited on the partition's event loop,
+  or on a loop of its own when the operator's function is sync.
 - dependency injection by parameter name: ``worker_info`` (→ partition id),
   ``element_index``, ``stage_status``, plus any keys returned by ``on_start``
   (reference: pypeln/process/worker.py:71-118).
@@ -34,6 +36,20 @@ PySpark serializer code the Python worker uses (so a ``returns="long"``
 function that returns floats or ``None`` is coerced identically, and
 ``_index`` arrives as numpy arrays either way).
 
+**Task entry.** Every function handed to ``mapInPandas`` first runs
+``forget_foreign_zip_importers``. A reused Python worker calls
+``importlib.invalidate_caches()`` at the start of each task, and on Python
+3.11 every ``zipimporter`` in ``sys.path_importer_cache`` then re-reads its
+whole archive directory. With the standard ``SPARK_HOME`` layout the worker
+imports pyspark from ``pyspark.zip``, so about 16 such importers (one per
+imported pyspark sub-package, plus the spark-core jar's) cost 0.2-0.6 s per
+task on a 4-vCPU host (SCALING.md). The entry step drops the
+``zipimporter`` entries whose archive lies outside the SparkFiles root; the
+cache is only a cache, and a later import that needs one of them recreates
+it from ``zipimport``'s directory cache without reading the archive.
+Archives shipped with ``addPyFile`` or ``--py-files`` live under that root
+and keep their per-task re-read.
+
 Elements cross the JVM↔Python boundary as Arrow batches (vectorized), not
 pickled one-at-a-time queue puts — the single biggest perf win over the
 reference's design at scale.
@@ -44,10 +60,13 @@ from __future__ import annotations
 import asyncio
 import concurrent.futures as cf
 import inspect
+import os
+import sys
 import typing as tp
+import zipimport
 
 import pandas as pd
-from pyspark import TaskContext
+from pyspark import SparkFiles, TaskContext
 from pyspark.sql import types as T
 
 from . import infer
@@ -64,6 +83,33 @@ def output_schema(out_type: tp.Optional[T.DataType], with_index: bool) -> T.Stru
         T.StructField(VALUE_COL, out_type if out_type is not None else T.BinaryType(), True)
     )
     return T.StructType(fields)
+
+
+def forget_foreign_zip_importers() -> None:
+    """Inside a task, drop from ``sys.path_importer_cache`` every
+    ``zipimporter`` whose archive lies outside the SparkFiles root, so the
+    next task's ``importlib.invalidate_caches()`` does not re-read those
+    archives. A no-op outside a task."""
+    if TaskContext.get() is None:
+        return
+    root = os.path.join(SparkFiles.getRootDirectory(), "")
+    for path, finder in list(sys.path_importer_cache.items()):
+        if isinstance(finder, zipimport.zipimporter) and not finder.archive.startswith(root):
+            sys.path_importer_cache.pop(path, None)
+
+
+def _settle(res, loop: tp.Optional[asyncio.AbstractEventLoop]):
+    """``res``, or what it resolves to when it is awaitable: awaited on the
+    partition's ``loop``, or on a fresh loop when the harness has none."""
+    if not inspect.isawaitable(res):
+        return res
+    if loop is not None:
+        return loop.run_until_complete(res)
+    fresh = asyncio.new_event_loop()
+    try:
+        return fresh.run_until_complete(res)
+    finally:
+        fresh.close()
 
 
 def _call_with_timeout_pool(pool: cf.ThreadPoolExecutor, fn, args, kwargs, timeout: float):
@@ -110,8 +156,14 @@ def make_apply(
         ctx = TaskContext.get()
         worker_info = WorkerInfo(index=ctx.partitionId() if ctx else 0)
         base_kwargs: tp.Dict[str, tp.Any] = {"worker_info": worker_info}
+        loop = asyncio.new_event_loop() if (is_coro or is_async_gen) else None
         if on_start is not None:
-            resources = on_start(**filter_kwargs(on_start, base_kwargs))
+            try:
+                resources = _settle(on_start(**filter_kwargs(on_start, base_kwargs)), loop)
+            except BaseException:
+                if loop is not None:
+                    loop.close()
+                raise
             if resources:
                 base_kwargs.update(resources)
         f_kwargs = filter_kwargs(f, base_kwargs)
@@ -263,7 +315,6 @@ def make_apply(
             mask = await asyncio.gather(*[pred(i, v) for i, v in zip(idxs, vals)])
             return pdf[pd.Series(list(mask), index=pdf.index)]
 
-        loop = asyncio.new_event_loop() if (is_coro or is_async_gen) else None
         n_processed = 0  # live per-worker counter → StageStatus.processed
         try:
             for pdf in batches:
@@ -289,9 +340,7 @@ def make_apply(
                     processed=n_processed, partition=worker_info.index
                 )
                 kw = filter_kwargs(on_done, {**base_kwargs, "stage_status": status})
-                res = on_done(**kw)
-                if loop is not None and inspect.isawaitable(res):
-                    loop.run_until_complete(res)
+                _settle(on_done(**kw), loop)
             if loop is not None:
                 loop.close()
             if watchdog is not None:
@@ -347,13 +396,13 @@ def _arrow_hop(schema: T.StructType, conf: tp.Tuple[str, bool, bool]):
 def fuse(steps: tp.Sequence[tp.Tuple[tp.Callable, T.StructType]], spark):
     """One ``mapInPandas`` function for a run of ``(apply, output schema)``
     steps: each step's output reaches the next through an Arrow hop set up
-    from the session's Arrow settings."""
-    if len(steps) == 1:
-        return steps[0][0]
-    conf = arrow_conf(spark)
+    from the session's Arrow settings. The function starts with the task
+    entry step (``forget_foreign_zip_importers``)."""
+    conf = arrow_conf(spark) if len(steps) > 1 else None
     hops = [_arrow_hop(schema, conf) for _, schema in steps[:-1]]
 
     def fused(batches: tp.Iterator[pd.DataFrame]) -> tp.Iterator[pd.DataFrame]:
+        forget_foreign_zip_importers()
         for (fn, _), hop in zip(steps, hops):
             batches = hop(fn(batches))
         return steps[-1][0](batches)

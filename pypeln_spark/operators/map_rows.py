@@ -20,7 +20,7 @@ import typing as tp
 import pandas as pd
 from pyspark.sql import types as T
 
-from .. import infer
+from .. import harness as H, infer
 from ..stage import Stage, to_stage
 from ..utils import UNDEFINED, WorkerInfo, curry_stage, filter_kwargs
 
@@ -63,7 +63,7 @@ def map_rows(
             if on_start is not None:
                 # sample-inference runs on_start once driver-side (it runs
                 # once per worker in real execution anyway)
-                res = on_start(**filter_kwargs(on_start, avail))
+                res = H._settle(on_start(**filter_kwargs(on_start, avail)), None)
                 if res:
                     avail.update(res)
             kwargs = filter_kwargs(f, avail)
@@ -79,7 +79,6 @@ def map_rows(
                 "un-typable values) — pass returns='col1 type1, ...'"
             )
 
-    from .. import harness as H
     import concurrent.futures as cf
     import inspect
 
@@ -88,12 +87,13 @@ def map_rows(
     def apply(batches: tp.Iterator[pd.DataFrame]) -> tp.Iterator[pd.DataFrame]:
         from pyspark import TaskContext
 
+        H.forget_foreign_zip_importers()
         ctx = TaskContext.get()
         base_kwargs: tp.Dict[str, tp.Any] = {
             "worker_info": WorkerInfo(index=ctx.partitionId() if ctx else 0)
         }
         if on_start is not None:
-            res = on_start(**filter_kwargs(on_start, base_kwargs))
+            res = H._settle(on_start(**filter_kwargs(on_start, base_kwargs)), None)
             if res:
                 base_kwargs.update(res)
         f_kwargs = filter_kwargs(f, base_kwargs)
@@ -133,7 +133,10 @@ def map_rows(
                     processed=n_processed,
                     partition=base_kwargs["worker_info"].index,
                 )
-                on_done(**filter_kwargs(on_done, {**base_kwargs, "stage_status": status}))
+                H._settle(
+                    on_done(**filter_kwargs(on_done, {**base_kwargs, "stage_status": status})),
+                    None,
+                )
             if pool is not None:
                 pool.shutdown(wait=False)
             if watchdog is not None:

@@ -139,6 +139,40 @@ def test_task_mode_async_fn(spark):
     assert out == [2, 4, 6, 8]
 
 
+def test_async_on_start_resources(spark):
+    """An async on_start is awaited: under an async fn on the partition's
+    own loop, under a sync fn on a loop of its own."""
+    import asyncio
+
+    async def on_start():
+        await asyncio.sleep(0)
+        return {"factor": 10, "start_loop": asyncio.get_running_loop()}
+
+    async def f(x, factor, start_loop):
+        assert asyncio.get_running_loop() is start_loop
+        return x * factor
+
+    def g(x, factor):
+        return x + factor
+
+    assert sorted(pl.task.map(f, [1, 2, 3], on_start=on_start, returns="long")) == [10, 20, 30]
+    assert sorted(pl.process.map(g, [1, 2, 3], on_start=on_start, returns="long")) == [11, 12, 13]
+
+
+def test_async_on_done_under_sync_fn_runs_once_per_partition(spark):
+    import asyncio
+
+    acc = spark.sparkContext.accumulator(0)
+
+    async def on_done():
+        await asyncio.sleep(0)
+        acc.add(1)
+
+    stage = pl.process.map(lambda x: x + 1, list(range(20)), on_done=on_done, returns="long")
+    assert sorted(stage) == list(range(1, 21))
+    assert acc.value == stage.df.rdd.getNumPartitions()
+
+
 def test_task_mode_async_concurrency_wall_clock(spark):
     import asyncio
 
@@ -235,6 +269,35 @@ def test_map_rows_with_inference_and_lifecycle(spark, sf_dir):
     out = pl.map_rows(f, nation, on_start=on_start)  # schema inferred
     rows = {r.key: r.tag for r in out.df.collect()}
     assert len(rows) == 25 and rows[0].startswith("N:")
+
+
+def test_map_rows_async_lifecycle(spark, sf_dir):
+    """map_rows awaits an async on_start (driver-side sample included) and
+    an async on_done, once per partition."""
+    import asyncio
+
+    from pypeln_spark.queries.base import load_table
+
+    nation = load_table(spark, sf_dir, "nation")
+    acc = spark.sparkContext.accumulator(0)
+
+    async def on_start():
+        await asyncio.sleep(0)
+        return {"prefix": "N:"}
+
+    async def on_done():
+        await asyncio.sleep(0)
+        acc.add(1)
+
+    def f(row, prefix):
+        return {"key": row["n_nationkey"], "tag": prefix + row["n_name"]}
+
+    inferred = pl.map_rows(f, nation, on_start=on_start)
+    assert inferred.df.schema.simpleString() == "struct<key:bigint,tag:string>"
+    out = pl.map_rows(f, nation, on_start=on_start, on_done=on_done, returns="key long, tag string")
+    rows = {r.key: r.tag for r in out.df.collect()}
+    assert len(rows) == 25 and all(t.startswith("N:") for t in rows.values())
+    assert acc.value == out.df.rdd.getNumPartitions()
 
 
 def test_map_rows_timeout_drops_row(spark, sf_dir):
