@@ -3,27 +3,32 @@
 Everything the reference's Worker/Supervisor machinery did
 (pypeln/process/worker.py:52-174, pypeln/process/supervisor.py:13-56) that
 Spark does NOT give us for free is emulated here, inside ``mapInPandas``
-iterator functions. ``make_apply`` builds one such function per operator
-application (``Iterator[pdf] -> Iterator[pdf]``), and everything below is
-per operator and per partition:
+iterator functions. One ``Partition`` runs an operator's Python function
+over one partition; ``make_apply`` (the element operators) and
+``map_rows`` (table rows) are thin batch adapters around it. Per operator
+and per partition it owns:
 
 - ``on_start`` / ``on_done`` lifecycle (reference runs them once per
   worker: pypeln/process/worker.py:78-118) — init before the first Arrow
-  batch, teardown in a ``finally`` once the operator's input is exhausted.
+  batch, teardown once the operator's input is exhausted or fails.
   Either may be async: its result is awaited on the partition's event loop,
   or on a loop of its own when the operator's function is sync.
 - dependency injection by parameter name: ``worker_info`` (→ partition id),
-  ``element_index``, ``stage_status``, plus any keys returned by ``on_start``
-  (reference: pypeln/process/worker.py:71-118).
+  ``element_index`` (None when the input carries no ``_index``),
+  ``stage_status``, plus any keys returned by ``on_start`` (reference:
+  pypeln/process/worker.py:71-118).
 - per-element ``timeout``: the slow element is dropped and the stream
   continues (reference kills+restarts the worker process,
   pypeln/process/supervisor.py:26-32; a thread/asyncio watchdog is the
   Spark-safe equivalent — killing the task would retry the whole partition).
-- execution modes: ``process``/``sync`` → plain loop (Spark already gives
-  process parallelism across partitions); ``thread`` → ThreadPoolExecutor of
-  ``workers`` threads per partition for blocking-IO fns; ``task`` → a real
-  asyncio event loop per partition with an ``asyncio.Semaphore(workers)``,
-  mirroring the reference's TaskPool (pypeln/task/worker.py:217-244).
+- how ``f`` runs, decided by ``f`` first and the namespace second: an async
+  ``f`` (coroutine or async generator) runs on an asyncio event loop per
+  partition with an ``asyncio.Semaphore(workers)``, under any namespace,
+  mirroring the reference's TaskPool (pypeln/task/worker.py:217-244); a
+  sync ``f`` runs a plain loop (Spark already gives process parallelism
+  across partitions), under ``pl.task`` too; ``thread`` adds a
+  ThreadPoolExecutor of ``workers`` threads per partition for
+  blocking-IO functions.
 
 **Fusion.** A run of consecutive general-path operators is ONE
 ``mapInPandas``: ``fuse`` chains their functions so every element makes
@@ -112,26 +117,130 @@ def _settle(res, loop: tp.Optional[asyncio.AbstractEventLoop]):
         fresh.close()
 
 
-def _call_with_timeout_pool(pool: cf.ThreadPoolExecutor, fn, args, kwargs, timeout: float):
-    """Run fn in a watchdog thread; TimeoutError → sentinel _DROPPED.
-
-    The abandoned thread keeps running (Python can't kill threads) but is a
-    daemon and its result is discarded — same observable semantics as the
-    reference's worker restart: the element disappears, the pipeline lives
-    (pypeln/process/api/map_process_test.py:63-76).
-    """
-    fut = pool.submit(fn, *args, **kwargs)
-    try:
-        return fut.result(timeout=timeout)
-    except cf.TimeoutError:
-        return _DROPPED
-
-
 class _Dropped:
     pass
 
 
 _DROPPED = _Dropped()
+
+
+class Partition:
+    """One operator's Python function over one partition — the reference's
+    ``Worker`` (pypeln/process/worker.py:52-174), shared by every operator
+    that runs a Python function per element (``make_apply``, ``map_rows``).
+
+    Entering it settles ``on_start`` and sets up the function's kwargs, its
+    event loop (an async ``f``) or thread pool (``thread`` mode) and its
+    timeout watchdog (a sync ``f``); leaving it runs ``on_done`` with the
+    partition's ``StageStatus`` and frees them. ``run`` applies ``f`` to a
+    batch of values in order; a timed-out element's result is ``_DROPPED``,
+    an async generator's is the list of what it yields.
+
+    A closure that is pickled by value (an ``apply`` built by
+    ``make_apply``) carries its own copy of ``_DROPPED``, so callers test a
+    result with ``isinstance(res, _Dropped)``.
+    """
+
+    def __init__(self, f, *, mode, workers, timeout, on_start, on_done=None):
+        self.f, self.workers, self.timeout = f, max(workers, 1), timeout
+        self.mode, self.on_start, self.on_done = mode, on_start, on_done
+        self.is_async = asyncio.iscoroutinefunction(f) or inspect.isasyncgenfunction(f)
+
+    def __enter__(self) -> "Partition":
+        ctx = TaskContext.get()
+        self.info = WorkerInfo(index=ctx.partitionId() if ctx else 0)
+        self.kwargs: tp.Dict[str, tp.Any] = {"worker_info": self.info}
+        self.loop = asyncio.new_event_loop() if self.is_async else None
+        if self.on_start is not None:
+            try:
+                kw = filter_kwargs(self.on_start, self.kwargs)
+                self.kwargs.update(_settle(self.on_start(**kw), self.loop) or {})
+            except BaseException:
+                if self.loop is not None:
+                    self.loop.close()
+                raise
+        self.f_kwargs = filter_kwargs(self.f, {**self.kwargs, "element_index": None})
+        self.wants_index = "element_index" in self.f_kwargs
+        self.watchdog = (
+            cf.ThreadPoolExecutor(max_workers=max(self.workers, 4), thread_name_prefix="pypeln-watchdog")
+            if self.timeout and not self.is_async
+            else None
+        )
+        self.pool = (
+            cf.ThreadPoolExecutor(max_workers=self.workers, thread_name_prefix="pypeln-thread")
+            if self.mode == "thread" and not self.is_async
+            else None
+        )
+        self.processed = 0  # live per-worker counter → StageStatus.processed
+        return self
+
+    def __exit__(self, *exc) -> None:
+        try:
+            if self.on_done is not None:
+                status = StageStatus(processed=self.processed, partition=self.info.index)
+                kw = filter_kwargs(self.on_done, {**self.kwargs, "stage_status": status})
+                _settle(self.on_done(**kw), self.loop)
+        finally:
+            if self.loop is not None:
+                self.loop.close()
+            for pool in (self.watchdog, self.pool):
+                if pool is not None:
+                    pool.shutdown(wait=False)
+
+    def run(self, values: tp.List[tp.Any], idxs: tp.Optional[tp.List[tp.Any]] = None) -> tp.List[tp.Any]:
+        """``f`` over ``values``; ``idxs`` (the elements' ``_index``s, None
+        each or all when the input has none) feeds ``element_index``."""
+        self.processed += len(values)
+        idxs = idxs or [None] * len(values)
+        if self.loop is not None:
+            return self.loop.run_until_complete(self._gather(values, idxs))
+        if self.pool is not None:
+            return list(self.pool.map(self._call, values, idxs))
+        return [self._call(x, idx) for x, idx in zip(values, idxs)]
+
+    def _kw(self, idx) -> tp.Dict[str, tp.Any]:
+        if not self.wants_index:
+            return self.f_kwargs
+        return {**self.f_kwargs, "element_index": tuple(idx) if idx is not None else None}
+
+    def _call(self, x, idx):
+        """A sync ``f`` on one element. Under a timeout it runs in a
+        watchdog thread; an abandoned thread keeps running (Python can't
+        kill threads) but its result is discarded — the reference's worker
+        restart, observably: the element disappears, the pipeline lives
+        (pypeln/process/api/map_process_test.py:63-76)."""
+        if self.watchdog is None:
+            return self.f(x, **self._kw(idx))
+        fut = self.watchdog.submit(self.f, x, **self._kw(idx))
+        try:
+            return fut.result(timeout=self.timeout)
+        except cf.TimeoutError:
+            return _DROPPED
+
+    async def _gather(self, values, idxs):
+        """An async ``f`` over a batch, at most ``workers`` elements at a
+        time (the reference's TaskPool, pypeln/task/worker.py:217-244)."""
+        sem = asyncio.Semaphore(self.workers)
+
+        async def consume(gen):
+            return [y async for y in gen]
+
+        async def one(x, idx):
+            async with sem:
+                res = self.f(x, **self._kw(idx))
+                if inspect.isasyncgen(res):
+                    # the whole generator is one element's work → one budget
+                    res = consume(res)
+                elif not inspect.isawaitable(res):
+                    return res
+                if not self.timeout:
+                    return await res
+                try:
+                    return await asyncio.wait_for(res, self.timeout)
+                except asyncio.TimeoutError:
+                    return _DROPPED
+
+        return await asyncio.gather(*[one(x, idx) for x, idx in zip(values, idxs)])
 
 
 def make_apply(
@@ -147,206 +256,43 @@ def make_apply(
     out_pickled: bool = False,
     has_index: bool = False,
 ):
-    """Build the ``mapInPandas`` function for one operator application."""
-
-    is_coro = asyncio.iscoroutinefunction(f)
-    is_async_gen = inspect.isasyncgenfunction(f)
+    """Build the ``mapInPandas`` function for one operator application:
+    each batch's values go through the partition's ``Partition.run``, and
+    ``kind`` turns the results into rows — ``filter`` masks the input rows,
+    ``map`` emits one row per result, ``flat_map`` one per yielded child
+    (index ``idx + [j]``), ``each`` none."""
 
     def apply(batches: tp.Iterator[pd.DataFrame]) -> tp.Iterator[pd.DataFrame]:
-        ctx = TaskContext.get()
-        worker_info = WorkerInfo(index=ctx.partitionId() if ctx else 0)
-        base_kwargs: tp.Dict[str, tp.Any] = {"worker_info": worker_info}
-        loop = asyncio.new_event_loop() if (is_coro or is_async_gen) else None
-        if on_start is not None:
-            try:
-                resources = _settle(on_start(**filter_kwargs(on_start, base_kwargs)), loop)
-            except BaseException:
-                if loop is not None:
-                    loop.close()
-                raise
-            if resources:
-                base_kwargs.update(resources)
-        f_kwargs = filter_kwargs(f, base_kwargs)
-        wants_index = "element_index" in (inspect.signature(f).parameters if callable(f) else {})
-
-        watchdog = (
-            cf.ThreadPoolExecutor(max_workers=max(workers, 4), thread_name_prefix="pypeln-watchdog")
-            if timeout and not (is_coro or is_async_gen)
-            else None
-        )
-        io_pool = (
-            cf.ThreadPoolExecutor(max_workers=max(workers, 1), thread_name_prefix="pypeln-thread")
-            if mode == "thread" and not (is_coro or is_async_gen)
-            else None
-        )
-
-        def decode(v):
-            return infer.loads(v) if in_pickled else v
-
-        def encode(v):
-            return infer.dumps(v) if out_pickled else v
-
-        def call_one(x, idx):
-            kw = dict(f_kwargs)
-            if wants_index:
-                kw["element_index"] = tuple(idx) if idx is not None else None
-            if watchdog is not None:
-                return _call_with_timeout_pool(watchdog, f, (x,), kw, timeout)
-            return f(x, **kw)
-
-        def emit(rows: tp.List[tp.Tuple[tp.Optional[list], tp.Any]]) -> pd.DataFrame:
-            data: tp.Dict[str, tp.Any] = {}
-            if has_index:
-                data[INDEX_COL] = [r[0] for r in rows]
-            data[VALUE_COL] = pd.Series([r[1] for r in rows], dtype="object")
-            return pd.DataFrame(data)
-
-        def process_batch_sync(pdf: pd.DataFrame) -> tp.List[tp.Tuple[tp.Optional[list], tp.Any]]:
-            out: tp.List[tp.Tuple[tp.Optional[list], tp.Any]] = []
-            idxs = pdf[INDEX_COL].tolist() if has_index else [None] * len(pdf)
-            vals = pdf[VALUE_COL].tolist()
-
-            def run_elem(pair):
-                idx, raw = pair
-                x = decode(raw)
-                res = call_one(x, idx)
-                return idx, res
-
-            if io_pool is not None:
-                results = list(io_pool.map(run_elem, zip(idxs, vals)))
-            else:
-                results = [run_elem(p) for p in zip(idxs, vals)]
-
-            for idx, res in results:
-                if isinstance(res, _Dropped):
-                    continue
-                ilist = list(idx) if idx is not None else None
-                if kind == "map":
-                    out.append((ilist, encode(res)))
-                elif kind == "flat_map":
-                    for j, y in enumerate(res):
-                        child = (ilist + [j]) if ilist is not None else None
-                        out.append((child, encode(y)))
-                # each: emit nothing
-            return out
-
-        def process_batch_filter(pdf: pd.DataFrame) -> pd.DataFrame:
-            # filter keeps original rows — evaluate predicate, boolean-mask
-            idxs = pdf[INDEX_COL].tolist() if has_index else [None] * len(pdf)
-            vals = pdf[VALUE_COL].tolist()
-
-            def pred(pair):
-                idx, raw = pair
-                res = call_one(decode(raw), idx)
-                return bool(res) and not isinstance(res, _Dropped)
-
-            if io_pool is not None:
-                mask = list(io_pool.map(pred, zip(idxs, vals)))
-            else:
-                mask = [pred(p) for p in zip(idxs, vals)]
-            return pdf[pd.Series(mask, index=pdf.index)]
-
-        async def process_batch_async(pdf: pd.DataFrame):
-            sem = asyncio.Semaphore(max(workers, 1))
-            idxs = pdf[INDEX_COL].tolist() if has_index else [None] * len(pdf)
-            vals = pdf[VALUE_COL].tolist()
-
-            async def run_elem(idx, raw):
-                x = decode(raw)
-                kw = dict(f_kwargs)
-                if wants_index:
-                    kw["element_index"] = tuple(idx) if idx is not None else None
-                async with sem:
-                    try:
-                        if is_async_gen:
-                            # the whole generator consumption is one element's
-                            # work → one timeout budget, like the sync watchdog
-                            async def _consume():
-                                return [y async for y in f(x, **kw)]
-
-                            if timeout:
-                                return idx, await asyncio.wait_for(_consume(), timeout)
-                            return idx, await _consume()
-                        coro = f(x, **kw)
-                        if not inspect.isawaitable(coro):
-                            return idx, coro
-                        if timeout:
-                            return idx, await asyncio.wait_for(coro, timeout)
-                        return idx, await coro
-                    except asyncio.TimeoutError:
-                        return idx, _DROPPED
-
-            results = await asyncio.gather(*[run_elem(i, v) for i, v in zip(idxs, vals)])
-            out = []
-            for idx, res in results:
-                if isinstance(res, _Dropped):
-                    continue
-                ilist = list(idx) if idx is not None else None
-                if kind == "map":
-                    out.append((ilist, encode(res)))
-                elif kind == "flat_map":
-                    for j, y in enumerate(res):
-                        out.append(((ilist + [j]) if ilist is not None else None, encode(y)))
-            return out
-
-        async def process_batch_async_filter(pdf: pd.DataFrame):
-            sem = asyncio.Semaphore(max(workers, 1))
-            idxs = pdf[INDEX_COL].tolist() if has_index else [None] * len(pdf)
-            vals = pdf[VALUE_COL].tolist()
-
-            async def pred(idx, raw):
-                kw = dict(f_kwargs)
-                if wants_index:
-                    kw["element_index"] = tuple(idx) if idx is not None else None
-                async with sem:
-                    try:
-                        res = f(decode(raw), **kw)
-                        if inspect.isawaitable(res):
-                            if timeout:
-                                res = await asyncio.wait_for(res, timeout)
-                            else:
-                                res = await res
-                        return bool(res)
-                    except asyncio.TimeoutError:
-                        # timed-out element is dropped — same as the sync
-                        # watchdog's _DROPPED semantics
-                        return False
-
-            mask = await asyncio.gather(*[pred(i, v) for i, v in zip(idxs, vals)])
-            return pdf[pd.Series(list(mask), index=pdf.index)]
-
-        n_processed = 0  # live per-worker counter → StageStatus.processed
-        try:
+        with Partition(
+            f, mode=mode, workers=workers, timeout=timeout, on_start=on_start, on_done=on_done
+        ) as part:
             for pdf in batches:
                 if len(pdf) == 0:
                     continue
-                n_processed += len(pdf)
-                if loop is not None:
-                    if kind == "filter":
-                        yield loop.run_until_complete(process_batch_async_filter(pdf))
+                values = pdf[VALUE_COL].tolist()
+                if in_pickled:
+                    values = [infer.loads(v) for v in values]
+                idxs = pdf[INDEX_COL].tolist() if has_index else [None] * len(pdf)
+                results = part.run(values, idxs)
+                if kind == "filter":
+                    mask = [bool(r) and not isinstance(r, _Dropped) for r in results]
+                    yield pdf[pd.Series(mask, index=pdf.index)]
+                if kind not in ("map", "flat_map"):
+                    continue  # each: f ran for its effects
+                rows: tp.List[tp.Tuple[tp.Optional[list], tp.Any]] = []
+                for idx, res in zip(idxs, results):
+                    if isinstance(res, _Dropped):
+                        continue
+                    idx = list(idx) if idx is not None else None
+                    if kind == "map":
+                        rows.append((idx, res))
                     else:
-                        rows = loop.run_until_complete(process_batch_async(pdf))
-                        if rows:
-                            yield emit(rows)
-                elif kind == "filter":
-                    yield process_batch_filter(pdf)
-                else:
-                    rows = process_batch_sync(pdf)
-                    if rows:
-                        yield emit(rows)
-        finally:
-            if on_done is not None:
-                status = StageStatus(
-                    processed=n_processed, partition=worker_info.index
-                )
-                kw = filter_kwargs(on_done, {**base_kwargs, "stage_status": status})
-                _settle(on_done(**kw), loop)
-            if loop is not None:
-                loop.close()
-            if watchdog is not None:
-                watchdog.shutdown(wait=False)
-            if io_pool is not None:
-                io_pool.shutdown(wait=False)
+                        rows += [(idx + [j] if idx is not None else None, y) for j, y in enumerate(res)]
+                if rows:
+                    data: tp.Dict[str, tp.Any] = {INDEX_COL: [r[0] for r in rows]} if has_index else {}
+                    vals = [infer.dumps(r[1]) if out_pickled else r[1] for r in rows]
+                    data[VALUE_COL] = pd.Series(vals, dtype="object")
+                    yield pd.DataFrame(data)
 
     return apply
 

@@ -9,12 +9,17 @@ partition (SURVEY.md §1.3):
   multi-process pool.
 - ``thread``: a ThreadPoolExecutor of ``workers`` threads per partition, for
   blocking-IO callables.
-- ``task``: an asyncio loop per partition with Semaphore(workers) — async
-  callables and 1000-way IO concurrency (the reference's TaskPool,
-  pypeln/task/worker.py:217-244).
-- ``sync``: everything coalesced to one partition — deterministic, the golden
-  oracle, exactly the role pl.sync plays in the reference's own tests
-  (pypeln/sync/stage.py:36-47).
+- ``task``: the namespace for async callables and 1000-way IO concurrency:
+  an asyncio loop per partition with Semaphore(workers) (the reference's
+  TaskPool, pypeln/task/worker.py:217-244). A sync callable runs the plain
+  loop here.
+- ``sync``: ``pl.sync.to_stage`` coalesces its input to one partition —
+  deterministic, the golden oracle, the role pl.sync plays in the
+  reference's own tests (pypeln/sync/stage.py:36-47). The operators do not:
+  ``pl.sync.map(f, data)`` runs like ``pl.process.map(f, data)``.
+
+Whatever the namespace, an async callable runs on the partition's event
+loop (``harness.Partition``).
 """
 
 from __future__ import annotations

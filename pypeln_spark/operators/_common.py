@@ -173,18 +173,25 @@ def harness_stage(
     return fuse(stage, fn, out_type)
 
 
-def decode_pickled(stage):
-    """Pickled Stage → typed Stage (sample-infer the element type)."""
-    out_type = infer.infer_common_type(sample_values(stage, 20))
-    if out_type is None:
-        return stage  # nothing better available
+def recode(stage: Stage, code: tp.Callable, out_type: tp.Optional[T.DataType]) -> Stage:
+    """``stage`` with every value mapped through ``code`` (``infer.loads``
+    or ``infer.dumps``), declared as ``out_type`` and fused onto the
+    stage's run of harness functions."""
 
     def conv(batches):
         for pdf in batches:
             if len(pdf) == 0:
                 continue
             pdf = pdf.copy()
-            pdf[VALUE_COL] = pdf[VALUE_COL].map(infer.loads)
+            pdf[VALUE_COL] = pdf[VALUE_COL].map(code)
             yield pdf
 
     return fuse(stage, conv, out_type)
+
+
+def decode_pickled(stage):
+    """Pickled Stage → typed Stage (sample-infer the element type)."""
+    out_type = infer.infer_common_type(sample_values(stage, 20))
+    if out_type is None:
+        return stage  # nothing better available
+    return recode(stage, infer.loads, out_type)

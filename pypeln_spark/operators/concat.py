@@ -51,13 +51,4 @@ def _pickle_stage(stage: Stage) -> Stage:
     concat); fused onto the stage's run of harness functions."""
     if stage.pickled:
         return stage
-
-    def conv(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            pdf = pdf.copy()
-            pdf[VALUE_COL] = pdf[VALUE_COL].map(infer.dumps)
-            yield pdf
-
-    return _common.fuse(stage, conv, None)
+    return _common.recode(stage, infer.dumps, None)

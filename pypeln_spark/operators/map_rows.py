@@ -3,14 +3,17 @@
 The reference flows arbitrary objects, so its ``map`` covers this case
 implicitly; on the Spark side scalar pipelines use ``map`` while table
 pipelines get this operator: ``f`` receives each row as a plain dict and
-returns a dict (new/changed keys allowed). Same harness contract as map —
-on_start/on_done, worker_info/element_index DI, per-element timeout, and
-the thread/task execution modes all apply.
+returns a dict (new/changed keys allowed), or None to drop the row. It runs
+in the same per-partition worker as ``map`` (``harness.Partition``):
+on_start/on_done, ``worker_info`` DI, per-element timeout (a timed-out row
+is dropped), the thread mode and async functions all apply. Table rows
+carry no ``_index``, so an ``element_index`` parameter receives None.
 
 Lowering: Arrow-batched ``mapInPandas``; rows are converted to dicts
 per-batch (records orientation). Output schema: ``returns`` (DDL string or
 StructType) if given, else sample-inferred by running ``f`` on up to 10
-driver-side rows.
+driver-side rows through the same worker (``on_start`` included, no
+``on_done``).
 """
 
 from __future__ import annotations
@@ -22,7 +25,7 @@ from pyspark.sql import types as T
 
 from .. import harness as H, infer
 from ..stage import Stage, to_stage
-from ..utils import UNDEFINED, WorkerInfo, curry_stage, filter_kwargs
+from ..utils import UNDEFINED, curry_stage
 
 
 def _infer_row_schema(samples: tp.List[dict]) -> tp.Optional[T.StructType]:
@@ -38,6 +41,12 @@ def _infer_row_schema(samples: tp.List[dict]) -> tp.Optional[T.StructType]:
     return T.StructType(fields)
 
 
+def _rows(results: tp.List[tp.Any]) -> tp.List[dict]:
+    """The results a ``Partition`` run produced, without the rows ``f``
+    dropped (None) or that timed out."""
+    return [r for r in results if r is not None and not isinstance(r, H._Dropped)]
+
+
 @curry_stage
 def map_rows(
     f: tp.Callable[[dict], dict],
@@ -51,6 +60,7 @@ def map_rows(
 ) -> Stage:
     stage = to_stage(stage)
     df = stage.df
+    worker = dict(mode=mode, workers=workers, timeout=timeout, on_start=on_start)
 
     if isinstance(returns, str):
         out_schema = T._parse_datatype_string(returns)
@@ -58,16 +68,9 @@ def map_rows(
         out_schema = returns
     else:
         rows = [r.asDict() for r in df.take(10)]
-        avail: tp.Dict[str, tp.Any] = {"worker_info": WorkerInfo(0)}
         try:
-            if on_start is not None:
-                # sample-inference runs on_start once driver-side (it runs
-                # once per worker in real execution anyway)
-                res = H._settle(on_start(**filter_kwargs(on_start, avail)), None)
-                if res:
-                    avail.update(res)
-            kwargs = filter_kwargs(f, avail)
-            out_schema = _infer_row_schema([f(dict(r), **kwargs) for r in rows])
+            with H.Partition(f, **worker) as part:
+                out_schema = _infer_row_schema(_rows(part.run(rows)))
         except Exception as exc:
             raise ValueError(
                 "map_rows could not sample-infer the output schema "
@@ -79,67 +82,16 @@ def map_rows(
                 "un-typable values) — pass returns='col1 type1, ...'"
             )
 
-    import concurrent.futures as cf
-    import inspect
-
     out_cols = [fld.name for fld in out_schema.fields]
 
     def apply(batches: tp.Iterator[pd.DataFrame]) -> tp.Iterator[pd.DataFrame]:
-        from pyspark import TaskContext
-
-        H.forget_foreign_zip_importers()
-        ctx = TaskContext.get()
-        base_kwargs: tp.Dict[str, tp.Any] = {
-            "worker_info": WorkerInfo(index=ctx.partitionId() if ctx else 0)
-        }
-        if on_start is not None:
-            res = H._settle(on_start(**filter_kwargs(on_start, base_kwargs)), None)
-            if res:
-                base_kwargs.update(res)
-        f_kwargs = filter_kwargs(f, base_kwargs)
-        pool = (
-            cf.ThreadPoolExecutor(max_workers=max(workers, 1))
-            if mode == "thread"
-            else None
-        )
-        watchdog = (
-            cf.ThreadPoolExecutor(max_workers=max(workers, 4)) if timeout else None
-        )
-
-        def call(rec):
-            if watchdog is not None:
-                out = H._call_with_timeout_pool(watchdog, f, (rec,), f_kwargs, timeout)
-                return None if isinstance(out, H._Dropped) else out
-            return f(rec, **f_kwargs)
-
-        n_processed = 0  # live per-worker counter → StageStatus.processed
-        try:
+        with H.Partition(f, on_done=on_done, **worker) as part:
             for pdf in batches:
                 if len(pdf) == 0:
                     continue
-                n_processed += len(pdf)
-                recs = pdf.to_dict("records")
-                outs = list(pool.map(call, recs)) if pool else [call(r) for r in recs]
-                outs = [o for o in outs if o is not None]
+                outs = _rows(part.run(pdf.to_dict("records")))
                 if outs:
-                    yield pd.DataFrame(
-                        {c: [o.get(c) for o in outs] for c in out_cols}
-                    )
-        finally:
-            if on_done is not None:
-                from ..utils import StageStatus
+                    yield pd.DataFrame({c: [o.get(c) for o in outs] for c in out_cols})
 
-                status = StageStatus(
-                    processed=n_processed,
-                    partition=base_kwargs["worker_info"].index,
-                )
-                H._settle(
-                    on_done(**filter_kwargs(on_done, {**base_kwargs, "stage_status": status})),
-                    None,
-                )
-            if pool is not None:
-                pool.shutdown(wait=False)
-            if watchdog is not None:
-                watchdog.shutdown(wait=False)
-
-    return Stage(df.mapInPandas(apply, schema=out_schema), scalar=False)
+    fn = H.fuse([(apply, out_schema)], df.sparkSession)
+    return Stage(df.mapInPandas(fn, schema=out_schema), scalar=False)

@@ -106,14 +106,40 @@ def test_element_index_injection(spark):
     assert out == [[0], [1], [2]]
 
 
-def test_timeout_drops_slow_element(spark):
+def _slow_at(n, result=lambda x: x):
     def f(x):
-        if x == 2:
+        if x == n:
             time.sleep(5)
-        return x
+        return result(x)
 
-    out = sorted(pl.map(f, list(range(10)), timeout=1.0, returns="long"))
-    assert out == [0, 1, 3, 4, 5, 6, 7, 8, 9]
+    return f
+
+
+@pytest.mark.parametrize(
+    "op, f, data, timeout, kw, expected",
+    [
+        (pl.map, _slow_at(2), range(10), 1.0, {"returns": "long"}, [0, 1, 3, 4, 5, 6, 7, 8, 9]),
+        (pl.process.map, _slow_at(3), range(6), 0.5, {"returns": "long"}, [0, 1, 2, 4, 5]),
+        (pl.thread.map, _slow_at(3), range(6), 0.5, {"returns": "long", "workers": 4}, [0, 1, 2, 4, 5]),
+        (pl.thread.filter, _slow_at(3, lambda x: True), range(6), 0.5, {"workers": 4}, [0, 1, 2, 4, 5]),
+        (
+            pl.process.flat_map,
+            _slow_at(3, lambda x: [x, x + 100]),
+            range(6),
+            0.5,
+            {"returns": "long"},
+            [0, 1, 2, 4, 5, 100, 101, 102, 104, 105],
+        ),
+        (pl.task.map, _slow_at(3), range(6), 0.5, {"returns": "long"}, [0, 1, 2, 4, 5]),
+    ],
+    ids=["map", "process.map", "thread.map", "thread.filter", "process.flat_map", "task.map"],
+)
+def test_timeout_drops_slow_element(spark, op, f, data, timeout, kw, expected):
+    """A sync function's slow element is dropped by the watchdog under every
+    namespace and operator kind; ``pl.task`` runs a sync function on the
+    plain loop."""
+    out = sorted(op(f, list(data), timeout=timeout, **kw))
+    assert out == expected
 
 
 def test_error_propagates_with_type(spark):
@@ -316,6 +342,39 @@ def test_map_rows_timeout_drops_row(spark, sf_dir):
     out = pl.map_rows(f, nation, timeout=1.0, returns="key long")
     keys = {r.key for r in out.df.collect()}
     assert 3 not in keys and len(keys) == 24
+
+
+def test_map_rows_task_mode_async_fn(spark, sf_dir):
+    """An async row function runs on the partition's event loop, and the
+    driver-side sample awaits it too when the schema is inferred."""
+    import asyncio
+
+    from pypeln_spark.queries.base import load_table
+
+    nation = load_table(spark, sf_dir, "nation")
+
+    async def f(row):
+        await asyncio.sleep(0)
+        return {"key": row["n_nationkey"], "name": row["n_name"]}
+
+    for returns in ("key long, name string", None):
+        out = pl.task.map_rows(f, nation, workers=4, returns=returns)
+        assert out.df.schema.simpleString() == "struct<key:bigint,name:string>"
+        rows = {r.key: r.name for r in out.df.collect()}
+        assert len(rows) == 25 and all(isinstance(n, str) for n in rows.values())
+
+
+def test_map_rows_element_index_is_none(spark):
+    """Table rows carry no ``_index``: an ``element_index`` parameter gets
+    None, as it does for an index-less element stage."""
+    df = spark.createDataFrame([(i,) for i in range(5)], "v long").repartition(2)
+
+    def f(row, element_index):
+        return {"v": row["v"], "indexed": element_index is not None}
+
+    for returns in ("v long, indexed boolean", None):
+        out = pl.map_rows(f, pl.to_stage(df), returns=returns)
+        assert sorted((r.v, r.indexed) for r in out.df.collect()) == [(i, False) for i in range(5)]
 
 
 def test_shared_counter_and_broadcast(spark):
