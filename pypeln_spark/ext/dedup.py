@@ -26,10 +26,9 @@ reproducible cross-engine; the DuckDB oracles replay the identical pipeline.
 
 from __future__ import annotations
 
-import os
 import typing as tp
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, Window, functions as F
 
 from .hashing import MINHASH_PARAMS, P31, fast_h31, h31, shingles
 
@@ -432,8 +431,6 @@ def lsh_candidate_pairs(
             .select("id_a", "id_b")
             .distinct()
         )
-    from pyspark.sql import Window
-
     # Bucket identity is the exact (sigh, sig) pair the uncapped join
     # checks; one shuffle serves both window functions. row_number over
     # min-id order makes rank 1 the representative, so star pairs keep
@@ -640,8 +637,6 @@ def build_corpus_index(
         id_col, bands, n_hashes // bands,
     )
     if bucket_cap is not None:
-        from pyspark.sql import Window
-
         w = Window.partitionBy("sigh", "sig").orderBy(F.col(id_col))
         cor_bands = (
             cor_bands.withColumn("_rnk", F.row_number().over(w))
@@ -905,8 +900,6 @@ class IncrementalLshIndex:
         probe."""
         if self.bucket_cap is None:
             return bands
-        from pyspark.sql import Window
-
         idc = bands.columns[0]
         key = [c for c in bands.columns if c != idc]
         # the first-column-is-id convention is validated, not trusted: a
@@ -1210,27 +1203,180 @@ class IncrementalLshIndex:
         self._cut = []
 
 
-class TextIngestGate:
-    """foreachBatch body of the streaming TEXT ingest gate — the per-epoch
-    pipeline queries/streaming.streaming_incremental_dedup runs (shingle +
-    minhash-band the arriving batch, band-join against the growing corpus
-    LSH index, exact-Jaccard verify, emit one keep/drop decision per doc,
-    absorb novel docs), factored into an engine operator symmetric with
-    similarity.EmbeddingIngestGate so depth experiments (SCALING.md
-    "Compaction knee at depth") drive the IDENTICAL per-epoch code at
-    arbitrary epoch counts instead of re-implementing the gate.
+class IngestGate:
+    """The foreachBatch body every streaming ingest gate runs, one epoch
+    per call: prepare the arriving batch, probe and verify it against the
+    index, pick one survivor per duplicate, append one decision row per
+    arriving row to ``sink_root``, and absorb the novel rows into the
+    index before the next epoch. Subclasses plug in only their pieces:
 
-    No occupancy trigger here, deliberately: MinHash band keys are
-    (band, signature-value) pairs whose cardinality GROWS with the data —
-    unlike the embedding gate's fixed 2^n_planes bucket space — so the
-    text index has no saturation knob to self-manage. On an unbounded
-    stream the index keeps its plan bounded by merging every absorb into
-    one level leaf (IncrementalLshIndex docstring).
+    - ``_prepare(batch)``: the persisted per-row frame (id plus signature);
+    - ``_matches(new, n_new)``: verified (new_id, corpus_id, <score>) pairs,
+      where ``n_new`` is the batch row count or None when unpaid;
+    - ``score``: the score column's name;
+    - ``_dedup_key()``: the exact-identity Column of absorb_dedup;
+    - ``_absorb(novel, dropped)``: hand the novel rows to the index;
+    - ``_after_absorb() -> widened``: an optional growth step;
+    - ``_extra_stats()``: gate-specific ``stats`` keys.
+
+    The survivor is the min corpus id (struct-min: corpus_id leads, so the
+    attached score is that pair's). ``pick`` is pool-persisted because the
+    decisions write and the absorb set's anti-join both read it; unpersisted,
+    the probe + verify join (the epoch's dominant compute) re-ran per
+    consumer (measured 3x per epoch at sf0.1). The batch count is paid only
+    under ``collect_stats`` or when the gate's verify guard asks for it.
+
+    Absorb: novel rows join the index with a lineage cut (every absorb
+    merges into a materialized level leaf, IncrementalLshIndex docstring);
+    the absorb set derives from this epoch's decisions against the current
+    index, so an uncut plan would nest every earlier epoch's plan.
+
+    ``absorb_dedup``: gates never compare a batch's rows against each
+    other, so an identical-row flood (a mirror burst arriving in one
+    micro-batch) would absorb in full and widen every later epoch's
+    candidate join. With the flag on, the absorb set keeps only the min-id
+    row per ``_dedup_key()`` (the exact identity, never a hash), which is
+    the future survivor pick's target, so later decisions are bit-identical
+    to storing every copy; distinct near-duplicates in one batch still
+    both absorb. The decisions then carry ``absorbed``: TRUE exactly for
+    the rows the index stored. The flag shapes the sink schema, so it is
+    fixed per ``sink_root`` (``validate_sink_schema`` checks the first
+    write).
+
+    ``collect_stats`` appends one dict per epoch to ``stats``: ``epoch``
+    (the processed-batch ordinal), ``n_new``, ``n_batch_dup`` (rows minus
+    distinct dedup keys: the within-batch flood mass, invisible in dup_of
+    because gates never compare a batch against itself; a sustained
+    non-zero reading on a gate running ``absorb_dedup=False`` is the
+    signal to turn it on), ``widened`` and the gate's extra keys.
 
     ``epoch_col`` (no-arg callable returning a Column) labels each
-    decision's epoch; default is the gate's own epoch counter. Decisions
-    append to ``sink_root`` FROM THE EXECUTORS — shared-FS on clusters
+    decision's epoch; the default is the harness's ``epoch_id``, not the
+    processed-batch ordinal, which skips empty micro-batches. Decisions
+    append FROM THE EXECUTORS: on a cluster ``sink_root`` must be shared-FS
     (stream_sink_dir)."""
+
+    score = "jaccard"
+
+    def __init__(self, index, sink_root, id_col, epoch_col, absorb_dedup,
+                 collect_stats):
+        self.index = index
+        self.sink_root = sink_root
+        self.id_col = id_col
+        self.epoch_col = epoch_col
+        self.absorb_dedup = absorb_dedup
+        self.collect_stats = collect_stats
+        self.stats: list = []
+        self._epoch = 0
+        self._sink_checked = False
+
+    def _after_absorb(self) -> bool:
+        return False
+
+    def _extra_stats(self) -> dict:
+        return {}
+
+    def __call__(self, batch_df: DataFrame, epoch_id: int) -> None:
+        if batch_df.isEmpty():
+            return
+        retire_pipeline_caches()
+        idc = self.id_col
+        new = pool_persist(self._prepare(batch_df))
+        key = self._dedup_key()
+        n_new = new.count() if self.collect_stats else None
+        if self.collect_stats:
+            n_batch_dup = n_new - new.select(key).distinct().count()
+        pick = pool_persist(self._matches(new, n_new).groupBy("new_id").agg(
+            F.min(F.struct("corpus_id", self.score)).alias("m")
+        ))
+        epoch = (
+            self.epoch_col() if self.epoch_col is not None
+            else F.lit(int(epoch_id)).cast("int")
+        )
+        dropped = pick.select(F.col("new_id").alias(idc))
+        novel = new.join(dropped, idc, "left_anti")
+        if self.absorb_dedup:
+            # the deduped set feeds the decisions write, the absorb and
+            # its band derivation: persist + eager count, or the window
+            # and the verify re-run per consumer
+            w = Window.partitionBy(key).orderBy(F.col(idc))
+            novel = pool_persist(
+                novel.withColumn("_rnk", F.row_number().over(w))
+                .filter(F.col("_rnk") == 1)
+                .drop("_rnk")
+            )
+            novel.count()
+        decisions = (
+            batch_df.select(idc)
+            .join(pick, F.col(idc) == F.col("new_id"), "left")
+            .select(
+                idc,
+                epoch.alias("epoch"),
+                F.col("m.corpus_id").alias("dup_of"),
+                F.col(f"m.{self.score}").alias(self.score),
+            )
+        )
+        if self.absorb_dedup:
+            kept = novel.select(F.col(idc).alias("_kept_id"))
+            decisions = decisions.join(
+                kept, F.col(idc) == F.col("_kept_id"), "left"
+            ).select(
+                idc, "epoch", "dup_of", self.score,
+                F.col("_kept_id").isNotNull().alias("absorbed"),
+            )
+        if not self._sink_checked:
+            validate_sink_schema(decisions, self.sink_root)
+            self._sink_checked = True
+        decisions.write.mode("append").parquet(self.sink_root)
+        self._absorb(novel, dropped)
+        widened = self._after_absorb()
+        if self.collect_stats:
+            self.stats.append({
+                "epoch": self._epoch, "n_new": n_new,
+                "n_batch_dup": n_batch_dup, "widened": widened,
+                **self._extra_stats(),
+            })
+        self._epoch += 1
+
+
+class TextIngestGate(IngestGate):
+    """The streaming TEXT ingest gate (queries/streaming.
+    streaming_incremental_dedup and its variants): shingle and MinHash-band
+    the arriving batch, band-join it against the index, verify by exact
+    Jaccard, and absorb the novel docs. The per-epoch body is IngestGate's.
+
+    Shingles and signatures run on the Catalyst path, not the numpy
+    single pass (shingle_sigs_np) that wins in the batch pipeline: inside
+    foreachBatch every epoch pays the mapInPandas worker round trip fresh,
+    and measured bit-identical it was slower here (sf0.1 13.3 → 14.3 s,
+    sf1 37.7 → 49.7 s).
+
+    The batch's band rows are pool-persisted and feed both the probe and
+    the absorb set (novel bands = batch bands minus the dropped ids), so
+    the MinHash fold runs once per epoch. Under ``absorb_dedup`` the fold
+    instead re-runs over the thinned novel set, which on a flood epoch is
+    far smaller than the batch (caching the flooded batch's bands cost
+    about +1 s on the flood row).
+
+    The absorb stays two-frame (``index.absorb``): a combined (sh_arr,
+    bands) leaf measured +15% on this gate, because the checkpointed leaf
+    is row-stored and every later band probe then deserializes the fat
+    shingle arrays. The band join + verify also keeps its shuffle shape: a
+    probe-side-broadcast variant needed two guard-count jobs per epoch and
+    measured slower (4-row subset 32.3 → 34.9 s, OPTIMIZATION_r14.md).
+
+    No occupancy trigger: MinHash band keys are (band, signature) pairs
+    whose cardinality grows with the data, so there is no fixed bucket
+    space to saturate.
+
+    ``absorb_dedup`` keys on the sorted shingle array, the canonical set:
+    equal shingle sets are indistinguishable to MinHash. Default False,
+    because the registry oracles replay store-everything. Turn it on for
+    web/crawl ingest, where mirror bursts are the norm: the window
+    shuffles the novel set's shingle arrays once per epoch (clean stream
+    sf0.1 +4.2%, sf1 +5.3%, decisions identical) and a flood epoch buys
+    that back 3x over (SCALING.md "absorb_dedup priced on a CLEAN
+    stream")."""
 
     def __init__(
         self,
@@ -1246,161 +1392,61 @@ class TextIngestGate:
         absorb_dedup: bool = False,
         collect_stats: bool = False,
     ):
-        self.index = index
-        self.sink_root = sink_root
+        super().__init__(
+            index, sink_root, id_col, epoch_col, absorb_dedup, collect_stats
+        )
         self.n_hashes = n_hashes
         self.bands = bands
         self.shingle_k = shingle_k
         self.threshold = threshold
-        self.id_col = id_col
         self.text_col = text_col
-        self.epoch_col = epoch_col
-        # collect_stats (r12): the text twin of the embedding gates'
-        # stats channel — per epoch, batch size and WITHIN-BATCH
-        # duplicate mass (rows minus distinct canonical shingle sets:
-        # the flood indicator, invisible in dup_of verdicts because
-        # gates never compare a batch against itself). One tiny agg per
-        # epoch, paid only when on; a sustained non-zero reading on a
-        # gate running absorb_dedup=False is the signal to turn the
-        # guard on (deployment rule below).
-        self.collect_stats = collect_stats
-        self.stats: list = []
-        # absorb_dedup (r11): within-batch exact dedup of the absorb set,
-        # keyed on the full shingle array — the text twin of the embedding
-        # gates' flag (EmbeddingIngestGate.absorb_dedup has the measured
-        # rationale: gates never compare a batch's rows against each
-        # other, so an identical-document flood — a mirror burst arriving
-        # in one micro-batch — absorbs in FULL and every later epoch's
-        # candidate join pays its width; the index bucket_cap bounds the
-        # symptom, this bounds the source). The flood stores its min-id
-        # copy — the future survivor pick's target — so later-epoch
-        # decisions are bit-identical to store-everything. Exact-only by
-        # construction (full sh_arr key): distinct near-dup docs both
-        # absorb. Default False — registry oracles replay store-everything.
-        # The flag SHAPES THE SINK SCHEMA (adds 'absorbed'), so it is
-        # fixed per sink_root — validate_sink_schema enforces it on the
-        # first write (ADVICE r11).
-        # DEPLOYMENT RULE (r12, measured — SCALING.md "absorb_dedup
-        # priced on a CLEAN stream + the deployment rule"): ON for
-        # web/crawl ingest, where mirror bursts are the norm. The
-        # text-side clean-stream cost is real but modest — the dedup
-        # window shuffles the novel set's SHINGLE ARRAYS once per epoch:
-        # sf0.1 +4.2%, sf1 +5.3% (quiet re-run;
-        # a first contended pair read +17%, adjudicated episode),
-        # decisions identical at both scales — and a
-        # flood epoch buys it back 3x over (SCALING.md r11). Leave it
-        # OFF only for streams known duplicate-free (e.g. already
-        # exact-deduped upstream); collect_stats' n_batch_dup column is
-        # the live exposure reading for a gate running False.
-        self.absorb_dedup = absorb_dedup
-        self._epoch = 0
-        self._sink_checked = False
 
-    def __call__(self, batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        from pypeln_spark.streaming import shuffle_width
-
-        retire_pipeline_caches()
-        # Catalyst shingle/signature path, deliberately NOT the numpy
-        # single-pass (shingle_sigs_np) that wins in the batch pipeline:
-        # measured bit-identical but SLOWER here at both sf0.1 (13.3 →
-        # 14.3s) and sf1 (37.7 → 49.7s) — inside foreachBatch every epoch
-        # pays the mapInPandas Python-worker/Arrow round trip fresh, and
-        # the epoch-sized fold volume never amortizes it the way the
-        # whole-corpus batch pipeline does
-        new_sh = pool_persist(
-            shingle_arrays(spread(batch_df), self.text_col, self.id_col, self.shingle_k)
-        )
-        # the batch count is ONLY consumed by width=auto sizing and the
-        # stats channel — when neither is on, skip the job (r14, guide §5:
-        # the persist materializes inside the decisions write instead, at
-        # identical total compute minus one job round trip per epoch)
-        from pypeln_spark.streaming import (
-            STREAM_WIDTH_AUTO, autosize_stream_width,
+    def _prepare(self, batch_df: DataFrame) -> DataFrame:
+        return shingle_arrays(
+            spread(batch_df), self.text_col, self.id_col, self.shingle_k
         )
 
-        n_new = (
-            new_sh.count()
-            if (STREAM_WIDTH_AUTO or self.collect_stats)
-            else None
-        )
-        if self.collect_stats:
-            # flood indicator: canonical (sorted) shingle-set identity —
-            # exactly the granularity absorb_dedup collapses
-            self.stats.append({
-                "epoch": self._epoch,
-                "n_new": n_new,
-                "n_batch_dup": n_new
-                - new_sh.select(F.array_sort("sh_arr")).distinct().count(),
-            })
-        if n_new is not None:
-            # width=auto: re-size this epoch's shuffle width from its row
-            # count (no-op unless PYPELN_SPARK_STREAM_PARTITIONS=auto);
-            # shuffle_width below then reads the adjusted conf
-            autosize_stream_width(batch_df.sparkSession, n_new)
-        # batch bands POOL-PERSISTED (r14, guide §1.2 per-task work): the
-        # minhash fold — the gate's heaviest per-row compute (n_hashes
-        # hash evaluations per shingle) — previously ran TWICE per epoch
-        # over near-identical row sets: once here for the probe and once
-        # in novel_bands for the absorb (novel ≈ batch on non-flood
-        # traffic). The persisted batch bands materialize inside the
-        # decisions write (the band probe reads them); the absorb set
-        # then derives its band rows by an anti-join against the cache.
-        # Under absorb_dedup the cache is NOT built: that path recomputes
-        # the fold over the window-thinned novel set (below), so caching
-        # the full flooded batch's bands would be a pure storage write
-        # (measured +~1s on the flood row, r14 probe).
-        new_bands = lsh_band_table(
-            minhash_signatures_wide(new_sh, self.id_col, self.n_hashes),
+    def _dedup_key(self):
+        return F.array_sort("sh_arr")
+
+    def _band_rows(self, sh: DataFrame) -> DataFrame:
+        return lsh_band_table(
+            minhash_signatures_wide(sh, self.id_col, self.n_hashes),
             self.id_col, self.bands, self.n_hashes // self.bands,
         )
+
+    def _matches(self, new_sh: DataFrame, n_new) -> DataFrame:
+        from pypeln_spark.streaming import shuffle_width
+
+        idc = self.id_col
+        self._new_bands = self._band_rows(new_sh)
         if not self.absorb_dedup:
-            new_bands = pool_persist(new_bands)
-        nb = new_bands.select(
-            F.col(self.id_col).alias("new_id"), "sigh", F.col("sig").alias("sig_n")
+            self._new_bands = pool_persist(self._new_bands)
+        nb = self._new_bands.select(
+            F.col(idc).alias("new_id"), "sigh", F.col("sig").alias("sig_n")
         )
         cb = self.index.bands.select(
-            F.col(self.id_col).alias("corpus_id"), "sigh", F.col("sig").alias("sig_c")
+            F.col(idc).alias("corpus_id"), "sigh", F.col("sig").alias("sig_c")
         )
+        # the verify runs at the streaming scope's shuffle width, not
+        # defaultParallelism: 32 tasks on epoch-sized inputs is launch
+        # overhead (both gates ~6% faster scope-sized, decisions unchanged)
         cand = (
             nb.join(cb, "sigh")
             .filter(F.col("sig_n") == F.col("sig_c"))
             .select("new_id", "corpus_id")
             .distinct()
+            .repartition(shuffle_width(new_sh.sparkSession), F.col("new_id"))
         )
-        # spread the verify compute across the STREAMING SCOPE's width
-        # (spark.sql.shuffle.partitions, 4 by default under
-        # _stream_partitions; PYPELN_SPARK_STREAM_PARTITIONS sizes it on
-        # real deployments) — the first cut pinned local
-        # defaultParallelism=32 here, contradicting the r7 negative
-        # result inside its own epoch: 32 tasks on epoch-sized inputs is
-        # task-launch overhead (A/B min-of-3 at sf0.1: both gates ~6%
-        # faster scope-sized; layout-only, decisions unchanged).
-        # shuffle_width guards the conf parse (ADVICE r8: managed
-        # runtimes may set the conf non-numeric, e.g. "auto").
-        # NOTE (r14, measured): a probe-side-broadcast restructure of the
-        # band join + verify (the embedding gates' one-join shape) was
-        # built, oracle-verified, and REVERTED — the two guard-count jobs
-        # it needs per epoch cost more at bench scale than the removed
-        # corpus exchanges save (4-row subset probe 32.3 → 34.9 s; the
-        # embedding gates won the same move only because their two-stage
-        # serve path already paid the counts). See OPTIMIZATION_r14.md.
-        cand = cand.repartition(
-            shuffle_width(batch_df.sparkSession), F.col("new_id")
-        )
-        a = new_sh.select(
-            F.col(self.id_col).alias("new_id"), F.col("sh_arr").alias("sh_a")
-        )
+        a = new_sh.select(F.col(idc).alias("new_id"), F.col("sh_arr").alias("sh_a"))
         b = self.index.sh.select(
-            F.col(self.id_col).alias("corpus_id"), F.col("sh_arr").alias("sh_b")
+            F.col(idc).alias("corpus_id"), F.col("sh_arr").alias("sh_b")
         )
         n_inter = F.size(F.array_intersect(F.col("sh_a"), F.col("sh_b")))
-        # shuffle_hash hints: the shingle-array sides are corpus-sized and
-        # must NEVER broadcast — the session's 64m auto-broadcast ceiling
-        # underestimates array columns badly enough that at 10× data Spark
-        # picked a broadcast here and the driver build OOM'd (r7 sweep)
-        matches = (
+        # shuffle_hash: the shingle-array sides must never broadcast; the
+        # auto-broadcast estimate undercounts array columns, and at 10x
+        # data Spark picked a broadcast here and the driver build OOM'd
+        return (
             cand.join(a.hint("shuffle_hash"), "new_id")
             .join(b.hint("shuffle_hash"), "corpus_id")
             .withColumn("n_inter", n_inter)
@@ -1413,119 +1459,13 @@ class TextIngestGate:
             )
             .filter(F.col("jaccard") >= self.threshold)
         )
-        # survivor pick: min corpus id (struct-min — corpus_id leads, so
-        # the attached jaccard is that pair's, deterministically).
-        # pool-persisted (r13 optimization round): pick is consumed by the
-        # decisions write AND by the absorb set's anti-joins (novel_sh /
-        # novel_bands), so unpersisted the band-probe + verify join — the
-        # epoch's dominant compute — re-executed once per absorb-side
-        # materialization (measured 3x per epoch at sf0.1). The frame is
-        # dup-rows-sized (≤ |batch|), the cheapest persist in the gate;
-        # the decisions write fills it.
-        pick = pool_persist(matches.groupBy("new_id").agg(
-            F.min(F.struct("corpus_id", "jaccard")).alias("m")
-        ))
-        # default label = the harness-provided epoch_id, NOT the internal
-        # processed-batch counter: the counter skips empty micro-batches,
-        # so its labels silently diverge from Spark epoch ids whenever one
-        # interleaves (ADVICE r9 #3). _epoch stays as the stats ordinal.
-        epoch = (
-            self.epoch_col() if self.epoch_col is not None
-            else F.lit(int(epoch_id)).cast("int")
-        )
-        # absorb set: novel docs join the index before the next epoch.
-        # absorb() merges them into the index's level leaf WITH a lineage
-        # cut — the set derives from this epoch's decisions against the
-        # current index, so an uncut plan would nest every earlier
-        # epoch's plan (IncrementalLshIndex docstring). The cached
-        # initial frames are never re-copied: the merge rewrites only the
-        # absorbed rows. Computed BEFORE the decision write so
-        # absorb_dedup can surface its verdict in the output.
-        dropped = pick.select(F.col("new_id").alias(self.id_col))
-        novel_sh = new_sh.join(dropped, self.id_col, "left_anti")
-        if self.absorb_dedup:
-            # one window keyed on the SORTED shingle array — the canonical
-            # set representation (engine-replayable: the oracle keys on
-            # list(sh ORDER BY sh)). Set-equality is exactly the
-            # granularity the MinHash pipeline can distinguish: equal
-            # shingle sets are jaccard-1.0 indistinguishable downstream.
-            # Cost shape: the window shuffles the NOVEL set's shingle
-            # arrays once — bounded by the micro-batch, never the corpus
-            # (measured +3.6s on a 40k-row flood epoch, bought back 3x
-            # over in every later epoch; SCALING.md r11). A hashed key
-            # would shuffle less but silently merge distinct docs on
-            # collision — exactness wins here.
-            from pyspark.sql import Window as _W
 
-            w_dd = _W.partitionBy(F.array_sort("sh_arr")).orderBy(
-                F.col(self.id_col)
-            )
-            novel_sh = (
-                novel_sh.withColumn("_rnk", F.row_number().over(w_dd))
-                .filter(F.col("_rnk") == 1)
-                .drop("_rnk")
-            )
-            # novel_sh now feeds THREE consumers (the decisions write's
-            # kept-join, absorb's sh materialization, the band semi-join)
-            # and its lineage carries the whole verify join — persist +
-            # eager count, same discipline as the pipeline's other shared
-            # stages (unpersisted, the window and verify re-run per
-            # consumer)
-            novel_sh = pool_persist(novel_sh)
-            novel_sh.count()
-        decisions = (
-            batch_df.select(self.id_col)
-            .join(pick, F.col(self.id_col) == F.col("new_id"), "left")
-            .select(
-                self.id_col,
-                epoch.alias("epoch"),
-                F.col("m.corpus_id").alias("dup_of"),
-                F.col("m.jaccard").alias("jaccard"),
-            )
-        )
+    def _absorb(self, novel: DataFrame, dropped: DataFrame) -> None:
         if self.absorb_dedup:
-            # surface the absorb verdict: TRUE only for the rows the index
-            # actually stored (novel AND the min-id rep of their shingle
-            # set) — the column the flood oracle hash-checks
-            kept = novel_sh.select(F.col(self.id_col).alias("_kept_id"))
-            decisions = decisions.join(
-                kept, F.col(self.id_col) == F.col("_kept_id"), "left"
-            ).select(
-                self.id_col, "epoch", "dup_of", "jaccard",
-                F.col("_kept_id").isNotNull().alias("absorbed"),
-            )
-        if not self._sink_checked:
-            validate_sink_schema(decisions, self.sink_root)
-            self._sink_checked = True
-        decisions.write.mode("append").parquet(self.sink_root)
-        # band rows are a pure per-row function of (id, sh_arr), so on the
-        # default path the absorb set's bands come from the PERSISTED
-        # batch bands by the SAME anti-join the shingle side runs (r14):
-        # the minhash fold then runs exactly ONCE per epoch (materialized
-        # in the decisions write above) — the earlier spelling re-ran the
-        # whole fold over the novel rows, which on non-flood traffic is
-        # ~the whole batch again. Values identical by purity; rows
-        # identical because novel = batch minus the dropped ids on this
-        # path. Under absorb_dedup the fold RECOMPUTES over novel_sh
-        # instead: the window thins the novel set far below the batch
-        # (the flood case), so the small fold beats re-reading the
-        # full-batch band cache (measured, r14 probe). The absorb stays
-        # CLASSIC two-frame here, deliberately: a combined (sh_arr,
-        # bands) leaf was measured (r14 probe) to regress this gate ~15%
-        # above its floor — the checkpointed leaf is row-stored, so every
-        # later epoch's band-probe scan deserialized the fat sh_arr
-        # column alongside the skinny band rows. The embedding gates keep
-        # the combined absorb: their band view's extra column is the same
-        # vector the verify join reads anyway.
-        if self.absorb_dedup:
-            novel_bands = lsh_band_table(
-                minhash_signatures_wide(novel_sh, self.id_col, self.n_hashes),
-                self.id_col, self.bands, self.n_hashes // self.bands,
-            )
+            novel_bands = self._band_rows(novel)
         else:
-            novel_bands = new_bands.join(dropped, self.id_col, "left_anti")
-        self.index.absorb(novel_sh, novel_bands)
-        self._epoch += 1
+            novel_bands = self._new_bands.join(dropped, self.id_col, "left_anti")
+        self.index.absorb(novel, novel_bands)
 
 
 def span_dedup(
@@ -1561,8 +1501,6 @@ def span_dedup(
     per-doc rollup shuffles on doc_id. Nothing is quadratic and no text
     leaves the chunking projection — only (hash, doc, idx) triples shuffle,
     so bytes on the wire ∝ 24B per chunk whatever the document sizes."""
-    from pyspark.sql import Window
-
     s = window if stride is None else int(stride)
     if not (1 <= s <= window):
         raise ValueError(f"span_dedup: stride must be in [1, window], got {s}")
@@ -1663,8 +1601,6 @@ def cdc_chunk_dedup(
     first-occurrence selection is ONE hash-partitioned window over
     chunk_hash; the rollup shuffles on doc_id. Only (hash, doc, idx, len)
     rows ever shuffle — ~32 B/chunk regardless of document size."""
-    from pyspark.sql import Window
-
     d = int(divisor)
     if d < 1:
         raise ValueError(f"cdc_chunk_dedup: divisor must be >= 1, got {d}")
@@ -2260,35 +2196,27 @@ def simhash_capture_table(
     return out
 
 
-def _cc_local_edge_cap() -> int:
-    """Edge-row cap under which connected components runs DRIVER-SIDE
-    (r13 optimization round). The iterative implementations pay 1-2 Spark
-    JOBS PER ROUND regardless of data volume — measured at sf0.1, 857
-    semantic near-dup pairs cost ~6.5 s of round fixed costs (join +
-    checkpoint + convergence action on ~1000-row frames) for ~0.1 s of
-    actual graph work. The gate is the broadcast-join-threshold pattern:
-    a BOUNDED probe (limit cap+1, one job) decides; at or under the cap
-    the skinny edge rows (two ids each — 100k rows ≈ a few MB) collect
-    and a union-find labels them exactly as the fixpoint would, above it
-    nothing changes and the distributed rounds own the 100 TB case.
-    Parameterized for deployments (PYPELN_SPARK_CC_LOCAL_EDGES; 0
-    disables)."""
-    try:
-        return int(os.environ.get("PYPELN_SPARK_CC_LOCAL_EDGES", "100000"))
-    except ValueError:
-        return 100000
+# Edge-row cap under which connected components runs driver-side. The
+# iterative implementations pay 1-2 Spark jobs per round whatever the data
+# volume: at sf0.1, 857 semantic near-dup pairs cost ~6.5 s of round fixed
+# costs for ~0.1 s of graph work. A bounded probe (limit cap+1, one job)
+# decides: at or under the cap the skinny edge rows (100k rows ≈ a few MB)
+# collect and a union-find labels them exactly as the fixpoint would; above
+# it the distributed rounds run. Callers pass ``local_edge_cap=0`` to
+# disable it.
+CC_LOCAL_EDGES = 100_000
 
 
 def _local_components(
     edges: DataFrame, cap: tp.Optional[int]
 ) -> tp.Optional[DataFrame]:
     """Driver-side union-find over a BOUNDED edge frame (see
-    _cc_local_edge_cap): returns the (doc_id, cluster_id = component
+    CC_LOCAL_EDGES): returns the (doc_id, cluster_id = component
     minimum) frame, or None when the edge set exceeds the cap (caller
     stays on the distributed rounds). One bounded job: limit(cap+1) +
     collect — never a full scan of an over-cap edge set. Deterministic:
     the component minimum is order-free, and rows are emitted sorted."""
-    cap = _cc_local_edge_cap() if cap is None else cap
+    cap = CC_LOCAL_EDGES if cap is None else cap
     if cap <= 0:
         return None
     c1, c2 = edges.columns[0], edges.columns[1]

@@ -24,10 +24,10 @@ import json
 from pyspark.sql import DataFrame, Window, functions as F
 
 from .dedup import (
+    IngestGate,
     pool_persist,
     retire_pipeline_caches,
     spread,
-    validate_sink_schema,
 )
 from .hashing import P31
 
@@ -1916,59 +1916,57 @@ def live_topk_serve(
     )
 
 
-class EmbeddingIngestGate:
-    """foreachBatch body of the streaming EMBEDDING ingest gate — the
-    per-epoch pipeline queries/streaming.streaming_embedding_ingest runs
-    (bucket the arriving batch, multiprobe the growing hyperplane index,
-    exact-cosine verify, emit one keep/drop decision per vector, absorb
-    novel vectors), factored into an engine operator so the documented
-    scaling move is GATE BEHAVIOR, not a runbook step (VERDICT r8 #2).
+class EmbeddingIngestGate(IngestGate):
+    """The streaming EMBEDDING ingest gate bucketed by random hyperplanes
+    (queries/streaming.streaming_embedding_ingest): bucket the arriving
+    batch, multiprobe the index's buckets at hamming ≤ ``probe_hamming``,
+    verify by exact cosine, and absorb the novel vectors. The per-epoch
+    body is IngestGate's; this class and CellEmbeddingIngestGate supply
+    only the bucketing (``_prepare``, ``_probes``, ``_stored_rows``) and the
+    growth step.
 
-    OCCUPANCY TRIGGER: hyperplane buckets have FIXED cardinality
-    2^n_planes, so candidate mass grows ∝ |new|·|index| / 2^n_planes as
-    the index absorbs (measured ~100× candidates at 10× data with
-    n_planes pinned, SCALING.md). With ``occupancy_trigger`` > 0 the gate
-    checks mean bucket occupancy (index.size() / 2^n_planes — tracked
-    counts, NO extra Spark job) after every absorb; on crossing, it
-    re-buckets the ENTIRE index at
+    Verify: with a live combined view (``index.comb``, rows (id, _v,
+    _norm, bucket): the inverted-list layout), probes carrying their own
+    vectors join it once through the guarded probe-side broadcast
+    (probe_side_join) and score in the same pass, so under the guard the
+    index never moves; the guard's row estimate pays the batch count.
+    Without one (none given, or a capped or durable index) the verify
+    runs two frames: probes against the band view, then the candidate
+    pairs against the vector side, both shuffle_hash (broadcasting the
+    bounded new side measured no win there: the saturated gate is
+    candidate-volume-bound, sf1 105.4 s vs 107.0 s). Pair set and cos expression are the same on
+    both paths, so decisions are bit-identical. Every absorb is one
+    combined (id, _v, _norm, bucket) frame (``index.absorb_combined``).
+
+    OCCUPANCY TRIGGER: hyperplane buckets have a fixed 2^n_planes
+    cardinality, so candidate mass grows ∝ |new|·|index| / 2^n_planes as
+    the index absorbs (~100× candidates at 10× data with n_planes pinned,
+    SCALING.md). With ``occupancy_trigger`` > 0 the gate checks mean
+    bucket occupancy (index.size() / 2^n_planes, tracked counts) after
+    every absorb; on crossing, it re-buckets the whole index at
 
         n_planes' = max(n_planes + 1, ceil(log2(size / target_occupancy)))
 
-    in one narrow pass over the stored vectors (lsh_bucket over index.sh
-    — the index stores vectors precisely so this pass is possible) and
-    widens its own batch bucketing to match. Plane families are
-    prefix-stable (lsh_bucket docstring), so the rebuilt table equals a
-    from-scratch wider index
-    (tests/test_streaming.py::test_embedding_index_rebucket_widens_mid_stream)
-    — the same recall trade as having started wide, which for exact/near-
-    exact duplicates (hamming 0 buckets at any width) is no trade at all.
-    ``target_occupancy`` < ``occupancy_trigger`` gives hysteresis: after a
-    widen, occupancy sits near the target, and the trigger can't re-fire
-    until the index grows by trigger/target. The FAISS analogue is
-    re-train/re-add on index growth.
+    in one narrow pass over the stored vectors and widens its own batch
+    bucketing to match. Plane families are prefix-stable (lsh_bucket), so
+    the rebuilt table equals a from-scratch wider index
+    (tests/test_streaming.py::test_embedding_index_rebucket_widens_mid_stream).
+    ``target_occupancy`` < ``occupancy_trigger`` gives hysteresis. The
+    default 0 disables the trigger. At sf1 the trigger cut the saturating
+    gate 91 → 42 s with zero recall loss at threshold 0.9; at 0.35 it
+    lost 27% of dup decisions (mid-cosine pairs are weakly bucket-stable),
+    which is what CellEmbeddingIngestGate is for.
 
-    ``occupancy_trigger=0`` (default) disables the trigger — the registry
-    query's oracle-pinned shape (n_planes fixed at its test value, the
-    trigger driven instead by
-    tests/test_streaming.py::test_embedding_gate_occupancy_trigger).
+    ``absorb_dedup`` keys on the full vector and defaults to True: on a
+    duplicate-free stream it costs below the noise floor (sf0.1 0.91x,
+    sf1 1.006x), while an unguarded flood bloats the index and collapses
+    centroids on retrain (SCALING.md "Hot cells"). Callers whose oracles
+    replay every stored copy (the registry entries) pass False.
 
-    Measured at the synthetic sf1 (SCALING.md r9): the trigger cuts the
-    saturating gate 91 → 42 s; at production thresholds (0.9, planted
-    exact dups) it costs ZERO recall (900/900 caught, decision sets
-    identical, 2.3×); at a low 0.35 threshold it loses 27% of dup
-    decisions (mid-cosine pairs are weakly bucket-stable), and ONE extra
-    probe shell (probe_hamming=2) buys most of that back at 3× wall —
-    trigger + probe_hamming are the gate's two measured dials.
+    ``collect_stats`` adds ``n_planes``, ``index_rows`` and ``n_cand`` (the
+    epoch's candidate pairs, one extra job) to each epoch's record."""
 
-    ``collect_stats=True`` additionally counts each epoch's candidate
-    pairs (one extra job per epoch — eval/test use only) into
-    ``self.stats``: one dict per epoch with n_planes / index_rows /
-    n_cand / widened, the series the trigger test asserts flattens.
-
-    ``epoch_col`` (no-arg callable returning a Column) labels each
-    decision's epoch; default is the gate's own epoch counter. The
-    decisions parquet under ``sink_root`` is appended FROM THE EXECUTORS
-    — on a cluster the root must be shared-FS (stream_sink_dir)."""
+    score = "cos"
 
     def __init__(
         self,
@@ -1991,126 +1989,30 @@ class EmbeddingIngestGate:
                 "target_occupancy must be < occupancy_trigger (hysteresis): "
                 f"{target_occupancy} >= {occupancy_trigger}"
             )
-        self.index = index
-        self.sink_root = sink_root
+        super().__init__(
+            index, sink_root, id_col, epoch_col, absorb_dedup, collect_stats
+        )
         self.dim = dim
         self.n_planes = n_planes
         self.threshold = threshold
         self.probe_hamming = probe_hamming
-        self.id_col = id_col
         self.vec_col = vec_col
         self.occupancy_trigger = occupancy_trigger
         self.target_occupancy = target_occupancy
-        self.epoch_col = epoch_col
-        self.collect_stats = collect_stats
-        # absorb_dedup (r11): exact-dedup the ABSORB SET within each batch
-        # — keep the min-id row per identical vector before the index
-        # stores anything. Gates never compare a batch's rows against
-        # each other (dup decisions are new-vs-INDEX only, documented),
-        # so an identical-vector flood (the planted-cluster protocol, a
-        # scraped mirror burst) absorbs in FULL at its arrival epoch and
-        # every later epoch pays that width — the failure the index
-        # bucket_cap bounds. Measured (SCALING.md "Hot cells: the cap's
-        # eviction trade measured, and the real guard", r11): in
-        # COARSE-cell geometry the min-id cap is the WRONG primary guard
-        # — unrelated lower-id rows absorbed into the cluster's catch-all
-        # cell evict the cluster's representative (50/150 later-copy dups
-        # missed at cap=8/256 cells), and
-        # retraining makes it worse, not better: k-means over an index
-        # that is 75% one repeated vector COLLAPSES the centroid set
-        # (256 → 62 trained on the flooded index — seeds dedup by
-        # position), coarsening every cell. Absorb-dedup stops the flood
-        # at the source instead: the cluster stores ONE representative
-        # (its min id — exactly the row the survivor pick targets, so
-        # later-epoch decisions are bit-identical to storing all copies),
-        # the index stays thin, and retrain trains on the data's real
-        # support. Decision-invariance is exact-dup-only BY CONSTRUCTION
-        # (grouping key = the full vector, no hash truncation): distinct
-        # near-dup vectors in one batch still both absorb. Default TRUE
-        # since r13 (VERDICT r12 #7) — the code default now matches the
-        # measured DEPLOYMENT RULE (r12, SCALING.md "absorb_dedup priced
-        # on a CLEAN stream + the deployment rule"): on a CLEAN
-        # (duplicate-free) stream the embedding-side cost is below the
-        # noise floor (sf0.1 0.91x, sf1 1.006x, decisions identical — the
-        # window keys on the narrow vector column and runs over the novel
-        # set only), while
-        # leaving it off risks the measured flood failure class (index
-        # bloat, centroid collapse on retrain). Callers that need the
-        # store-everything shape — the registry entries, whose oracles
-        # replay every stored copy — pass absorb_dedup=False explicitly;
-        # collect_stats surfaces n_batch_dup — within-batch duplicate
-        # mass — so a False deployment can SEE the flood it is exposed
-        # to and flip the flag back on.
-        self.absorb_dedup = absorb_dedup
-        self.stats: list = []
-        self._epoch = 0
-        self._sink_checked = False
 
-    def _maybe_widen(self) -> bool:
-        if not self.occupancy_trigger:
-            return False
-        size = self.index.size()
-        if size / float(2 ** self.n_planes) < self.occupancy_trigger:
-            return False
-        import math
-
-        new_planes = max(
-            self.n_planes + 1,
-            math.ceil(math.log2(max(size / self.target_occupancy, 2.0))),
-        )
-        # ONE narrow pass over the stored vectors; the rebuild cuts
-        # lineage and resets the band level. With a live combined
-        # view the rebuilt frame keeps the vectors alongside the new
-        # buckets (same pass, the inverted-list layout — rebuild_combined)
-        new_comb = lsh_bucket(self.index.sh, "_v", new_planes, self.dim).select(
-            self.id_col, "_v", "_norm", "bucket"
-        )
-        if self.index.comb is not None:
-            self.index.rebuild_combined(
-                new_comb,
-                lambda c: c.select(self.id_col, "_v", "_norm"),
-                lambda c: c.select(self.id_col, "bucket"),
-            )
-        else:
-            self.index.rebuild_bands(new_comb.select(self.id_col, "bucket"))
-        self.n_planes = new_planes
-        return True
-
-    # -- bucketing hooks (r10): the gate body is bucketing-agnostic; the
-    # hyperplane defaults below produce the EXACT pre-r10 plan, and
-    # CellEmbeddingIngestGate overrides them with k-means cell
-    # assignment for the semantic-threshold regime --
-
-    def _prepare_new(self, batch_df: DataFrame) -> DataFrame:
-        """Arriving side: spread + norms + this gate's bucket column."""
+    def _prepare(self, batch_df: DataFrame) -> DataFrame:
         return lsh_bucket(
             with_norms(spread(batch_df), self.vec_col),
             "_v", self.n_planes, self.dim,
         )
 
-    def _probe_rows(self, new: DataFrame) -> DataFrame:
-        """(new_id, bucket) probe rows — hyperplane hd≤probe_hamming
-        shells via xor masks; one row per (new, corpus) pair downstream
-        because the connecting mask is unique."""
+    def _probes(self, new: DataFrame) -> DataFrame:
+        """(new_id, va, na, bucket) probe rows: the hd ≤ probe_hamming
+        xor-mask shell. The connecting mask is unique, so each (new,
+        corpus) pair appears once downstream."""
+        masks = _probe_masks(self.n_planes, self.probe_hamming)
         probes = F.array(
-            *[
-                F.col("bucket").bitwiseXOR(F.lit(m)).cast("long")
-                for m in _probe_masks(self.n_planes, self.probe_hamming)
-            ]
-        )
-        return new.select(
-            F.col(self.id_col).alias("new_id"), F.explode(probes).alias("bucket")
-        )
-
-    def _probe_rows_v(self, new: DataFrame) -> DataFrame:
-        """(new_id, va, na, bucket) probe rows CARRYING the new vector —
-        the one-join verify's probe side (r14): batch × probes rows, so
-        the payload stays micro-batch-bounded at any corpus size."""
-        probes = F.array(
-            *[
-                F.col("bucket").bitwiseXOR(F.lit(m)).cast("long")
-                for m in _probe_masks(self.n_planes, self.probe_hamming)
-            ]
+            *[F.col("bucket").bitwiseXOR(F.lit(m)).cast("long") for m in masks]
         )
         return new.select(
             F.col(self.id_col).alias("new_id"), F.col("_v").alias("va"),
@@ -2118,258 +2020,140 @@ class EmbeddingIngestGate:
         )
 
     def _n_probes(self) -> int:
-        """Probe rows per arriving vector — the broadcast guard's row
-        multiplier. Hyperplane: the hd≤probe_hamming shell size."""
+        """Probe rows per arriving vector (the broadcast guard's
+        multiplier)."""
         return len(_probe_masks(self.n_planes, self.probe_hamming))
 
-    def _novel_bands(self, novel: DataFrame) -> DataFrame:
-        """(id, bucket) rows the index absorbs for this epoch's novel
-        vectors — hyperplane: their own bucket column."""
-        return novel.select(self.id_col, "bucket")
+    def _stored_rows(self, df: DataFrame) -> DataFrame:
+        """The (id, _v, _norm, bucket) rows the index stores for ``df``."""
+        return df.select(self.id_col, "_v", "_norm", "bucket")
 
-    def _absorb_novel(self, novel: DataFrame) -> None:
-        """One combined-frame absorb per epoch (r14): the sh rows and the
-        band rows both derive from ``novel``, so the index materializes
-        ONE (id, _v, _norm, bucket) leaf per epoch instead of two —
-        absorb_combined falls back to the classic two-frame call when
-        the index needs whole-union semantics (bucket_cap /
-        checkpoint_dir). Hyperplane: novel already carries its bucket."""
-        comb = novel.select(self.id_col, "_v", "_norm", "bucket")
-        self.index.absorb_combined(
-            comb,
-            lambda c: c.select(self.id_col, "_v", "_norm"),
-            lambda c: c.select(self.id_col, "bucket"),
-        )
+    def _sh_rows(self, rows: DataFrame) -> DataFrame:
+        return rows.select(self.id_col, "_v", "_norm")
 
-    def __call__(self, batch_df: DataFrame, epoch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        from pypeln_spark.streaming import shuffle_width
+    def _band_rows(self, rows: DataFrame) -> DataFrame:
+        return rows.select(self.id_col, "bucket")
 
-        retire_pipeline_caches()
-        new = pool_persist(self._prepare_new(batch_df))
-        # the batch count is ONLY consumed by width=auto sizing and the
-        # stats channel — when neither is on, skip the job (r14, guide §5:
-        # the persist materializes inside the decisions write instead, at
-        # identical total compute minus one job round trip per epoch)
-        from pypeln_spark.streaming import (
-            STREAM_WIDTH_AUTO, autosize_stream_width,
-        )
+    def _dedup_key(self):
+        return F.col("_v")
 
-        n_new = (
-            new.count() if (STREAM_WIDTH_AUTO or self.collect_stats) else None
-        )
-        if n_new is not None:
-            # width=auto: re-size this epoch's shuffle width from its row
-            # count (no-op unless PYPELN_SPARK_STREAM_PARTITIONS=auto)
-            autosize_stream_width(batch_df.sparkSession, n_new)
-        one_join = self.index.comb is not None
-        if one_join:
-            # ONE-JOIN VERIFY (r14, guide §8/§2.4/§3.1): the index keeps a
-            # live COMBINED view (id, _v, _norm, bucket) — the inverted-
-            # list layout — so probes carrying their own vectors join it
-            # once and score in the same pass. The classic path below
-            # scanned the band view, shuffled the candidate pairs, then
-            # shuffled the ENTIRE fat sh side through a second hash join
-            # every epoch. Here the probe side is micro-batch-bounded
-            # (|batch| × n_probes rows), so the join runs through the
-            # guarded probe-side broadcast (probe_side_join, the serving
-            # gate's shape): under the guard the INDEX NEVER MOVES — zero
-            # corpus-sized exchanges per epoch — and past it the join
-            # degrades to a bounded shuffle_hash build on the probes. The
-            # guard's row estimate reuses the batch count (one tiny job,
-            # paid only on this path). Pair set and cos expression are
-            # unchanged, so decisions are bit-identical (the connecting
-            # bucket/mask is unique per pair in both gate geometries).
-            if n_new is None:
-                n_new = new.count()
-            nbv = self._probe_rows_v(new)
-            cbv = self.index.comb.select(
-                F.col(self.id_col).alias("corpus_id"),
-                F.col("_v").alias("vb"), F.col("_norm").alias("nb"),
-                "bucket",
-            )
-            pairs = probe_side_join(
-                cbv, nbv, "bucket",
-                probe_rows=n_new * self._n_probes(),
+    def _matches(self, new: DataFrame, n_new) -> DataFrame:
+        idc = self.id_col
+        probes = self._probes(new)
+        if self.index.comb is not None:
+            scored = probe_side_join(
+                self.index.comb.select(
+                    F.col(idc).alias("corpus_id"), F.col("_v").alias("vb"),
+                    F.col("_norm").alias("nb"), "bucket",
+                ),
+                probes, "bucket",
+                probe_rows=(new.count() if n_new is None else n_new)
+                * self._n_probes(),
                 probe_row_bytes=self.dim * 8 + 40,
             )
-            n_cand = pairs.count() if self.collect_stats else None
+            self._n_cand = scored.count() if self.collect_stats else None
         else:
-            nb = self._probe_rows(new)
-            cb = self.index.bands.select(
-                F.col(self.id_col).alias("corpus_id"), "bucket"
-            )
-            # one row per (new, corpus) pair — the connecting xor mask is
-            # unique
-            cand = nb.join(cb, "bucket").select("new_id", "corpus_id")
-            n_cand = cand.count() if self.collect_stats else None
-        # within-batch duplicate mass (VERDICT r11 #3): rows minus
-        # distinct vectors — the flood indicator an operator reads to
-        # know absorb_dedup has work to do (gates never compare a batch
-        # against itself, so this mass is invisible in dup_of verdicts).
-        # One tiny agg over the persisted batch, paid only under
-        # collect_stats; a sustained non-zero reading on a gate running
-        # absorb_dedup=False is the signal to turn the guard on.
-        n_batch_dup = (
-            n_new - new.select("_v").distinct().count()
-            if self.collect_stats
-            else None
-        )
-        if one_join:
-            matches = pairs.withColumn(
-                "cos", dot_ieee(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb"))
-            ).filter(F.col("cos") >= self.threshold)
-        else:
-            # spread the verify compute across the STREAMING SCOPE's width
-            # (spark.sql.shuffle.partitions, 4 by default under
-            # _stream_partitions; PYPELN_SPARK_STREAM_PARTITIONS sizes it
-            # on real deployments — A/B'd vs defaultParallelism in r8,
-            # ~6% win)
-            cand = cand.repartition(
-                shuffle_width(batch_df.sparkSession), F.col("new_id")
-            )
+            from pypeln_spark.streaming import shuffle_width
+
+            cand = probes.select("new_id", "bucket").join(
+                self.index.bands.select(F.col(idc).alias("corpus_id"), "bucket"),
+                "bucket",
+            ).select("new_id", "corpus_id")
+            self._n_cand = cand.count() if self.collect_stats else None
             a = new.select(
-                F.col(self.id_col).alias("new_id"), F.col("_v").alias("va"),
+                F.col(idc).alias("new_id"), F.col("_v").alias("va"),
                 F.col("_norm").alias("na"),
             )
             b = self.index.sh.select(
-                F.col(self.id_col).alias("corpus_id"), F.col("_v").alias("vb"),
+                F.col(idc).alias("corpus_id"), F.col("_v").alias("vb"),
                 F.col("_norm").alias("nb"),
             )
-            # shuffle_hash hints: 64-double array sides under-estimate
-            # like shingle arrays — broadcast of the CORPUS side OOMs at
-            # scale (r7 sweep class). Broadcasting the bounded NEW side
-            # was also tried (r10, the serving gate's winning move): sf1
-            # fixed arm 105.4s shuffle_hash vs 107.0s broadcast,
-            # decisions identical — no win, because the saturated gate is
-            # candidate-VOLUME-bound (3.8M pairs/epoch through the
-            # verify), not join-layout-bound; the serving gate won 2.3x
-            # from the same move only because its corpus side never has
-            # to move at all. Kept on shuffle_hash.
-            matches = (
-                cand.join(a.hint("shuffle_hash"), "new_id")
+            # shuffle_hash: a 64-double array side undercounts like the
+            # shingle arrays, and broadcasting the corpus side OOMs at scale
+            scored = (
+                cand.repartition(shuffle_width(new.sparkSession), F.col("new_id"))
+                .join(a.hint("shuffle_hash"), "new_id")
                 .join(b.hint("shuffle_hash"), "corpus_id")
-                .withColumn(
-                    "cos",
-                    dot_ieee(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb")),
-                )
-                .filter(F.col("cos") >= self.threshold)
             )
-        # survivor pick: min corpus id (struct-min — corpus_id leads, so
-        # the attached cos is that pair's, deterministically).
-        # pool-persisted (r13 optimization round, same as the text gate):
-        # consumed by the decisions write and the absorb set's anti-join,
-        # so unpersisted the bucket-probe + verify join re-executed per
-        # absorb-side materialization. Dup-rows-sized; the decisions
-        # write fills it.
-        pick = pool_persist(matches.groupBy("new_id").agg(
-            F.min(F.struct("corpus_id", "cos")).alias("m")
-        ))
-        # default label = the harness-provided epoch_id, NOT the internal
-        # processed-batch counter: the counter skips empty micro-batches,
-        # so its labels silently diverge from Spark epoch ids whenever one
-        # interleaves (ADVICE r9 #3). _epoch stays as the stats ordinal.
-        epoch = (
-            self.epoch_col() if self.epoch_col is not None
-            else F.lit(int(epoch_id)).cast("int")
-        )
-        decisions = (
-            batch_df.select(self.id_col)
-            .join(pick, F.col(self.id_col) == F.col("new_id"), "left")
-            .select(
-                self.id_col,
-                epoch.alias("epoch"),
-                F.col("m.corpus_id").alias("dup_of"),
-                F.col("m.cos").alias("cos"),
-            )
-        )
-        if not self._sink_checked:
-            # same first-write guard as the text gate (ADVICE r11): a
-            # reused sink_root with a different decisions schema (id_col
-            # rename, a differently-configured gate) must fail loudly,
-            # not append mixed-schema parquet
-            validate_sink_schema(decisions, self.sink_root)
-            self._sink_checked = True
-        decisions.write.mode("append").parquet(self.sink_root)
-        dropped = pick.select(F.col("new_id").alias(self.id_col))
-        novel = new.join(dropped, self.id_col, "left_anti")
-        if self.absorb_dedup:
-            # one narrow window keyed on the FULL vector (exact identity,
-            # no hash truncation): the min-id copy — the future survivor
-            # pick's target — is the one row the index stores
-            from pyspark.sql import Window as _W
+        return scored.withColumn(
+            "cos", dot_ieee(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb"))
+        ).filter(F.col("cos") >= self.threshold)
 
-            w_dd = _W.partitionBy("_v").orderBy(F.col(self.id_col))
-            novel = (
-                novel.withColumn("_rnk", F.row_number().over(w_dd))
-                .filter(F.col("_rnk") == 1)
-                .drop("_rnk")
-            )
-            # the deduped novel frame feeds absorb's sh side, the band
-            # derivation, and (via the anti-join lineage) re-runs the
-            # verify join per consumer — persist + eager count, the
-            # pipeline's shared-stage discipline
-            novel = pool_persist(novel)
-            novel.count()
-        self._absorb_novel(novel)
-        widened = self._maybe_widen()
-        if self.collect_stats:
-            self.stats.append(
-                {
-                    "epoch": self._epoch,
-                    "n_planes": self.n_planes,
-                    "index_rows": self.index.size(),
-                    "n_cand": n_cand,
-                    "n_batch_dup": n_batch_dup,
-                    "widened": widened,
-                    # the cells subclass's capacity knob is cell count,
-                    # not plane count — report whichever is live so the
-                    # stats a trigger test reads name the real dial
-                    **(
-                        {"n_cells": self.n_cells}
-                        if hasattr(self, "n_cells")
-                        else {}
-                    ),
-                }
-            )
-        self._epoch += 1
+    def _absorb(self, novel: DataFrame, dropped: DataFrame) -> None:
+        self.index.absorb_combined(
+            self._stored_rows(novel), self._sh_rows, self._band_rows
+        )
+
+    def _rebuild(self, rows: DataFrame) -> None:
+        """Replace the index's bucketing with ``rows`` (id, _v, _norm,
+        bucket), keeping the combined view live when there is one."""
+        if self.index.comb is not None:
+            self.index.rebuild_combined(rows, self._sh_rows, self._band_rows)
+        else:
+            self.index.rebuild_bands(self._band_rows(rows))
+
+    def _capacity(self) -> int:
+        return 2 ** self.n_planes
+
+    def _grow(self, size: int) -> None:
+        import math
+
+        n_planes = max(
+            self.n_planes + 1,
+            math.ceil(math.log2(max(size / self.target_occupancy, 2.0))),
+        )
+        self._rebuild(
+            self._stored_rows(lsh_bucket(self.index.sh, "_v", n_planes, self.dim))
+        )
+        self.n_planes = n_planes
+
+    def _after_absorb(self) -> bool:
+        if not self.occupancy_trigger:
+            return False
+        size = self.index.size()
+        if size / float(self._capacity()) < self.occupancy_trigger:
+            return False
+        self._grow(size)
+        return True
+
+    def _extra_stats(self) -> dict:
+        return {
+            "n_planes": self.n_planes,
+            "index_rows": self.index.size(),
+            "n_cand": self._n_cand,
+        }
 
 
 class CellEmbeddingIngestGate(EmbeddingIngestGate):
     """The embedding ingest gate bucketed by K-MEANS CELLS instead of
-    hyperplanes — the gate mode for SEMANTIC-range thresholds (VERDICT
-    r9 #4). The r9 sf1 measurements exposed the hyperplane dial's limit:
-    at a low threshold (0.35) the occupancy-triggered widen costs 27% of
-    dup decisions, because mid-cosine pairs are weakly bucket-stable —
-    E[plane flips] grows with every added plane, so a wider hyperplane
-    index is structurally the WRONG recall/cost dial for semantic gates
-    (zero cost at ≥0.9 where near-exact pairs share buckets at any
-    width). Cells don't have that failure mode: a centroid cell's radius
-    is set by the DATA's cluster structure, not by how many random
-    planes a pair must agree on, and probing the nprobe nearest cells
-    degrades gracefully (the semantic_dedup_pairs / IVF shape).
+    hyperplanes: the gate for semantic-range thresholds. A wider
+    hyperplane index loses mid-cosine pairs (E[plane flips] grows with
+    every plane: 27% of dup decisions lost at threshold 0.35 at sf1),
+    while a centroid cell's radius follows the data's cluster structure,
+    and probing the ``nprobe`` nearest cells degrades gracefully (the IVF
+    shape).
 
-    Mechanics: centroids train ONCE on the initial corpus
-    (kmeans_centroids — frozen-hash seeds, decimal-exact updates, so the
-    whole gate replays in DuckDB); arriving vectors probe their
-    ``nprobe`` nearest cells (ivf_assign keep=nprobe), the index stores
-    each vector in its ONE nearest cell (keep=1), candidates come from
-    the cell equi-join, verify/survivor-pick/absorb are the parent's.
-    No occupancy trigger: cell count is a training-time choice and cells
-    grow with corpus density, not bucket saturation — the at-scale
-    maintenance move is a periodic RE-TRAIN on the grown index (the
-    standard IVF rebuild), which swaps centroids + re-assigns in two
-    narrow passes (index.rebuild_bands), deliberately left to the
-    deployment's cadence. Three-arm recall/wall vs the hyperplane arms
-    measured on the r9 planted-pair sf1 stream: SCALING.md r10.
+    Centroids train once on the initial corpus (kmeans_centroids:
+    frozen-hash seeds, decimal-exact updates, so the whole gate replays
+    in DuckDB). Arriving vectors probe their ``nprobe`` nearest cells
+    (ivf_assign keep=nprobe) and the index stores each vector in its one
+    nearest cell (keep=1), so each (new, corpus) pair connects through at
+    most one cell. Every assignment is a narrow projection against
+    ``centroid_lits()``. The maintenance move is ``retrain``: re-train
+    the centroids on the grown index and re-assign it (the standard IVF
+    rebuild); ``occupancy_trigger`` runs it when mean vectors per cell
+    crosses the trigger, growing the cell count back to
+    ``target_occupancy``.
 
-    DEPLOYMENT RULE (r11, measured — full table in __init__ and
-    SCALING.md): threshold ≥ 0.9 → nprobe=2 (near-exact pairs share
-    the one nearest cell; more probes buy nothing); semantic
-    thresholds → nprobe=4 (~99% of the fixed-gate reference recall at
-    ~1/4 its wall; the straddle gap halves per +1 probe at ~13% wall
-    each). Pass nprobe="auto" to apply the rule from the threshold."""
+    nprobe rule (sf1, threshold 0.35, 10k arrivals, 100 cells; decision
+    counts are run-to-run identical): nprobe 2 / 3 / 4 catch 93.1% /
+    97.3% / 99.1% of the fixed-hyperplane reference's dups at 40.3 /
+    46.3 / 51.0 s against the reference's 215 s: the straddle gap halves
+    per extra probe at ~13% wall each. At threshold ≥ 0.9 near-exact
+    pairs share the one nearest cell and more probes buy nothing.
+    ``nprobe="auto"`` applies the rule: 2 at ≥ 0.9, else 4.
+
+    ``collect_stats`` adds ``n_cells`` to the parent's keys."""
 
     def __init__(
         self,
@@ -2399,22 +2183,6 @@ class CellEmbeddingIngestGate(EmbeddingIngestGate):
         )
         self.centroids = centroids
         self.n_cells = n_cells
-        # nprobe="auto" (r11, VERDICT r10 #3) promotes the measured
-        # recall/cost curve to gate behavior. The sf1/T=0.35 three-arm
-        # protocol extended across nprobe (10k arrivals, 100 cells,
-        # decision counts contention-immune and run-to-run identical):
-        #   nprobe 2: 9252/9936 ref dups (93.1%), ~684k cand/epoch, 40.3s
-        #   nprobe 3: 9667 (97.3%), ~1.01M cand/epoch, 46.3s
-        #   nprobe 4: 9843 (99.1%), ~1.34M cand/epoch, 51.0s
-        #   (fixed-hyperplane reference: 9936, 3.78M cand/epoch, 215s —
-        #   same contended-host session, ratios are the measurement)
-        # The boundary-straddle gap HALVES per +1 probe while wall grows
-        # ~13% per step (candidates linear in nprobe, verify partly
-        # fixed-cost), so the semantic-regime default is nprobe=4: ~99%
-        # of reference recall at ~1/4 the fixed gate's wall. At ≥ 0.9
-        # near-exact pairs share the ONE nearest cell (r10: all arms
-        # emit identical decisions) — probing more cells buys nothing,
-        # so auto keeps the measured nprobe=2 there.
         if nprobe == "auto":
             nprobe = 2 if threshold >= 0.9 else 4
         self.nprobe = int(nprobe)
@@ -2436,91 +2204,49 @@ class CellEmbeddingIngestGate(EmbeddingIngestGate):
             self._lits = centroid_literals(self.centroids, self.id_col)
         return self._lits
 
+    def _assign(self, df: DataFrame, keep: int) -> DataFrame:
+        return ivf_assign(
+            df, self.centroids, self.n_cells, keep=keep, id_col=self.id_col,
+            as_literals=self.centroid_lits(),
+        )
+
     def retrain(self, n_cells: tp.Optional[int] = None) -> None:
-        """The cells gate's at-scale maintenance move, as an operator
-        (r10): re-train centroids on the CURRENT index vectors (the
-        corpus + everything absorbed — index.sh IS a with_norms frame)
-        and re-assign the whole index in one narrow pass
-        (index.rebuild_bands — lineage-cut, band level reset, sh side
-        untouched). This is the standard periodic IVF rebuild: training
-        is one broadcast-join assignment pass per iteration over the
-        hash-sampled index (centroid-count-sized shuffle keys), and the
-        re-assignment is the same ivf_assign every epoch already runs,
-        over index rows instead of batch rows. Deterministic end to end
-        (frozen-hash seeds, decimal means), so a replay after any number
-        of retrains is still engine-reproducible."""
+        """Re-train the centroids on the CURRENT index vectors (the corpus
+        plus everything absorbed; index.sh is a with_norms frame) and
+        re-assign the whole index in one narrow pass: the standard
+        periodic IVF rebuild. Training is one broadcast-join assignment
+        pass per iteration over the hash-sampled index. Deterministic end
+        to end (frozen-hash seeds, decimal means), so a replay after any
+        number of retrains is still engine-reproducible."""
         n_cells = n_cells or self.n_cells
         cents = kmeans_centroids(
             None, n_cells, self.retrain_iters, id_col=self.id_col,
             normed=self.index.sh, train_mod=self.retrain_train_mod,
         )
-        # collect-and-replay like trained_artifact: the centroid frame is
-        # n_cells tiny rows, and materializing it here keeps rebuild's
-        # lineage (and every later epoch's probes) off the training plan
+        # the centroid frame is n_cells tiny rows: collecting and replaying
+        # it keeps every later plan off the training lineage
         spark = self.index.sh.sparkSession
-        cents = spark.createDataFrame(cents.collect(), cents.schema)
-        self.centroids = cents
+        self.centroids = spark.createDataFrame(cents.collect(), cents.schema)
         self.n_cells = n_cells
         self._lits = None  # new geometry -> new centroid Column
-        asg = ivf_assign(
-            self.index.sh, cents, n_cells, keep=1,
-            id_col=self.id_col, as_literals=self.centroid_lits(),
-        )
-        if self.index.comb is not None:
-            # same single re-assignment pass, now storing the vectors
-            # alongside their new cells (the IVF re-add: lists hold
-            # vectors) so the one-join verify/serve view stays live
-            self.index.rebuild_combined(
-                asg.select(
-                    self.id_col, "_v", "_norm", F.col("cid").alias("bucket")
-                ),
-                lambda c: c.select(self.id_col, "_v", "_norm"),
-                lambda c: c.select(self.id_col, "bucket"),
-            )
-        else:
-            self.index.rebuild_bands(
-                asg.select(self.id_col, F.col("cid").alias("bucket"))
-            )
+        self._rebuild(self._stored_rows(self.index.sh))
 
-    def _maybe_widen(self) -> bool:
-        """Occupancy-triggered RE-TRAIN (the cells analogue of the
-        hyperplane gate's re-bucket): when mean vectors-per-cell crosses
-        the trigger, grow the cell count back to target occupancy and
-        retrain on the grown index. Same hysteresis contract as the
-        parent (target < trigger, validated there)."""
-        if not self.occupancy_trigger:
-            return False
-        size = self.index.size()
-        if size / float(self.n_cells) < self.occupancy_trigger:
-            return False
+    def _capacity(self) -> int:
+        return self.n_cells
+
+    def _grow(self, size: int) -> None:
         import math
 
         self.retrain(
             max(self.n_cells + 1, math.ceil(size / self.target_occupancy))
         )
-        return True
 
-    def _prepare_new(self, batch_df: DataFrame) -> DataFrame:
-        # no bucket column here — cell assignment happens per consumer
-        # (probe rows want keep=nprobe, the absorbed rows keep=1)
+    def _prepare(self, batch_df: DataFrame) -> DataFrame:
+        # no bucket column: probes assign keep=nprobe, stored rows keep=1
         return with_norms(spread(batch_df), self.vec_col)
 
-    def _probe_rows(self, new: DataFrame) -> DataFrame:
-        # each (new, corpus) pair connects through at most one cell —
-        # the index stores a vector in exactly ONE cell — so the parent's
-        # no-distinct candidate join stays pair-unique at any nprobe
-        return ivf_assign(
-            new, self.centroids, self.n_cells, keep=self.nprobe,
-            id_col=self.id_col, as_literals=self.centroid_lits(),
-        ).select(F.col(self.id_col).alias("new_id"), F.col("cid").alias("bucket"))
-
-    def _probe_rows_v(self, new: DataFrame) -> DataFrame:
-        # ivf_assign keeps the vector columns, so the one-join probe side
-        # is its output directly
-        return ivf_assign(
-            new, self.centroids, self.n_cells, keep=self.nprobe,
-            id_col=self.id_col, as_literals=self.centroid_lits(),
-        ).select(
+    def _probes(self, new: DataFrame) -> DataFrame:
+        return self._assign(new, self.nprobe).select(
             F.col(self.id_col).alias("new_id"), F.col("_v").alias("va"),
             F.col("_norm").alias("na"), F.col("cid").alias("bucket"),
         )
@@ -2528,23 +2254,10 @@ class CellEmbeddingIngestGate(EmbeddingIngestGate):
     def _n_probes(self) -> int:
         return self.nprobe
 
-    def _novel_bands(self, novel: DataFrame) -> DataFrame:
-        return ivf_assign(
-            novel, self.centroids, self.n_cells, keep=1, id_col=self.id_col,
-            as_literals=self.centroid_lits(),
-        ).select(self.id_col, F.col("cid").alias("bucket"))
-
-    def _absorb_novel(self, novel: DataFrame) -> None:
-        """Cells: ivf_assign(keep=1) already returns (id, _v, _norm, cid)
-        — vector values pass through untouched, so the
-        combined frame is that output directly (the IVF layout: each
-        stored vector WITH its cell)."""
-        comb = ivf_assign(
-            novel, self.centroids, self.n_cells, keep=1, id_col=self.id_col,
-            as_literals=self.centroid_lits(),
-        ).select(self.id_col, "_v", "_norm", F.col("cid").alias("bucket"))
-        self.index.absorb_combined(
-            comb,
-            lambda c: c.select(self.id_col, "_v", "_norm"),
-            lambda c: c.select(self.id_col, "bucket"),
+    def _stored_rows(self, df: DataFrame) -> DataFrame:
+        return self._assign(df, 1).select(
+            self.id_col, "_v", "_norm", F.col("cid").alias("bucket")
         )
+
+    def _extra_stats(self) -> dict:
+        return {**super()._extra_stats(), "n_cells": self.n_cells}

@@ -1804,15 +1804,12 @@ def streaming_embedding_ingest(spark, sf_dir):
     oracle unrolls the three epochs and replays bucketing, the multiprobe
     predicate, verification, survivor pick AND the absorb step.
 
-    SELF-MANAGED since r9 (VERDICT r8 #2): the sizing rule is wired INTO
-    the gate — ext/similarity.EmbeddingIngestGate checks mean bucket
-    occupancy after every absorb (tracked counts, no extra job) and
-    re-buckets the whole index wider when it crosses
-    PYPELN_SPARK_EMB_GATE_OCCUPANCY (default 0 = disabled HERE, because
-    the oracle replays the fixed n_planes=6 shape; the trigger itself is
-    driven by tests/test_streaming.py::test_embedding_gate_occupancy_trigger
-    on a growing synthetic stream, asserting the widen fires, decisions
-    match the never-widened gate, and candidate growth flattens)."""
+    The sizing rule is wired into the gate:
+    ext/similarity.EmbeddingIngestGate's ``occupancy_trigger`` re-buckets
+    the whole index wider when mean bucket occupancy crosses it. This
+    entry leaves the trigger off, because the oracle replays the fixed
+    n_planes=6 shape; tests/test_streaming.py::test_embedding_gate_occupancy_trigger
+    drives it on a growing synthetic stream."""
     import os
 
     from pyspark.sql import types as T
@@ -1855,9 +1852,6 @@ def streaming_embedding_ingest(spark, sf_dir):
 
     gate = S.EmbeddingIngestGate(
         index, root, DIM, N_PLANES, NEAR_DUP_T, probe_hamming=1,
-        occupancy_trigger=float(
-            os.environ.get("PYPELN_SPARK_EMB_GATE_OCCUPANCY", "0")
-        ),
         epoch_col=lambda: F.expr("CAST(((vec_id % 6) - 1) DIV 2 AS INT)"),
         # store-everything shape: the oracle replays every stored copy
         # (the class default is the deployment-rule ON since r13)

@@ -183,54 +183,9 @@ def tumbling(df: DataFrame, ts_col: str, duration: str) -> tp.Tuple[DataFrame, F
     return df, F.window(F.col(ts_col), duration)
 
 
-def _parse_stream_partitions() -> tp.Tuple[int, bool]:
-    """PYPELN_SPARK_STREAM_PARTITIONS: an int (the scope width), or
-    "auto" (r10, VERDICT r9 #6) — the scope still STARTS at the measured
-    default 4, and each ingest-gate micro-batch then re-sizes the width
-    from its own row count (autosize_stream_width)."""
-    v = os.environ.get("PYPELN_SPARK_STREAM_PARTITIONS", "4")
-    if v.strip().lower() == "auto":
-        return 4, True
-    return int(v), False
-
-
-STREAM_STATE_PARTITIONS, STREAM_WIDTH_AUTO = _parse_stream_partitions()
-
-# rows per shuffle task the r9 width curve identifies as the optimum
-# operating point (SCALING.md "The gates' scope-width curve"): sf0.1
-# epochs (~833 docs) measured best at width 4-8 → ceil(833/500)=2,
-# clamped to the 4 floor; sf1 epochs (~8333) best at 16 of {4,8,16,32}
-# → ceil(8333/500)=17. Below the floor, state/task-launch overhead
-# dominates (32 on tiny shuffles regressed 2.3x); the ceiling is
-# defaultParallelism — a real cluster epoch with millions of rows wants
-# every core.
-AUTO_WIDTH_TARGET_ROWS = 500
-
-
-def autosize_stream_width(spark: SparkSession, n_rows: int) -> int:
-    """Size this micro-batch's shuffle width from its row count when the
-    width knob is "auto"; otherwise report the scope's width unchanged.
-    Gates call this right after materializing the arriving batch (the
-    count is already paid), so every epoch's shuffles — band join,
-    verify repartition, groupBys — run at clamp(rows/500, 4,
-    defaultParallelism) instead of one static number that is only right
-    at one epoch volume. Setting the session conf inside foreachBatch is
-    safe here: the gates are the only planner of batch jobs inside the
-    stream, and the _stream_partitions scope restores the original conf
-    when the stream ends."""
-    if not STREAM_WIDTH_AUTO:
-        return shuffle_width(spark)
-    import math
-
-    w = max(
-        4,
-        min(
-            spark.sparkContext.defaultParallelism,
-            math.ceil(n_rows / AUTO_WIDTH_TARGET_ROWS),
-        ),
-    )
-    spark.conf.set("spark.sql.shuffle.partitions", str(w))
-    return w
+# the streaming scope's shuffle width (_stream_partitions): a deployment
+# setting, sized to key cardinality × throughput on a real cluster
+STREAM_STATE_PARTITIONS = int(os.environ.get("PYPELN_SPARK_STREAM_PARTITIONS", "4"))
 
 # applyInPandasWithState queries override to this: their per-batch cost is
 # Python-worker compute, which WANTS parallelism, not state-commit overhead,

@@ -1614,50 +1614,6 @@ def test_curated_ingest_composition(spark, tmp_path):
     assert out[11] == ("low_quality", None)  # empty doc gets a verdict row
 
 
-def test_autosize_stream_width(spark, monkeypatch):
-    """width=auto (VERDICT r9 #6): the per-epoch width is
-    clamp(ceil(rows/500), 4, defaultParallelism) — constants from the r9
-    measured curve (sf0.1 ~833-row epochs optimum 4-8; sf1 ~8333-row
-    epochs optimum 16; 32 on tiny shuffles regressed 2.3x) — applied to
-    the session conf so every epoch shuffle picks it up; static mode
-    reports the scope width untouched."""
-    key = "spark.sql.shuffle.partitions"
-    orig = spark.conf.get(key)
-    try:
-        monkeypatch.setattr(ST, "STREAM_WIDTH_AUTO", True)
-        cap = spark.sparkContext.defaultParallelism  # 8 in the test session
-        assert ST.autosize_stream_width(spark, 100) == 4  # floor
-        assert spark.conf.get(key) == "4"
-        want = max(4, min(cap, 17))  # ceil(8333/500) = 17 pre-clamp
-        assert ST.autosize_stream_width(spark, 8333) == want
-        assert spark.conf.get(key) == str(want)
-        assert ST.autosize_stream_width(spark, 10**9) == cap  # ceiling
-        monkeypatch.setattr(ST, "STREAM_WIDTH_AUTO", False)
-        spark.conf.set(key, "7")
-        assert ST.autosize_stream_width(spark, 10**9) == 7  # static: scope width
-    finally:
-        spark.conf.set(key, orig)
-
-
-def test_gate_decisions_invariant_under_auto_width(spark, monkeypatch):
-    """Width is LAYOUT, never semantics: the registry text gate run with
-    width=auto must emit exactly the default-width decision set."""
-    from pypeln_spark.ext import similarity as S
-    from pypeln_spark.queries import REGISTRY
-
-    sf = "/root/testdata/sf0.001"
-
-    def run():
-        S.drop_index()
-        return sorted(
-            map(tuple, REGISTRY["streaming_incremental_dedup"].fn(spark, sf).collect())
-        )
-
-    base = run()
-    monkeypatch.setattr(ST, "STREAM_WIDTH_AUTO", True)
-    assert run() == base
-
-
 def test_staged_feeds_arrive_as_single_micro_batches(spark):
     """The epoch-boundary guarantee, pinned (r9): a multi-partition feed
     used to commit N part-files by sequential rename while the idle
@@ -2360,16 +2316,18 @@ def test_gate_absorb_dedup_thins_index_and_keeps_decisions(spark, tmp_path):
             F.col("vec_id").between(1000, 1499)
         ).count()
         distinct_sh = idx.sh.filter(F.col("vec_id") >= 1500).count()
-        out = {
-            r.vec_id: (r.epoch, r.dup_of)
-            for r in spark.read.parquet(str(tmp_path / tag)).collect()
-        }
+        rows = spark.read.parquet(str(tmp_path / tag)).collect()
+        out = {r.vec_id: (r.epoch, r.dup_of) for r in rows}
+        absorbed = (
+            {r.vec_id for r in rows if r.epoch == 0 and r.absorbed}
+            if absorb_dedup else None
+        )
         D.retire_pipeline_caches()
         idx.close()
-        return out, cluster_sh, cluster_bands, distinct_sh
+        return out, cluster_sh, cluster_bands, distinct_sh, absorbed
 
-    plain, p_sh, p_b, p_d = run(False, "plain")
-    thin, t_sh, t_b, t_d = run(True, "thin")
+    plain, p_sh, p_b, p_d, _ = run(False, "plain")
+    thin, t_sh, t_b, t_d, t_abs = run(True, "thin")
 
     # store-everything keeps all 25 copies; absorb_dedup keeps exactly the
     # min-id representative — in BOTH index sides
@@ -2383,6 +2341,9 @@ def test_gate_absorb_dedup_thins_index_and_keeps_decisions(spark, tmp_path):
     assert thin == plain
     for j in range(4):
         assert thin[2000 + j] == (1, 1000)
+    # 'absorbed' names the stored rows: the cluster's min-id copy and the
+    # 5 distinct novels
+    assert t_abs == {1000} | {1500 + j for j in range(5)}
 
 
 def test_cells_gate_auto_nprobe_resolves_measured_rule(spark, tmp_path):
@@ -2740,3 +2701,114 @@ def test_live_serve_epoch_job_count(spark, tmp_path):
     index.close()
     cor.unpersist()
     assert len(jobs) == 6, sorted(jobs)
+
+
+GATE_EPOCH_JOBS = {
+    "text": 19,
+    "text_absorb_dedup": 24,
+    "text_capped": 20,
+    "hyperplane_comb": 12,
+    "cells_comb": 12,
+    "cells_two_frame": 16,
+    "cells_stats": 20,
+}
+
+
+@pytest.mark.parametrize("case", sorted(GATE_EPOCH_JOBS))
+def test_gate_epoch_job_count(spark, tmp_path, case):
+    """One ingest-gate epoch, after a warm first epoch, runs a fixed
+    number of Spark jobs per gate configuration. The gates share one
+    per-epoch body; the pieces each gate plugs in (probe, verify, absorb)
+    must not add or drop an action. Jobs are counted through a job group
+    set around the second epoch, the way the benchmark's tracer counts
+    them."""
+    import random
+
+    from pypeln_spark.ext import dedup as D
+    from pypeln_spark.ext import similarity as S
+
+    rng = random.Random(11)
+    root = str(tmp_path / "sink")
+    if case.startswith("text"):
+        from pypeln_spark.queries.dedup import BANDS, N_HASHES
+
+        words = [f"w{i}" for i in range(40)]
+        doc = lambda: " ".join(rng.choice(words) for _ in range(12))  # noqa: E731
+        corpus = [(i, doc()) for i in range(0, 60, 2)]
+        schema = "doc_id long, text string"
+        feeds = [
+            [(1000 + i, doc()) for i in range(10)] + [(1100, corpus[0][1])],
+            [(2000 + i, doc()) for i in range(10)]
+            + [(2100 + j, corpus[1][1]) for j in range(3)],
+        ]
+        cor_sh = D.pool_persist(
+            D.shingle_arrays(D.spread(spark.createDataFrame(corpus, schema)),
+                             "text", "doc_id", 5)
+        )
+        cor_sh.count()
+        cor_bands = D.lsh_band_table(
+            D.minhash_signatures_wide(cor_sh, "doc_id", N_HASHES),
+            "doc_id", BANDS, N_HASHES // BANDS,
+        )
+        index = D.IncrementalLshIndex(
+            cor_sh, cor_bands, bucket_cap=2 if case == "text_capped" else None
+        )
+        gate = D.TextIngestGate(
+            index, root, N_HASHES, BANDS, 5, 0.5,
+            absorb_dedup=case == "text_absorb_dedup",
+        )
+    else:
+        DIM, CELLS = 8, 8
+        vec = lambda: [rng.uniform(-1, 1) for _ in range(DIM)]  # noqa: E731
+        schema = "vec_id long, embedding array<float>"
+        corpus = [(i, vec()) for i in range(0, 80, 2)]
+        feeds = [
+            [(1000 + i, vec()) for i in range(10)] + [(1100, corpus[0][1])],
+            [(2000 + i, vec()) for i in range(10)]
+            + [(2100 + j, corpus[1][1]) for j in range(3)],
+        ]
+        base = spark.createDataFrame(corpus, schema)
+        nf = S.with_norms(S.spread(base))
+        if case == "hyperplane_comb":
+            cor = S.lsh_bucket(nf, "_v", 3, DIM).select(
+                "vec_id", "_v", "_norm", "bucket"
+            ).localCheckpoint(eager=True)
+        else:
+            cents = S.kmeans_centroids(base, CELLS, 2, train_mod=1)
+            cents = spark.createDataFrame(cents.collect(), cents.schema)
+            cor = S.ivf_assign(nf, cents, CELLS, keep=1).select(
+                "vec_id", "_v", "_norm", F.col("cid").alias("bucket")
+            ).localCheckpoint(eager=True)
+        index = D.IncrementalLshIndex(
+            cor.select("vec_id", "_v", "_norm"), cor.select("vec_id", "bucket"),
+            comb=None if case == "cells_two_frame" else cor,
+        )
+        if case == "hyperplane_comb":
+            gate = S.EmbeddingIngestGate(
+                index, root, DIM, n_planes=3, threshold=0.9, absorb_dedup=False,
+            )
+        else:
+            gate = S.CellEmbeddingIngestGate(
+                index, root, DIM, cents, CELLS, 0.9, nprobe=2,
+                absorb_dedup=False, collect_stats=case == "cells_stats",
+            )
+    frames = [
+        spark.createDataFrame(rows, schema).localCheckpoint(eager=True)
+        for rows in feeds
+    ]
+    sc = spark.sparkContext
+    group = f"gate-epoch-job-count-{case}"
+    gate(frames[0], 0)
+    prev = sc.getLocalProperty("spark.jobGroup.id")
+    sc.setLocalProperty("spark.jobGroup.id", group)
+    try:
+        gate(frames[1], 1)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", prev)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    dups = spark.read.parquet(root).filter(F.col("dup_of").isNotNull()).count()
+    D.retire_pipeline_caches()
+    index.close()
+    assert dups > 0
+    assert len(jobs) == GATE_EPOCH_JOBS[case], (case, len(jobs))

@@ -1,5 +1,5 @@
 """Time ONE registry query under the CURRENT environment — the arm
-runner for env-knob A/Bs (PYPELN_SPARK_STREAM_PARTITIONS=4|16|auto,
+runner for env-knob A/Bs (PYPELN_SPARK_STREAM_PARTITIONS=4|16,
 PYPELN_SPARK_INGEST_COMPACT_DIR, durable-vs-local entries...).
 Each arm runs in its own process because several knobs parse at import;
 the calling shell sets the env and sweeps the arms SEQUENTIALLY (the
