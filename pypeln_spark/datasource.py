@@ -34,6 +34,7 @@ from __future__ import annotations
 
 import base64
 import importlib
+import os
 import typing as tp
 
 from pyspark.sql import SparkSession
@@ -205,7 +206,29 @@ _REGISTERED_FLAG = "_pypeln_iterable_ds_registered"
 
 
 def ensure_registered(spark: SparkSession) -> None:
-    """Idempotently register the data source with this session's context."""
-    if not getattr(spark, _REGISTERED_FLAG, False):
+    """Idempotently register the data source with this session's context.
+
+    The source's Python processes unpickle ``IterableDataSource``, so they
+    must import this package; under a plain SparkSession (no get_spark
+    PYTHONPATH export) nothing else makes it importable. The package is
+    shipped with ``addPyFile``, which reaches the planner and the
+    executors, and the registered source's environment also names the
+    shipped zip on PYTHONPATH: the streaming source runner, a driver-side
+    process, is not handed the context's py-files."""
+    from .session import ship_package
+
+    if getattr(spark, _REGISTERED_FLAG, False):
+        return
+    env = spark.sparkContext.environment
+    saved = env.get("PYTHONPATH")
+    env["PYTHONPATH"] = os.pathsep.join(
+        p for p in (ship_package(spark), saved) if p
+    )
+    try:
         spark.dataSource.register(IterableDataSource)
-        setattr(spark, _REGISTERED_FLAG, True)
+    finally:
+        if saved is None:
+            del env["PYTHONPATH"]
+        else:
+            env["PYTHONPATH"] = saved
+    setattr(spark, _REGISTERED_FLAG, True)

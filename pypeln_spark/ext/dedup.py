@@ -26,6 +26,10 @@ reproducible cross-engine; the DuckDB oracles replay the identical pipeline.
 
 from __future__ import annotations
 
+import dataclasses
+import functools
+import json
+import os
 import typing as tp
 
 from pyspark.sql import DataFrame, Window, functions as F
@@ -753,59 +757,63 @@ def dedup_against_corpus(
     )
 
 
+@dataclasses.dataclass
+class _Side:
+    """One index side: an immutable base frame plus the one lineage-cut
+    level leaf every absorb merges into, and under ``checkpoint_dir`` the
+    files that hold them."""
+
+    base: DataFrame
+    level: tp.Optional[DataFrame] = None
+    base_file: tp.Optional[str] = None
+    level_file: tp.Optional[str] = None
+
+    def view(self) -> DataFrame:
+        return self.base if self.level is None else self.base.unionByName(self.level)
+
+
 class IncrementalLshIndex:
     """LSH index state for a continuously-absorbing dedup gate (the
     streaming ingest gates, queries/streaming.py).
 
-    The index is a pair of frames — shingle or vector rows (``sh``) and
-    band rows (``bands``) — plus, optionally, a combined view (``comb``)
-    holding both sides' columns in one row, the inverted-list layout a
-    one-join verify reads. Every ``absorb`` / ``absorb_combined`` merges
-    the epoch's novel rows into the index at once through ``compact()``:
-    the new rows are never left as a separate plan leaf, so the analyzed
-    plan of every view stays at a fixed leaf count however long the
-    stream runs, and rows reach the index only through a lineage cut (an
+    The index is a set of named SIDES, each an immutable base frame plus
+    one lineage-cut level leaf. A text index has two sides, ``sh``
+    (shingle rows) and ``bands`` (band rows). An embedding index, built
+    with ``comb=``, has one side, ``comb``: the sh and band columns in one
+    row, (id, _v, _norm, bucket), the IVF layout in which an inverted
+    list stores each vector with its cell. ``sh``, ``bands`` and ``comb``
+    are views. On a text index they are the sides (``comb`` is None); on
+    an embedding index ``comb`` is the side and ``sh``/``bands`` are its
+    projections onto the columns of the ``sh``/``bands`` frames the
+    constructor received.
+
+    Every absorb merges the epoch's novel rows at once through
+    ``compact()``. Rows reach the index only through a lineage cut, so
+    each view stays at two plan leaves however long the stream runs (an
     uncut delta derives from the decisions join against the previous
-    index, so a chain of them nests every earlier epoch's plan — about
-    2^epochs plan size, which exhausted the driver heap on plan strings
-    in the 12-epoch knee run, SCALING.md "Compaction knee at depth").
-    Decisions do not depend on the layout: compaction moves rows and
-    never changes them.
+    index, and a chain of them nests every earlier epoch's plan,
+    SCALING.md "Compaction knee at depth"). One rule applies to each side:
 
-    What the merge materializes is chosen by the constructor arguments:
+    - with ``bucket_cap`` set, the side that carries the band key
+      (``bands`` or ``comb``) becomes materialize(cap(view ∪ new)), a new
+      base with no level;
+    - every other side's level becomes materialize(level ∪ new), so a
+      merge costs ∝ rows absorbed so far, never ∝ the corpus.
 
-    - **Leveled merge** (no ``bucket_cap``, no ``checkpoint_dir``): the
-      caller's BASE frames stay immutable, and each absorb materializes
-      (localCheckpoint) the previous LEVEL leaf plus the new rows into
-      one new level leaf per side — one leaf in total under
-      ``absorb_combined``. Views are base ∪ level: two leaves per side.
-      A merge costs ∝ rows absorbed so far, never ∝ the corpus.
-    - **Full-union rewrite** (``bucket_cap`` set): capping is iterated —
-      the rank filter runs over base and new rows together, so rows an
-      earlier merge evicted never come back and every bucket holds ≤ cap
-      rows after each absorb. The whole index is rewritten per absorb.
-    - **Durable generation chain** (``checkpoint_dir``, uncapped): the
-      same leveled merge, materialized as parquet under the directory
-      instead of block-manager blocks (which are lost with their
-      executor). Each side's base is copied once (``<side>_base``), each
-      absorb replaces the side's one numbered level file, and
-      ``MANIFEST.json`` is published atomically before superseded files
-      are removed — a crash leaks a file, never loses data.
-      ``recover()`` rebuilds the index from the manifest alone. With
-      ``bucket_cap`` the durable files are full rewrites.
+    A merge moves rows and never changes them; only the cap drops rows.
 
-    The schedule is fixed at one merge per absorb. A deferred merge
-    (every K absorbs) still needs a lineage cut per epoch, so it pays one
-    materialization job per epoch anyway and only adds plan leaves; the
-    K>1 and ratio-driven schedules were tuned against a corpus-sized
-    rewrite per merge, which the leveled merge replaced (SCALING.md
-    "Compaction knee at depth" and "Schedule fixed at one merge per
-    absorb"). ``compact_every`` is accepted only as 1.
+    ``checkpoint_dir`` changes only what materialize produces: a parquet
+    directory under it instead of a localCheckpoint (whose blocks are
+    lost with their executor). A leveled side's base is copied once
+    (``<side>_base``), each merge replaces the side's one numbered file,
+    and ``MANIFEST.json`` naming the live files is published atomically
+    before superseded files are removed: a crash leaks a file, never
+    loses data. ``recover()`` rebuilds (sh, bands) from the manifest
+    alone.
 
-    Two absorb modes exist and one index uses one of them: ``absorb``
-    (separate sh and band frames) and ``absorb_combined`` (one frame
-    carrying both, materialized once). Capped and durable indexes run
-    ``absorb_combined`` through the two-frame path.
+    The schedule is fixed at one merge per absorb (SCALING.md "Schedule
+    fixed at one merge per absorb"); ``compact_every`` is accepted only
+    as 1.
 
     The index never releases a frame the caller passed in; ``close()``
     releases the blocks of every leaf the index cut itself."""
@@ -829,98 +837,87 @@ class IncrementalLshIndex:
         # star cap. A sub-threshold template family (pages similar enough
         # to share band signatures but below the dup threshold, so every
         # one is kept and absorbed) grows its buckets ∝ family size, and
-        # every later epoch's candidate join pays that width. With a cap,
-        # the band view keeps only the bucket_cap LOWEST-id rows per
-        # (band-key) bucket — applied lazily to the initial base here and
-        # re-applied to the whole union at every absorb, so width stays
-        # ≤ cap forever. Keeping the LOWEST ids makes the cap
+        # every later epoch's candidate join pays that width; a cluster of
+        # identical vectors shares one bucket at any hyperplane width or
+        # centroid set. With a cap, the band-key side keeps only the
+        # bucket_cap LOWEST-id rows per bucket — applied lazily to the
+        # initial base here and re-applied at every merge and rebuild, so
+        # width stays ≤ cap forever. Keeping the LOWEST ids makes the cap
         # decision-invariant for exact-dup traffic: the min-id member (the
         # survivor pick's target) always survives capping, so
-        # dup_of/jaccard match the uncapped gate bit-for-bit on any doc
-        # that matches a surviving member. The trade is recall on
-        # near-dups whose ONLY matching members were evicted
-        # (test-pinned); the embedding gate manages occupancy by widening
-        # planes instead and does not use this knob. Convention: the band
+        # dup_of/score match the uncapped gate bit-for-bit on any row that
+        # matches a surviving member. The trade is recall on near-dups
+        # whose ONLY matching members were evicted (test-pinned). A text
+        # index keeps every shingle row; an embedding index caps its one
+        # side, so an evicted vector (unreachable by every probe, having
+        # exactly one bucket row) leaves the store. Convention: the band
         # frame's FIRST column is the id; all other columns form the
         # bucket key ((sigh, sig) for MinHash band tables).
         self.bucket_cap = bucket_cap
-        self.sh = sh
-        self.bands = self._cap_bands(bands)
         self.checkpoint_dir = checkpoint_dir
-        self._n_rows: tp.Optional[int] = None  # lazy; reset by every absorb
+        self._n_rows: tp.Optional[int] = None  # lazy; reset by every merge
         self._cut: list = []  # in-session leaves this index cut (close())
-        # durable state: file sequence, each side's live numbered file
-        # (None until the side's first durable write) and its one-time
-        # base copy
-        self._seq = 0
-        self._ckpt_sh: tp.Optional[str] = None
-        self._ckpt_bands: tp.Optional[str] = None
-        self._base_ckpt: dict = {}
-        # leveled state: the immutable BASE frames and one LEVEL leaf per
-        # side holding every absorbed row; self.sh / self.bands are the
-        # consumer-facing unions
-        self._base_sh = self.sh
-        self._base_bands = self.bands
-        self._lvl_sh: tp.Optional[DataFrame] = None
-        self._lvl_bands: tp.Optional[DataFrame] = None
-        # combined-absorb state: the level leaf carries both sides'
-        # columns; _comb_seq tags every combined row with its absorb
-        # ordinal and _band_wm is the rebuild watermark — rows with
-        # _abseq <= _band_wm are already covered by a rebuilt band base
-        # and must not contribute band rows again
-        self._lvl_comb: tp.Optional[DataFrame] = None
-        self._comb_seq = 0
-        self._band_wm = 0
-        self._sh_project = None
-        self._band_project = None
-        # consumer-facing COMBINED view: when the caller's base frame
-        # already carries sh AND band columns together (the gates'
-        # build_index output) and every absorb goes through
-        # absorb_combined, ``self.comb`` stays a live base ∪ level union
-        # of full rows, so a gate verify can run as ONE probe-vs-index
-        # join. None under bucket_cap / checkpoint_dir (those absorbs take
-        # the two-frame path and would leave the view stale), and dropped
-        # by a two-frame rebuild_bands (rebuild_combined keeps it live).
-        self.comb = (
-            None if (bucket_cap is not None or checkpoint_dir) else comb
-        )
-        self._base_comb = self.comb
+        self._seq = 0  # durable file sequence
+        if comb is None:
+            self._cols = None
+            self._sides = {"sh": _Side(sh), "bands": _Side(bands)}
+        else:
+            self._cols = {"sh": sh.columns, "bands": bands.columns}
+            cols = dict.fromkeys(sh.columns + bands.columns)
+            self._sides = {"comb": _Side(comb.select(*cols))}
+        key = self._sides["bands" if comb is None else "comb"]
+        key.base = self._cap(key.base)
+
+    def _project(self, name: str) -> DataFrame:
+        if self._cols is None:
+            return self._sides[name].view()
+        return self._sides["comb"].view().select(*self._cols[name])
+
+    @property
+    def sh(self) -> DataFrame:
+        """The shingle or vector rows: (id, sh_arr) or (id, _v, _norm)."""
+        return self._project("sh")
+
+    @property
+    def bands(self) -> DataFrame:
+        """The band rows: (id, <bucket key>)."""
+        return self._project("bands")
+
+    @property
+    def comb(self) -> tp.Optional[DataFrame]:
+        """An embedding index's (id, _v, _norm, bucket) rows; None on a
+        text index."""
+        return None if self._cols is None else self._sides["comb"].view()
 
     def size(self) -> int:
-        """Row count of the index: counts ``sh`` (base + level) once after
-        each absorb and serves the cached count until the next one."""
+        """Row count of the index: counts ``sh`` once after each merge and
+        serves the cached count until the next one."""
         if self._n_rows is None:
             self._n_rows = self.sh.count()
         return self._n_rows
 
-    def _cap_bands(self, bands: DataFrame) -> DataFrame:
-        """Rank-filter the band frame to the bucket_cap lowest-id rows per
-        bucket (no-op without a cap). One hash shuffle of the skinny band
-        table — paid lazily at init and once per compact(), never per
-        probe."""
+    def _cap(self, df: DataFrame) -> DataFrame:
+        """Rank-filter a band-key frame (``bands``, or ``comb`` by the band
+        columns) to the bucket_cap lowest-id rows per bucket (no-op
+        without a cap). One hash shuffle, paid lazily at init and once per
+        merge, never per probe."""
         if self.bucket_cap is None:
-            return bands
-        idc = bands.columns[0]
-        key = [c for c in bands.columns if c != idc]
+            return df
+        cols = df.columns if self._cols is None else self._cols["bands"]
+        idc, key = cols[0], cols[1:]
         # the first-column-is-id convention is validated, not trusted: a
-        # misordered frame would otherwise silently cap by the wrong key
-        # (ADVICE r10). The one unambiguous misorder signal is a frame
-        # whose FIRST column is not id-shaped while a later column is
-        # ((sigh, doc_id, sig) — the exact frame the advice described);
-        # frames with no `*_id` column anywhere keep the documented
-        # positional trust (an exotic id name is the caller's convention,
-        # and refusing it would regress previously-valid usage). A bare
-        # "id" first column is id-shaped too (ADVICE r11: (id, band_id,
-        # sig) is legitimately ordered — band_id is a bucket key, not the
-        # row id — and must not trip the misorder guard) — UNLESS the
-        # index's OWN id column (the sh frame's first column) appears
-        # later in the frame (ADVICE r12: (id, doc_id, sig) against a
-        # doc_id-keyed index is the misorder, not a bucket-key naming
-        # choice — bare "id" must not launder it past the guard).
-        index_id = self.sh.columns[0] if self.sh is not None else None
+        # misordered frame would otherwise silently cap by the wrong key.
+        # The one unambiguous misorder signal is a frame whose first
+        # column is not id-shaped while a later column is ((sigh, doc_id,
+        # sig)). Frames with no `*_id` column anywhere keep the positional
+        # trust, since an exotic id name is the caller's convention. A
+        # bare "id" first column is id-shaped too ((id, band_id, sig) is
+        # ordered: band_id is a bucket key), unless the index's own id
+        # column (the sh frame's first column) appears later in the frame:
+        # (id, doc_id, sig) against a doc_id-keyed index is the misorder.
+        index_id = self.sh.columns[0]
         bare_id_shadows_real_id = (
-            idc == "id" and index_id is not None
-            and index_id != "id" and index_id in key
+            idc == "id" and index_id != "id" and index_id in key
         )
         if bare_id_shadows_real_id or (
             idc != "id" and not idc.endswith("_id")
@@ -928,132 +925,26 @@ class IncrementalLshIndex:
         ):
             raise ValueError(
                 "IncrementalLshIndex: band frame must lead with the id "
-                f"column (got columns {bands.columns}; a '*_id' column "
-                "appears after a non-id first column) — refusing to cap "
-                "by a misinferred bucket key"
+                f"column (got columns {cols}; a '*_id' column appears "
+                "after a non-id first column) — refusing to cap by a "
+                "misinferred bucket key"
             )
         w = Window.partitionBy(*key).orderBy(F.col(idc))
         return (
-            bands.withColumn("_rnk", F.row_number().over(w))
+            df.withColumn("_rnk", F.row_number().over(w))
             .filter(F.col("_rnk") <= self.bucket_cap)
             .drop("_rnk")
         )
 
     def absorb(self, nov_sh: DataFrame, nov_bands: DataFrame) -> None:
-        """Merge one epoch's novel rows — a shingle/vector frame and its
-        band frame — into the index through ``compact()``."""
-        if self._lvl_comb is not None:
-            raise RuntimeError(
-                "IncrementalLshIndex: classic absorb() after "
-                "absorb_combined() — one index must use one absorb mode"
-            )
-        self._n_rows = None
+        """Merge one epoch's novel rows into a text index — a shingle
+        frame and its band frame — through ``compact()``."""
         self.compact(nov_sh, nov_bands)
 
-    def absorb_combined(self, comb: DataFrame, sh_project, band_project) -> None:
-        """Merge one epoch's novel rows from ONE combined frame carrying
-        both sides' columns: the sh and band rows of an ingest-gate epoch
-        derive from the same novel frame, so the combined frame
-        materializes once and both views are narrow projections of the
-        level leaf — the real index layout (an IVF inverted list stores
-        the vector WITH its cell).
-
-        ``sh_project(comb)`` must produce exactly the base sh frame's
-        columns; ``band_project(comb)`` the base band frame's. Rows are
-        identical to ``absorb(sh_project(comb), band_project(comb))`` —
-        only the leaf layout differs — and that classic call is what runs
-        under bucket_cap (capping iterates over flat band rows) or
-        checkpoint_dir (the durable files are per side)."""
-        if self.bucket_cap is not None or self.checkpoint_dir:
-            self.absorb(sh_project(comb), band_project(comb))
-            return
-        if self._lvl_sh is not None:
-            raise RuntimeError(
-                "IncrementalLshIndex: absorb_combined() after classic "
-                "absorb() — one index must use one absorb mode"
-            )
-        self._sh_project, self._band_project = sh_project, band_project
-        self._comb_seq += 1
-        self._n_rows = None
-        self.compact(
-            new_comb=comb.withColumn("_abseq", F.lit(self._comb_seq).cast("int"))
-        )
-
-    def _materialize(self, df: DataFrame, side: str) -> DataFrame:
-        """One lineage-cut materialization: localCheckpoint (default; the
-        leaf is kept for close()) or, with checkpoint_dir set, a durable
-        parquet write+read under ``<dir>/<side>_<seq>``."""
-        if not self.checkpoint_dir:
-            cut = df.localCheckpoint(eager=True)
-            self._cut.append(cut)
-            return cut
-        self._seq += 1
-        path = self.checkpoint_dir.rstrip("/") + f"/{side}_{self._seq:05d}"
-        df.write.mode("overwrite").parquet(path)
-        setattr(self, f"_ckpt_{side}", path)
-        return df.sparkSession.read.parquet(path)
-
-    def _level(self, level: tp.Optional[DataFrame], new: DataFrame, side: str):
-        """The side's new level leaf: the previous level plus ``new``."""
-        return self._materialize(
-            new if level is None else level.unionByName(new), side
-        )
-
-    def _ensure_durable_base(self, side: str, df: DataFrame) -> None:
-        """Write this side's BASE copy once: later absorbs write only the
-        level file. Serving keeps reading the in-session base frames; the
-        disk copy exists for recovery."""
-        if side in self._base_ckpt:
-            return
-        path = self.checkpoint_dir.rstrip("/") + f"/{side}_base"
-        df.write.mode("overwrite").parquet(path)
-        self._base_ckpt[side] = path
-
-    def _write_manifest(self) -> None:
-        """Atomically publish the live durable file set: recovery = the
-        union of each side's listed files, in any order. Written after
-        every durable mutation, BEFORE superseded files are removed — a
-        crash between the two leaks files, never loses data.
-        Local/shared-POSIX paths only; under a URI root the deployment's
-        table format carries the manifest role instead."""
-        if not self.checkpoint_dir or "://" in self.checkpoint_dir:
-            return
-        import json as _json
-        import os as _os
-
-        m = {
-            side: [
-                p
-                for p in (self._base_ckpt.get(side), getattr(self, f"_ckpt_{side}"))
-                if p is not None
-            ]
-            for side in ("sh", "bands")
-        }
-        path = _os.path.join(self.checkpoint_dir, "MANIFEST.json")
-        tmp = path + ".inprogress"
-        with open(tmp, "w") as f:
-            f.write(_json.dumps(m))
-        _os.rename(tmp, path)
-
-    @staticmethod
-    def recover(spark, checkpoint_dir: str):
-        """Rebuild (sh, bands) from the durable dir ALONE — the
-        executor-loss recovery path: read the manifest and union each
-        side's live files (base copy + level file). No session state is
-        consulted."""
-        import json as _json
-        import os as _os
-
-        with open(_os.path.join(checkpoint_dir, "MANIFEST.json")) as f:
-            m = _json.load(f)
-        out = []
-        for side in ("sh", "bands"):
-            dfs = [spark.read.parquet(p) for p in m[side]]
-            df = dfs[0]
-            for d in dfs[1:]:
-                df = df.unionByName(d)
-            out.append(df)
-        return tuple(out)
+    def absorb_combined(self, comb: DataFrame) -> None:
+        """Merge one epoch's novel (id, _v, _norm, bucket) rows into an
+        embedding index through ``compact()``."""
+        self.compact(new_comb=comb)
 
     def compact(
         self,
@@ -1061,143 +952,125 @@ class IncrementalLshIndex:
         new_bands: tp.Optional[DataFrame] = None,
         new_comb: tp.Optional[DataFrame] = None,
     ) -> None:
-        """Merge absorbed rows into the index and drop superseded durable
-        files. ``absorb`` passes its two frames, ``absorb_combined`` its
-        combined frame; called without rows, an uncapped index is already
-        merged and keeps its layout, a capped one re-applies the cap.
-
-        Leveled (uncapped): the side's level leaf becomes
-        materialize(level ∪ new) and the view becomes base ∪ level; a
-        durable index first writes its base copy once. Capped: the view
-        becomes materialize(cap(view ∪ new)) and is the new base. Under
-        checkpoint_dir the manifest naming the new files is published
-        before the files they replace are removed."""
-        if new_comb is not None or self._lvl_comb is not None:
-            if new_comb is None:
-                return
-            # ONE materialization refreshes both sides; the band view
-            # keeps only rows absorbed after the last rebuild_bands (the
-            # rebuilt base already covers older rows)
-            self._lvl_comb = self._level(self._lvl_comb, new_comb, "comb")
-            lvl = self._lvl_comb.drop("_abseq")
-            live = self._lvl_comb.filter(F.col("_abseq") > self._band_wm)
-            self.sh = self._base_sh.unionByName(self._sh_project(lvl))
-            self.bands = self._base_bands.unionByName(
-                self._band_project(live.drop("_abseq"))
+        """Merge new rows into their sides by the class rule (a capped
+        band-key side: materialize(cap(view ∪ new)); any other side:
+        level = materialize(level ∪ new)), then publish the manifest and
+        drop superseded durable files. A side given no rows keeps its
+        layout."""
+        new = {"sh": new_sh, "bands": new_bands, "comb": new_comb}
+        given = {name for name, rows in new.items() if rows is not None}
+        if not given <= self._sides.keys():
+            raise ValueError(
+                f"IncrementalLshIndex: rows for sides {sorted(given)}, but "
+                f"the index has sides {sorted(self._sides)}"
             )
-            if self._base_comb is not None:
-                self.comb = self._base_comb.unionByName(lvl)
+        stale = []
+        for name, side in self._sides.items():
+            rows = new[name]
+            if rows is None:
+                continue
+            if self.bucket_cap is not None and name != "sh":
+                stale += [side.base_file, side.level_file]
+                base, path = self._materialize(
+                    self._cap(side.view().unionByName(rows)), name
+                )
+                self._sides[name] = _Side(base, base_file=path)
+                continue
+            if self.checkpoint_dir and side.base_file is None:
+                side.base_file = self._write(side.base, f"{name}_base")
+            stale.append(side.level_file)
+            side.level, side.level_file = self._materialize(
+                rows if side.level is None else side.level.unionByName(rows),
+                name,
+            )
+        self._publish(stale)
+
+    def rebuild_combined(self, comb: DataFrame) -> None:
+        """Replace an embedding index's whole ``comb`` side with a freshly
+        derived (id, _v, _norm, bucket) frame: the cells gate's retrain
+        re-assignment and the hyperplane gate's occupancy widen, each one
+        narrow pass over the stored vectors (the standard IVF rebuild:
+        re-add rewrites the lists, and the lists store vectors). The
+        frame is re-capped under the new bucket geometry, materialized
+        (it must not re-derive from the side it replaces) and becomes the
+        side's base."""
+        old = self._sides["comb"]
+        base, path = self._materialize(self._cap(comb), "comb")
+        self._sides["comb"] = _Side(base, base_file=path)
+        self._publish([old.base_file, old.level_file])
+
+    def _materialize(self, df: DataFrame, side: str):
+        """One lineage cut, as (frame, durable file or None): a
+        localCheckpoint (kept for close()) or, under checkpoint_dir, a
+        parquet write and read of ``<dir>/<side>_<seq>``."""
+        if not self.checkpoint_dir:
+            cut = df.localCheckpoint(eager=True)
+            self._cut.append(cut)
+            return cut, None
+        self._seq += 1
+        path = self._write(df, f"{side}_{self._seq:05d}")
+        return df.sparkSession.read.parquet(path), path
+
+    def _write(self, df: DataFrame, name: str) -> str:
+        path = self.checkpoint_dir.rstrip("/") + "/" + name
+        df.write.mode("overwrite").parquet(path)
+        return path
+
+    def _publish(self, stale: list) -> None:
+        """After a merge or rebuild: publish the live durable file set in
+        MANIFEST.json (an atomic rename), then remove the superseded
+        files, so a crash between the two leaks files and never loses
+        data. Recovery is the union of each side's listed files. The
+        manifest is written for local/shared-POSIX paths only; under a URI
+        root the deployment's table format carries its role."""
+        self._n_rows = None
+        if not self.checkpoint_dir:
             return
-        old = (self._ckpt_sh, self._ckpt_bands)
-        if self.bucket_cap is None:
-            if self.checkpoint_dir:
-                self._ensure_durable_base("sh", self._base_sh)
-                self._ensure_durable_base("bands", self._base_bands)
-            if new_sh is not None:
-                self._lvl_sh = self._level(self._lvl_sh, new_sh, "sh")
-                self.sh = self._base_sh.unionByName(self._lvl_sh)
-            if new_bands is not None:
-                self._lvl_bands = self._level(self._lvl_bands, new_bands, "bands")
-                self.bands = self._base_bands.unionByName(self._lvl_bands)
-        else:
-            sh = self.sh if new_sh is None else self.sh.unionByName(new_sh)
-            bands = (
-                self.bands if new_bands is None
-                else self.bands.unionByName(new_bands)
-            )
-            self.sh = self._base_sh = self._materialize(sh, "sh")
-            self.bands = self._base_bands = self._materialize(
-                self._cap_bands(bands), "bands"
-            )
-        dropped = [
-            o for o, n in zip(old, (self._ckpt_sh, self._ckpt_bands))
-            if o is not None and o != n
-        ]
-        self._write_manifest()
-        if dropped:
-            from pypeln_spark.streaming import remove_sink_dir
+        if "://" not in self.checkpoint_dir:
+            m: dict = {
+                name: [p for p in (s.base_file, s.level_file) if p is not None]
+                for name, s in self._sides.items()
+            }
+            if self._cols is not None:
+                m["columns"] = self._cols
+            path = os.path.join(self.checkpoint_dir, "MANIFEST.json")
+            with open(path + ".inprogress", "w") as f:
+                json.dump(m, f)
+            os.rename(path + ".inprogress", path)
+        from pypeln_spark.streaming import remove_sink_dir
 
-            for p in dropped:
-                remove_sink_dir(self.sh.sparkSession, p)
+        spark = next(iter(self._sides.values())).base.sparkSession
+        for p in stale:
+            if p is not None:
+                remove_sink_dir(spark, p)
 
-    def rebuild_bands(self, bands: DataFrame) -> None:
-        """Replace the ENTIRE band side with a freshly derived table — the
-        embedding gate's occupancy-triggered re-bucket: the index stores
-        vectors in ``sh``, so one narrow pass (lsh_bucket over sh at a
-        wider n_planes) yields the band table a from-scratch wider index
-        would hold (prefix-stable planes; equivalence pinned by
-        tests/test_streaming.py::test_embedding_index_rebucket_widens_mid_stream).
-        The new table materializes (a lineage cut — it must not re-derive
-        from the band level it replaces) and becomes the band-side base;
-        the band level resets and the sh side stays untouched.
+    @staticmethod
+    def recover(spark, checkpoint_dir: str):
+        """Rebuild (sh, bands) from the durable dir ALONE — the
+        executor-loss recovery path: read the manifest and union each
+        side's live files (base copy + level file); an embedding index's
+        views are projections of its ``comb`` side. No session state is
+        consulted."""
+        with open(os.path.join(checkpoint_dir, "MANIFEST.json")) as f:
+            m = json.load(f)
 
-        With bucket_cap set the rebuilt table is re-capped under the NEW
-        bucket geometry before materializing: a rebuild derives from the
-        UNCAPPED sh side, so rows an earlier cap evicted reappear — right
-        for buckets the wider geometry actually splits, but a cluster of
-        IDENTICAL vectors shares every bucket at any width (widening
-        cannot split it; the occupancy trigger's one blind spot), and
-        only the cap keeps its probed width bounded."""
-        old_lvl = self._ckpt_bands
-        new_bands = self._materialize(self._cap_bands(bands), "bands")
-        self.bands = self._base_bands = new_bands
-        self._lvl_bands = None
-        # combined mode: every row absorbed so far is band-covered by the
-        # rebuilt table — advance the watermark so a later merge derives
-        # band rows only from newer absorbs
-        self._band_wm = self._comb_seq
-        # the rebuild leaves any combined view's bucket column STALE —
-        # drop the view; consumers fall back to the two-frame joins
-        # (rebuild_combined is the view-preserving rebuild)
-        self.comb = None
-        self._base_comb = None
-        if self.checkpoint_dir:
-            # the rebuilt table supersedes the band-side base copy AND the
-            # band level file: it becomes the new band-side base in the
-            # manifest; superseded files go only after the manifest lands
-            from pypeln_spark.streaming import remove_sink_dir
+        def read(side: str) -> DataFrame:
+            dfs = [spark.read.parquet(p) for p in m[side]]
+            return functools.reduce(DataFrame.unionByName, dfs)
 
-            old_base = self._base_ckpt.pop("bands", None)
-            self._base_ckpt["bands"] = self._ckpt_bands
-            self._ckpt_bands = None
-            self._write_manifest()
-            for p in (old_lvl, old_base):
-                if p is not None:
-                    remove_sink_dir(new_bands.sparkSession, p)
-
-    def rebuild_combined(self, comb: DataFrame, sh_project, band_project) -> None:
-        """The view-preserving whole-index rebuild: replace the entire
-        index with one freshly derived COMBINED frame — the cells gate's
-        retrain re-assignment (ivf_assign keep=1 over index.sh already
-        returns id, _v, _norm, cid) and the hyperplane gate's occupancy
-        widen (lsh_bucket over index.sh keeps the vector columns) both
-        produce exactly this shape, so materializing it is the same single
-        pass a band rebuild runs, writing the vectors alongside (the
-        standard IVF rebuild: re-add rewrites the lists, and the lists
-        store vectors). The index collapses to one leaf, which becomes
-        the base of both views."""
-        if self.bucket_cap is not None or self.checkpoint_dir:
-            raise RuntimeError(
-                "rebuild_combined requires the in-session uncapped index "
-                "(bucket_cap / checkpoint_dir keep classic per-side state)"
-            )
-        new_comb = self._materialize(comb, "comb")
-        self._lvl_sh = self._lvl_bands = self._lvl_comb = None
-        self._sh_project, self._band_project = sh_project, band_project
-        self.comb = self._base_comb = new_comb
-        self.sh = self._base_sh = sh_project(new_comb)
-        self.bands = self._base_bands = band_project(new_comb)
-        self._band_wm = self._comb_seq
+        if "comb" in m:
+            comb = read("comb")
+            return tuple(comb.select(*m["columns"][n]) for n in ("sh", "bands"))
+        return read("sh"), read("bands")
 
     def close(self) -> None:
         """Release the blocks of every leaf this index cut in session —
-        level leaves, rebuilt bases, capped compacted bases — including
-        leaves a later merge superseded. Frames the caller passed in are
-        never touched, and durable files under checkpoint_dir are the
-        deployment's index state and stay in place. A checkpointed
-        frame's ``unpersist()`` is a no-op, so the release goes to the
-        checkpointed RDD under the leaf's plan. The index's views are
-        unusable afterwards."""
+        level leaves, rebuilt and capped bases — including leaves a later
+        merge superseded. Frames the caller passed in are never touched,
+        and durable files under checkpoint_dir are the deployment's index
+        state and stay in place. A checkpointed frame's ``unpersist()`` is
+        a no-op, so the release goes to the checkpointed RDD under the
+        leaf's plan. The index's views are unusable afterwards."""
         for df in self._cut:
             df._jdf.queryExecution().analyzed().rdd().unpersist(False)
         self._cut = []
@@ -1358,8 +1231,8 @@ class TextIngestGate(IngestGate):
     far smaller than the batch (caching the flooded batch's bands cost
     about +1 s on the flood row).
 
-    The absorb stays two-frame (``index.absorb``): a combined (sh_arr,
-    bands) leaf measured +15% on this gate, because the checkpointed leaf
+    The index keeps the text layout, two sides (``index.absorb``): a
+    combined (sh_arr, bands) leaf measured +15% on this gate, because the checkpointed leaf
     is row-stored and every later band probe then deserializes the fat
     shingle arrays. The band join + verify also keeps its shuffle shape: a
     probe-side-broadcast variant needed two guard-count jobs per epoch and

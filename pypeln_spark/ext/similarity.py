@@ -1777,10 +1777,10 @@ def probe_side_join(
 
 
 def serving_nprobe(n_cells: int, recall_target: float = 0.5) -> int:
-    """Resolve the ANN top-k SERVING gate's nprobe from a recall target
-    (VERDICT r11 #5 — the serving twin of CellEmbeddingIngestGate's
-    nprobe="auto", which resolves from the dedup THRESHOLD; serving has
-    no threshold, so its dial is the caller's recall@k target).
+    """Resolve the ANN top-k SERVING gate's nprobe from a recall target:
+    the serving twin of CellEmbeddingIngestGate's nprobe="auto", which
+    resolves from the dedup THRESHOLD; serving has no threshold, so its
+    dial is the caller's recall@k target.
 
     The rule is the measured partition physics, not a free parameter:
     top-k IVF recall is governed by how much of the corpus the probed
@@ -1825,9 +1825,8 @@ def live_topk_serve(
     cents_lits=None,
 ) -> tp.Optional[DataFrame]:
     """One query micro-batch served top-k against a LIVE cells index
-    (an IncrementalLshIndex whose sh side stores (id, _v, _norm), whose
-    bands side stores (id, cell) and whose optional combined view stores
-    (id, _v, _norm, cell)) — the serve body shared by the registry entry
+    (an IncrementalLshIndex whose ``comb`` side stores (id, _v, _norm,
+    cell)) — the serve body shared by the registry entry
     `streaming_ann_topk_serving_live` and perfbench's `ann_live_serve`.
 
     nprobe resolves from the CURRENT geometry via serving_nprobe (a
@@ -1841,18 +1840,16 @@ def live_topk_serve(
     broadcasts the centroid frame instead, for centroids that are not
     materialized artifacts. Values are identical either way.
 
-    With a combined view, the guarded probe broadcast (probe_side_join)
-    lands on it directly and cos is computed in the same pass: one join.
-    Without one the join runs in TWO guarded stages so the corpus never
-    moves while the estimates fit: (1) probes against the SKINNY band
-    view → candidates; (2) the COUNTED candidate frame against the vector
-    side → verify. Past the threshold either stage degrades to the
-    bounded shuffle_hash build. Index views are base + the one
-    lineage-cut level leaf every absorb merges into — a two-leaf read,
-    never a re-derivation. Returns (query_id, neighbor_id, cos, rank ≤ k)
-    or None on an empty batch; the caller labels the epoch and writes."""
+    The probes join the ``comb`` view once through the guarded probe-side
+    broadcast (probe_side_join; past the threshold it degrades to the
+    bounded shuffle_hash build), and cos is computed in the same pass. A
+    vector lives in exactly one cell, so each (query, neighbor) pair
+    appears once. The view is base + the one lineage-cut level leaf every
+    absorb merges into — a two-leaf read, never a re-derivation. Returns
+    (query_id, neighbor_id, cos, rank ≤ k) or None on an empty batch; the
+    caller labels the epoch and writes."""
     serve_np = serving_nprobe(n_cells, recall_target=recall_target)
-    n_batch = batch_df.count()  # one tiny job; feeds stage 1's guard
+    n_batch = batch_df.count()  # one tiny job; feeds the broadcast guard
     if n_batch == 0:
         return None
     retire_pipeline_caches()
@@ -1864,48 +1861,17 @@ def live_topk_serve(
         F.col(id_col).alias("query_id"), F.col("_v").alias("qv"),
         F.col("_norm").alias("qn"), F.col("cid"),
     )
-    if index.comb is not None:
-        # ONE-JOIN SERVE: the live combined view (id, _v, _norm,
-        # bucket) is the inverted-list layout, so the guarded probe
-        # broadcast lands on it directly and cos is computed in the same
-        # pass — the band-probe stage, the candidate persist and its
-        # guard-count job all disappear. Pair set and arithmetic are
-        # unchanged (a vector lives in exactly one cell).
-        scored = probe_side_join(
-            index.comb.select(
-                F.col(id_col).alias("neighbor_id"), F.col("_v").alias("cv"),
-                F.col("_norm").alias("cn"), F.col("bucket").alias("cid"),
-            ),
-            probes, "cid",
-            probe_rows=n_batch * serve_np,
-            probe_row_bytes=2 * dim * 8 + 40,
-        ).withColumn(
-            "cos", dot_ieee(F.col("qv"), F.col("cv")) / (F.col("qn") * F.col("cn"))
-        )
-    else:
-        cand = pool_persist(
-            probe_side_join(
-                index.bands.select(
-                    F.col(id_col).alias("neighbor_id"),
-                    F.col(index.bands.columns[1]).alias("cid"),
-                ),
-                probes, "cid",
-                probe_rows=n_batch * serve_np,
-                probe_row_bytes=dim * 8 + 24,
-            ).select("query_id", "qv", "qn", "neighbor_id")
-        )
-        n_cand = cand.count()  # feeds stage 2's guard; also the persist cut
-        scored = probe_side_join(
-            index.sh.select(
-                F.col(id_col).alias("neighbor_id"), F.col("_v").alias("cv"),
-                F.col("_norm").alias("cn"),
-            ),
-            cand, "neighbor_id",
-            probe_rows=n_cand,
-            probe_row_bytes=dim * 8 + 32,
-        ).withColumn(
-            "cos", dot_ieee(F.col("qv"), F.col("cv")) / (F.col("qn") * F.col("cn"))
-        )
+    scored = probe_side_join(
+        index.comb.select(
+            F.col(id_col).alias("neighbor_id"), F.col("_v").alias("cv"),
+            F.col("_norm").alias("cn"), F.col("bucket").alias("cid"),
+        ),
+        probes, "cid",
+        probe_rows=n_batch * serve_np,
+        probe_row_bytes=2 * dim * 8 + 40,
+    ).withColumn(
+        "cos", dot_ieee(F.col("qv"), F.col("cv")) / (F.col("qn") * F.col("cn"))
+    )
     w = Window.partitionBy("query_id").orderBy(
         F.col("cos").desc(), F.col("neighbor_id").asc()
     )
@@ -1925,18 +1891,15 @@ class EmbeddingIngestGate(IngestGate):
     only the bucketing (``_prepare``, ``_probes``, ``_stored_rows``) and the
     growth step.
 
-    Verify: with a live combined view (``index.comb``, rows (id, _v,
-    _norm, bucket): the inverted-list layout), probes carrying their own
-    vectors join it once through the guarded probe-side broadcast
-    (probe_side_join) and score in the same pass, so under the guard the
-    index never moves; the guard's row estimate pays the batch count.
-    Without one (none given, or a capped or durable index) the verify
-    runs two frames: probes against the band view, then the candidate
-    pairs against the vector side, both shuffle_hash (broadcasting the
-    bounded new side measured no win there: the saturated gate is
-    candidate-volume-bound, sf1 105.4 s vs 107.0 s). Pair set and cos expression are the same on
-    both paths, so decisions are bit-identical. Every absorb is one
-    combined (id, _v, _norm, bucket) frame (``index.absorb_combined``).
+    The index must be an embedding index (built with ``comb=``, whose
+    one side stores (id, _v, _norm, bucket) rows: the inverted-list
+    layout); any other index is rejected at construction. Verify: probes
+    carrying their own vectors join ``index.comb`` once through the
+    guarded probe-side broadcast (probe_side_join) and score in the same
+    pass, so under the guard the index never moves; the guard's row
+    estimate pays the batch count. Every absorb is one (id, _v, _norm,
+    bucket) frame (``index.absorb_combined``), and every re-bucket one
+    ``index.rebuild_combined``.
 
     OCCUPANCY TRIGGER: hyperplane buckets have a fixed 2^n_planes
     cardinality, so candidate mass grows ∝ |new|·|index| / 2^n_planes as
@@ -1989,6 +1952,11 @@ class EmbeddingIngestGate(IngestGate):
                 "target_occupancy must be < occupancy_trigger (hysteresis): "
                 f"{target_occupancy} >= {occupancy_trigger}"
             )
+        if index.comb is None:
+            raise ValueError(
+                "an embedding gate needs an embedding index: build the "
+                "IncrementalLshIndex with comb=<(id, _v, _norm, bucket) frame>"
+            )
         super().__init__(
             index, sink_root, id_col, epoch_col, absorb_dedup, collect_stats
         )
@@ -2028,69 +1996,28 @@ class EmbeddingIngestGate(IngestGate):
         """The (id, _v, _norm, bucket) rows the index stores for ``df``."""
         return df.select(self.id_col, "_v", "_norm", "bucket")
 
-    def _sh_rows(self, rows: DataFrame) -> DataFrame:
-        return rows.select(self.id_col, "_v", "_norm")
-
-    def _band_rows(self, rows: DataFrame) -> DataFrame:
-        return rows.select(self.id_col, "bucket")
-
     def _dedup_key(self):
         return F.col("_v")
 
     def _matches(self, new: DataFrame, n_new) -> DataFrame:
         idc = self.id_col
-        probes = self._probes(new)
-        if self.index.comb is not None:
-            scored = probe_side_join(
-                self.index.comb.select(
-                    F.col(idc).alias("corpus_id"), F.col("_v").alias("vb"),
-                    F.col("_norm").alias("nb"), "bucket",
-                ),
-                probes, "bucket",
-                probe_rows=(new.count() if n_new is None else n_new)
-                * self._n_probes(),
-                probe_row_bytes=self.dim * 8 + 40,
-            )
-            self._n_cand = scored.count() if self.collect_stats else None
-        else:
-            from pypeln_spark.streaming import shuffle_width
-
-            cand = probes.select("new_id", "bucket").join(
-                self.index.bands.select(F.col(idc).alias("corpus_id"), "bucket"),
-                "bucket",
-            ).select("new_id", "corpus_id")
-            self._n_cand = cand.count() if self.collect_stats else None
-            a = new.select(
-                F.col(idc).alias("new_id"), F.col("_v").alias("va"),
-                F.col("_norm").alias("na"),
-            )
-            b = self.index.sh.select(
+        scored = probe_side_join(
+            self.index.comb.select(
                 F.col(idc).alias("corpus_id"), F.col("_v").alias("vb"),
-                F.col("_norm").alias("nb"),
-            )
-            # shuffle_hash: a 64-double array side undercounts like the
-            # shingle arrays, and broadcasting the corpus side OOMs at scale
-            scored = (
-                cand.repartition(shuffle_width(new.sparkSession), F.col("new_id"))
-                .join(a.hint("shuffle_hash"), "new_id")
-                .join(b.hint("shuffle_hash"), "corpus_id")
-            )
+                F.col("_norm").alias("nb"), "bucket",
+            ),
+            self._probes(new), "bucket",
+            probe_rows=(new.count() if n_new is None else n_new)
+            * self._n_probes(),
+            probe_row_bytes=self.dim * 8 + 40,
+        )
+        self._n_cand = scored.count() if self.collect_stats else None
         return scored.withColumn(
             "cos", dot_ieee(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb"))
         ).filter(F.col("cos") >= self.threshold)
 
     def _absorb(self, novel: DataFrame, dropped: DataFrame) -> None:
-        self.index.absorb_combined(
-            self._stored_rows(novel), self._sh_rows, self._band_rows
-        )
-
-    def _rebuild(self, rows: DataFrame) -> None:
-        """Replace the index's bucketing with ``rows`` (id, _v, _norm,
-        bucket), keeping the combined view live when there is one."""
-        if self.index.comb is not None:
-            self.index.rebuild_combined(rows, self._sh_rows, self._band_rows)
-        else:
-            self.index.rebuild_bands(self._band_rows(rows))
+        self.index.absorb_combined(self._stored_rows(novel))
 
     def _capacity(self) -> int:
         return 2 ** self.n_planes
@@ -2102,7 +2029,7 @@ class EmbeddingIngestGate(IngestGate):
             self.n_planes + 1,
             math.ceil(math.log2(max(size / self.target_occupancy, 2.0))),
         )
-        self._rebuild(
+        self.index.rebuild_combined(
             self._stored_rows(lsh_bucket(self.index.sh, "_v", n_planes, self.dim))
         )
         self.n_planes = n_planes
@@ -2139,10 +2066,12 @@ class CellEmbeddingIngestGate(EmbeddingIngestGate):
     (ivf_assign keep=nprobe) and the index stores each vector in its one
     nearest cell (keep=1), so each (new, corpus) pair connects through at
     most one cell. Every assignment is a narrow projection against
-    ``centroid_lits()``. The maintenance move is ``retrain``: re-train
-    the centroids on the grown index and re-assign it (the standard IVF
-    rebuild); ``occupancy_trigger`` runs it when mean vectors per cell
-    crosses the trigger, growing the cell count back to
+    ``centroid_lits()``. The index's one combined side stores each vector
+    with its cell, so verify is one join against it. The maintenance move
+    is ``retrain``: re-train the centroids on the grown index and
+    re-assign it into a new combined side (``index.rebuild_combined``, the
+    standard IVF rebuild); ``occupancy_trigger`` runs it when mean
+    vectors per cell crosses the trigger, growing the cell count back to
     ``target_occupancy``.
 
     nprobe rule (sf1, threshold 0.35, 10k arrivals, 100 cells; decision
@@ -2229,7 +2158,7 @@ class CellEmbeddingIngestGate(EmbeddingIngestGate):
         self.centroids = spark.createDataFrame(cents.collect(), cents.schema)
         self.n_cells = n_cells
         self._lits = None  # new geometry -> new centroid Column
-        self._rebuild(self._stored_rows(self.index.sh))
+        self.index.rebuild_combined(self._stored_rows(self.index.sh))
 
     def _capacity(self) -> int:
         return self.n_cells

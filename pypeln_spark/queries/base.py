@@ -6,6 +6,8 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..session import ship_package
+
 
 @dataclass
 class Query:
@@ -62,28 +64,7 @@ def ensure_session_defaults(spark: SparkSession) -> None:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "64m")
     except Exception:
         pass
-    _ship_package(spark)
-
-
-def _ship_package(spark: SparkSession) -> None:
-    sc = spark.sparkContext
-    if getattr(sc, "_pypeln_spark_shipped", False):
-        return
-    import shutil
-    import tempfile
-
-    pkg_dir = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    staging = tempfile.mkdtemp(prefix="pypeln_spark_ship_")
-    zip_base = os.path.join(staging, "pypeln_spark_pkg")
-    # zip with the package as the top-level entry so workers can import it
-    shutil.make_archive(
-        zip_base, "zip", root_dir=os.path.dirname(pkg_dir), base_dir="pypeln_spark"
-    )
-    try:
-        sc.addPyFile(zip_base + ".zip")
-    except Exception:
-        pass  # e.g. file added twice by concurrent sessions — harmless
-    sc._pypeln_spark_shipped = True
+    ship_package(spark)
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

@@ -1833,9 +1833,8 @@ def streaming_embedding_ingest(spark, sf_dir):
         cor.select("vec_id", "_v", "_norm"),
         cor.select("vec_id", "bucket"),
         checkpoint_dir=os.environ.get("PYPELN_SPARK_INGEST_COMPACT_DIR") or None,
-        # the base index frame already carries sh AND band columns —
-        # hand it over so the gate verify/serve can run the one-join
-        # inverted-list path (r14; ignored under a durable checkpoint)
+        # an embedding index is one (id, _v, _norm, bucket) side; the
+        # two frames above only name its sh and band view columns
         comb=cor,
     )
 
@@ -1960,7 +1959,7 @@ def streaming_embedding_ingest_cells(spark, sf_dir):
     shape: assignment is a broadcast of n_cells tiny centroid rows — one
     narrow pass per epoch over the BATCH only — candidates come from the
     cell equi-join (new × index), and the at-scale maintenance move is a
-    periodic centroid re-train + index.rebuild_bands (the standard IVF
+    periodic centroid re-train + index.rebuild_combined (the standard IVF
     rebuild), not bucket widening. The oracle replays training,
     assignment, probing, verification, survivor pick AND absorb across
     the three unrolled epochs."""
@@ -2003,9 +2002,8 @@ def streaming_embedding_ingest_cells(spark, sf_dir):
         cor.select("vec_id", "_v", "_norm"),
         cor.select("vec_id", "bucket"),
         checkpoint_dir=os.environ.get("PYPELN_SPARK_INGEST_COMPACT_DIR") or None,
-        # the base index frame already carries sh AND band columns —
-        # hand it over so the gate verify/serve can run the one-join
-        # inverted-list path (r14; ignored under a durable checkpoint)
+        # an embedding index is one (id, _v, _norm, bucket) side; the
+        # two frames above only name its sh and band view columns
         comb=cor,
     )
 
@@ -2391,7 +2389,7 @@ def streaming_ann_topk_serving_live(spark, sf_dir):
     each query batch reads the CURRENT cells index — the corpus plus
     every vector absorbed so far — under the CURRENT centroid geometry,
     re-snapshotted mid-stream by the standard IVF rebuild
-    (CellEmbeddingIngestGate.retrain -> index.rebuild_bands). Epoch plan
+    (CellEmbeddingIngestGate.retrain -> index.rebuild_combined). Epoch plan
     (vec_id % 12): 1 -> ingest 0 (nprobe="auto" at the semantic
     threshold -> 4), 3 -> query 0 (top-K against corpus + novel0, C0
     centroids), then RETRAIN on the grown index — GROWING the cell
@@ -2405,12 +2403,12 @@ def streaming_ann_topk_serving_live(spark, sf_dir):
     STALENESS SEMANTICS (the production contract, SCALING.md r12): reads
     are bounded-stale at micro-batch granularity — a query epoch sees
     every absorb from every EARLIER epoch and nothing from its own or
-    later ones (staged_foreach_batch serializes epochs; the index's
-    lineage-cut deltas make the read a plan over base + one leaf per
-    earlier epoch, never a re-derivation). Retrain swaps geometry
-    between epochs atomically from the readers' view: query 0 is served
-    entirely under C0, query 1 entirely under C1 — no query ever reads
-    half-rebuilt bands, because rebuild_bands replaces the band view
+    later ones (staged_foreach_batch serializes epochs; the read is a
+    plan over the base plus the one level leaf every earlier absorb
+    merged into, never a re-derivation). Retrain swaps geometry between
+    epochs atomically from the readers' view: query 0 is served entirely
+    under C0, query 1 entirely under C1 — no query ever reads a
+    half-rebuilt index, because rebuild_combined replaces the whole index
     between micro-batches. Scale shape: the serve join is the guarded
     probe-side broadcast against the live lists (never moves the
     corpus); ingest is the cells gate unchanged; retrain is two narrow
@@ -2454,9 +2452,8 @@ def streaming_ann_topk_serving_live(spark, sf_dir):
         cor.select("vec_id", "_v", "_norm"),
         cor.select("vec_id", "bucket"),
         checkpoint_dir=os.environ.get("PYPELN_SPARK_INGEST_COMPACT_DIR") or None,
-        # the base index frame already carries sh AND band columns —
-        # hand it over so the gate verify/serve can run the one-join
-        # inverted-list path (r14; ignored under a durable checkpoint)
+        # an embedding index is one (id, _v, _norm, bucket) side; the
+        # two frames above only name its sh and band view columns
         comb=cor,
     )
 

@@ -29,6 +29,33 @@ def _export_package_path() -> None:
         )
 
 
+def ship_package(spark: SparkSession) -> str:
+    """Ship this package to the session's Python workers as a zip through
+    ``addPyFile`` (workers put SparkFiles on ``sys.path``), once per
+    context, and return the zip's driver-local path. A session built
+    without get_spark never saw the PYTHONPATH export, and its workers
+    would otherwise fail to import pypeln_spark."""
+    sc = spark.sparkContext
+    if getattr(sc, "_pypeln_spark_shipped", None):
+        return sc._pypeln_spark_shipped
+    import shutil
+    import tempfile
+
+    pkg_dir = os.path.dirname(os.path.abspath(__file__))
+    staging = tempfile.mkdtemp(prefix="pypeln_spark_ship_")
+    zip_base = os.path.join(staging, "pypeln_spark_pkg")
+    # zip with the package as the top-level entry so workers can import it
+    shutil.make_archive(
+        zip_base, "zip", root_dir=os.path.dirname(pkg_dir), base_dir="pypeln_spark"
+    )
+    try:
+        sc.addPyFile(zip_base + ".zip")
+    except Exception:
+        pass  # e.g. file added twice by concurrent sessions — harmless
+    sc._pypeln_spark_shipped = zip_base + ".zip"
+    return sc._pypeln_spark_shipped
+
+
 def get_spark(
     app_name: str = "pypeln_spark",
     master: str | None = None,

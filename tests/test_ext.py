@@ -2587,9 +2587,9 @@ def test_lsh_capped_path_honors_lazy_contract(spark):
 
 
 def test_index_cap_refuses_misordered_band_frame(spark):
-    """ADVICE r10: _cap_bands validates the first-column-is-id convention
-    — a band frame led by a bucket-key column must raise, not silently
-    cap by the wrong key."""
+    """ADVICE r10: IncrementalLshIndex._cap validates the
+    first-column-is-id convention — a band frame led by a bucket-key
+    column must raise, not silently cap by the wrong key."""
     import pytest as _pytest
 
     from pypeln_spark.ext import dedup as D

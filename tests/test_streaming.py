@@ -698,6 +698,38 @@ def test_datasource_restart_resumes_at_offset(spark, tmp_path):
     assert sorted(seen) == [(i, i) for i in range(10)], sorted(seen)[-6:]
 
 
+def test_datasource_entry_under_plain_session(tmp_path):
+    """The registry's data-source entry runs under a plain SparkSession
+    (not get_spark, so no PYTHONPATH export) started from a directory
+    outside the checkout: the source's Python processes must still import
+    pypeln_spark. Runs in a fresh interpreter and JVM, with the repo only
+    on the script's own sys.path."""
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    script = tmp_path / "run_entry.py"
+    script.write_text(
+        "import sys\n"
+        "sys.path.insert(0, sys.argv[1])\n"
+        "from pyspark.sql import SparkSession\n"
+        "spark = (SparkSession.builder.master('local[2]')\n"
+        "         .config('spark.sql.shuffle.partitions', '2')\n"
+        "         .config('spark.ui.enabled', 'false').getOrCreate())\n"
+        "from pypeln_spark.queries import REGISTRY\n"
+        "df = REGISTRY['pipeline_datasource_source'].fn(spark, '/nonexistent')\n"
+        "print('ROWS', df.count())\n"
+        "spark.stop()\n"
+    )
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    out = subprocess.run(
+        [sys.executable, str(script), repo], cwd=str(tmp_path), env=env,
+        capture_output=True, text=True, timeout=600,
+    )
+    # i * 7 - 2 divisible by 3 for i in range(1200): every i ≡ 2 (mod 3)
+    assert "ROWS 400" in out.stdout, out.stderr[-3000:]
+
+
 def test_rocksdb_state_store_provider(spark, tmp_path):
     """The large-state scale path: the same stateful aggregation runs under
     the RocksDB state-store provider (off-heap/on-disk state, incremental
@@ -998,7 +1030,7 @@ def test_incremental_index_rejects_other_schedules(spark):
 
 def test_incremental_index_close_releases_its_leaves(spark):
     """close() releases the blocks of every leaf the index cut — level
-    leaves, superseded ones included — for both absorb modes, and never
+    leaves, superseded ones included — for both index layouts, and never
     the caller's persisted base."""
     from pyspark.sql import functions as F
 
@@ -1028,7 +1060,7 @@ def test_incremental_index_close_releases_its_leaves(spark):
     for e in (1, 2):
         d_sh, d_bands = frames(range(10 * e, 10 * e + 3))
         classic.absorb(d_sh, d_bands)
-        comb.absorb_combined(d_sh.withColumn("bucket", F.col("vec_id") % 4), sh_p, bd_p)
+        comb.absorb_combined(d_sh.withColumn("bucket", F.col("vec_id") % 4))
     assert stored() - before_index  # the merges cut leaves of their own
     classic.close()
     comb.close()
@@ -1038,65 +1070,55 @@ def test_incremental_index_close_releases_its_leaves(spark):
 
 
 def test_incremental_lsh_index_combined_absorb_matches_classic(spark):
-    """absorb_combined: one combined frame per epoch materializes BOTH
-    sides' rows in a single job — contents must equal the classic
-    two-frame absorb exactly, across merges AND across a mid-stream
-    rebuild_bands (the watermark: rows absorbed before a rebuild are
-    band-covered by the rebuilt table and must not contribute band rows
-    again after the next merge). Leaf bound holds (base + level)."""
+    """An embedding index (one combined side) holds exactly the rows of a
+    two-side index fed the same epochs, in its ``sh`` and ``bands``
+    projections, across merges AND across a mid-stream rebuild_combined
+    under a new bucket geometry (the two-side twin is rebuilt from the
+    same frames). Leaf bound holds (base + level)."""
     from pyspark.sql import functions as F
 
     from pypeln_spark.ext import dedup as D
 
-    def frames(ids, tag):
+    def frames(ids):
         sh = spark.createDataFrame(
             [(i, [i * 10 + 1, i * 10 + 2]) for i in ids],
             "vec_id long, sh_arr array<long>",
         )
-        bands = sh.select("vec_id", (F.col("vec_id") % 4).alias("bucket"))
-        return sh, bands
+        return sh, sh.select("vec_id", (F.col("vec_id") % 4).alias("bucket"))
 
     def leaves(df):
         return df._jdf.queryExecution().analyzed().toString().count("LogicalRDD")
 
-    base_sh, base_bands = frames(range(0, 6, 2), "base")
+    base_sh, base_bands = frames(range(0, 6, 2))
     base_sh = base_sh.localCheckpoint(eager=True)
     base_bands = base_bands.localCheckpoint(eager=True)
+    base = base_sh.withColumn("bucket", F.col("vec_id") % 4)
     classic = D.IncrementalLshIndex(base_sh, base_bands)
-    comb = D.IncrementalLshIndex(base_sh, base_bands)
-    sh_p = lambda c: c.select("vec_id", "sh_arr")  # noqa: E731
-    bd_p = lambda c: c.select("vec_id", "bucket")  # noqa: E731
+    comb = D.IncrementalLshIndex(base_sh, base_bands, comb=base)
+    retired = []
     for e in range(1, 6):
-        d_sh, d_bands = frames(range(100 * e, 100 * e + 3), f"e{e}")
+        d_sh, d_bands = frames(range(100 * e, 100 * e + 3))
         classic.absorb(d_sh, d_bands)
-        comb.absorb_combined(
-            d_sh.withColumn("bucket", F.col("vec_id") % 4), sh_p, bd_p
-        )
+        comb.absorb_combined(d_sh.withColumn("bucket", F.col("vec_id") % 4))
         assert leaves(comb.sh) <= 2 and leaves(comb.bands) <= 2
         if e == 3:
-            # mid-stream band rebuild under a NEW geometry (mod 5): both
-            # indexes re-derive the whole band side from their sh view
-            for idx in (classic, comb):
-                idx.rebuild_bands(
-                    idx.sh.select("vec_id", (F.col("vec_id") % 5).alias("bucket"))
-                )
+            # mid-stream rebuild under a NEW geometry (mod 5), derived
+            # from the stored rows
+            comb.rebuild_combined(
+                comb.sh.withColumn("bucket", F.col("vec_id") % 5)
+            )
+            retired.append(classic)
+            classic = D.IncrementalLshIndex(
+                classic.sh,
+                classic.sh.select("vec_id", (F.col("vec_id") % 5).alias("bucket")),
+            )
     key = lambda r: (r["vec_id"], str(sorted(r.asDict().items())))  # noqa: E731
     for attr in ("sh", "bands"):
         got = sorted(getattr(comb, attr).collect(), key=key)
         want = sorted(getattr(classic, attr).collect(), key=key)
         assert got == want, f"combined absorb changed {attr} contents"
-    # mode mixing is a hard error, both directions
-    import pytest as _pytest
-
-    d_sh, d_bands = frames([900], "x")
-    with _pytest.raises(RuntimeError):
-        comb.absorb(d_sh, d_bands)
-    with _pytest.raises(RuntimeError):
-        classic.absorb_combined(
-            d_sh.withColumn("bucket", F.col("vec_id") % 4), sh_p, bd_p
-        )
-    classic.close()
-    comb.close()
+    for idx in [classic, comb] + retired:
+        idx.close()
 
 
 def test_embedding_index_rebucket_widens_mid_stream(spark):
@@ -1186,9 +1208,9 @@ def test_incremental_index_random_schedules_property(spark):
 
 
 def test_ingest_gate_compaction_invariant_decisions(spark, tmp_path, monkeypatch):
-    """End-to-end half of the compaction contract: the registry text
-    gate emits IDENTICAL keep/drop decisions whether its index merges
-    into block-manager leaves or into the durable generation chain —
+    """End-to-end half of the compaction contract: the registry text and
+    embedding gates emit IDENTICAL keep/drop decisions whether their
+    index merges into block-manager leaves or into the durable files —
     including the cross-epoch absorption matches, which read the merged
     index — and the durable index recovers from its files alone."""
     from pypeln_spark.ext import similarity as S
@@ -1239,6 +1261,20 @@ def test_ingest_gate_compaction_invariant_decisions(spark, tmp_path, monkeypatch
     dups = {r[0] for r in base_txt if r[2] is not None}
     want_ids = {doc_id for doc_id, _ in rows} - dups
     assert {r.doc_id for r in rec_sh.collect()} == want_ids
+    # the embedding gate's durable arm runs its one combined side
+    import json
+
+    emb_ckpt = str(tmp_path / "emb_ckpt")
+    os.makedirs(emb_ckpt)
+    monkeypatch.setenv("PYPELN_SPARK_INGEST_COMPACT_DIR", emb_ckpt)
+    assert run("streaming_embedding_ingest") == base_emb
+    with open(os.path.join(emb_ckpt, "MANIFEST.json")) as f:
+        manifest = json.load(f)
+    assert "comb" in manifest and "sh" not in manifest, manifest
+    rec_sh, _rec_bands = D.IncrementalLshIndex.recover(spark, emb_ckpt)
+    dups = {r[0] for r in base_emb if r[2] is not None}
+    want_ids = {vec_id for vec_id, _ in erows} - dups
+    assert {r.vec_id for r in rec_sh.collect()} == want_ids
 
 
 def test_shuffle_width_guarded(spark, monkeypatch):
@@ -1253,7 +1289,7 @@ def test_shuffle_width_guarded(spark, monkeypatch):
     assert ST.shuffle_width(spark) == spark.sparkContext.defaultParallelism
 
 
-def test_incremental_index_durable_checkpoint(spark, tmp_path):
+def test_incremental_index_durable_checkpoint(spark, tmp_path, monkeypatch):
     """ADVICE r8 + VERDICT r13 #6: localCheckpoint blocks are
     non-recomputable after executor loss, so unbounded cluster gates need
     a DURABLE target. Under the GENERATION CHAIN, checkpoint_dir holds
@@ -1263,8 +1299,12 @@ def test_incremental_index_durable_checkpoint(spark, tmp_path):
     manifest's union
     (IncrementalLshIndex.recover), no session state consulted. Superseded
     files are removed only after the manifest publishing the successor
-    lands — a crash leaks a file, never loses data."""
+    lands — a crash leaks a file, never loses data. An embedding index
+    (one combined side) follows the same chain with one file per absorb,
+    and its rebuild publishes before it removes."""
     import json
+
+    from pyspark.sql import functions as F
 
     from pypeln_spark.ext import dedup as D
 
@@ -1326,11 +1366,70 @@ def test_incremental_index_durable_checkpoint(spark, tmp_path):
     idx.close()
     assert sides() == ((sh_d), (bd_d))
 
+    # combined layout: one side, ``comb``, so one level file per absorb
+    comb_dir = str(tmp_path / "comb_ckpt")
+    os.makedirs(comb_dir)
+
+    def rows(ids):
+        return spark.createDataFrame(
+            [(i, f"v{i}", i % 3) for i in ids],
+            "doc_id long, payload string, bucket long",
+        )
+
+    def comb_files():
+        return sorted(n for n in os.listdir(comb_dir) if n.startswith("comb_"))
+
+    def manifest():
+        with open(os.path.join(comb_dir, "MANIFEST.json")) as f:
+            return [os.path.basename(p) for p in json.load(f)["comb"]]
+
+    base = rows(range(5))
+    cidx = D.IncrementalLshIndex(
+        base.select("doc_id", "payload"), base.select("doc_id", "bucket"),
+        checkpoint_dir=comb_dir, comb=base,
+    )
+    cidx.absorb_combined(rows(range(10, 13)))
+    assert comb_files() == ["comb_00001", "comb_base"]
+    assert manifest() == ["comb_base", "comb_00001"]
+    base_stamp = os.stat(os.path.join(comb_dir, "comb_base", "_SUCCESS")).st_mtime_ns
+    cidx.absorb_combined(rows(range(20, 22)))
+    assert comb_files() == ["comb_00002", "comb_base"]
+    assert os.stat(
+        os.path.join(comb_dir, "comb_base", "_SUCCESS")
+    ).st_mtime_ns == base_stamp
+    # a rebuild supersedes the base copy and the level file; each goes
+    # only after the manifest naming the rebuilt file has landed
+    import pypeln_spark.streaming as PS
+
+    removed = []
+    real_remove = PS.remove_sink_dir
+
+    def spy(spark_, path):
+        removed.append((os.path.basename(path), manifest()))
+        real_remove(spark_, path)
+
+    monkeypatch.setattr(PS, "remove_sink_dir", spy)
+    cidx.rebuild_combined(cidx.comb.withColumn("bucket", F.col("doc_id") % 5))
+    assert removed == [
+        ("comb_base", ["comb_00003"]), ("comb_00002", ["comb_00003"]),
+    ]
+    assert comb_files() == ["comb_00003"]
+    ids = [*range(5), *range(10, 13), *range(20, 22)]
+    assert {(r.doc_id, r.bucket) for r in cidx.bands.collect()} == {
+        (i, i % 5) for i in ids
+    }
+    rec_sh, rec_bands = D.IncrementalLshIndex.recover(spark, comb_dir)
+    assert sorted(rec_sh.collect()) == sorted(cidx.sh.collect())
+    assert sorted(rec_bands.collect()) == sorted(cidx.bands.collect())
+    assert rec_sh.columns == ["doc_id", "payload"]
+    cidx.close()
+
 
 def test_embedding_gate_rejects_non_hysteretic_config():
     """target_occupancy ≥ occupancy_trigger would re-fire the widen every
-    epoch (no hysteresis) — rejected at construction, before any Spark
-    work."""
+    epoch (no hysteresis), and an index without a ``comb`` side has no
+    layout the embedding verify reads — both rejected at construction,
+    before any Spark work."""
     from pypeln_spark.ext import similarity as S
 
     with pytest.raises(ValueError, match="hysteresis"):
@@ -1338,6 +1437,11 @@ def test_embedding_gate_rejects_non_hysteretic_config():
             None, "/tmp/x", 16, 6, 0.9,
             occupancy_trigger=8.0, target_occupancy=8.0,
         )
+    # an index without a combined side (a text-layout index) is rejected
+    import types
+
+    with pytest.raises(ValueError, match="comb="):
+        S.EmbeddingIngestGate(types.SimpleNamespace(comb=None), "/tmp/x", 16, 6, 0.9)
 
 
 def test_embedding_gate_occupancy_trigger(spark, tmp_path):
@@ -1376,7 +1480,8 @@ def test_embedding_gate_occupancy_trigger(spark, tmp_path):
         root = str(tmp_path / f"sink_{int(trigger)}")
         cor = S.lsh_bucket(S.with_norms(S.spread(base)), "_v", 2, DIM)
         idx = D.IncrementalLshIndex(
-            cor.select("vec_id", "_v", "_norm"), cor.select("vec_id", "bucket")
+            cor.select("vec_id", "_v", "_norm"), cor.select("vec_id", "bucket"),
+            comb=cor,
         )
         gate = S.EmbeddingIngestGate(
             idx, root, DIM, n_planes=2, threshold=0.95, probe_hamming=1,
@@ -1461,7 +1566,8 @@ def test_cell_gate_matches_hyperplane_at_high_threshold(spark, tmp_path):
     root_h = str(tmp_path / "hyper")
     cor = S.lsh_bucket(S.with_norms(S.spread(base)), "_v", 4, DIM)
     idx_h = D.IncrementalLshIndex(
-        cor.select("vec_id", "_v", "_norm"), cor.select("vec_id", "bucket")
+        cor.select("vec_id", "_v", "_norm"), cor.select("vec_id", "bucket"),
+        comb=cor,
     )
     hyper = collect(
         root_h, idx_h,
@@ -1475,7 +1581,8 @@ def test_cell_gate_matches_hyperplane_at_high_threshold(spark, tmp_path):
         "vec_id", "_v", "_norm", F.col("cid").alias("bucket")
     )
     idx_c = D.IncrementalLshIndex(
-        corc.select("vec_id", "_v", "_norm"), corc.select("vec_id", "bucket")
+        corc.select("vec_id", "_v", "_norm"), corc.select("vec_id", "bucket"),
+        comb=corc,
     )
     cells = collect(
         root_c, idx_c,
@@ -1529,7 +1636,8 @@ def test_cell_gate_occupancy_retrain(spark, tmp_path):
             "vec_id", "_v", "_norm", F.col("cid").alias("bucket")
         )
         idx = D.IncrementalLshIndex(
-            cor.select("vec_id", "_v", "_norm"), cor.select("vec_id", "bucket")
+            cor.select("vec_id", "_v", "_norm"), cor.select("vec_id", "bucket"),
+            comb=cor,
         )
         gate = S.CellEmbeddingIngestGate(
             idx, root, DIM, cents, 4, 0.95, nprobe=2,
@@ -2016,7 +2124,8 @@ def test_embedding_gate_reports_within_batch_duplicate_mass(spark, tmp_path):
     root = str(tmp_path / "sink")
     cor = S.lsh_bucket(S.with_norms(S.spread(base)), "_v", 2, DIM)
     idx = D.IncrementalLshIndex(
-        cor.select("vec_id", "_v", "_norm"), cor.select("vec_id", "bucket")
+        cor.select("vec_id", "_v", "_norm"), cor.select("vec_id", "bucket"),
+        comb=cor,
     )
     gate = S.EmbeddingIngestGate(
         idx, root, DIM, n_planes=2, threshold=0.95, probe_hamming=1,
@@ -2114,6 +2223,7 @@ def test_embedding_gate_identical_vector_cluster_cap_vs_widen(spark, tmp_path):
             cor.select("vec_id", "_v", "_norm"),
             cor.select("vec_id", "bucket"),
             bucket_cap=cap,
+            comb=cor,
         )
         gate = S.EmbeddingIngestGate(
             idx, root, DIM, n_planes=6, threshold=0.95, probe_hamming=1,
@@ -2163,9 +2273,9 @@ def test_cells_gate_inherits_index_bucket_cap_through_retrain(spark, tmp_path):
     blind spot — an identical-vector cluster lands in ONE k-means cell,
     and retrain cannot split it (identical vectors share a nearest
     centroid under ANY centroid set) — and the guard is INHERITED:
-    CellEmbeddingIngestGate probes self.index.bands, and
-    IncrementalLshIndex._cap_bands bounds that view at init, at every
-    compact(), and through rebuild_bands — i.e. gate.retrain() RE-CAPS
+    CellEmbeddingIngestGate probes the index's combined side, and
+    IncrementalLshIndex._cap bounds that side at init, at every
+    compact(), and through rebuild_combined — i.e. gate.retrain() RE-CAPS
     under the new cell geometry. Min-id priority keeps the cluster's
     min-id member (the survivor pick's target) alive, so exact-copy
     decisions are identical across arms."""
@@ -2212,6 +2322,7 @@ def test_cells_gate_inherits_index_bucket_cap_through_retrain(spark, tmp_path):
             cor.select("vec_id", "_v", "_norm"),
             cor.select("vec_id", "bucket"),
             bucket_cap=cap,
+            comb=cor,
         )
         gate = S.CellEmbeddingIngestGate(
             idx, root, DIM, centroids=cents0, n_cells=N_CELLS,
@@ -2219,12 +2330,15 @@ def test_cells_gate_inherits_index_bucket_cap_through_retrain(spark, tmp_path):
             # deliberately OFF: the flood must absorb in full for the
             # bucket-cap inheritance claim to have anything to bound
             absorb_dedup=False,
+            # the retrained cells must be finer than the cap too: train
+            # on every stored vector, as cents0 does (a 1-in-4 sample
+            # collapses 16 cells to 13 here, one holding 8 lower ids)
+            retrain_train_mod=1,
         )
         gate(epochs[0], 0)
-        # the at-scale maintenance move between epochs: retrain re-derives
-        # the band view from the UNCAPPED sh side (rows an earlier cap
-        # evicted reappear where the new geometry splits their bucket) —
-        # the inheritance claim is that the rebuilt view is re-capped
+        # the at-scale maintenance move between epochs: retrain
+        # re-assigns every stored vector under new centroids — the
+        # inheritance claim is that the rebuilt side is re-capped
         gate.retrain()
         gate(epochs[1], 1)
         cluster_width = idx.bands.filter(
@@ -2304,6 +2418,7 @@ def test_gate_absorb_dedup_thins_index_and_keeps_decisions(spark, tmp_path):
         )
         idx = D.IncrementalLshIndex(
             cor.select("vec_id", "_v", "_norm"), cor.select("vec_id", "bucket"),
+            comb=cor,
         )
         gate = S.CellEmbeddingIngestGate(
             idx, str(tmp_path / tag), DIM, centroids=cents, n_cells=8,
@@ -2374,6 +2489,7 @@ def test_cells_gate_auto_nprobe_resolves_measured_rule(spark, tmp_path):
         )
         idx = D.IncrementalLshIndex(
             cor.select("vec_id", "_v", "_norm"), cor.select("vec_id", "bucket"),
+            comb=cor,
         )
         g = S.CellEmbeddingIngestGate(
             idx, str(tmp_path / tag), DIM, centroids=cents, n_cells=8,
@@ -2402,73 +2518,6 @@ def test_cells_gate_auto_nprobe_resolves_measured_rule(spark, tmp_path):
     assert (200, 0, 0) in rows("lo")  # the planted exact dup is caught
     for i in (i1, i2, i3):
         i.close()
-    D.retire_pipeline_caches()
-
-
-def test_cells_gate_one_join_verify_matches_two_frame_path(spark, tmp_path):
-    """The one-join verify/serve path (r14: the index's combined view —
-    probes carrying their vectors join the inverted-list layout once)
-    must emit decisions IDENTICAL to the classic band-scan + two-vector-
-    join path, across multiple epochs AND across a mid-stream retrain
-    that grows the cell count (rebuild_combined vs rebuild_bands). Same
-    pair set, same cos arithmetic — bit-equality is the contract."""
-    import random
-
-    from pypeln_spark.ext import dedup as D
-    from pypeln_spark.ext import similarity as S
-
-    DIM = 8
-    rng = random.Random(7)
-    base = spark.createDataFrame(
-        [(i, [rng.uniform(-1, 1) for _ in range(DIM)]) for i in range(0, 80, 2)],
-        "vec_id long, embedding array<float>",
-    )
-    cents = S.kmeans_centroids(base, 8, 2, train_mod=1)
-    cents = spark.createDataFrame(cents.collect(), cents.schema)
-
-    def gate(tag, with_comb):
-        nf = S.with_norms(S.spread(base))
-        cor = S.ivf_assign(nf, cents, 8, keep=1).select(
-            "vec_id", "_v", "_norm", F.col("cid").alias("bucket")
-        ).localCheckpoint(eager=True)
-        idx = D.IncrementalLshIndex(
-            cor.select("vec_id", "_v", "_norm"), cor.select("vec_id", "bucket"),
-            comb=cor if with_comb else None,
-        )
-        g = S.CellEmbeddingIngestGate(
-            idx, str(tmp_path / tag), DIM, centroids=cents, n_cells=8,
-            threshold=0.35, nprobe=4, retrain_train_mod=1,
-        )
-        return g, idx
-
-    g1, i1 = gate("onejoin", True)
-    g2, i2 = gate("classic", False)
-    assert i1.comb is not None and i2.comb is None
-    corpus_rows = base.collect()
-    batches = [
-        spark.createDataFrame(
-            [(1000 * e + i, [rng.uniform(-1, 1) for _ in range(DIM)])
-             for i in range(8)]
-            + [(1000 * e + 900, corpus_rows[e].embedding)],  # planted dup
-            "vec_id long, embedding array<float>",
-        ).localCheckpoint(eager=True)
-        for e in range(3)
-    ]
-    for e, b in enumerate(batches):
-        if e == 2:
-            g1.retrain(n_cells=16)
-            g2.retrain(n_cells=16)
-            assert i1.comb is not None, "retrain must keep the view live"
-        g1(b, e)
-        g2(b, e)
-    rows = lambda tag: sorted(  # noqa: E731
-        (r.vec_id, r.epoch, r.dup_of, r.cos)
-        for r in spark.read.parquet(str(tmp_path / tag)).collect()
-    )
-    assert rows("onejoin") == rows("classic")
-    assert any(d is not None for (_, _, d, _) in rows("onejoin"))
-    i1.close()
-    i2.close()
     D.retire_pipeline_caches()
 
 
@@ -2709,7 +2758,8 @@ GATE_EPOCH_JOBS = {
     "text_capped": 20,
     "hyperplane_comb": 12,
     "cells_comb": 12,
-    "cells_two_frame": 16,
+    "cells_durable": 13,
+    "cells_capped": 13,
     "cells_stats": 20,
 }
 
@@ -2781,7 +2831,11 @@ def test_gate_epoch_job_count(spark, tmp_path, case):
             ).localCheckpoint(eager=True)
         index = D.IncrementalLshIndex(
             cor.select("vec_id", "_v", "_norm"), cor.select("vec_id", "bucket"),
-            comb=None if case == "cells_two_frame" else cor,
+            comb=cor,
+            checkpoint_dir=(
+                str(tmp_path / "index") if case == "cells_durable" else None
+            ),
+            bucket_cap=4 if case == "cells_capped" else None,
         )
         if case == "hyperplane_comb":
             gate = S.EmbeddingIngestGate(
