@@ -800,7 +800,11 @@ class IncrementalLshIndex:
     - every other side's level becomes materialize(level ∪ new), so a
       merge costs ∝ rows absorbed so far, never ∝ the corpus.
 
-    A merge moves rows and never changes them; only the cap drops rows.
+    A merge moves rows and never changes them; only the cap does. It
+    drops an evicted band row; on a ``comb`` side it nulls the evicted
+    row's bucket instead, so the vector stays stored (``sh``, ``size()``,
+    retrain and a rebuild see it) while the ``bands`` and ``comb`` views,
+    and so every probe, skip it.
 
     ``checkpoint_dir`` changes only what materialize produces: a parquet
     directory under it instead of a localCheckpoint (whose blocks are
@@ -847,12 +851,12 @@ class IncrementalLshIndex:
         # survivor pick's target) always survives capping, so
         # dup_of/score match the uncapped gate bit-for-bit on any row that
         # matches a surviving member. The trade is recall on near-dups
-        # whose ONLY matching members were evicted (test-pinned). A text
-        # index keeps every shingle row; an embedding index caps its one
-        # side, so an evicted vector (unreachable by every probe, having
-        # exactly one bucket row) leaves the store. Convention: the band
-        # frame's FIRST column is the id; all other columns form the
-        # bucket key ((sigh, sig) for MinHash band tables).
+        # whose ONLY matching members were evicted (test-pinned). Both
+        # layouts keep every stored vector or shingle row: an embedding
+        # index's evicted row keeps its vector under a null bucket, so a
+        # retrain still trains on it and a rebuild can re-bucket it.
+        # Convention: the band frame's FIRST column is the id; all other
+        # columns form the bucket key ((sigh, sig) for MinHash band tables).
         self.bucket_cap = bucket_cap
         self.checkpoint_dir = checkpoint_dir
         self._n_rows: tp.Optional[int] = None  # lazy; reset by every merge
@@ -871,7 +875,10 @@ class IncrementalLshIndex:
     def _project(self, name: str) -> DataFrame:
         if self._cols is None:
             return self._sides[name].view()
-        return self._sides["comb"].view().select(*self._cols[name])
+        comb = self._sides["comb"].view()
+        if name != "sh" and self.bucket_cap is not None:
+            comb = comb.dropna(subset=self._cols["bands"][1:])  # evicted
+        return comb if name == "comb" else comb.select(*self._cols[name])
 
     @property
     def sh(self) -> DataFrame:
@@ -887,7 +894,7 @@ class IncrementalLshIndex:
     def comb(self) -> tp.Optional[DataFrame]:
         """An embedding index's (id, _v, _norm, bucket) rows; None on a
         text index."""
-        return None if self._cols is None else self._sides["comb"].view()
+        return None if self._cols is None else self._project("comb")
 
     def size(self) -> int:
         """Row count of the index: counts ``sh`` once after each merge and
@@ -929,11 +936,21 @@ class IncrementalLshIndex:
                 "after a non-id first column) — refusing to cap by a "
                 "misinferred bucket key"
             )
-        w = Window.partitionBy(*key).orderBy(F.col(idc))
-        return (
-            df.withColumn("_rnk", F.row_number().over(w))
-            .filter(F.col("_rnk") <= self.bucket_cap)
-            .drop("_rnk")
+        if self._cols is None:
+            w = Window.partitionBy(*key).orderBy(F.col(idc))
+            return (
+                df.withColumn("_rnk", F.row_number().over(w))
+                .filter(F.col("_rnk") <= self.bucket_cap)
+                .drop("_rnk")
+            )
+        # a comb side nulls an evicted row's bucket; the id joins the
+        # window key of null-bucket rows, so rows evicted earlier stay
+        # spread across tasks instead of forming one ever-growing window
+        k = F.col(key[0])
+        w = Window.partitionBy(*key, F.when(k.isNull(), F.col(idc))).orderBy(idc)
+        keep = F.row_number().over(w) <= self.bucket_cap
+        return df.select(
+            *[F.when(keep, F.col(c)).alias(c) if c in key else c for c in df.columns]
         )
 
     def absorb(self, nov_sh: DataFrame, nov_bands: DataFrame) -> None:
@@ -956,7 +973,8 @@ class IncrementalLshIndex:
         band-key side: materialize(cap(view ∪ new)); any other side:
         level = materialize(level ∪ new)), then publish the manifest and
         drop superseded durable files. A side given no rows keeps its
-        layout."""
+        layout; under ``checkpoint_dir`` it still gets its base copy, so
+        the manifest names a file for every side."""
         new = {"sh": new_sh, "bands": new_bands, "comb": new_comb}
         given = {name for name, rows in new.items() if rows is not None}
         if not given <= self._sides.keys():
@@ -967,17 +985,18 @@ class IncrementalLshIndex:
         stale = []
         for name, side in self._sides.items():
             rows = new[name]
-            if rows is None:
-                continue
-            if self.bucket_cap is not None and name != "sh":
+            if rows is not None and self.bucket_cap is not None and name != "sh":
                 stale += [side.base_file, side.level_file]
                 base, path = self._materialize(
                     self._cap(side.view().unionByName(rows)), name
                 )
                 self._sides[name] = _Side(base, base_file=path)
                 continue
+            # every side the manifest lists has a file: a base copy first
             if self.checkpoint_dir and side.base_file is None:
                 side.base_file = self._write(side.base, f"{name}_base")
+            if rows is None:
+                continue
             stale.append(side.level_file)
             side.level, side.level_file = self._materialize(
                 rows if side.level is None else side.level.unionByName(rows),
@@ -1049,8 +1068,8 @@ class IncrementalLshIndex:
         """Rebuild (sh, bands) from the durable dir ALONE — the
         executor-loss recovery path: read the manifest and union each
         side's live files (base copy + level file); an embedding index's
-        views are projections of its ``comb`` side. No session state is
-        consulted."""
+        views are projections of its ``comb`` side, ``bands`` without the
+        rows a cap evicted. No session state is consulted."""
         with open(os.path.join(checkpoint_dir, "MANIFEST.json")) as f:
             m = json.load(f)
 
@@ -1059,8 +1078,11 @@ class IncrementalLshIndex:
             return functools.reduce(DataFrame.unionByName, dfs)
 
         if "comb" in m:
-            comb = read("comb")
-            return tuple(comb.select(*m["columns"][n]) for n in ("sh", "bands"))
+            comb, cols = read("comb"), m["columns"]
+            return (
+                comb.select(*cols["sh"]),
+                comb.select(*cols["bands"]).dropna(subset=cols["bands"][1:]),
+            )
         return read("sh"), read("bands")
 
     def close(self) -> None:

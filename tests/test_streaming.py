@@ -1117,6 +1117,12 @@ def test_incremental_lsh_index_combined_absorb_matches_classic(spark):
         got = sorted(getattr(comb, attr).collect(), key=key)
         want = sorted(getattr(classic, attr).collect(), key=key)
         assert got == want, f"combined absorb changed {attr} contents"
+    # each layout refuses rows for a side it does not have
+    d_sh, d_bands = frames([900])
+    with pytest.raises(ValueError, match="sides"):
+        comb.absorb(d_sh, d_bands)
+    with pytest.raises(ValueError, match="sides"):
+        classic.absorb_combined(d_sh.withColumn("bucket", F.col("vec_id") % 4))
     for idx in [classic, comb] + retired:
         idx.close()
 
@@ -1423,6 +1429,30 @@ def test_incremental_index_durable_checkpoint(spark, tmp_path, monkeypatch):
     assert sorted(rec_bands.collect()) == sorted(cidx.bands.collect())
     assert rec_sh.columns == ["doc_id", "payload"]
     cidx.close()
+
+    # a fresh durable index: compact() with no rows still gives every side
+    # a file before it publishes, so recover() works before any merge; a
+    # capped embedding index keeps the vectors it evicts in ``sh`` and
+    # drops them from ``bands``, live and recovered alike
+    for tag, kw in (
+        ("text", {}), ("comb", {"comb": base}),
+        ("capped", {"comb": base, "bucket_cap": 1}),
+    ):
+        d = str(tmp_path / f"fresh_{tag}")
+        os.makedirs(d)
+        fidx = D.IncrementalLshIndex(
+            base.select("doc_id", "payload"), base.select("doc_id", "bucket"),
+            checkpoint_dir=d, **kw,
+        )
+        fidx.compact()
+        if tag == "capped":
+            fidx.absorb_combined(rows(range(10, 13)))
+            assert fidx.size() == 8
+            assert sorted(fidx.bands.collect()) == [(0, 0), (1, 1), (2, 2)]
+        rec_sh, rec_bands = D.IncrementalLshIndex.recover(spark, d)
+        assert sorted(rec_sh.collect()) == sorted(fidx.sh.collect())
+        assert sorted(rec_bands.collect()) == sorted(fidx.bands.collect())
+        fidx.close()
 
 
 def test_embedding_gate_rejects_non_hysteretic_config():
@@ -2330,15 +2360,13 @@ def test_cells_gate_inherits_index_bucket_cap_through_retrain(spark, tmp_path):
             # deliberately OFF: the flood must absorb in full for the
             # bucket-cap inheritance claim to have anything to bound
             absorb_dedup=False,
-            # the retrained cells must be finer than the cap too: train
-            # on every stored vector, as cents0 does (a 1-in-4 sample
-            # collapses 16 cells to 13 here, one holding 8 lower ids)
-            retrain_train_mod=1,
         )
         gate(epochs[0], 0)
-        # the at-scale maintenance move between epochs: retrain
-        # re-assigns every stored vector under new centroids — the
-        # inheritance claim is that the rebuilt side is re-capped
+        # the at-scale maintenance move between epochs: retrain trains on
+        # and re-assigns EVERY stored vector, including rows an earlier
+        # cap evicted (they reappear where the new geometry splits their
+        # bucket) — the inheritance claim is that the rebuilt side is
+        # re-capped
         gate.retrain()
         gate(epochs[1], 1)
         cluster_width = idx.bands.filter(
