@@ -184,9 +184,15 @@ def norm(a):
     return F.sqrt(dot_ieee(a, a))
 
 
+def _norm_columns(vec_col: str = "embedding") -> tuple:
+    """The (_v, _norm) Columns with_norms adds: the vector cast to double
+    and its norm."""
+    return _vec_double(F.col(vec_col)), norm(F.col("_v"))
+
+
 def with_norms(df: DataFrame, vec_col: str = "embedding") -> DataFrame:
-    v = _vec_double(F.col(vec_col))
-    return df.withColumn("_v", v).withColumn("_norm", norm(F.col("_v")))
+    v, n = _norm_columns(vec_col)
+    return df.withColumn("_v", v).withColumn("_norm", n)
 
 
 def cosine_topk(
@@ -531,14 +537,62 @@ _LIT_STORE: dict = {}  # memo_key -> the centroids' JSON text
 _CELLS_TYPE = "array<struct<cid:bigint,cv:array<double>,cn:double>>"
 
 
+class CentroidLiterals:
+    """One centroid geometry as an inline Column, plus the Columns built
+    on it. ``col`` is the folded centroid literal (centroid_literals).
+
+    ``cached(key, build)`` returns the value stored under ``key``,
+    building it on first use. A Column is an unresolved expression that
+    any number of plans can share, and building one out of higher-order
+    functions (``transform``, ``zip_with``, ``aggregate``) costs py4j
+    round trips for every lambda and every call inside it. So every
+    assignment pass over this geometry (``assignment(keep)``) and every
+    request of a live serve reuses one Column instead of re-creating it.
+    A new geometry is a new holder."""
+
+    def __init__(self, col):
+        self.col = col
+        self._cached: dict = {}
+
+    def cached(self, key, build):
+        if key not in self._cached:
+            self._cached[key] = build()
+        return self._cached[key]
+
+    def assignment(self, keep: int):
+        """ivf_assign's literal-path Column over a with_norms frame: each
+        vector ``transform``s the centroid array into (ccos, -cid, cid)
+        structs; keep=1 is ``array_max(...).cid`` (aliased ``cid``), keep>1
+        ``posexplode``s the first ``keep`` of the descending ``sort_array``
+        into (``_pos``, ``_c``)."""
+
+        def build():
+            scored = F.transform(
+                self.col,
+                lambda c: F.struct(
+                    (
+                        dot_ieee(F.col("_v"), c["cv"]) / (F.col("_norm") * c["cn"])
+                    ).alias("ccos"),
+                    (-c["cid"]).alias("nc"),
+                    c["cid"].alias("cid"),
+                ),
+            )
+            if keep == 1:
+                return F.array_max(scored)["cid"].alias("cid")
+            best = F.slice(F.sort_array(scored, asc=False), 1, keep)
+            return F.posexplode(best).alias("_pos", "_c")
+
+        return self.cached(("assign", keep), build)
+
+
 def centroid_literals(
     centroids: DataFrame, id_col: str = "vec_id", memo_key: tuple | None = None
-):
+) -> CentroidLiterals:
     """Collect a (tiny, materialized) centroid frame into one Column of
     (cid, cv, cn) structs — the inline quantizer ivf_assign(as_literals=...)
-    scores against. One driver collect of n_cells rows; callers running
-    several assignment passes over the same centroids build this ONCE and
-    pass the Column to each.
+    scores against — held in a CentroidLiterals. One driver collect of
+    n_cells rows; callers running several assignment passes over the same
+    centroids build this ONCE and pass the holder to each.
 
     The Column is ``from_json`` over a string literal: the JSON text is
     built on the driver and the array type is parsed once, here. A plan
@@ -575,7 +629,7 @@ def centroid_literals(
             while len(_LIT_STORE) >= 64:
                 _LIT_STORE.pop(next(iter(_LIT_STORE)))
             _LIT_STORE[memo_key] = js
-    return F.from_json(F.lit(js), _CELLS_TYPE)
+    return CentroidLiterals(F.from_json(F.lit(js), _CELLS_TYPE))
 
 
 def ivf_assign(
@@ -603,18 +657,15 @@ def ivf_assign(
     before any exchange. keep>1 (query probing, the small side) ranks the
     scored rows with a window.
 
-    ``as_literals``: score against an inline centroid_literals() Column
-    instead — one narrow projection per vector with no join, window,
-    aggregate or exchange. Each vector ``transform``s the centroid array
-    into (ccos, -cid, cid) structs; keep=1 takes ``array_max(...).cid``
-    and keep>1 ``posexplode``s the first ``keep`` of the descending
-    ``sort_array`` (crank = pos + 1). Struct order is the default path's
-    order, so the cells, ties and ranks are identical (test-pinned). Only
-    valid when the centroid frame is a materialized driver-side artifact
-    (trained_artifact's collect-and-replay frames, the cells gate's
-    centroids). Pass True to collect here, or a prebuilt
-    centroid_literals() Column to share one collect across several
-    assignment passes."""
+    ``as_literals``: score against an inline centroid literal instead —
+    one narrow projection per vector with no join, window, aggregate or
+    exchange (CentroidLiterals.assignment; crank = pos + 1). Struct
+    order is the default path's order, so the cells, ties and ranks are
+    identical (test-pinned). Only valid when the centroid frame is a
+    materialized driver-side artifact (trained_artifact's
+    collect-and-replay frames, the cells gate's centroids). Pass True to
+    collect here, or a prebuilt centroid_literals() holder to share one
+    collect and its assignment Columns across several passes."""
     if with_rank and keep == 1:
         # neither keep=1 path builds crank — fail loudly instead of
         # silently returning a rank-less frame
@@ -626,27 +677,13 @@ def ivf_assign(
             if as_literals is True
             else as_literals
         )
-        scored = F.transform(
-            lits,
-            lambda c: F.struct(
-                (
-                    dot_ieee(F.col("_v"), c["cv"]) / (F.col("_norm") * c["cn"])
-                ).alias("ccos"),
-                (-c["cid"]).alias("nc"),
-                c["cid"].alias("cid"),
-            ),
-        )
+        scored = vecs.select(id_col, "_v", "_norm", lits.assignment(keep))
         if keep == 1:
-            return vecs.select(
-                id_col, "_v", "_norm", F.array_max(scored)["cid"].alias("cid")
-            )
-        best = F.slice(F.sort_array(scored, asc=False), 1, keep)
+            return scored
         cols = [id_col, "_v", "_norm", F.col("_c.cid").alias("cid")]
         if with_rank:
             cols.append((F.col("_pos") + 1).alias("crank"))
-        return vecs.select(
-            id_col, "_v", "_norm", F.posexplode(best).alias("_pos", "_c")
-        ).select(*cols)
+        return scored.select(*cols)
     c = centroids.select(
         F.col(id_col).alias("cid"), F.col("_v").alias("cv"),
         F.col("_norm").alias("cn"),
@@ -887,7 +924,7 @@ def ivf_topk(
     assignment passes through ivf_assign's inline-literal path — the
     composed plan then has no BroadcastNestedLoopJoin anywhere (the probe
     join stays a broadcast HASH join on cid). True collects the centroids
-    here (one job); a prebuilt centroid_literals() Column is used as-is
+    here (one job); a prebuilt centroid_literals() holder is used as-is
     (memoized callers skip the per-invocation collect).
 
     ``cells``: a precomputed corpus assignment (ivf_assign keep=1
@@ -928,8 +965,8 @@ def ivf_topk(
     else:
         corpus = with_norms(spread(emb), vec_col)
         cents = with_norms(emb.filter(F.col(id_col) < n_cells), vec_col)
-    # one collect + one centroid Column, shared by both assignment passes;
-    # True builds it here, a caller-provided Column (e.g. a memoized
+    # one collect + one centroid holder, shared by both assignment passes;
+    # True builds it here, a caller-provided holder (e.g. a memoized
     # centroid_literals result) is passed through as-is
     if quantizer_literals is True:
         lit_cents = centroid_literals(cents, id_col)
@@ -1729,6 +1766,32 @@ def _broadcast_bytes_limit(spark) -> int:
         return 10 * 2**20
 
 
+def probe_broadcast_rows(spark, schema, probe_row_bytes: int) -> int:
+    """The largest probe-side row count the serving guard broadcasts
+    (0 when broadcast is disabled): the session's
+    autoBroadcastJoinThreshold over a per-row estimate for a probe frame
+    of ``schema`` whose elements take ``probe_row_bytes`` (e.g. DIM·8
+    for a query vector).
+
+    The estimate is not the raw payload. Each UnsafeRow adds a fixed
+    region (an 8-byte null-bitset word and 8 bytes per field) and each
+    array, string, binary, map or struct field an offset and header word
+    pair (16 bytes) in the variable region. The padded row is then
+    doubled, because a broadcast materializes twice: the driver's
+    collected copy and the executors' hashed-relation build. So near the
+    threshold the guard errs toward the bounded plan:
+
+        row = 2 · (payload + 8 + 8·fields + 16·var_fields)
+        max_rows = threshold // row"""
+    n_fields = len(schema.fields)
+    n_var = sum(
+        1 for f in schema.fields
+        if f.dataType.typeName() in ("array", "string", "binary", "map", "struct")
+    )
+    row = 2 * (int(probe_row_bytes) + 8 + 8 * n_fields + 16 * n_var)
+    return max(_broadcast_bytes_limit(spark), 0) // row
+
+
 def probe_side_join(
     lists: DataFrame,
     probes: DataFrame,
@@ -1736,44 +1799,64 @@ def probe_side_join(
     probe_rows: int,
     probe_row_bytes: int,
 ) -> DataFrame:
-    """The ANN serving gate's verify join, with the broadcast GUARDED by
-    an estimated probe-side size (VERDICT r10 #4): the join's sides are
-    wildly asymmetric (probes = |batch|·nprobe skinny rows; lists = the
-    corpus inverted lists), so the right plan is almost always to
-    broadcast the probes and leave the corpus in place — but "almost
-    always" previously meant an unconditional F.broadcast whose failure
-    mode at huge micro-batches is a driver OOM, not a slower plan.
+    """A serving join's equi-join of the index ``lists`` against the
+    bounded ``probes`` (queries × probed cells), with the broadcast
+    guarded by the probe side's estimated size.
 
-    The caller passes the probe-row COUNT it already paid for (the
-    micro-batch count) and a per-row PAYLOAD byte estimate (element
-    widths only, e.g. DIM·8 for the query vectors); when the estimated
-    materialized size exceeds the session's autoBroadcastJoinThreshold
-    (or broadcast is disabled with -1) the join degrades to shuffle_hash
-    with the probes as the build side — both relations shuffle on the
-    cell id, which is the measured-2.3×-slower-but-bounded plan, never
-    an OOM. Decisions are plan-invariant (same equi-join); test-pinned
-    with both branches in tests/test_plans.py.
+    The sides are asymmetric: the probes are |batch|·nprobe skinny rows,
+    the lists are the corpus. So the probes broadcast and the corpus
+    stays in place while ``probe_rows`` is at most
+    probe_broadcast_rows(...) for the probes' schema and
+    ``probe_row_bytes``. Past that bound, or with broadcast disabled,
+    the join takes shuffle_hash with the probes as the build side: both
+    relations shuffle on ``on``, a slower plan (2.3× at sf1) whose memory
+    stays bounded, where an oversized broadcast would exhaust the driver.
+    The rows that come out are the same on both branches (test-pinned in
+    tests/test_plans.py).
 
-    The estimate is deliberately NOT rows × raw payload (ADVICE r11 —
-    the same underestimation pattern behind the r7 shingle-side
-    broadcast OOM): each UnsafeRow adds a fixed region (8-byte null
-    bitset word + 8 bytes per field) and each array/string field an
-    offset+header word pair in the variable region, all derived from the
-    probes SCHEMA here; the padded total is then doubled because the
-    broadcast materializes TWICE over — the driver's collected copy plus
-    the executor hashed-relation build (page arrays + key index). Near
-    the threshold the guard therefore errs toward the bounded plan."""
-    n_fields = len(probes.schema.fields)
-    n_var = sum(
-        1 for f in probes.schema.fields
-        if f.dataType.typeName() in ("array", "string", "binary", "map", "struct")
+    ``probe_rows`` is a count the caller already has: the ingest gates
+    pass their batch count times the probes per vector, and the serves
+    pass what collect_probe_side read."""
+    max_rows = probe_broadcast_rows(
+        lists.sparkSession, probes.schema, probe_row_bytes
     )
-    row_bytes = int(probe_row_bytes) + 8 + 8 * n_fields + 16 * n_var
-    est = 2 * int(probe_rows) * row_bytes
-    limit = _broadcast_bytes_limit(lists.sparkSession)
-    if 0 < est <= limit:
+    if 0 < probe_rows <= max_rows:
         return lists.join(F.broadcast(probes), on)
     return lists.join(probes.hint("shuffle_hash"), on)
+
+
+def collect_probe_side(
+    probes: DataFrame,
+    probe_row_bytes: int,
+    unbounded: tp.Callable[[], DataFrame],
+) -> tuple:
+    """A serve's probe side, read once up to the broadcast guard's bound,
+    in place of a batch count. One job reads at most max_rows + 1 rows of
+    ``probes`` (max_rows = probe_broadcast_rows) and returns (frame, rows):
+
+    - (None, 0) when ``probes`` is empty;
+    - when the rows fit, a local relation holding them, which the serving
+      join broadcasts without recomputing the probes;
+    - otherwise ``unbounded()`` (the probes planned for the shuffle, e.g.
+      over a spread batch) and max_rows + 1, which sends
+      probe_side_join to its shuffle_hash branch.
+
+    The rows stay in the JVM (collected and re-parallelized there), so
+    the local relation's values are the probes' values bit for bit.
+    Plan ``probes`` without a repartition: the read stops after
+    max_rows + 1 rows."""
+    spark = probes.sparkSession
+    max_rows = probe_broadcast_rows(spark, probes.schema, probe_row_bytes)
+    # limit() takes a Java int
+    rows = probes._jdf.limit(min(max_rows, 2**31 - 2) + 1).collectAsList()
+    n = rows.size()
+    if n == 0:
+        return None, 0
+    if n > max_rows:
+        return unbounded(), n
+    return DataFrame(
+        spark._jsparkSession.createDataFrame(rows, probes._jdf.schema()), spark
+    ), n
 
 
 def serving_nprobe(n_cells: int, recall_target: float = 0.5) -> int:
@@ -1828,58 +1911,93 @@ def live_topk_serve(
     (an IncrementalLshIndex whose ``comb`` side stores (id, _v, _norm,
     cell)) — the serve body shared by the registry entry
     `streaming_ann_topk_serving_live` and perfbench's `ann_live_serve`.
+    Returns (query_id, neighbor_id, cos, rank ≤ k), or None on an empty
+    batch; the caller labels the epoch and writes.
 
-    nprobe resolves from the CURRENT geometry via serving_nprobe (a
-    retrain that grows n_cells keeps the scan fraction — and the recall
-    target — instead of silently shrinking it). The queries are assigned
-    to their nprobe nearest cells; with ``cents_lits`` (a caller-held
-    centroid_literals() Column, e.g. the cells gate's centroid_lits(),
-    built once per geometry) that assignment is one narrow projection
-    against the folded centroid literal, with no join and no shuffle, and
-    a request neither collects nor re-parses the centroids. ``None``
-    broadcasts the centroid frame instead, for centroids that are not
-    materialized artifacts. Values are identical either way.
+    nprobe resolves from the CURRENT geometry via serving_nprobe, so a
+    retrain that grows n_cells keeps the scan fraction and the recall
+    target. Each query is assigned to its nprobe nearest cells. With
+    ``cents_lits`` (a caller-held centroid_literals() holder, e.g. the
+    cells gate's centroid_lits()) that assignment is one narrow
+    projection against the folded centroid literal, and the request's
+    invariant Columns (the query cast and norm, the assignment, the list
+    and probe projections, the cos fold and the rank window) are built
+    once per geometry in the holder and reused. ``None`` broadcasts the
+    centroid frame instead, for centroids that are not materialized
+    artifacts. Values are identical either way.
 
-    The probes join the ``comb`` view once through the guarded probe-side
-    broadcast (probe_side_join; past the threshold it degrades to the
-    bounded shuffle_hash build), and cos is computed in the same pass. A
-    vector lives in exactly one cell, so each (query, neighbor) pair
-    appears once. The view is base + the one lineage-cut level leaf every
-    absorb merges into — a two-leaf read, never a re-derivation. Returns
-    (query_id, neighbor_id, cos, rank ≤ k) or None on an empty batch; the
-    caller labels the epoch and writes."""
+    A warm request runs 4 Spark jobs:
+    - collect_probe_side reads the probes, at most the guard's bound plus
+      one row;
+    - the join broadcasts them as a local relation (one small job), and
+      the lists stay in place;
+    - the lists scan, join, cos and rank window's shuffle;
+    - the rank filter and the caller's write.
+    Probes past the bound take probe_side_join's bounded shuffle_hash
+    plan over the spread batch instead. A vector lives in exactly one
+    cell, so each (query, neighbor) pair appears once. The ``comb`` view
+    is base + the one level leaf every absorb merges into: a two-leaf
+    read, never a re-derivation."""
     serve_np = serving_nprobe(n_cells, recall_target=recall_target)
-    n_batch = batch_df.count()  # one tiny job; feeds the broadcast guard
-    if n_batch == 0:
+    cols = (
+        cents_lits.cached(("serve", id_col), lambda: _serve_columns(id_col))
+        if cents_lits is not None
+        else _serve_columns(id_col)
+    )
+
+    def probes_of(df: DataFrame) -> DataFrame:
+        v, n = cols["norms"]  # with_norms' Columns, built once
+        return ivf_assign(
+            df.withColumn("_v", v).withColumn("_norm", n), centroids, n_cells,
+            keep=serve_np, id_col=id_col, as_literals=cents_lits,
+        ).select(*cols["probes"])
+
+    payload = 2 * dim * 8 + 40
+    probes, n_probes = collect_probe_side(
+        probes_of(batch_df), payload, lambda: probes_of(spread(batch_df))
+    )
+    if probes is None:
         return None
     retire_pipeline_caches()
-    q = with_norms(spread(batch_df))
-    probes = ivf_assign(
-        q, centroids, n_cells, keep=serve_np, id_col=id_col,
-        as_literals=cents_lits,
-    ).select(
-        F.col(id_col).alias("query_id"), F.col("_v").alias("qv"),
-        F.col("_norm").alias("qn"), F.col("cid"),
-    )
-    scored = probe_side_join(
-        index.comb.select(
-            F.col(id_col).alias("neighbor_id"), F.col("_v").alias("cv"),
-            F.col("_norm").alias("cn"), F.col("bucket").alias("cid"),
-        ),
-        probes, "cid",
-        probe_rows=n_batch * serve_np,
-        probe_row_bytes=2 * dim * 8 + 40,
-    ).withColumn(
-        "cos", dot_ieee(F.col("qv"), F.col("cv")) / (F.col("qn") * F.col("cn"))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos").desc(), F.col("neighbor_id").asc()
-    )
     return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cos", "rank")
+        probe_side_join(
+            index.comb.select(*cols["lists"]), probes, "cid",
+            probe_rows=n_probes, probe_row_bytes=payload,
+        )
+        .select(*cols["scored"])
+        .select(*cols["ranked"])
+        .filter(cols["rank"] <= k)
     )
+
+
+def _serve_columns(id_col: str) -> dict:
+    """live_topk_serve's request-invariant Columns: the query cast and
+    norm, the probe and list projections, the cos fold and the rank
+    window."""
+    col = F.col
+    w = Window.partitionBy("query_id").orderBy(
+        col("cos").desc(), col("neighbor_id").asc()
+    )
+    return {
+        "norms": _norm_columns(),
+        "probes": [
+            col(id_col).alias("query_id"), col("_v").alias("qv"),
+            col("_norm").alias("qn"), col("cid"),
+        ],
+        "lists": [
+            col(id_col).alias("neighbor_id"), col("_v").alias("cv"),
+            col("_norm").alias("cn"), col("bucket").alias("cid"),
+        ],
+        "scored": [
+            col("query_id"), col("neighbor_id"),
+            (dot_ieee(col("qv"), col("cv")) / (col("qn") * col("cn"))).alias("cos"),
+        ],
+        "ranked": [
+            col("query_id"), col("neighbor_id"), col("cos"),
+            F.row_number().over(w).alias("rank"),
+        ],
+        "rank": col("rank"),
+    }
 
 
 class EmbeddingIngestGate(IngestGate):
@@ -2120,14 +2238,15 @@ class CellEmbeddingIngestGate(EmbeddingIngestGate):
         self._lits = None  # centroid_lits(), built on first use
 
     def centroid_lits(self):
-        """The current geometry's centroid_literals() Column, built once
+        """The current geometry's centroid_literals() holder, built once
         per geometry (one collect of the materialized centroids: the
         trained artifact at construction, retrain's own collect after) and
         reset by retrain. Every assignment pass of the gate — probe
         (keep=nprobe), absorb (keep=1), retrain's re-assignment — and the
         live serve's query probing share it, so each runs as one narrow
-        projection with no join or shuffle, and no plan re-collects or
-        re-parses the centroids. Values are bit-identical to the join path
+        projection with no join or shuffle, no plan re-collects or
+        re-parses the centroids, and each ``keep``'s assignment Column is
+        built once. Values are bit-identical to the join path
         (test-pinned)."""
         if self._lits is None:
             self._lits = centroid_literals(self.centroids, self.id_col)
@@ -2157,7 +2276,7 @@ class CellEmbeddingIngestGate(EmbeddingIngestGate):
         spark = self.index.sh.sparkSession
         self.centroids = spark.createDataFrame(cents.collect(), cents.schema)
         self.n_cells = n_cells
-        self._lits = None  # new geometry -> new centroid Column
+        self._lits = None  # new geometry -> new centroid holder
         self.index.rebuild_combined(self._stored_rows(self.index.sh))
 
     def _capacity(self) -> int:

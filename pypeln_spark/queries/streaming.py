@@ -16,6 +16,19 @@ from pypeln_spark.functions import dsum, dsum_expr
 from .base import load_table, register, tables
 
 
+def _index_dir(entry: str):
+    """The durable index dir of registry entry ``entry``: its own
+    subdirectory of PYPELN_SPARK_INGEST_COMPACT_DIR, or None (in-session
+    leaves) when the variable is unset. An index writes fixed file names
+    (``<side>_base``, ``<side>_NNNNN``, ``MANIFEST.json``), so entries
+    sharing the one directory would overwrite each other's files and
+    manifest."""
+    import os
+
+    root = os.environ.get("PYPELN_SPARK_INGEST_COMPACT_DIR")
+    return os.path.join(root, entry) if root else None
+
+
 @register(
     "streaming_tumbling_hourly",
     oracle=f"""
@@ -1222,12 +1235,10 @@ def _text_ingest_gate(spark, sf_dir, checkpoint_dir=None, bucket_cap=None):
 def streaming_incremental_dedup(spark, sf_dir):
     """The registry text ingest gate (see _text_ingest_gate). Compaction
     target = localCheckpoint (block-manager) unless the deployment env
-    knob PYPELN_SPARK_INGEST_COMPACT_DIR points at a shared-FS dir."""
-    import os
-
+    knob PYPELN_SPARK_INGEST_COMPACT_DIR points at a shared-FS dir (the
+    index lives in this entry's subdirectory of it, _index_dir)."""
     return _text_ingest_gate(
-        spark, sf_dir,
-        os.environ.get("PYPELN_SPARK_INGEST_COMPACT_DIR") or None,
+        spark, sf_dir, _index_dir("streaming_incremental_dedup")
     )
 
 
@@ -1810,8 +1821,6 @@ def streaming_embedding_ingest(spark, sf_dir):
     entry leaves the trigger off, because the oracle replays the fixed
     n_planes=6 shape; tests/test_streaming.py::test_embedding_gate_occupancy_trigger
     drives it on a growing synthetic stream."""
-    import os
-
     from pyspark.sql import types as T
 
     from pypeln_spark.ext import dedup as D
@@ -1832,7 +1841,7 @@ def streaming_embedding_ingest(spark, sf_dir):
     index = D.IncrementalLshIndex(
         cor.select("vec_id", "_v", "_norm"),
         cor.select("vec_id", "bucket"),
-        checkpoint_dir=os.environ.get("PYPELN_SPARK_INGEST_COMPACT_DIR") or None,
+        checkpoint_dir=_index_dir("streaming_embedding_ingest"),
         # an embedding index is one (id, _v, _norm, bucket) side; the
         # two frames above only name its sh and band view columns
         comb=cor,
@@ -1963,8 +1972,6 @@ def streaming_embedding_ingest_cells(spark, sf_dir):
     rebuild), not bucket widening. The oracle replays training,
     assignment, probing, verification, survivor pick AND absorb across
     the three unrolled epochs."""
-    import os
-
     from pyspark.sql import types as T
 
     from pypeln_spark.ext import dedup as D
@@ -2001,7 +2008,7 @@ def streaming_embedding_ingest_cells(spark, sf_dir):
     index = D.IncrementalLshIndex(
         cor.select("vec_id", "_v", "_norm"),
         cor.select("vec_id", "bucket"),
-        checkpoint_dir=os.environ.get("PYPELN_SPARK_INGEST_COMPACT_DIR") or None,
+        checkpoint_dir=_index_dir("streaming_embedding_ingest_cells"),
         # an embedding index is one (id, _v, _norm, bucket) side; the
         # two frames above only name its sh and band view columns
         comb=cor,
@@ -2162,35 +2169,33 @@ def streaming_ann_topk_serving(spark, sf_dir):
 
     from pypeln_spark.ext.similarity import dot_ieee
 
-    def serve(batch_df, epoch_id):
-        n_batch = batch_df.count()  # one tiny job; feeds the broadcast guard
-        if n_batch == 0:
-            return
-        q = S.with_norms(S.spread(batch_df))
-        probes = S.ivf_assign(q, cents, N_CELLS, keep=nprobe).select(
+    def probes_of(df):
+        return S.ivf_assign(S.with_norms(df), cents, N_CELLS, keep=nprobe).select(
             F.col("vec_id").alias("query_id"), F.col("_v").alias("qv"),
             F.col("_norm").alias("qn"), F.col("cid"),
         )
-        # BROADCAST the probe side — the serving join's sides are wildly
-        # asymmetric (probes = |batch|·nprobe skinny rows, bounded by the
-        # micro-batch; lists = the CORPUS), so the corpus lists must
-        # never move. Measured at sf1 (10k queries vs 10k-vector lists,
-        # 16 cells): broadcast-probes 22.3s vs shuffle_hash 50.6s (2.3x),
-        # decisions identical — and at 100 TB the gap is the difference
-        # between shipping megabytes of probes and shuffling the index.
-        # (Contrast the INGEST gates, where broadcast is wrong: their
-        # batch side carries corpus-scale shingle arrays, the r7 OOM
-        # class.) The broadcast is GUARDED (VERDICT r10 #4): probe_side_join
-        # estimates the probe frame (rows already counted above × payload
-        # bytes, padded with schema-derived UnsafeRow overheads and the
-        # 2× driver-copy + hashed-relation factor, ADVICE r11) against
-        # autoBroadcastJoinThreshold and degrades to a shuffle_hash build
-        # on the probes — bounded, never a driver OOM — when a
-        # deployment's micro-batch outgrows the driver.
+
+    payload = DIM * 8 + 24  # qv doubles + norm/ids
+
+    def serve(batch_df, epoch_id):
+        # the serving join's sides are asymmetric (probes = |batch|·nprobe
+        # skinny rows, bounded by the micro-batch; lists = the CORPUS), so
+        # the probes broadcast and the corpus lists never move — measured
+        # at sf1 (10k queries vs 10k-vector lists, 16 cells):
+        # broadcast-probes 22.3s vs shuffle_hash 50.6s (2.3x), decisions
+        # identical. (The INGEST gates are the contrast: their batch side
+        # carries corpus-scale shingle arrays.) The probes are read once,
+        # up to the guard's bound, as the local relation the join
+        # broadcasts; past the bound the join takes the bounded
+        # shuffle_hash plan over the spread batch (collect_probe_side,
+        # probe_side_join).
+        probes, n_probes = S.collect_probe_side(
+            probes_of(batch_df), payload, lambda: probes_of(S.spread(batch_df))
+        )
+        if probes is None:
+            return
         scored = S.probe_side_join(
-            lists, probes, "cid",
-            probe_rows=n_batch * nprobe,
-            probe_row_bytes=DIM * 8 + 24,  # payload: qv doubles + norm/ids
+            lists, probes, "cid", probe_rows=n_probes, probe_row_bytes=payload
         ).withColumn(
             "cos", dot_ieee(F.col("qv"), F.col("cv")) / (F.col("qn") * F.col("cn"))
         )
@@ -2415,8 +2420,6 @@ def streaming_ann_topk_serving_live(spark, sf_dir):
     passes over stored vectors. The oracle replays BOTH k-means
     trainings, both assignment rankings, dup decisions, absorb
     membership, and both serves."""
-    import os
-
     from pyspark.sql import types as T
 
     from pypeln_spark.ext import dedup as D
@@ -2451,7 +2454,7 @@ def streaming_ann_topk_serving_live(spark, sf_dir):
     index = D.IncrementalLshIndex(
         cor.select("vec_id", "_v", "_norm"),
         cor.select("vec_id", "bucket"),
-        checkpoint_dir=os.environ.get("PYPELN_SPARK_INGEST_COMPACT_DIR") or None,
+        checkpoint_dir=_index_dir("streaming_ann_topk_serving_live"),
         # an embedding index is one (id, _v, _norm, bucket) side; the
         # two frames above only name its sh and band view columns
         comb=cor,
@@ -2482,13 +2485,13 @@ def streaming_ann_topk_serving_live(spark, sf_dir):
     )
 
     def serve(batch_df, qepoch):
-        # the shared LIVE serve body (ext/similarity.live_topk_serve —
-        # the pipeline SCALING.md "r12 scale-sweep evidence" measures):
-        # nprobe from the CURRENT geometry via the recall-target rule,
-        # then TWO guarded broadcast stages — probes vs the SKINNY band
-        # view, counted candidates vs the vector side — so neither corpus
-        # view moves while the estimates fit; bounded shuffle_hash past
-        # the bound; two-leaf index reads (base + the merged level leaf)
+        # the shared LIVE serve body (ext/similarity.live_topk_serve):
+        # nprobe from the CURRENT geometry via the recall-target rule;
+        # the query probes are read once, up to the broadcast guard's
+        # bound, and broadcast as a local relation against the index's
+        # combined side, which never moves; past the bound the join takes
+        # the bounded shuffle_hash plan; the index read is two leaves
+        # (base + the merged level leaf)
         topk = S.live_topk_serve(
             index, gate.centroids, gate.n_cells, batch_df, k=K, dim=DIM,
             recall_target=0.12, cents_lits=gate.centroid_lits(),
@@ -2698,8 +2701,6 @@ def streaming_bm25_topk_serving_live(spark, sf_dir):
     ∝ |epoch novel set|. The oracle replays the dedup chain (banding,
     verify, survivor pick, absorb) AND both statistics snapshots AND
     both serves — every score and rank hash-checked."""
-    import os
-
     from pyspark.sql import types as T
 
     from pypeln_spark.ext import dedup as D
@@ -2759,7 +2760,7 @@ def streaming_bm25_topk_serving_live(spark, sf_dir):
 
     index = D.IncrementalLshIndex(
         cor_sh, cor_bands,
-        checkpoint_dir=os.environ.get("PYPELN_SPARK_INGEST_COMPACT_DIR") or None,
+        checkpoint_dir=_index_dir("streaming_bm25_topk_serving_live"),
     )
     gate = D.TextIngestGate(
         index, ingest_root, N_HASHES, BANDS, 5, JACCARD_THRESHOLD,

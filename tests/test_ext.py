@@ -414,7 +414,7 @@ def test_centroid_literals_round_trip_non_finite_bits(spark):
         "vec_id long, _v array<double>, _norm double",
     )
     got = spark.range(1).select(
-        S.centroid_literals(cents).alias("c")
+        S.centroid_literals(cents).col.alias("c")
     ).collect()[0].c
     bits = lambda x: struct.pack(">d", x)
     want = [(r.vec_id, r._v, r._norm) for r in cents.collect()]

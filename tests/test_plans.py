@@ -428,9 +428,10 @@ def test_serving_join_broadcasts_probe_side(spark):
     while the probe-side estimate fits autoBroadcastJoinThreshold
     (VERDICT r10 #4): past the bound, probe_side_join degrades to a
     shuffle_hash build on the probes instead of a driver OOM. plan_lint
-    can't see inside foreachBatch, so the guarded join is rebuilt here
-    verbatim and BOTH branches' physical plans are pinned, plus
-    decision-equality across the branch."""
+    can't see inside foreachBatch, so the guarded join is called here on
+    static frames and BOTH branches' physical plans are pinned, with the
+    boundary of probe_broadcast_rows, plus decision-equality across the
+    branch."""
     from pyspark.sql import functions as F
 
     from pypeln_spark.ext import similarity as S
@@ -477,6 +478,14 @@ def test_serving_join_broadcasts_probe_side(spark):
                              probe_rows=1, probe_row_bytes=limit - 100)
     plan_near = near._jdf.queryExecution().executedPlan().toString()
     assert "ShuffledHashJoin [cid" in plan_near, plan_near
+    # the split estimate's boundary: probe_broadcast_rows is the largest
+    # count that broadcasts, and one row more takes the bounded plan
+    m = S.probe_broadcast_rows(spark, probes.schema, 512)
+    assert m >= 100
+    for rows, node in ((m, "BroadcastHashJoin [cid"), (m + 1, "ShuffledHashJoin [cid")):
+        edge = S.probe_side_join(lists, probes, "cid", probe_rows=rows,
+                                 probe_row_bytes=512)
+        assert node in edge._jdf.queryExecution().executedPlan().toString(), rows
     # the guard moves WHERE the join runs, never which rows come out
     key = lambda df: sorted(
         (r.query_id, r.neighbor_id) for r in df.collect()
@@ -510,17 +519,15 @@ def test_bm25_serve_keeps_postings_in_place(spark):
     assert p.count("BroadcastHashJoin") >= 2, p[:3000]  # qterms + df joins
 
 
-def test_live_serving_two_stage_join_keeps_corpus_in_place(spark):
-    """streaming_ann_topk_serving_live's serve body (VERDICT r11 #4):
-    the LIVE index stores vectors and cells as separate delta chains, so
-    the serve runs TWO guarded stages — probes broadcast against the
-    skinny band view (candidates), then the counted candidate frame
-    broadcasts against the vector side (verify) — and with both
-    estimates under the threshold NEITHER corpus view moves: the whole
-    serve plan has no shuffle join at all. plan_lint can't see inside
-    foreachBatch, so the shape is rebuilt verbatim here."""
+def test_live_serve_broadcasts_collected_probes(spark):
+    """live_topk_serve's plan (the serve body of
+    streaming_ann_topk_serving_live), built by calling it on a static
+    batch and index: the probes it collected come back as a local
+    relation that the cid join broadcasts, so the corpus lists stay in
+    place, and the only shuffle left is the rank window's."""
     from pyspark.sql import functions as F
 
+    from pypeln_spark.ext import dedup as D
     from pypeln_spark.ext import similarity as S
 
     emb = spark.read.parquet(f"{SF}/embeddings.parquet").select(
@@ -529,31 +536,28 @@ def test_live_serving_two_stage_join_keeps_corpus_in_place(spark):
     corpus = emb.filter(F.col("vec_id") % 2 == 0)
     batch = emb.filter(F.col("vec_id") % 12 == 3)
     cents = S.kmeans_centroids(corpus, 16, 2, train_mod=4)
-    nf = S.with_norms(S.spread(corpus))
-    asg = S.ivf_assign(nf, cents, 16, keep=1)
-    bands = asg.select(
-        F.col("vec_id").alias("neighbor_id"), F.col("cid")
+    cents = spark.createDataFrame(cents.collect(), cents.schema)
+    cor = S.ivf_assign(S.with_norms(S.spread(corpus)), cents, 16, keep=1).select(
+        "vec_id", "_v", "_norm", F.col("cid").alias("bucket")
+    ).localCheckpoint(eager=True)
+    index = D.IncrementalLshIndex(
+        cor.select("vec_id", "_v", "_norm"), cor.select("vec_id", "bucket"),
+        comb=cor,
     )
-    sh = asg.select(
-        F.col("vec_id").alias("neighbor_id"), F.col("_v").alias("cv"),
-        F.col("_norm").alias("cn"),
+    topk = S.live_topk_serve(
+        index, cents, 16, batch, k=5, dim=64,
+        cents_lits=S.centroid_literals(cents),
     )
-    probes = S.ivf_assign(
-        S.with_norms(S.spread(batch)), cents, 16, keep=2
-    ).select(
-        F.col("vec_id").alias("query_id"), F.col("_v").alias("qv"),
-        F.col("_norm").alias("qn"), F.col("cid"),
-    )
-    cand = S.probe_side_join(
-        bands, probes, "cid", probe_rows=100, probe_row_bytes=64 * 8 + 24
-    ).select("query_id", "qv", "qn", "neighbor_id")
-    scored = S.probe_side_join(
-        sh, cand, "neighbor_id", probe_rows=400, probe_row_bytes=64 * 8 + 32
-    )
-    plan = scored._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("BroadcastHashJoin") >= 2, plan
-    assert "SortMergeJoin" not in plan
-    assert "ShuffledHashJoin" not in plan
+    plan = topk._jdf.queryExecution().executedPlan().toString()
+    assert "BroadcastHashJoin [cid" in plan, plan
+    assert re.search(r"BroadcastExchange [^\n]*\n\s*\+- LocalTableScan", plan), plan
+    assert "SortMergeJoin" not in plan and "ShuffledHashJoin" not in plan, plan
+    shuffles = [
+        line for line in plan.splitlines()
+        if "Exchange" in line and "BroadcastExchange" not in line
+    ]
+    assert len(shuffles) == 1, shuffles
+    assert "hashpartitioning(query_id" in shuffles[0], shuffles
 
 
 def test_plan_lint_whole_registry(spark):

@@ -1250,30 +1250,34 @@ def test_ingest_gate_compaction_invariant_decisions(spark, tmp_path, monkeypatch
     # the planted absorb matches must actually be present in both gates
     assert any(r[0] == 3 and r[2] == 7 for r in base_txt)
     assert any(r[0] == 3 and r[2] == 7 for r in base_emb)
-    # durable arm: same registry gate, materializing to a shared-FS dir
-    # instead of localCheckpoint — decisions identical, and the final
-    # index is recoverable from the durable files alone via the manifest
-    # (base copy + level; the corpus is written once, never rewritten)
+    # durable arm: same registry gates, materializing to a shared-FS dir
+    # instead of localCheckpoint — decisions identical, and each final
+    # index is recoverable from the durable files alone via its manifest
+    # (base copy + level; the corpus is written once, never rewritten).
+    # Both entries run into the ONE directory: each keeps its files and
+    # manifest in its own subdirectory, so neither overwrites the other's
+    import json
+
     from pypeln_spark.ext import dedup as D
 
     ckpt = str(tmp_path / "gate_ckpt")
     os.makedirs(ckpt)
     monkeypatch.setenv("PYPELN_SPARK_INGEST_COMPACT_DIR", ckpt)
     assert run("streaming_incremental_dedup") == base_txt
-    live = sorted(os.listdir(ckpt))
+    # the embedding gate's durable arm runs its one combined side
+    assert run("streaming_embedding_ingest") == base_emb
+    assert sorted(os.listdir(ckpt)) == [
+        "streaming_embedding_ingest", "streaming_incremental_dedup",
+    ]
+    txt_ckpt = os.path.join(ckpt, "streaming_incremental_dedup")
+    live = sorted(os.listdir(txt_ckpt))
     assert "sh_base" in live and "MANIFEST.json" in live, live
-    rec_sh, _rec_bands = D.IncrementalLshIndex.recover(spark, ckpt)
+    rec_sh, _rec_bands = D.IncrementalLshIndex.recover(spark, txt_ckpt)
     # base corpus (even ids) + every novel absorbed doc = all non-dup ids
     dups = {r[0] for r in base_txt if r[2] is not None}
     want_ids = {doc_id for doc_id, _ in rows} - dups
     assert {r.doc_id for r in rec_sh.collect()} == want_ids
-    # the embedding gate's durable arm runs its one combined side
-    import json
-
-    emb_ckpt = str(tmp_path / "emb_ckpt")
-    os.makedirs(emb_ckpt)
-    monkeypatch.setenv("PYPELN_SPARK_INGEST_COMPACT_DIR", emb_ckpt)
-    assert run("streaming_embedding_ingest") == base_emb
+    emb_ckpt = os.path.join(ckpt, "streaming_embedding_ingest")
     with open(os.path.join(emb_ckpt, "MANIFEST.json")) as f:
         manifest = json.load(f)
     assert "comb" in manifest and "sh" not in manifest, manifest
@@ -2702,17 +2706,10 @@ def test_seed_sink_schema_matches_spark_writer(spark, tmp_path):
     assert spark.read.parquet(arr_root).count() == 0
 
 
-def test_live_serve_epoch_job_count(spark, tmp_path):
-    """One live query epoch — live_topk_serve against a cells-gate index
-    after one ingest epoch, written by parquet append — runs exactly 6
-    Spark jobs. The query probes' cell assignment against the gate's
-    centroid_lits() is a narrow projection, so it adds no shuffle job of
-    its own (the window formulation it replaced ran 7). Jobs are counted
-    through a job group set around the request, the way the benchmark's
-    tracer counts them."""
+def _live_serve_fixture(spark, tmp_path):
+    """A cells-gate index over 200 random 16-d vectors (8 cells) and two
+    feeds: 30 vectors to ingest, then 40 queries."""
     import random
-
-    from pyspark.sql import types as T
 
     from pypeln_spark.ext import dedup as D
     from pypeln_spark.ext import similarity as S
@@ -2740,6 +2737,30 @@ def test_live_serve_epoch_job_count(spark, tmp_path):
         index, str(tmp_path / "ingest"), DIM, cents, CELLS, 0.35,
         nprobe="auto", absorb_dedup=False,
     )
+
+    def close():
+        D.retire_pipeline_caches()
+        index.close()
+        cor.unpersist()
+
+    return index, gate, feeds, DIM, close
+
+
+def test_live_serve_epoch_job_count(spark, tmp_path):
+    """One live query epoch — live_topk_serve against a cells-gate index
+    after one ingest epoch, written by parquet append — runs exactly 4
+    Spark jobs: the probe collect (no batch count), the broadcast of the
+    collected probes as a local relation, the lists scan + join + rank
+    window's shuffle, and the rank filter + write. The query probes'
+    cell assignment against the gate's centroid_lits() is a narrow
+    projection, so it adds no shuffle job of its own. Jobs are counted
+    through a job group set around the request, the way the benchmark's
+    tracer counts them."""
+    from pyspark.sql import types as T
+
+    from pypeln_spark.ext import similarity as S
+
+    index, gate, feeds, DIM, close = _live_serve_fixture(spark, tmp_path)
     serve_root = str(tmp_path / "serve")
     ST.seed_sink_schema(spark, T.StructType([
         T.StructField("query_id", T.LongType()),
@@ -2774,10 +2795,60 @@ def test_live_serve_epoch_job_count(spark, tmp_path):
     jobs = sc.statusTracker().getJobIdsForGroup(group)
     served = spark.read.parquet(serve_root)
     assert served.select("query_id").distinct().count() == 40
-    D.retire_pipeline_caches()
-    index.close()
-    cor.unpersist()
-    assert len(jobs) == 6, sorted(jobs)
+    close()
+    assert len(jobs) == 4, sorted(jobs)
+
+
+def test_live_serve_guard_fallback_keeps_rows(spark, tmp_path):
+    """live_topk_serve's broadcast guard on the job-count fixture: with
+    autoBroadcastJoinThreshold below the 40-query probe side (80 probe
+    rows at nprobe 2), and with broadcast disabled (-1), the serve plans
+    the bounded ShuffledHashJoin and returns exactly the rows of the
+    broadcast branch."""
+    from pypeln_spark.ext import similarity as S
+
+    index, gate, feeds, DIM, close = _live_serve_fixture(spark, tmp_path)
+    gate(feeds[0], 0)
+
+    def serve():
+        topk = S.live_topk_serve(
+            index, gate.centroids, gate.n_cells, feeds[1], k=5, dim=DIM,
+            cents_lits=gate.centroid_lits(),
+        )
+        plan = topk._jdf.queryExecution().executedPlan().toString()
+        return plan, sorted(map(tuple, topk.collect()))
+
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    prev = spark.conf.get(key)
+    try:
+        plan, want = serve()
+        assert "BroadcastHashJoin [cid" in plan, plan
+        assert len({r[0] for r in want}) == 40
+        # a probe row estimates 2 · (296 + 8 + 4·8 + 16) = 704 bytes, so
+        # 10000 bytes bound the broadcast at 14 of the 80 probe rows
+        for limit in ("10000", "-1"):
+            spark.conf.set(key, limit)
+            plan, got = serve()
+            assert "ShuffledHashJoin [cid" in plan, (limit, plan)
+            assert "BroadcastHashJoin [cid" not in plan, (limit, plan)
+            assert got == want, limit
+    finally:
+        spark.conf.set(key, prev)
+        close()
+
+
+def test_live_serve_empty_batch_returns_none(spark, tmp_path):
+    """An empty query batch is served as None: nothing to write."""
+    from pypeln_spark.ext import similarity as S
+
+    index, gate, feeds, DIM, close = _live_serve_fixture(spark, tmp_path)
+    try:
+        assert S.live_topk_serve(
+            index, gate.centroids, gate.n_cells, feeds[1].limit(0), k=5,
+            dim=DIM, cents_lits=gate.centroid_lits(),
+        ) is None
+    finally:
+        close()
 
 
 GATE_EPOCH_JOBS = {
