@@ -2749,7 +2749,7 @@ def _live_serve_fixture(spark, tmp_path):
 def test_live_serve_epoch_job_count(spark, tmp_path):
     """One live query epoch — live_topk_serve against a cells-gate index
     after one ingest epoch, written by parquet append — runs exactly 4
-    Spark jobs: the probe collect (no batch count), the broadcast of the
+    Spark jobs: the probe collect, the broadcast of the
     collected probes as a local relation, the lists scan + join + rank
     window's shuffle, and the rank filter + write. The query probes'
     cell assignment against the gate's centroid_lits() is a narrow
