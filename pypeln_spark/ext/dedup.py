@@ -11,8 +11,8 @@ Scale design notes (the point of each implementation):
   candidate-pair verification — measured 3-4× faster than the exploded
   formulation at sf0.1 and asymptotically the right shape (shuffle bytes ∝
   docs, not shingles). Per-doc arrays bound memory by document length;
-  multi-GB documents would need the exploded variant (kept below for the
-  exact-ngram path).
+  multi-GB documents would need an exploded (id, shingle) formulation,
+  which only the exact-ngram path builds.
 - **simhash**: 32-bit fingerprints; near-dup candidates via the pigeonhole
   band trick (hamming ≤ 3 over 4 bytes → at least one byte equal) then
   exact hamming via bit_count(xor) — no O(n²).
@@ -207,17 +207,6 @@ def shingle_arrays(
     return df.select(
         F.col(id_col),
         F.transform(shingles(F.col(text_col), k), hasher).alias("sh_arr"),
-    )
-
-
-def shingle_sets(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id", k: int = 5
-) -> DataFrame:
-    """(id, sh) exploded rows — the inverted-index representation (needed by
-    exact ngram candidate generation). shingles() already dedups within a
-    doc, so no extra distinct/shuffle here."""
-    return shingle_arrays(df, text_col, id_col, k).select(
-        id_col, F.explode("sh_arr").alias("sh")
     )
 
 
@@ -719,28 +708,51 @@ def dedup_against_corpus(
         )
     new_bands = lsh_band_table(
         minhash_signatures_wide(new_sh, id_col, n_hashes), id_col, bands, rpb
-    ).select(F.col(id_col).alias("new_id"), "sigh", F.col("sig").alias("sig_n"))
-    cor_bands = cor_band_raw.select(
+    )
+    return _verify_band_matches(
+        new_sh, new_bands, cor_sh, cor_band_raw, id_col, threshold,
+        new_sh.sparkSession.sparkContext.defaultParallelism,
+    )
+
+
+def _verify_band_matches(
+    new_sh: DataFrame,
+    new_bands: DataFrame,
+    cor_sh: DataFrame,
+    cor_bands: DataFrame,
+    id_col: str,
+    threshold: float,
+    width: int,
+) -> DataFrame:
+    """(new_id, corpus_id, jaccard) for every new→corpus pair that shares a
+    MinHash band and whose exact shingle-set Jaccard is ≥ ``threshold``:
+    the band equi-join (new × index, never index × index), distinct pairs
+    repartitioned by new_id to ``width`` tasks, then both shingle-array
+    sides joined in and intersected. The batch dedup_against_corpus sizes
+    ``width`` to defaultParallelism; the streaming text gate to the
+    streaming scope's shuffle width, because 32 tasks on epoch-sized
+    inputs is launch overhead.
+
+    Both verify joins carry shuffle_hash hints: the shingle-array sides
+    grow with the data and must never broadcast. Spark's size estimate for
+    array columns runs low enough that the 64m session ceiling admitted a
+    corpus broadcast at 10× data and the driver build ran out of memory."""
+    nb = new_bands.select(
+        F.col(id_col).alias("new_id"), "sigh", F.col("sig").alias("sig_n")
+    )
+    cb = cor_bands.select(
         F.col(id_col).alias("corpus_id"), "sigh", F.col("sig").alias("sig_c")
     )
     cand = (
-        new_bands.join(cor_bands, "sigh")
+        nb.join(cb, "sigh")
         .filter(F.col("sig_n") == F.col("sig_c"))
         .select("new_id", "corpus_id")
         .distinct()
-    )
-    cand = cand.repartition(
-        cand.sparkSession.sparkContext.defaultParallelism, F.col("new_id")
+        .repartition(width, F.col("new_id"))
     )
     a = new_sh.select(F.col(id_col).alias("new_id"), F.col("sh_arr").alias("sh_a"))
     b = cor_sh.select(F.col(id_col).alias("corpus_id"), F.col("sh_arr").alias("sh_b"))
     n_inter = F.size(F.array_intersect(F.col("sh_a"), F.col("sh_b")))
-    # shuffle_hash hints: both shingle-array sides grow with the data and
-    # must never broadcast (the docstring's "corpus is scanned once, never
-    # self-joined" claim) — Spark's size estimate for array columns runs
-    # low enough that the 64m session ceiling admitted a corpus broadcast
-    # at 10× data and OOM'd the driver build (measured on the streaming
-    # twin of this join, r7 sweep; same fix both places)
     return (
         cand.join(a.hint("shuffle_hash"), "new_id")
         .join(b.hint("shuffle_hash"), "corpus_id")
@@ -1313,46 +1325,12 @@ class TextIngestGate(IngestGate):
     def _matches(self, new_sh: DataFrame, n_new) -> DataFrame:
         from pypeln_spark.streaming import shuffle_width
 
-        idc = self.id_col
         self._new_bands = self._band_rows(new_sh)
         if not self.absorb_dedup:
             self._new_bands = pool_persist(self._new_bands)
-        nb = self._new_bands.select(
-            F.col(idc).alias("new_id"), "sigh", F.col("sig").alias("sig_n")
-        )
-        cb = self.index.bands.select(
-            F.col(idc).alias("corpus_id"), "sigh", F.col("sig").alias("sig_c")
-        )
-        # the verify runs at the streaming scope's shuffle width, not
-        # defaultParallelism: 32 tasks on epoch-sized inputs is launch
-        # overhead (both gates ~6% faster scope-sized, decisions unchanged)
-        cand = (
-            nb.join(cb, "sigh")
-            .filter(F.col("sig_n") == F.col("sig_c"))
-            .select("new_id", "corpus_id")
-            .distinct()
-            .repartition(shuffle_width(new_sh.sparkSession), F.col("new_id"))
-        )
-        a = new_sh.select(F.col(idc).alias("new_id"), F.col("sh_arr").alias("sh_a"))
-        b = self.index.sh.select(
-            F.col(idc).alias("corpus_id"), F.col("sh_arr").alias("sh_b")
-        )
-        n_inter = F.size(F.array_intersect(F.col("sh_a"), F.col("sh_b")))
-        # shuffle_hash: the shingle-array sides must never broadcast; the
-        # auto-broadcast estimate undercounts array columns, and at 10x
-        # data Spark picked a broadcast here and the driver build OOM'd
-        return (
-            cand.join(a.hint("shuffle_hash"), "new_id")
-            .join(b.hint("shuffle_hash"), "corpus_id")
-            .withColumn("n_inter", n_inter)
-            .withColumn(
-                "jaccard",
-                F.col("n_inter").cast("double")
-                / (
-                    F.size(F.col("sh_a")) + F.size(F.col("sh_b")) - F.col("n_inter")
-                ).cast("double"),
-            )
-            .filter(F.col("jaccard") >= self.threshold)
+        return _verify_band_matches(
+            new_sh, self._new_bands, self.index.sh, self.index.bands,
+            self.id_col, self.threshold, shuffle_width(new_sh.sparkSession),
         )
 
     def _absorb(self, novel: DataFrame, dropped: DataFrame) -> None:

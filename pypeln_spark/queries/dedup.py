@@ -846,23 +846,10 @@ def dedup_incremental_vs_corpus(spark, sf_dir):
     exact-Jaccard verification end to end."""
     from pyspark.sql import functions as F
 
-    from pypeln_spark.ext import similarity as S
-
     (docs,) = tables(spark, sf_dir, "documents")
     new = docs.filter(F.col("doc_id") % 2 == 1)
-    corpus = docs.filter(F.col("doc_id") % 2 == 0)
-    # the maintained corpus index: shingles + band table, session-cached —
-    # absorbing a batch pays only the batch side after the first build
-    cor_sh = S.cached_index(
-        ("lsh_corpus_shingles", sf_dir),
-        lambda: D.shingle_arrays(D.spread(corpus), "text", "doc_id", 5),
-    )
-    cor_bands = S.cached_index(
-        ("lsh_corpus_bands", sf_dir, N_HASHES, BANDS),
-        lambda: D.lsh_band_table(
-            D.minhash_signatures_wide(cor_sh, "doc_id", N_HASHES),
-            "doc_id", BANDS, N_HASHES // BANDS,
-        ),
+    cor_sh, cor_bands = _corpus_index(
+        sf_dir, docs.filter(F.col("doc_id") % 2 == 0)
     )
     return D.dedup_against_corpus(
         new, n_hashes=N_HASHES, bands=BANDS, threshold=JACCARD_THRESHOLD,
@@ -871,3 +858,25 @@ def dedup_incremental_vs_corpus(spark, sf_dir):
             {"k": 5, "n_hashes": N_HASHES, "bands": BANDS},
         ),
     )
+
+
+def _corpus_index(sf_dir, corpus, name="lsh_corpus"):
+    """The maintained corpus LSH index, session-cached: (shingle arrays,
+    band table) of ``corpus``, keyed by ``name`` and ``sf_dir``, so the
+    batch dedup_incremental_vs_corpus and every streaming text gate over
+    the same corpus share one build, and absorbing a batch pays only the
+    batch side after it."""
+    from pypeln_spark.ext import similarity as S
+
+    cor_sh = S.cached_index(
+        (f"{name}_shingles", sf_dir),
+        lambda: D.shingle_arrays(D.spread(corpus), "text", "doc_id", 5),
+    )
+    cor_bands = S.cached_index(
+        (f"{name}_bands", sf_dir, N_HASHES, BANDS),
+        lambda: D.lsh_band_table(
+            D.minhash_signatures_wide(cor_sh, "doc_id", N_HASHES),
+            "doc_id", BANDS, N_HASHES // BANDS,
+        ),
+    )
+    return cor_sh, cor_bands

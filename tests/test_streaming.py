@@ -979,6 +979,46 @@ def test_stream_sink_root_override_honored(spark, tmp_path, monkeypatch):
     assert leftovers == [], f"queries leaked sink dirs under the root: {leftovers}"
 
 
+def test_gate_entry_failed_epoch_removes_its_sinks(spark, tmp_path, monkeypatch):
+    """A gate entry whose epoch body raises propagates the error, and the
+    shared drive-to-completion harness still releases the index's cut
+    leaves and removes every sink it made under
+    PYPELN_SPARK_STREAM_SINK_ROOT: the decisions sink as well as the
+    staged feeds and the stream checkpoint."""
+    from pypeln_spark.ext import dedup as D
+    from pypeln_spark.ext import similarity as S
+    from pypeln_spark.queries import REGISTRY
+
+    a = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
+    rows = [(0, a), (1, a), (3, "red orange yellow green blue indigo")]
+    sf = str(tmp_path / "planted")
+    spark.createDataFrame(rows, "doc_id long, text string").write.parquet(
+        os.path.join(sf, "documents.parquet")
+    )
+    root = tmp_path / "sinks"
+    monkeypatch.setenv("PYPELN_SPARK_STREAM_SINK_ROOT", str(root))
+
+    def planted(self, new_sh, n_new):
+        raise RuntimeError("planted epoch failure")
+
+    closed = []
+    close = D.IncrementalLshIndex.close
+    monkeypatch.setattr(D.TextIngestGate, "_matches", planted)
+    monkeypatch.setattr(
+        D.IncrementalLshIndex, "close",
+        lambda self: (closed.append(self), close(self)),
+    )
+    S.drop_index()
+    try:
+        with pytest.raises(Exception, match="planted epoch failure"):
+            REGISTRY["streaming_incremental_dedup"].fn(spark, sf)
+    finally:
+        S.drop_index()
+    leaked = [p for p in os.listdir(root) if p.startswith("pypeln_spark_")]
+    assert leaked == [], f"a failed epoch leaked sink dirs: {leaked}"
+    assert len(closed) == 1
+
+
 def test_incremental_lsh_index_compaction_bounds_plan(spark):
     """Every absorb merges into the index: the immutable base plus ONE
     level leaf holding every absorbed row, so the analyzed plan of each
